@@ -58,6 +58,19 @@ object GraftSession {
     // this reason.
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    // v2 is not atomic: each task commit moves output straight into the
+    // destination, so a failed job leaves partial output and racing
+    // attempts of one task can both land (MAPREDUCE-7282). It is safe
+    // here only under two invariants: every data, CDC and DV write
+    // goes to a staging or UUID directory that no snapshot references
+    // until the log commit, and speculation stays off (set here, not
+    // left to the default). A write path straight into a table
+    // directory would break the first.
+    .config("spark.speculation", "false")
+    // without libhadoop (Hadoop's native library) the stock local
+    // filesystem forks a `chmod` per created file and directory; this
+    // one sets the same bits in-process (.crc checksums unchanged)
+    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   /** Local session for tests / ad-hoc mains. */
   def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32),

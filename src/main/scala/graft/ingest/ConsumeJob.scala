@@ -40,7 +40,11 @@ object ConsumeJob {
     if (watermark.isDefined && progress.exists(_ >= watermark.get))
       return Report(0L, Nil, watermark, skipped = true)
 
-    val df = spark.read.parquet(Topics.tableDir(root, prefix))
+    // the data schema from one footer: no schema-inference job
+    val dir = Paths.get(Topics.tableDir(root, prefix))
+    val df = Footers.firstDataFile(dir)
+      .fold(spark.read)(f => Footers.withSchema(spark, spark.read, dir, f))
+      .parquet(dir.toString)
     val gated = watermark match {
       case Some(w) => df.filter(col(posCol) <= w) // pushed to the scan
       case None => df

@@ -4,10 +4,6 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -199,9 +195,7 @@ object Snapshots {
     * file, never per row. */
   private def footerStats(base: Path, rel: String): Seq[FileStat] =
     try {
-      val in = HadoopInputFile.fromPath(
-        new HadoopPath(base.resolve(rel).toUri), new Configuration())
-      val rd = ParquetFileReader.open(in)
+      val rd = Footers.open(base.resolve(rel))
       try {
         val blocks = rd.getFooter.getBlocks.asScala.toSeq
         if (blocks.isEmpty) Seq.empty
@@ -1434,9 +1428,7 @@ object Snapshots {
 
   /** Top-level column names in one data file's parquet footer. */
   private def physicalColumns(base: Path, rel: String): Seq[String] = {
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(base.resolve(rel).toUri), new Configuration())
-    val rd = ParquetFileReader.open(in)
+    val rd = Footers.open(base.resolve(rel))
     try rd.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
     finally rd.close()
   }
@@ -1476,9 +1468,7 @@ object Snapshots {
     val base = dataDir(root, prefix)
     val withMeta = dv.nonEmpty || keepPositions
     def plain(fs: Seq[String]): DataFrame = {
-      val scan = spark.read
-        .option("basePath", base.toString)
-        .parquet(fs.map(f => base.resolve(f).toString): _*)
+      val scan = readParquet(spark, base, fs)
       if (!withMeta) scan
       else {
         // scheme-normalized file path + in-file row position: the
@@ -1494,7 +1484,7 @@ object Snapshots {
           // anti-join against the sidecars: deleted (file, pos) pairs
           // vanish. DVs are metadata-scale next to the table, so the
           // join broadcasts — the scan itself never shuffles.
-          val dvRows = spark.read
+          val dvRows = spark.read.schema("file STRING, pos BIGINT")
             .parquet(dv.map(d => dvDir(root, prefix).resolve(d).toString): _*)
             .select(org.apache.spark.sql.functions.concat(
               org.apache.spark.sql.functions.lit(base.toString + "/"),
@@ -1533,6 +1523,26 @@ object Snapshots {
       }
       strip(frames.reduce(_.unionByName(_)))
     }
+  }
+
+  /** Parquet read of table-relative `files` under `base`, with the
+    * data schema from the footer of the file Spark's inference would
+    * pick (the first in path order): Spark runs no schema-inference
+    * job, and partition columns still come from the directory names. */
+  private[graft] def readParquet(spark: SparkSession, base: Path,
+                                 files: Seq[String]): DataFrame =
+    Footers.withSchema(spark, spark.read.option("basePath", base.toString), base,
+      Paths.get(files.min))
+      .parquet(files.map(f => base.resolve(f).toString): _*)
+
+  /** Maps the file URIs an attribution collect returns to the
+    * snapshot's table-relative names, sorted. Keyed by file name, so
+    * it costs O(uris + files), not a scan of the file list per URI. */
+  private def attribute(snap: Snapshot, uris: Iterable[String]): Seq[String] = {
+    def name(p: String) = p.substring(p.lastIndexOf('/') + 1)
+    val byName = snap.files.groupBy(name)
+    uris.map(uri => byName.getOrElse(name(uri), Nil).find(f => uri.endsWith(f))
+      .getOrElse(sys.error(s"unattributable file $uri"))).toSeq.sorted
   }
 
   /** Column names the DV-keyed read path attaches to carry each row's
@@ -2294,14 +2304,10 @@ object Snapshots {
       val matchedFiles: Seq[String] =
         if (candidates.isEmpty) Seq.empty
         else {
-          val withFile = spark.read.option("basePath", base.toString)
-            .parquet(candidates.map(f => base.resolve(f).toString): _*)
+          val withFile = readParquet(spark, base, candidates)
             .withColumn("_graft_file", input_file_name())
-          labeled(spark, "merge attribution")(
-            distinctCollected(withFile.join(srcKeys, keys, "left_semi"), "_graft_file"))
-            .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-              sys.error(s"unattributable file $uri")))
-            .sorted
+          attribute(snap, labeled(spark, "merge attribution")(
+            distinctCollected(withFile.join(srcKeys, keys, "left_semi"), "_graft_file")))
         }
       // schema-aware rewrite read: matched files may predate an
       // addColumn — fill defaults so the rewritten files materialize
@@ -2425,12 +2431,9 @@ object Snapshots {
       // input_file_name() refuses to bind
       val withFile = readFilesFilled(spark, root, prefix, snap.files, evs,
         snap.dv, keepPositions = true)
-      val matchedFiles = withFile.filter(matches)
+      val matchedFiles = attribute(snap, withFile.filter(matches)
         .select(DvPathCol).distinct()
-        .collect().map(_.getString(0))
-        .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-          sys.error(s"unattributable file $uri")))
-        .toSeq.sorted
+        .collect().map(_.getString(0)))
       if (matchedFiles.isEmpty) snap.version // nothing to delete
       else {
         // filled read, not a plain one: survivors of a pre-evolution
@@ -2544,10 +2547,7 @@ object Snapshots {
           .map(_.getSeq[String](0).sorted)
           .getOrElse(labeled(spark, "update attribution")(
             distinctCollected(combined.filter(col(hit)), DvPathCol)).sorted)
-        val matchedFiles = matchedUris
-          .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-            sys.error(s"unattributable file $uri")))
-          .sorted
+        val matchedFiles = attribute(snap, matchedUris)
         if (matchedFiles.isEmpty) snap.version // nothing matched
         else {
           val rows = combined.filter(col(DvPathCol).isin(matchedUris: _*))
@@ -2573,11 +2573,8 @@ object Snapshots {
           }
         }
       } else {
-        val matchedFiles = labeled(spark, "update attribution")(
-          distinctCollected(withFile.filter(matches), DvPathCol))
-          .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-            sys.error(s"unattributable file $uri")))
-          .sorted
+        val matchedFiles = attribute(snap, labeled(spark, "update attribution")(
+          distinctCollected(withFile.filter(matches), DvPathCol)))
         if (matchedFiles.isEmpty) snap.version // nothing matched
         else {
           val touched = readFilesFilled(spark, root, prefix, matchedFiles, evs, snap.dv)
@@ -2731,11 +2728,8 @@ object Snapshots {
           snap.dv, keepPositions = true)
       val matchedFiles: Seq[String] =
         if (notMatchedBySource.nonEmpty) snap.files
-        else labeled(spark, "merge attribution")(
-          distinctCollected(targetAll.join(src, cond, "left_semi"), DvPathCol))
-          .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-            sys.error(s"unattributable file $uri")))
-          .sorted
+        else attribute(snap, labeled(spark, "merge attribution")(
+          distinctCollected(targetAll.join(src, cond, "left_semi"), DvPathCol)))
       val touched =
         if (matchedFiles.isEmpty) targetAll.limit(0)
         else readFilesFilled(spark, root, prefix, matchedFiles, evs,
@@ -3349,11 +3343,8 @@ object Snapshots {
             val withFile = readFilesFilled(spark, root, prefix, candidates,
               schemaEvents(root, prefix, Some(snap.version)), snap.dv,
               keepPositions = true)
-            labeled(spark, "apply attribution")(
-              distinctCollected(withFile.join(changedKeys, keys, "left_semi"), DvPathCol))
-              .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-                sys.error(s"unattributable file $uri")))
-              .sorted
+            attribute(snap, labeled(spark, "apply attribution")(
+              distinctCollected(withFile.join(changedKeys, keys, "left_semi"), DvPathCol)))
           }
         val oldMatched =
           if (matchedFiles.isEmpty) upserts.limit(0)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.{QueryDef, QueryRegistry, Tables}
+import graft.ingest.Footers
 import Qf._
 
 /** Q43–Q50: Structured Streaming surface, replayed over the parquet
@@ -136,9 +137,10 @@ object StreamingQueries extends QueryRegistry {
       if (files.isEmpty || files.length > footerMaxFiles) return None
       import org.apache.parquet.schema.LogicalTypeAnnotation
       import LogicalTypeAnnotation.TimeUnit
-      val sparkIsLong =
-        s.read.parquet(Tables.path(dir, "events")).schema("ts").dataType ==
-          org.apache.spark.sql.types.LongType
+      // the schema inference would read (first file in path order),
+      // from its footer: no Spark job
+      val sparkIsLong = Footers.sparkSchema(s, files.minBy(_.getPath).toPath)
+        .exists(_("ts").dataType == org.apache.spark.sql.types.LongType)
       // µs normalization per column chunk, decided from ITS annotation
       def toMicros(raw: Long, ann: LogicalTypeAnnotation): Option[Long] = ann match {
         case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
@@ -154,10 +156,7 @@ object StreamingQueries extends QueryRegistry {
         case _ => None
       }
       val maxes = files.map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toURI),
-            new org.apache.hadoop.conf.Configuration()))
+        val rd = Footers.open(f.toPath)
         try {
           val sts = rd.getFooter.getBlocks.asScala.toSeq.map { b =>
             val c = b.getColumns.asScala
