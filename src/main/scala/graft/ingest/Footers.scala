@@ -1,33 +1,40 @@
 package graft.ingest
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.{DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, GraftStreamingShim, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
-/** Driver-side parquet footer reads: plain JVM IO, no Spark job. */
+/** Driver-side parquet planning: footers and file statuses read with
+  * plain JVM IO, no Spark job. */
 object Footers {
 
   /** One Hadoop configuration for every footer reader. A fresh one
-    * re-parses Hadoop's default resources on first use: opening a file
-    * through a fresh configuration took about 14 ms, through a shared
-    * one 0.4 ms (warm JVM, 4-core Xeon). */
+    * re-parses Hadoop's default resources on first use, which costs
+    * more than reading a footer. */
   lazy val conf: Configuration = {
     val c = new Configuration()
     c.set("fs.file.impl", classOf[graft.NioLocalFileSystem].getName)
     c
   }
 
+  /** Opens `file` with read options built over [[conf]]. The one-argument
+    * `ParquetFileReader.open(InputFile)` would build its options over a
+    * fresh `Configuration` on every call. */
   def open(file: Path): ParquetFileReader =
-    ParquetFileReader.open(HadoopInputFile.fromPath(new HadoopPath(file.toUri), conf))
+    ParquetFileReader.open(HadoopInputFile.fromPath(new HadoopPath(file.toUri), conf),
+      HadoopReadOptions.builder(conf).build())
 
   /** Schemas by (absolute path, converter settings). Data files are
     * immutable and uniquely named, so an entry never goes stale. */
@@ -59,28 +66,35 @@ object Footers {
     }
   }
 
-  /** `reader` with the data schema of the file at `rel` under the
-    * read's base directory; callers pass the file inference would read
-    * (see [[firstDataFile]]). A known schema skips the inference job.
-    * Partition columns still infer from the directory names. A data
-    * column that shares a partition column's name keeps inference,
-    * which orders such columns differently. */
-  def withSchema(spark: SparkSession, reader: DataFrameReader, base: Path,
-                 rel: Path): DataFrameReader = {
+  /** The data schema of the file at `rel` under a read's base
+    * directory; callers pass the file inference would read (see
+    * [[firstDataFile]]). None where inference must stay: the footer is
+    * unreadable, or a data column shares a partition column's name
+    * (inference orders such columns differently). */
+  def dataSchema(spark: SparkSession, base: Path, rel: Path): Option[StructType] = {
     val partCols = Option(rel.getParent).toSeq.flatMap(_.iterator.asScala)
       .map(_.toString).filter(_.contains("=")).map(_.takeWhile(_ != '=').toLowerCase)
     sparkSchema(spark, base.resolve(rel))
       .filterNot(_.fieldNames.exists(n => partCols.contains(n.toLowerCase)))
-      .fold(reader)(reader.schema)
   }
 
+  /** `reader` with [[dataSchema]] when there is one: a known schema
+    * skips the inference job. Partition columns still infer from the
+    * directory names. */
+  def withSchema(spark: SparkSession, reader: DataFrameReader, base: Path,
+                 rel: Path): DataFrameReader =
+    dataSchema(spark, base, rel).fold(reader)(reader.schema)
+
+  /** Names Spark's file listing skips. */
+  def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
   /** The data file under `dir` that Spark's schema inference reads:
-    * the first in full-path order, skipping the hidden names Spark's
-    * listing skips. Relative to `dir`. Siblings sort with a '/' after
-    * directory names, so a depth-first walk meets files in full-path
-    * order and stops at the first. */
+    * the first in full-path order, skipping [[hidden]] names. Relative
+    * to `dir`. Siblings sort with a '/' after directory names, so a
+    * depth-first walk meets files in full-path order and stops at the
+    * first. */
   def firstDataFile(dir: Path): Option[Path] = {
-    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
     def first(d: Path): Option[Path] =
       Using.resource(Files.list(d))(_.iterator.asScala.toSeq)
         .filterNot(p => hidden(p.getFileName.toString))
@@ -90,5 +104,36 @@ object Footers {
         .flatMap { case (p, isDir) => if (isDir) first(p) else Some(p) }
         .nextOption()
     if (Files.isDirectory(dir)) first(dir).map(dir.relativize) else None
+  }
+
+  /** A parquet read planned from a known file list, the way Delta plans
+    * a scan from its log: `leaves` maps each root path to the data
+    * files under it (a file maps to itself). The file statuses are
+    * read here with `java.nio` and handed to Spark's file index as a
+    * pre-filled cache, so Spark neither checks the paths on a thread
+    * pool nor lists them in a job (above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths it
+    * would). Partition columns infer from the directory names under
+    * `options`' `basePath`, and the relation is the one
+    * `DataSource.resolveRelation` builds for a user schema. */
+  def relation(spark: SparkSession, leaves: Seq[(Path, Seq[Path])], schema: StructType,
+               options: Map[String, String] = Map.empty): DataFrame = {
+    def hpath(p: Path) = new HadoopPath("file:" + p.toAbsolutePath)
+    val statuses: Map[HadoopPath, Array[FileStatus]] = leaves.map { case (root, files) =>
+      hpath(root) -> files.map { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        // block size: the local filesystem's default (fs.local.block.size)
+        new FileStatus(a.size, false, 1, 32L << 20, a.lastModifiedTime.toMillis, hpath(f))
+      }.toArray
+    }.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: HadoopPath): Option[Array[FileStatus]] = statuses.get(path)
+      override def putLeafFiles(path: HadoopPath, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, leaves.map(l => hpath(l._1)), options,
+      Some(schema), cache)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      GraftStreamingShim.asNullable(schema), None, new ParquetFileFormat, options)(spark))
   }
 }

@@ -81,6 +81,14 @@ object Snapshots {
     try f finally sc.setJobDescription(prev)
   }
 
+  /** The metric `df.observe(name, …)` reported when `df`'s plan ran.
+    * UPDATE, MERGE and DELETE decide what to commit from these, so an
+    * absent one (never run, or its node planned away) fails here
+    * instead of reading as "nothing matched". */
+  private[graft] def observedMetric(df: DataFrame, name: String): org.apache.spark.sql.Row =
+    df.queryExecution.observedMetrics.getOrElse(name, throw new IllegalStateException(
+      s"observed metric $name was not reported; refusing to read it as empty"))
+
   /** Parse one JSON string-array field (the manifest's only array
     * shape) out of a manifest's raw text. */
   private def jsonArr(s: String, key: String): Seq[String] =
@@ -1484,8 +1492,7 @@ object Snapshots {
           // anti-join against the sidecars: deleted (file, pos) pairs
           // vanish. DVs are metadata-scale next to the table, so the
           // join broadcasts — the scan itself never shuffles.
-          val dvRows = spark.read.schema("file STRING, pos BIGINT")
-            .parquet(dv.map(d => dvDir(root, prefix).resolve(d).toString): _*)
+          val dvRows = readDv(spark, dv.map(dvDir(root, prefix).resolve))
             .select(org.apache.spark.sql.functions.concat(
               org.apache.spark.sql.functions.lit(base.toString + "/"),
               col("file")).as(DvPathCol),
@@ -1525,15 +1532,29 @@ object Snapshots {
     }
   }
 
-  /** Parquet read of table-relative `files` under `base`, with the
-    * data schema from the footer of the file Spark's inference would
-    * pick (the first in path order): Spark runs no schema-inference
-    * job, and partition columns still come from the directory names. */
+  /** Parquet read of table-relative `files` under `base`, planned
+    * from that list ([[Footers.relation]]: no path check, no listing
+    * job), with the data schema from the footer of the file Spark's
+    * inference would pick (the first in path order): no inference job
+    * either. Partition columns still come from the directory names.
+    * Where the footer gives no schema, Spark's own reader infers it. */
   private[graft] def readParquet(spark: SparkSession, base: Path,
-                                 files: Seq[String]): DataFrame =
-    Footers.withSchema(spark, spark.read.option("basePath", base.toString), base,
-      Paths.get(files.min))
-      .parquet(files.map(f => base.resolve(f).toString): _*)
+                                 files: Seq[String]): DataFrame = {
+    val paths = files.map(base.resolve)
+    Footers.dataSchema(spark, base, Paths.get(files.min)) match {
+      case Some(schema) => Footers.relation(spark, paths.map(p => (p, Seq(p))), schema,
+        Map("basePath" -> base.toString))
+      case None => spark.read.option("basePath", base.toString)
+        .parquet(paths.map(_.toString): _*)
+    }
+  }
+
+  /** The rows of deletion-vector sidecar directories, listed on the
+    * driver (a sidecar is one directory of parquet parts). */
+  private[graft] def readDv(spark: SparkSession, dirs: Seq[Path]): DataFrame =
+    Footers.relation(spark, dirs.map(d => (d, Using.resource(Files.list(d))(
+      _.iterator.asScala.filterNot(p => Footers.hidden(p.getFileName.toString)).toSeq))),
+      org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT"))
 
   /** Maps the file URIs an attribution collect returns to the
     * snapshot's table-relative names, sorted. Keyed by file name, so
@@ -1550,6 +1571,9 @@ object Snapshots {
     * ask for positions. */
   private val DvPathCol = "_graft_dv_path"
   private val DvPosCol = "_graft_dv_pos"
+
+  /** The id [[mergeInto]] gives each source row. */
+  private val SrcRowCol = "_graft_srow"
 
   /** Distinct values of one STRING column collected to the driver
     * without a shuffle: per-partition hash sets, union'd on the driver
@@ -2388,7 +2412,7 @@ object Snapshots {
   private def enforceConstraints(root: String, prefix: String,
                                  df: DataFrame): Unit =
     constraints(root, prefix).foreach { case (name, pred) =>
-      val bad = df.filter(s"NOT ($pred)").count()
+      val bad = labeled(df.sparkSession, s"constraint $name")(df.filter(s"NOT ($pred)").count())
       if (bad > 0) throw new ConstraintViolationException(name, bad)
     }
 
@@ -2510,7 +2534,7 @@ object Snapshots {
       // Fused shape: ONE pass over the candidate files evaluates the
       // predicate and every SET value (pre+post image columns side by
       // side, plus the row's file identity) into a materialized frame;
-      // attribution is then a shuffle-free distinct over it, and the
+      // attribution is an observed metric of the same job, and the
       // rewrite output and both CDC images are trivial column
       // selections — nothing downstream re-plans joins or subqueries.
       // Gated by the candidates' size estimate: the materialized rows
@@ -2543,13 +2567,15 @@ object Snapshots {
           .observe(filesMetric, org.apache.spark.sql.functions.collect_set(
             org.apache.spark.sql.functions.when(col(hit), col(DvPathCol))))
         val combined = labeled(spark, "update rewrite")(observed.localCheckpoint(true))
-        val matchedUris = observed.queryExecution.observedMetrics.get(filesMetric)
-          .map(_.getSeq[String](0).sorted)
-          .getOrElse(labeled(spark, "update attribution")(
-            distinctCollected(combined.filter(col(hit)), DvPathCol)).sorted)
+        val matchedUris = observedMetric(observed, filesMetric).getSeq[String](0).sorted
         val matchedFiles = attribute(snap, matchedUris)
-        if (matchedFiles.isEmpty) snap.version // nothing matched
-        else {
+        if (matchedFiles.isEmpty) {
+          // a no-op commits nothing, so confirm it on the frame itself
+          if (!labeled(spark, "update no-match check")(combined.filter(col(hit)).isEmpty))
+            throw new IllegalStateException(
+              "UPDATE: the observed matched-file set is empty but the rewrite frame has hits")
+          snap.version
+        } else {
           val rows = combined.filter(col(DvPathCol).isin(matchedUris: _*))
           val out = rows.select(dataCols.map { c =>
             if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
@@ -2638,21 +2664,23 @@ object Snapshots {
     * streaming path), this executes arbitrary resolved clause
     * conditions and assignment expressions — the generality SQL needs.
     *
-    * Scale shape: only files CONTAINING a matched row are rewritten —
-    * located by a semi join of the target against the source on the
-    * merge condition (file names collected; rows never are). Rows of
-    * untouched files survive as-is. WHEN NOT MATCHED BY SOURCE is the
-    * one clause that must see EVERY target row, so its presence widens
-    * the rewrite to all files — exactly Delta's behavior. The source is
-    * materialized once ([[DataFrame.localCheckpoint]]): a merge source
-    * is change-batch-scale by design, never the corpus.
-    *
-    * Matched pairs / target-only / source-only rows come from three
-    * separate joins (inner, left_anti, right-side left_anti) instead of
-    * one full outer: each is plannable for ANY merge condition (equi →
-    * sort-merge, non-equi → broadcast nested loop with the
-    * change-batch-sized source broadcast) and needs no null-marker
-    * disambiguation. Cardinality is enforced before any write
+    * One classification pass, Delta's MergeIntoCommand shape:
+    *  1. the source is materialized once, each row with an id; the
+    *     pruning key's [min, max] is an observed metric of that job;
+    *  2. the candidate target rows full-outer-join the source once, and
+    *     every joined row is tagged with its fired clause (first-wins
+    *     inside its family: pair, target-only or source-only);
+    *  3. an unordered window keyed by the target row id counts each
+    *     target row's firing rows (source-only rows key by their own
+    *     id, so inserts spread over tasks);
+    *  4. that frame is materialized once, and the matched files, the
+    *     cardinality violations and the firing inserts are observed
+    *     metrics of the same job.
+    * Survivors, updates, inserts, the staged write and the change feed
+    * are then selections over the materialized frame. Only files
+    * holding a matched row are rewritten; WHEN NOT MATCHED BY SOURCE
+    * must see every target row, so it widens the rewrite to all files —
+    * exactly Delta's behavior. Cardinality is enforced before any write
     * ([[MergeCardinalityException]]); CHECK constraints run on the
     * post-images; all changes ride the feed (insert /
     * update_preimage+postimage / delete). */
@@ -2671,7 +2699,8 @@ object Snapshots {
                 tableSchema: org.apache.spark.sql.types.StructType,
                 txn: Option[String] = None,
                 equiKeys: Seq[(String, String)] = Seq.empty): Int = {
-    import org.apache.spark.sql.functions.{expr, lit, when}
+    import org.apache.spark.sql.functions.{collect_set, count, expr, lit, max, min,
+      monotonically_increasing_id, when}
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
     require(notMatched.forall(_.set.isDefined),
@@ -2684,81 +2713,106 @@ object Snapshots {
       val badSrc = source.columns.filterNot(_.startsWith(SrcColPrefix))
       require(badSrc.isEmpty,
         s"merge source columns must carry $SrcColPrefix: ${badSrc.mkString(", ")}")
-      val src = source.localCheckpoint(true)
-      val cond = expr(condSql)
-      // a SCHEMA-TYPED empty target (readFilesFilled on zero files is
-      // column-less, which would fail the condition's resolution) —
-      // MERGE into a fresh CREATE TABLE is pure insert and must work
-      def emptyTarget: DataFrame = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(tableSchema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField(DvPathCol,
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField(DvPosCol,
-            org.apache.spark.sql.types.LongType))))
       // stage-1 manifest pruning (the keyed merge's discipline): the
       // first equi key whose target column carries INT64 stats bounds
       // the candidate set by the source's [min, max] — files outside it
       // can't match and are never opened
+      def integral(c: String): Boolean =
+        source.schema.find(_.name == c).exists(f => f.dataType match {
+          case org.apache.spark.sql.types.LongType |
+               org.apache.spark.sql.types.IntegerType |
+               org.apache.spark.sql.types.ShortType => true
+          case _ => false
+        })
+      val pruneKey =
+        if (notMatchedBySource.nonEmpty) None
+        else equiKeys.find { case (tc, sc) =>
+          integral(sc) && snap.stats.exists(s => s.column == tc && s.typ == "L") }
+      val srcMetric = "graft_merge_source"
+      val srcIds = source.withColumn(SrcRowCol, monotonically_increasing_id())
+      val srcObserved = pruneKey.fold(srcIds) { case (_, sc) =>
+        srcIds.observe(srcMetric, min(col(sc).cast("long")), max(col(sc).cast("long")))
+      }
+      val src = labeled(spark, "merge source")(srcObserved.localCheckpoint(true))
       val candidates: Seq[String] =
         if (snap.files.isEmpty) Seq.empty
-        else {
-          def integral(c: String): Boolean =
-            src.schema.find(_.name == c).exists(f => f.dataType match {
-              case org.apache.spark.sql.types.LongType |
-                   org.apache.spark.sql.types.IntegerType |
-                   org.apache.spark.sql.types.ShortType => true
-              case _ => false
-            })
-          equiKeys.collectFirst {
-            case (tc, sc) if integral(sc) &&
-                snap.stats.exists(s => s.column == tc && s.typ == "L") =>
-              val mm = src.agg(
-                org.apache.spark.sql.functions.min(col(sc).cast("long")),
-                org.apache.spark.sql.functions.max(col(sc).cast("long"))).head()
-              if (mm.isNullAt(0)) Seq.empty[String]
-              else pruneFiles(root, prefix, tc, mm.getLong(0), mm.getLong(1),
-                Some(snap.version))
-          }.getOrElse(snap.files)
+        else pruneKey.fold(snap.files) { case (tc, _) =>
+          val mm = observedMetric(srcObserved, srcMetric)
+          if (mm.isNullAt(0)) Seq.empty
+          else pruneFiles(root, prefix, tc, mm.getLong(0), mm.getLong(1), Some(snap.version))
         }
-      // stage-2 attribution: which candidate files hold a matched row
-      val targetAll =
-        if (candidates.isEmpty) emptyTarget
+      // a SCHEMA-TYPED empty target (readFilesFilled on zero files is
+      // column-less, which would fail the condition's resolution) —
+      // MERGE into a fresh CREATE TABLE is pure insert and must work
+      val target =
+        if (candidates.isEmpty) spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType(tableSchema.fields ++ Seq(
+            org.apache.spark.sql.types.StructField(DvPathCol,
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField(DvPosCol,
+              org.apache.spark.sql.types.LongType))))
         else readFilesFilled(spark, root, prefix, candidates, evs,
           snap.dv, keepPositions = true)
-      val matchedFiles: Seq[String] =
-        if (notMatchedBySource.nonEmpty) snap.files
-        else attribute(snap, labeled(spark, "merge attribution")(
-          distinctCollected(targetAll.join(src, cond, "left_semi"), DvPathCol)))
-      val touched =
-        if (matchedFiles.isEmpty) targetAll.limit(0)
-        else readFilesFilled(spark, root, prefix, matchedFiles, evs,
-          snap.dv, keepPositions = true)
       val tSchema = org.apache.spark.sql.types.StructType(
-        touched.schema.filterNot(f => f.name == DvPathCol || f.name == DvPosCol))
+        target.schema.filterNot(f => f.name == DvPathCol || f.name == DvPosCol))
       val tCols = tSchema.fieldNames.toSeq
-      val pairs = touched.join(src, cond, "inner")
-      val targetOnly = touched.join(src, cond, "left_anti")
-      val srcOnly = src.join(touched, cond, "left_anti")
-      // first-wins clause selection: 1-based fired-clause index, 0 = none
-      def fired(clauses: Seq[MergeClause]): org.apache.spark.sql.Column =
-        clauses.zipWithIndex.foldRight(lit(0)) { case ((cl, i), rest) =>
-          when(cl.condition.map(expr).getOrElse(lit(true)), lit(i + 1))
+      // one index space for every clause: matched, then not matched by
+      // source, then not matched; 0 = none fired
+      val clauses = matched ++ notMatchedBySource ++ notMatched
+      def fired(family: Seq[MergeClause], offset: Int): org.apache.spark.sql.Column =
+        family.zipWithIndex.foldRight(lit(0)) { case ((cl, i), rest) =>
+          when(cl.condition.map(expr).getOrElse(lit(true)), lit(offset + i + 1))
             .otherwise(rest)
         }
-      def deleteIdx(clauses: Seq[MergeClause]): Seq[Integer] =
-        clauses.zipWithIndex.collect { case (c, i) if c.set.isEmpty =>
-          Integer.valueOf(i + 1) }
+      val deletes = clauses.zipWithIndex.collect { case (c, i) if c.set.isEmpty =>
+        Integer.valueOf(i + 1) }
       val act = "_graft_act"
-      /** SET application over already-fired rows: CASE per target
-        * column on the fired index; `insert` makes NULL (not the old
-        * value) the unassigned base. */
-      def applySets(df: DataFrame, clauses: Seq[MergeClause],
-                    insert: Boolean): DataFrame =
-        df.select(tCols.map { c =>
-          val base = if (insert) lit(null).cast(tSchema(c).dataType)
-                     else col(c)
-          clauses.zipWithIndex.foldLeft(base) { case (acc, (cl, i)) =>
+      val nFired = "_graft_fired"
+      val firstSrc = "_graft_first_src"
+      val inTarget = col(DvPathCol).isNotNull
+      val pair = inTarget && col(SrcRowCol).isNotNull
+      // one target row's pairs share a window partition; unordered, so
+      // each aggregate spans the whole partition (an ordered window
+      // would make the count a running sum). Both aggregates sit in one
+      // select, so they share one Window node and one exchange.
+      val targetRow = org.apache.spark.sql.expressions.Window.partitionBy(
+        col(DvPathCol), col(DvPosCol), when(!inTarget, col(SrcRowCol)))
+      val tagged = target.join(src, expr(condSql), "full_outer")
+        .withColumn(act, when(pair, fired(matched, 0))
+          .when(inTarget, fired(notMatchedBySource, matched.size))
+          .otherwise(fired(notMatched, matched.size + notMatchedBySource.size)))
+        .select(col("*"),
+          count(when(inTarget && col(act) =!= 0, 1)).over(targetRow).as(nFired),
+          min(col(SrcRowCol)).over(targetRow).as(firstSrc))
+      // one row per target row: its pair with the smallest source id
+      val firstOfRow = col(SrcRowCol).isNull || col(SrcRowCol) === col(firstSrc)
+      val metric = "graft_merge"
+      val observed = tagged.observe(metric,
+        collect_set(when(pair, col(DvPathCol))),
+        // SQL's cardinality rule, modification-scoped like Delta's: >1
+        // FIRING pair for one target row is ambiguous; unfired extra
+        // matches are harmless
+        count(when(pair && col(nFired) > 1 && firstOfRow, 1)),
+        count(when(!inTarget && col(act) =!= 0, 1)))
+      val classified = labeled(spark, "merge classify")(observed.localCheckpoint(true))
+      val m = observedMetric(observed, metric)
+      if (m.getLong(1) > 0) throw new MergeCardinalityException(m.getLong(1))
+      val matchedUris = m.getSeq[String](0)
+      val matchedFiles =
+        if (notMatchedBySource.nonEmpty) snap.files else attribute(snap, matchedUris)
+      if (matchedFiles.isEmpty && m.getLong(2) == 0) snap.version
+      else {
+        // the rows of the rewritten files, plus the source-only rows
+        val rows = classified.filter(!inTarget ||
+          (if (notMatchedBySource.nonEmpty) lit(true) else col(DvPathCol).isin(matchedUris: _*)))
+        val survivor = inTarget && col(nFired) === 0 && firstOfRow
+        val changed = col(act) =!= 0 && !col(act).isin(deletes: _*)
+        def pre(df: DataFrame): DataFrame = df.select(tCols.map(col): _*)
+        // SET application on the fired index; a source-only row's target
+        // columns are NULL, the unassigned base an INSERT needs
+        def post(df: DataFrame): DataFrame = df.select(tCols.map { c =>
+          clauses.zipWithIndex.foldLeft(col(c)) { case (acc, (cl, i)) =>
             cl.set.flatMap(_.toMap.get(c)) match {
               case Some(v) => when(col(act) === (i + 1),
                 expr(v).cast(tSchema(c).dataType)).otherwise(acc)
@@ -2766,81 +2820,16 @@ object Snapshots {
             }
           }.as(c)
         }: _*)
-      // matched family: evaluate per PAIR, keep firing pairs only;
-      // a target row whose every pair is unfired survives ONCE via the
-      // row-id anti join below (never through the pair rows — a
-      // multi-match row would duplicate)
-      val mFired = labeled(spark, "merge fired pairs")(
-        pairs.withColumn(act, fired(matched))
-          .filter(col(act) =!= 0).localCheckpoint(true))
-      if (matched.nonEmpty && matchedFiles.nonEmpty) {
-        // SQL's cardinality rule, modification-scoped like Delta's:
-        // >1 FIRING pair for one target row is ambiguous; unfired
-        // extra matches are harmless
-        val dups = mFired.groupBy(col(DvPathCol), col(DvPosCol))
-          .count().filter(col("count") > 1).count()
-        if (dups > 0) throw new MergeCardinalityException(dups)
-      }
-      // r15 fusion (guide §5, same discipline as updateWhere): the
-      // staged write and the CDC write both used to re-plan and
-      // re-execute the target-only / source-only joins (and the
-      // survivor anti join) — materialize each fired family ONCE and
-      // make both writes trivial projections. Gated by the matched
-      // files' size estimate: survivors is touched-scale, so a many-GB
-      // rewrite keeps the recompute shape (identical semantics).
-      val fuseMax = BigInt(spark.conf.get("spark.graft.dml.fuseMaxBytes",
-        (2L << 30).toString).toLong)
-      val doFuse = (try touched.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case _: Throwable => BigInt(Long.MaxValue) }) <= fuseMax
-      def fuse(df: DataFrame, desc: String): DataFrame =
-        if (doFuse) labeled(spark, desc)(df.localCheckpoint(true)) else df
-      // an absent clause family folds to filter(false) → LocalRelation,
-      // so only materialize when the clause exists (no wasted job)
-      val sFired = if (notMatchedBySource.isEmpty)
-        targetOnly.withColumn(act, fired(notMatchedBySource)).filter(col(act) =!= 0)
-      else fuse(targetOnly.withColumn(act, fired(notMatchedBySource))
-        .filter(col(act) =!= 0), "merge fired target-only")
-      val firedKeys = mFired.select(col(DvPathCol), col(DvPosCol))
-        .unionByName(sFired.select(col(DvPathCol), col(DvPosCol)))
-      val survivors = fuse(touched
-        .join(org.apache.spark.sql.functions.broadcast(firedKeys),
-          Seq(DvPathCol, DvPosCol), "left_anti")
-        .select(tCols.map(col): _*), "merge survivors")
-      val mUpdates = applySets(mFired.filter(!col(act).isin(deleteIdx(matched): _*)),
-        matched, insert = false)
-      val sUpdates = applySets(sFired.filter(!col(act).isin(deleteIdx(notMatchedBySource): _*)),
-        notMatchedBySource, insert = false)
-      val srcFired = if (notMatched.isEmpty)
-        srcOnly.withColumn(act, fired(notMatched)).filter(col(act) =!= 0)
-      else fuse(srcOnly.withColumn(act, fired(notMatched))
-        .filter(col(act) =!= 0), "merge fired inserts")
-      val inserts = applySets(srcFired, notMatched, insert = true)
-      if (matchedFiles.isEmpty && inserts.isEmpty) snap.version
-      else {
-        val changedPost = mUpdates.unionByName(sUpdates).unionByName(inserts)
-        enforceConstraints(root, prefix, changedPost)
-        val out = survivors.unionByName(mUpdates)
-          .unionByName(sUpdates).unionByName(inserts)
-        val added = writeStaged(root, prefix, out,
+        enforceConstraints(root, prefix, post(rows.filter(changed)))
+        val added = writeStaged(root, prefix, post(rows.filter(survivor || changed)),
           if (tCols.contains("topic")) Seq("topic") else Seq.empty)
-        // change feed: deletes = firing DELETE-clause pre-images;
-        // updates carry both images; inserts their post-image
-        def split(firedDf: DataFrame, clauses: Seq[MergeClause]) = {
-          val d = deleteIdx(clauses)
-          val del = if (d.isEmpty) firedDf.limit(0)
-                    else firedDf.filter(col(act).isin(d: _*))
-          val upd = firedDf.filter(!col(act).isin(d: _*))
-          (del.select(tCols.map(col): _*), upd.select(tCols.map(col): _*))
-        }
-        val (mDel, mUpdPre) = split(mFired, matched)
-        val (sDel, sUpdPre) = split(sFired, notMatchedBySource)
-        val cdc = mDel.unionByName(sDel)
+        val updated = rows.filter(inTarget && changed)
+        val cdc = pre(rows.filter(col(act).isin(deletes: _*)))
           .withColumn("_change_type", lit("delete"))
-          .unionByName(mUpdPre.unionByName(sUpdPre)
-            .withColumn("_change_type", lit("update_preimage")))
-          .unionByName(mUpdates.unionByName(sUpdates)
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(inserts.withColumn("_change_type", lit("insert")))
+          .unionByName(pre(updated).withColumn("_change_type", lit("update_preimage")))
+          .unionByName(post(updated).withColumn("_change_type", lit("update_postimage")))
+          .unionByName(post(rows.filter(!inTarget && changed))
+            .withColumn("_change_type", lit("insert")))
         writeCdc(root, prefix, cdc) {
           commitRewrite(root, prefix, "merge", matchedFiles.toSet, added,
             matchedFiles, snap.maxPos, txn)
@@ -3248,12 +3237,18 @@ object Snapshots {
       if (candidates.isEmpty) return snap.version // stats exclude every file
       // one materialization reused three ways: sidecar rows, touched
       // files for the conflict check, CDC pre-images. The hit set is
-      // what a MoR delete is FOR — small next to the table.
-      val hits = labeled(spark, "delete attribution")(
-        readFilesFilled(spark, root, prefix, candidates, evs,
+      // what a MoR delete is FOR — small next to the table. Its count
+      // and touched files are observed metrics of the same job.
+      val hitsMetric = "graft_delete_hits"
+      val observed = readFilesFilled(spark, root, prefix, candidates, evs,
           snap.dv, keepPositions = true)
-          .filter(matches).localCheckpoint(true))
-      if (hits.isEmpty) snap.version // nothing matched — no new version
+        .filter(matches)
+        .observe(hitsMetric, org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)),
+          org.apache.spark.sql.functions.collect_set(col(DvPathCol)))
+      val hits = labeled(spark, "delete attribution")(observed.localCheckpoint(true))
+      val hitStats = observedMetric(observed, hitsMetric)
+      if (hitStats.getLong(0) == 0) snap.version // nothing matched — no new version
       else {
         val relOffset = base.toString.length + 2 // past base and its '/'
         val name = "dv-" + java.util.UUID.randomUUID().toString.take(8)
@@ -3265,8 +3260,7 @@ object Snapshots {
           // the read path's broadcast build cheap
           .coalesce(1)
           .write.parquet(dvDir(root, prefix).resolve(name).toString))
-        val touched = distinctCollected(hits, DvPathCol)
-          .map(_.substring(relOffset - 1)).toSet
+        val touched = hitStats.getSeq[String](1).map(_.substring(relOffset - 1)).toSet
         val cdc = hits.drop(DvPathCol, DvPosCol)
           .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
         writeCdc(root, prefix, cdc) {

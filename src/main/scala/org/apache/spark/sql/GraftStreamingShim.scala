@@ -4,8 +4,8 @@ package org.apache.spark.sql
   * cannot avoid: `MicroBatchExecution` rejects a `getBatch` result
   * whose plan is not flagged `isStreaming`, and the only way to set
   * the flag is `SparkSession.internalCreateDataFrame` — exactly how
-  * Spark's own `FileStreamSource` marks its batches. Nothing else
-  * lives in this package. */
+  * Spark's own `FileStreamSource` marks its batches. The other
+  * members are the same kind of hop for the batch read and DML paths. */
 object GraftStreamingShim {
   def asStreaming(spark: SparkSession, df: DataFrame): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
@@ -28,4 +28,10 @@ object GraftStreamingShim {
   def ofRows(spark: SparkSession,
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `StructType.asNullable` is `private[spark]`: a file relation's
+    * data schema is nullable all the way down, as
+    * `DataSource.resolveRelation` makes it
+    * (`graft.ingest.Footers.relation`). */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
@@ -71,10 +73,10 @@ class FooterSchemaSpec extends SparkTestBase {
       sameRead(Snapshots.readParquet(spark, base, fs), inferred(base, fs))
       assert(Snapshots.readParquet(spark, base, fs).columns.contains("w") == withW.contains(fs.min))
     }
-    // deletion-vector sidecars under their fixed schema
+    // deletion-vector sidecars, listed on the driver, under their
+    // fixed schema
     val dvs = snap.dv.map(d => s"$root/t._dv/$d")
-    sameRead(spark.read.schema("file STRING, pos BIGINT").parquet(dvs: _*),
-      spark.read.parquet(dvs: _*))
+    sameRead(Snapshots.readDv(spark, dvs.map(Paths.get(_))), spark.read.parquet(dvs: _*))
     // the resolved table: schema equals what a read yields, rows as written
     val table = Snapshots.read(spark, root, "t")
     assert(Snapshots.tableSchema(spark, root, "t") == table.schema)
@@ -130,5 +132,19 @@ class FooterSchemaSpec extends SparkTestBase {
     val read = Footers.withSchema(spark, spark.read, clash, clashRel).parquet(clash.toString)
     sameRead(read, spark.read.parquet(clash.toString))
     assert(read.columns.toSeq == Seq("k", "id"))
+  }
+
+  test("a footer reader's options carry the shared configuration") {
+    val dir = Files.createTempDirectory("graft_footer_conf")
+    spark.range(0, 10).toDF("id").write.parquet(dir.resolve("d").toString)
+    val file = dir.resolve("d").resolve(Footers.firstDataFile(dir.resolve("d")).get)
+    val options = classOf[ParquetFileReader].getDeclaredField("options")
+    options.setAccessible(true)
+    Using.resource(Footers.open(file)) { rd =>
+      options.get(rd) match {
+        case h: HadoopReadOptions => assert(h.getConf eq Footers.conf)
+        case o => fail(s"reader options are ${o.getClass.getName}, not HadoopReadOptions")
+      }
+    }
   }
 }

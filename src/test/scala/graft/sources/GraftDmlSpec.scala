@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -120,6 +122,69 @@ class GraftDmlSpec extends SparkTestBase {
     spark.sql(s"""MERGE INTO $tbl t USING dml_dup2 s ON t.ba = s.ba
       WHEN MATCHED AND s.tag = 'a' THEN UPDATE SET name = s.tag""")
     assert(spark.sql(s"SELECT name FROM $tbl WHERE ba = 5").head().getString(0) == "a")
+  }
+
+  test("MERGE: a target row matched twice, one pair firing, is written once") {
+    val (_, tbl) = fresh("card1")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW dml_one AS
+      SELECT * FROM VALUES (5L, 'a'), (5L, 'b') AS v(ba, tag)""")
+    spark.sql(s"""MERGE INTO $tbl t USING dml_one s ON t.ba = s.ba
+      WHEN MATCHED AND s.tag = 'b' THEN UPDATE SET name = s.tag""")
+    val rows = spark.sql(s"SELECT name FROM $tbl WHERE ba = 5").collect().map(_.getString(0))
+    assert(rows.toSeq == Seq("b"))
+    assert(spark.sql(s"SELECT count(*) FROM $tbl").head().getLong(0) == 4000L)
+  }
+
+  test("MERGE: a target row matched twice, no pair firing, survives once") {
+    val (_, tbl) = fresh("card0")
+    val before = spark.sql(s"SELECT name FROM $tbl WHERE ba = 5").head().getString(0)
+    spark.sql("""CREATE OR REPLACE TEMP VIEW dml_none AS
+      SELECT * FROM VALUES (5L, 'a'), (5L, 'b') AS v(ba, tag)""")
+    spark.sql(s"""MERGE INTO $tbl t USING dml_none s ON t.ba = s.ba
+      WHEN MATCHED AND s.tag = 'z' THEN UPDATE SET name = s.tag
+      WHEN MATCHED AND s.tag = 'y' THEN DELETE""")
+    val rows = spark.sql(s"SELECT name FROM $tbl WHERE ba = 5").collect().map(_.getString(0))
+    assert(rows.toSeq == Seq(before))
+    assert(spark.sql(s"SELECT count(*) FROM $tbl").head().getLong(0) == 4000L)
+  }
+
+  test("MERGE: a refused cardinality leaves no new version and no new data file") {
+    val (root, tbl) = fresh("cardnone")
+    def dataFiles(): Set[String] = {
+      val lake = java.nio.file.Paths.get(root)
+      scala.util.Using.resource(java.nio.file.Files.walk(lake))(_.iterator.asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p)).map(lake.relativize(_).toString).toSet)
+    }
+    val v0 = Snapshots.snapshot(root, "t").get.version
+    val files0 = dataFiles()
+    spark.sql("""CREATE OR REPLACE TEMP VIEW dml_two AS
+      SELECT * FROM VALUES (5L, 'a'), (5L, 'b'), (9000L, 'n') AS v(ba, tag)""")
+    intercept[Exception] {
+      spark.sql(s"""MERGE INTO $tbl t USING dml_two s ON t.ba = s.ba
+        WHEN MATCHED THEN UPDATE SET name = s.tag
+        WHEN NOT MATCHED THEN INSERT (ba, name) VALUES (s.ba, s.tag)""")
+    }
+    assert(Snapshots.snapshot(root, "t").get.version == v0)
+    assert(dataFiles() == files0)
+  }
+
+  test("an absent observed metric fails loudly instead of reading as empty") {
+    val df = spark.range(3).toDF("x")
+    df.collect()
+    val e = intercept[IllegalStateException](Snapshots.observedMetric(df, "graft_missing"))
+    assert(e.getMessage.contains("graft_missing"))
+    val seen = spark.range(3).toDF("x").observe("graft_seen", count(lit(1)))
+    seen.collect()
+    assert(Snapshots.observedMetric(seen, "graft_seen").getLong(0) == 3L)
+  }
+
+  test("an UPDATE matching no row confirms the empty match on its frame, then commits nothing") {
+    val (root, tbl) = fresh("nomatch")
+    val v0 = Snapshots.snapshot(root, "t").get.version
+    val (_, descs) = org.apache.spark.graftspec.JobCounter.descriptions(spark.sparkContext)(
+      spark.sql(s"UPDATE $tbl SET name = 'x' WHERE length(name) > 1000"))
+    assert(descs.contains("graft: update no-match check"), descs.mkString("; "))
+    assert(Snapshots.snapshot(root, "t").get.version == v0)
   }
 
   test("MERGE: pure insert against a matching-nothing source hits no target file") {
