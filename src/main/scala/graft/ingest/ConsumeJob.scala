@@ -99,9 +99,6 @@ object ConsumeJob {
     Files.writeString(p, s"""{"consumedMaxPos": $pos}""")
   }
 
-  def readProgress(root: String, prefix: String): Option[Long] = {
-    val p = Paths.get(Topics.progressPath(root, prefix))
-    if (!Files.exists(p)) None
-    else "-?\\d+".r.findFirstIn(Files.readString(p).replaceAll("[^-\\d]", " ")).map(_.toLong)
-  }
+  def readProgress(root: String, prefix: String): Option[Long] =
+    CommitLog.readPosition(Paths.get(Topics.progressPath(root, prefix)), "consumedMaxPos")
 }

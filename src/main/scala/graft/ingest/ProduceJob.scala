@@ -125,12 +125,6 @@ object ProduceJob {
     Files.writeString(p, s"""{"offloadedMaxPos": $maxPos}""")
   }
 
-  def readManifest(root: String, prefix: String): Option[Long] = {
-    val p = Paths.get(Topics.manifestPath(root, prefix))
-    if (!Files.exists(p)) None
-    else {
-      val s = Files.readString(p)
-      "-?\\d+".r.findFirstIn(s.replaceAll("[^-\\d]", " ")).map(_.toLong)
-    }
-  }
+  def readManifest(root: String, prefix: String): Option[Long] =
+    CommitLog.readPosition(Paths.get(Topics.manifestPath(root, prefix)), "offloadedMaxPos")
 }

@@ -3,6 +3,7 @@ package graft.ingest
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
+import scala.util.control.NonFatal
 
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
@@ -13,11 +14,9 @@ import org.apache.spark.sql.functions.{col, input_file_name}
   * lakehouse layer (the reference offloads to Delta; with no Delta jar
   * in the container we own the commit log, SURVEY.md §7).
   *
-  * Layout: `<root>/<prefix>._log/v%05d.json`, each snapshot pinning
-  * the exact data-file set, the files it superseded (compaction), and
-  * the offload watermark at commit time:
-  *
-  * {{{ {"version": 2, "maxPos": 2999, "files": [...], "removed": [...]} }}}
+  * Each version pins the exact data-file set, the files it superseded
+  * (compaction), and the offload watermark at commit time; the log
+  * format is [[CommitLog]].
   *
   * Properties:
   *  - readers of version N see exactly N's file set — concurrent
@@ -36,6 +35,8 @@ import org.apache.spark.sql.functions.{col, input_file_name}
   */
 object Snapshots {
 
+  import CommitLog.{ckptPath, logDir, versionPath}
+
   final class ConcurrentCommitException(version: Int)
     extends RuntimeException(s"concurrent commit lost the race for v$version")
 
@@ -47,9 +48,6 @@ object Snapshots {
     extends RuntimeException(
       s"$op conflicts with a concurrent rewrite that already claimed: ${files.mkString(", ")}")
 
-  private def logDir(root: String, prefix: String): Path =
-    Paths.get(s"$root/$prefix._log")
-
   /** A full-state checkpoint is written alongside every Nth version
     * file (Delta's `_last_checkpoint` cadence): readers replay at most
     * N delta manifests on top of one checkpoint, so the open cost of a
@@ -57,18 +55,16 @@ object Snapshots {
     * the log spec (exercising multi-checkpoint chains cheaply). */
   @volatile private[graft] var checkpointInterval: Int = 10
 
-  private def ckptPath(root: String, prefix: String, v: Int): Path =
-    logDir(root, prefix).resolve(f"v$v%05d.ckpt.json")
-
   /** Count of log/checkpoint FILE READS (not dir listings) — the
     * delta-log spec pins "a reader opens one checkpoint plus a bounded
     * delta tail" with this, so a regression back to O(history) replay
     * is unrepresentable. */
   private[graft] val logOpens = new java.util.concurrent.atomic.AtomicLong
 
-  private def readLogFile(p: Path): String = {
+  /** The decoded entry of version `v`'s log file. */
+  private def entryOf(root: String, prefix: String, v: Int): CommitLog.Entry = {
     logOpens.incrementAndGet()
-    Files.readString(p)
+    CommitLog.decode(Files.readAllBytes(versionPath(root, prefix, v)))
   }
 
   /** Label the Spark jobs of an engine-internal action (guide §1.5 —
@@ -89,13 +85,6 @@ object Snapshots {
     df.queryExecution.observedMetrics.getOrElse(name, throw new IllegalStateException(
       s"observed metric $name was not reported; refusing to read it as empty"))
 
-  /** Parse one JSON string-array field (the manifest's only array
-    * shape) out of a manifest's raw text. */
-  private def jsonArr(s: String, key: String): Seq[String] =
-    s"""\"$key\":\\s*\\[([^\\]]*)\\]""".r.findFirstMatchIn(s)
-      .map(m => "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-
   private def dataDir(root: String, prefix: String): Path =
     Paths.get(Topics.tableDir(root, prefix))
 
@@ -104,8 +93,7 @@ object Snapshots {
     val d = logDir(root, prefix)
     if (!Files.isDirectory(d)) Seq.empty
     else Using.resource(Files.list(d))(_.iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d{5}\\.json") => s.substring(1, 6).toInt }
+      .flatMap(p => CommitLog.versionOf(p.getFileName.toString))
       .toSeq).sorted
   }
 
@@ -126,22 +114,25 @@ object Snapshots {
     * their `add` lists (a delta's full state is its parent's plus its
     * adds, so the union of all states is the union of all adds plus
     * any full-format roots — Delta derives its tombstone set the same
-    * way from checkpoint + tail actions). */
-  private def referencedFiles(root: String, prefix: String): Set[String] = {
-    val vs = versions(root, prefix)
-    val ckptV = vs.reverse.find { v =>
-      val p = ckptPath(root, prefix, v)
-      Files.isRegularFile(p) && readLogFile(p).contains("\"refsEver\":")
-    }
-    val base: Set[String] = ckptV.map { v =>
-      jsonArr(readLogFile(ckptPath(root, prefix, v)), "refsEver").toSet
-    }.getOrElse(Set.empty)
-    vs.filter(v => ckptV.forall(v > _)).foldLeft(base) { (acc, v) =>
-      val s = rawJson(root, prefix, v)
-      if (s.contains("\"files\":")) acc ++ jsonArr(s, "files")
-      else acc ++ jsonArr(s, "add")
-    }
+    * way from checkpoint + tail actions). Versions above `upTo` are out. */
+  private def referencedFiles(root: String, prefix: String,
+                              upTo: Option[Int] = None): Set[String] = {
+    val vs = versions(root, prefix).filter(v => upTo.forall(v <= _))
+    val ckpt = newestCheckpoint(root, prefix, vs)(_.refsEver)
+    vs.filter(v => ckpt.forall(v > _._1))
+      .foldLeft(ckpt.map(_._2.toSet).getOrElse(Set.empty[String])) { (acc, v) =>
+        val e = entryOf(root, prefix, v)
+        acc ++ e.files.getOrElse(e.add)
+      }
   }
+
+  /** The newest checkpoint among `vs` that carries `field` (checkpoints
+    * older than `refsEver`/`evs` lack them), with the field's value. */
+  private def newestCheckpoint[T](root: String, prefix: String, vs: Seq[Int])(
+      field: CommitLog.Entry => Option[T]): Option[(Int, T)] =
+    vs.reverseIterator.filter(v => Files.isRegularFile(ckptPath(root, prefix, v)))
+      .flatMap(v => field(readCheckpoint(root, prefix, v)).map(v -> _))
+      .nextOption()
 
   /** Marker prefix for compaction rewrites. Compaction must write its
     * output BEFORE committing the snapshot that pins it; if that commit
@@ -172,31 +163,7 @@ object Snapshots {
     * `_rows`) = the file's exact row count, min == max — consumed by
     * [[metadataRowCount]] for metadata-only COUNT(*). */
   final case class FileStat(file: String, column: String, min: Long, max: Long,
-                            typ: String = "L") {
-    def encoded: String = s"$file|$column|$min|$max|$typ"
-  }
-  object FileStat {
-    def decode(s: String): Option[FileStat] = s.split('|') match {
-      // pre-round-4 manifests carry no type tag — those stats are INT64
-      case Array(f, c, lo, hi) =>
-        try Some(FileStat(f, c, lo.toLong, hi.toLong))
-        catch { case _: NumberFormatException => None }
-      case Array(f, c, lo, hi, t) =>
-        try Some(FileStat(f, c, lo.toLong, hi.toLong, t))
-        catch { case _: NumberFormatException => None }
-      case _ => None
-    }
-  }
-
-  /** Stats entries encode as `file|column|min|max|typ` inside the
-    * manifest's regex-parsed JSON arrays — a column name carrying '|',
-    * '"', '\', ']' or a control char would corrupt decode or the log
-    * itself. Such columns simply get no stats (stats are an
-    * optimization: no stat ⇒ no skip ⇒ the file is read and the
-    * filter re-applies — correct, just unpruned). */
-  private def statSafeColumn(name: String): Boolean =
-    name.forall(c => c != '|' && c != '"' && c != '\\' && c != ']' && c >= ' ')
-
+                            typ: String = "L")
   /** Footer scan of one data file: min/max for every top-level INT64,
     * DOUBLE, and STRING column with complete chunk statistics.
     * Plain-JVM IO (no Spark job) — one footer read per newly committed
@@ -214,8 +181,7 @@ object Snapshots {
         val rows = blocks.map(_.getRowCount).sum
         val rowStat = FileStat(rel, "_rows", rows, rows, "R")
         val ranged = blocks.head.getColumns.asScala
-          .filter(c => c.getPath.size == 1 &&
-            statSafeColumn(c.getPath.toDotString)).toSeq
+          .filter(_.getPath.size == 1).toSeq
           .flatMap { c =>
             val name = c.getPath.toDotString
             val ptype = c.getPrimitiveType
@@ -252,8 +218,7 @@ object Snapshots {
             }
           }
         val nullness = blocks.head.getColumns.asScala
-          .filter(c => c.getPath.size == 1 &&
-            statSafeColumn(c.getPath.toDotString)).toSeq
+          .filter(_.getPath.size == 1).toSeq
           .flatMap { c =>
             val name = c.getPath.toDotString
             val chunks = blocks.flatMap(_.getColumns.asScala
@@ -272,7 +237,7 @@ object Snapshots {
         rowStat +: (ranged ++ nullness)
         }
       } finally rd.close()
-    } catch { case _: Throwable => Seq.empty } // stats are an optimization, never fatal
+    } catch { case NonFatal(_) => Seq.empty } // stats are an optimization, never fatal
 
   /** Stats for a snapshot's file set: carry what a prior snapshot
     * already computed, footer-scan only the new files. */
@@ -284,39 +249,14 @@ object Snapshots {
     carried ++ files.filterNot(known).sorted.flatMap(f => footerStats(base, f))
   }
 
-  /** The manifest's string arrays are parsed by a quote-pair regex
-    * ([[jsonArr]]), so a '"', '\', ']' or control character inside an
-    * element would write a log no reader can parse. File names and
-    * schema-event versions are engine-generated (always safe); txn ids
-    * and stats column names embed user-supplied strings — those are
-    * validated/filtered at their entry points, and this emit-side
-    * guard turns any future unsafe call site into a loud refusal
-    * instead of silent log corruption. */
-  /** Thrown (only) by [[requireManifestSafe]]. A DEDICATED type so the
-    * checkpoint-skip catch in [[writeSnapshot]] matches exactly the
-    * emit guard's refusal — a bare IllegalArgumentException from an
-    * unrelated require inside the checkpoint helpers must keep
-    * propagating, not silently disable checkpointing forever
-    * (round-13 ADVICE). Subclasses IllegalArgumentException so
-    * call-site contracts (and their specs) are unchanged. */
-  final class UnencodableManifestStringException(msg: String)
-    extends IllegalArgumentException(msg)
-
-  private def requireManifestSafe(x: String): String = {
-    var i = 0
-    while (i < x.length) {
-      val c = x.charAt(i)
-      if (c == '"' || c == '\\' || c == ']' || c < ' ')
-        throw new UnencodableManifestStringException(
-          s"manifest string contains unencodable char '${c.toInt}' " +
-            s"(quote, backslash, ']' or control): '$x'")
+  private def isSorted(xs: Array[String]): Boolean = {
+    var i = 1
+    while (i < xs.length) {
+      if (xs(i - 1) > xs(i)) return false
       i += 1
     }
-    x
+    true
   }
-
-  private def arrJson(xs: Seq[String]) =
-    xs.map(f => "\"" + requireManifestSafe(f) + "\"").mkString("[", ", ", "]")
 
   /** (add, del) = (files ∖ parent, parent ∖ files), both sorted —
     * O(n) two-pointer walk when both inputs are sorted (the write path
@@ -328,14 +268,6 @@ object Snapshots {
                          pFiles: Seq[String]): (Seq[String], Seq[String]) = {
     val a = files.toArray
     val p = pFiles.toArray
-    def isSorted(xs: Array[String]): Boolean = {
-      var i = 1
-      while (i < xs.length) {
-        if (xs(i - 1) > xs(i)) return false
-        i += 1
-      }
-      true
-    }
     if (!isSorted(a) || !isSorted(p)) {
       val pSet = pFiles.toSet
       val fSet = files.toSet
@@ -372,14 +304,20 @@ object Snapshots {
     * compatibility story: pre-round-9 manifests carry a full `files`
     * list and read as their own checkpoint. Every
     * [[checkpointInterval]]th version additionally writes a full-state
-    * `v%05d.ckpt.json` so readers replay a bounded tail. */
+    * checkpoint so readers replay a bounded tail. `dv` is the active
+    * deletion-vector set: every commit path must carry the CURRENT set
+    * forward (or the restore target's) — dropping it would silently
+    * resurrect rows. */
   private[graft] def writeSnapshot(root: String, prefix: String, version: Int,
                             maxPos: Long, files: Seq[String],
                             removed: Seq[String], op: String = "append",
                             txns: Seq[String] = Seq.empty,
                             stats: Seq[FileStat] = Seq.empty,
-                            extraFields: Seq[(String, String)] = Seq.empty,
-                            parent: Option[Snapshot] = None): Int = {
+                            dv: Seq[String] = Seq.empty,
+                            parent: Option[Snapshot] = None,
+                            audit: Option[String] = None,
+                            publishedFrom: Option[String] = None,
+                            column: Option[CommitLog.ColumnChange] = None): Int = {
     // file-set diff: O(n) two-pointer walk over the two SORTED lists
     // (the round-11 probe put the old hash-set diff at seconds per
     // commit on a 10⁶-file table); an unsorted input — possible only
@@ -412,75 +350,42 @@ object Snapshots {
           residue.filterNot(pv)
         }
     }
-    val extras = (("parent" -> parent.map(_.version).getOrElse(-1).toString) +:
-      extraFields).map { case (k, v) => s""", "$k": "$v"""" }.mkString
-    val json =
-      s"""{"version": $version, "fmt": 2, "op": "$op", "maxPos": $maxPos, "add": ${arrJson(add)}, "del": ${arrJson(del)}, "removed": ${arrJson(removed)}, "txnsAdd": ${arrJson(txnsAdd)}, "statsAdd": ${arrJson(statsAdd.map(_.encoded))}$extras}"""
+    val entry = CommitLog.Entry(version, CommitLog.Fmt, Some(op), maxPos,
+      Some(parent.map(_.version).getOrElse(-1)), add, del, removed, txnsAdd, statsAdd,
+      dv, audit, publishedFrom, column)
     Files.createDirectories(logDir(root, prefix))
-    try Files.writeString(logDir(root, prefix).resolve(f"v$version%05d.json"), json,
+    try Files.write(versionPath(root, prefix, version), CommitLog.encode(entry),
       StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new ConcurrentCommitException(version)
     }
     if (version > 0 && version % checkpointInterval == 0)
-      try writeCheckpoint(root, prefix, version, maxPos, files, removed, op,
-        txns, stats, extraFields)
-      catch {
-        // a hand-written/legacy log can carry a string the emit guard
-        // refuses (control chars parse through jsonArr's regex but can
-        // never be re-emitted) — the checkpoint is an OPTIMIZATION, and
-        // the delta just landed, so failing the commit here would
-        // poison every interval-boundary commit forever. Skip loudly:
-        // correctness is untouched, resolution falls back to the delta
-        // chain until the log is repaired. The DELTA's own arrJson
-        // guard still throws BEFORE anything lands, so new unsafe
-        // strings can never enter the log this way.
-        case e: UnencodableManifestStringException =>
-          System.err.println(s"[graft] checkpoint v$version for $prefix " +
-            s"SKIPPED (unencodable carried string): ${e.getMessage} — " +
-            "the commit itself is durable; repair the offending log entry " +
-            "to restore checkpointing")
-      }
+      writeCheckpoint(root, prefix,
+        Snapshot(version, maxPos, files, removed, op, txns, stats, column, dv))
     version
   }
 
-  /** Full-state checkpoint for one committed version (legacy manifest
-    * shape, plus the cumulative `refsEver` set that keeps
-    * [[referencedFiles]] O(checkpoint + tail)). Idempotent — a racer
-    * or replay that finds the file just keeps it. */
-  private def writeCheckpoint(root: String, prefix: String, version: Int,
-                              maxPos: Long, files: Seq[String],
-                              removed: Seq[String], op: String,
-                              txns: Seq[String], stats: Seq[FileStat],
-                              extraFields: Seq[(String, String)],
+  /** Full-state checkpoint of one committed version, plus the
+    * cumulative `refsEver` set that keeps [[referencedFiles]]
+    * O(checkpoint + tail). Idempotent — a racer or replay that finds
+    * the file just keeps it. A checkpoint already at this version
+    * (garbage, or an abandoned commit's) is never read for it: both
+    * cumulative sets fold from the versions below. */
+  private def writeCheckpoint(root: String, prefix: String, snap: Snapshot,
                               refsOverride: Option[Seq[String]] = None,
                               overwrite: Boolean = false): Unit = {
+    val below = Some(snap.version - 1)
     val refs = refsOverride.getOrElse(
-      (referencedFiles(root, prefix) ++ files).toSeq.sorted)
+      (referencedFiles(root, prefix, below) ++ snap.files).toSeq.sorted)
     // cumulative schema-event versions (this version included if it IS
     // one) — what keeps schemaEvents O(tail) on long histories
-    val evs = (schemaEventVersions(root, prefix, Some(version)) ++
-      (op match {
-        case "addcol" | "renamecol" | "dropcol" => Seq(version)
-        case _ => Seq.empty
-      })).distinct.sorted
-    val extras = extraFields.map { case (k, v) => s""", "$k": "$v"""" }.mkString
-    // STREAMED to disk (round-11 verdict #4): at 10⁶ files the old
-    // single-string interpolation built a ~283 MiB transient String
-    // (plus the arrJson intermediates) once per checkpointInterval
-    // commits — the emitter writes the same bytes through a buffered
-    // writer with no table-proportional allocation.
-    def emit(w: java.io.Writer): Unit = {
-      w.write(s"""{"version": $version, "op": "$op", "maxPos": $maxPos, "files": """)
-      emitArr(w, files.iterator)
-      w.write(""", "removed": """); emitArr(w, removed.iterator)
-      w.write(""", "txns": """); emitArr(w, txns.iterator)
-      w.write(""", "stats": """); emitArr(w, stats.iterator.map(_.encoded))
-      w.write(""", "refsEver": """); emitArr(w, refs.iterator)
-      w.write(""", "evs": """); emitArr(w, evs.iterator.map(_.toString))
-      w.write(extras); w.write("}")
-    }
+    val evs = schemaEventVersions(root, prefix, below) ++
+      (if (isSchemaEvent(snap.op)) Seq(snap.version) else Seq.empty)
+    val entry = CommitLog.Entry(snap.version, CommitLog.Fmt, Some(snap.op), snap.maxPos,
+      removed = snap.removed, dv = snap.dv, column = snap.column,
+      files = Some(snap.files), txns = snap.txns, stats = snap.stats,
+      refsEver = Some(refs), evs = Some(evs))
     def writeTo(p: Path): Unit = {
       val w = Files.newBufferedWriter(p, java.nio.charset.StandardCharsets.UTF_8,
         StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
@@ -492,7 +397,7 @@ object Snapshots {
       // the delete is guarded for the same reason. The success-path
       // close is inside the try so a flush-time disk-full also cleans
       // up (a second close on the already-closed writer is a no-op).
-      try { emit(w); w.close() }
+      try { CommitLog.write(w, entry); w.close() }
       catch {
         case e: Throwable =>
           try w.close() catch { case _: Throwable => () }
@@ -500,43 +405,9 @@ object Snapshots {
           throw e
       }
     }
-    // Replace `p` with `tmp`, atomically where the filesystem can.
-    // Only AtomicMoveNotSupportedException downgrades to a plain
-    // REPLACE_EXISTING move, and only a vanished-tmp race is swallowed
-    // — any real IO failure (permissions, quota) rethrows, because a
-    // checkpoint this code decided is stale/corrupt MUST be repaired,
-    // not silently kept while the commit proceeds.
-    def moveInto(tmp: Path, p: Path): Unit = {
-      try {
-        try {
-          Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          ()
-        } catch {
-          case _: java.nio.file.AtomicMoveNotSupportedException =>
-            Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            ()
-        }
-      } catch {
-        case _: java.nio.file.NoSuchFileException =>
-          // tmp vanished — a concurrent cleanup raced us; the
-          // content-keyed parse cache keeps reads safe either way
-          Files.deleteIfExists(tmp); ()
-        case e: Throwable =>
-          Files.deleteIfExists(tmp); throw e
-      }
-    }
-    // temp write + ATOMIC_MOVE (the parse cache is content-keyed, so
-    // readers can never be served the old parse for the new bytes)
-    def replaceStreaming(p: Path): Unit = {
-      val tmp = p.resolveSibling(p.getFileName.toString + ".tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      writeTo(tmp)
-      moveInto(tmp, p)
-    }
-    val p = ckptPath(root, prefix, version)
+    val p = ckptPath(root, prefix, snap.version)
     if (overwrite && Files.exists(p)) {
-      replaceStreaming(p)
+      replaceAtomically(p)(writeTo)
       return
     }
     try writeTo(p)
@@ -566,16 +437,6 @@ object Snapshots {
     }
   }
 
-  private def emitArr(w: java.io.Writer, xs: Iterator[String]): Unit = {
-    w.write('[')
-    var first = true
-    xs.foreach { x =>
-      if (first) first = false else w.write(", ")
-      w.write('"'); w.write(requireManifestSafe(x)); w.write('"')
-    }
-    w.write(']')
-  }
-
   /** Streaming byte-equality of two files — the checkpoint staleness
     * probe at 10⁶ files must not read 283 MiB into one String. */
   private def sameBytes(a: Path, b: Path): Boolean = {
@@ -597,17 +458,14 @@ object Snapshots {
     } finally { ia.close(); ib.close() }
   }
 
-  /** Atomically replace one checkpoint file (temp write + ATOMIC_MOVE;
-    * the parse cache is content-keyed, so readers can never be served
-    * the old parse for the new bytes). Maintenance-path only. */
-  private def replaceCheckpoint(root: String, prefix: String, version: Int,
-                                json: String): Unit = {
-    val p = ckptPath(root, prefix, version)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
+  // Replace `p` with `tmp`, atomically where the filesystem can.
+  // Only AtomicMoveNotSupportedException downgrades to a plain
+  // REPLACE_EXISTING move, and only a vanished-tmp race is swallowed
+  // — any real IO failure (permissions, quota) rethrows, because a
+  // checkpoint this code decided is stale/corrupt MUST be repaired,
+  // not silently kept while the commit proceeds.
+  private def moveInto(tmp: Path, p: Path): Unit = {
     try {
-      Files.writeString(tmp, json, StandardOpenOption.CREATE_NEW,
-        StandardOpenOption.WRITE)
       try {
         Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -618,9 +476,23 @@ object Snapshots {
           ()
       }
     } catch {
-      // never leak a partial/orphaned temp file into the log dir
-      case e: Throwable => Files.deleteIfExists(tmp); throw e
+      case _: java.nio.file.NoSuchFileException =>
+        // tmp vanished — a concurrent cleanup raced us; the
+        // content-keyed parse cache keeps reads safe either way
+        Files.deleteIfExists(tmp); ()
+      case e: Throwable =>
+        Files.deleteIfExists(tmp); throw e
     }
+  }
+
+  /** Replace `p` with what `fill` writes to a temp sibling (the parse
+    * cache is content-keyed, so readers can never be served the old
+    * parse for the new bytes); a failed fill leaks no temp file. */
+  private def replaceAtomically(p: Path)(fill: Path => Unit): Unit = {
+    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp-" +
+      java.util.UUID.randomUUID().toString.take(8))
+    try fill(tmp) catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+    moveInto(tmp, p)
   }
 
   /** Commit the table's current state as the next version. Append
@@ -651,7 +523,7 @@ object Snapshots {
         prev.map(_.stats).getOrElse(Seq.empty))
       try writeSnapshot(root, prefix, next, maxPos, files, Seq.empty, "append",
         prev.map(_.txns).getOrElse(Seq.empty) ++ txn, stats,
-        extraFields = dvField(prev.map(_.dv).getOrElse(Seq.empty)), parent = prev)
+        prev.map(_.dv).getOrElse(Seq.empty), parent = prev)
       catch {
         case e: ConcurrentCommitException =>
           if (retries > 0) commit(root, prefix, maxPos, retries - 1, txn) else throw e
@@ -673,12 +545,10 @@ object Snapshots {
                    retries: Int = 5): Int = {
     // the idempotent lookup runs BEFORE the charset require: a staged
     // commit that landed under an earlier, laxer contract (space, '/',
-    // '(' were manifest-safe to the reader's quote-pair regex) must
-    // stay re-acknowledgeable — validating first would strand it
-    // forever (round-13 ADVICE). New stagings still refuse below.
+    // '(') must stay re-acknowledgeable — validating first would
+    // strand it forever. New stagings still refuse below.
     stagedVersion(root, prefix, audit).getOrElse {
-      // the audit id lands verbatim in the manifest's regex-parsed
-      // "audit" field — same charset contract as txn ids and tag names
+      // same charset contract as tag names
       require(audit.nonEmpty && audit.matches("[A-Za-z0-9._:-]+"),
         s"audit id must be non-empty [A-Za-z0-9._:-] (it is embedded " +
           s"in the commit log); got '$audit'")
@@ -691,11 +561,11 @@ object Snapshots {
         prevPub.map(_.stats).getOrElse(Seq.empty))
       try writeSnapshot(root, prefix, nextVersion(root, prefix), maxPos, files,
         Seq.empty, "staged", prevPub.map(_.txns).getOrElse(Seq.empty), stats,
+        prevPub.map(_.dv).getOrElse(Seq.empty),
         // the delta's built-in parent field IS the staged commit's
         // published-parent record (publish resolves the staged delta
         // against it)
-        extraFields = Seq("audit" -> audit) ++
-          dvField(prevPub.map(_.dv).getOrElse(Seq.empty)), parent = prevPub)
+        parent = prevPub, audit = Some(audit))
       catch {
         case e: ConcurrentCommitException =>
           if (retries > 0) commitStaged(root, prefix, maxPos, audit, retries - 1)
@@ -706,9 +576,10 @@ object Snapshots {
 
   /** The staged (not yet published) version carrying this audit id. */
   def stagedVersion(root: String, prefix: String, audit: String): Option[Int] =
-    versions(root, prefix).reverse.find(v =>
-      opOf(root, prefix, v) == "staged" &&
-        rawField(root, prefix, v, "audit").contains(audit))
+    versions(root, prefix).reverse.find { v =>
+      val e = entryOf(root, prefix, v)
+      e.opName == "staged" && e.audit.contains(audit)
+    }
 
   /** Publish a staged commit: the next PUBLISHED version adopts the
     * staged snapshot's new files on top of the CURRENT published head
@@ -719,11 +590,10 @@ object Snapshots {
   def publish(root: String, prefix: String, audit: String, retries: Int = 5): Int = {
     val sv = stagedVersion(root, prefix, audit).getOrElse(
       sys.error(s"no staged commit for audit '$audit' on $prefix"))
-    versions(root, prefix)
-      .find(v => rawField(root, prefix, v, "publishedFrom").contains(sv.toString))
+    versions(root, prefix).find(v => publishedFrom(root, prefix, v, sv))
       .getOrElse {
         val staged = snapshot(root, prefix, Some(sv)).get
-        val parentFiles = rawField(root, prefix, sv, "parent").map(_.toInt)
+        val parentFiles = entryOf(root, prefix, sv).parent
           .filter(_ >= 0)
           .flatMap(pv => snapshot(root, prefix, Some(pv)).map(_.files.toSet))
           .getOrElse(Set.empty)
@@ -737,15 +607,18 @@ object Snapshots {
         val dv = (head.map(_.dv).getOrElse(Seq.empty) ++ staged.dv).distinct
         try writeSnapshot(root, prefix, nextVersion(root, prefix),
           math.max(head.map(_.maxPos).getOrElse(-1L), staged.maxPos), files,
-          Seq.empty, "publish", txns, stats,
-          extraFields = Seq("publishedFrom" -> sv.toString) ++ dvField(dv),
-          parent = head)
+          Seq.empty, "publish", txns, stats, dv, parent = head,
+          publishedFrom = Some(sv.toString))
         catch {
           case e: ConcurrentCommitException =>
             if (retries > 0) publish(root, prefix, audit, retries - 1) else throw e
         }
       }
   }
+
+  /** Whether version `v` published staged version `sv`. */
+  private def publishedFrom(root: String, prefix: String, v: Int, sv: Int): Boolean =
+    entryOf(root, prefix, v).publishedFrom.contains(sv.toString)
 
   /** Drop an ABANDONED staged commit: the audit failed and the batch
     * will never publish. Deletes only the staged MANIFEST — its
@@ -758,10 +631,9 @@ object Snapshots {
   def dropStaged(root: String, prefix: String, audit: String): Unit = {
     val sv = stagedVersion(root, prefix, audit).getOrElse(
       sys.error(s"no staged commit for audit '$audit' on $prefix"))
-    require(!versions(root, prefix).exists(v =>
-      rawField(root, prefix, v, "publishedFrom").contains(sv.toString)),
+    require(!versions(root, prefix).exists(v => publishedFrom(root, prefix, v, sv)),
       s"audit '$audit' was published; refusing to drop its staged version")
-    Files.deleteIfExists(logDir(root, prefix).resolve(f"v$sv%05d.json"))
+    Files.deleteIfExists(versionPath(root, prefix, sv))
     // the staged commit's CHECKPOINT must die with it: nextVersion
     // reallocates this version number, and a stale full-state
     // checkpoint outranks the new version's manifest in
@@ -882,9 +754,8 @@ object Snapshots {
     // misleading divergence error. Any non-identical commit is a real
     // divergence and refuses as before.
     if (cur.version > base) (base + 1 to cur.version).foreach { v =>
-      val name = f"v$v%05d.json"
-      val tp = logDir(root, prefix).resolve(name)
-      val bp = logDir(brRoot, brPrefix).resolve(name)
+      val tp = versionPath(root, prefix, v)
+      val bp = versionPath(brRoot, brPrefix, v)
       require(Files.isRegularFile(tp) && Files.isRegularFile(bp) &&
         java.util.Arrays.equals(Files.readAllBytes(tp), Files.readAllBytes(bp)),
         s"fast-forward refused: $prefix advanced past the fork " +
@@ -901,7 +772,7 @@ object Snapshots {
     // a branch vacuumed past the fork can't replay its commits — check
     // the log is contiguous BEFORE adopting anything
     (base + 1 to brLatest.version).foreach { v =>
-      require(Files.isRegularFile(logDir(brRoot, brPrefix).resolve(f"v$v%05d.json")),
+      require(Files.isRegularFile(versionPath(brRoot, brPrefix, v)),
         s"fast-forward refused: branch $brPrefix is missing commit v$v " +
           "(vacuumed past the fork?)")
     }
@@ -931,11 +802,9 @@ object Snapshots {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING); ()
     }
     (cur.version + 1 to brLatest.version).foreach { v =>
-      val name = f"v$v%05d.json"
       // plain copy without REPLACE: a racing table commit owns the
       // version file and the publish fails loudly instead of clobbering
-      Files.copy(logDir(brRoot, brPrefix).resolve(name),
-        logDir(root, prefix).resolve(name))
+      Files.copy(versionPath(brRoot, brPrefix, v), versionPath(root, prefix, v))
       // adopt the branch's full-state checkpoint for this version too —
       // it anchors the table's delta-chain resolution and refsEver scan.
       // A pre-existing DIFFERENT checkpoint at this version is an
@@ -945,9 +814,7 @@ object Snapshots {
       if (Files.isRegularFile(bc)) {
         val tc = ckptPath(root, prefix, v)
         if (!Files.exists(tc)) { Files.copy(bc, tc); () }
-        else if (!java.util.Arrays.equals(Files.readAllBytes(bc),
-                                          Files.readAllBytes(tc)))
-          replaceCheckpoint(root, prefix, v, Files.readString(bc))
+        else if (!sameBytes(bc, tc)) replaceAtomically(tc)(Files.copy(bc, _))
       }
       // advance the fork record with EVERY adopted version: a crash
       // after this point resumes through the byte-identical tolerance
@@ -990,7 +857,7 @@ object Snapshots {
                             op: String = "append",
                             txns: Seq[String] = Seq.empty,
                             stats: Seq[FileStat] = Seq.empty,
-                            addedCol: Option[String] = None,
+                            column: Option[CommitLog.ColumnChange] = None,
                             dv: Seq[String] = Seq.empty)
 
   /** Deletion-vector sidecar directories live OUTSIDE the data dir so
@@ -998,25 +865,9 @@ object Snapshots {
   private def dvDir(root: String, prefix: String): Path =
     Paths.get(s"$root/$prefix._dv")
 
-  /** Encode the active deletion-vector list for [[writeSnapshot]];
-    * every commit path must carry the CURRENT dv set forward (or the
-    * restore target's) — dropping it would silently resurrect rows. */
-  private def dvField(dv: Seq[String]): Seq[(String, String)] =
-    if (dv.isEmpty) Seq.empty else Seq("dv" -> dv.mkString(","))
-
-  /** Raw manifest text of one version (for field probes that Snapshot
-    * does not carry). */
-  private def rawJson(root: String, prefix: String, v: Int): String =
-    readLogFile(logDir(root, prefix).resolve(f"v$v%05d.json"))
-
-  /** One string field of a version's manifest, as written via
-    * writeSnapshot's extraFields. */
-  private def rawField(root: String, prefix: String, v: Int, key: String): Option[String] =
-    (s""""$key":\\s*"([^"]*)"""").r.findFirstMatchIn(rawJson(root, prefix, v)).map(_.group(1))
-
   /** The op kind of one version without building the full Snapshot. */
   private def opOf(root: String, prefix: String, v: Int): String =
-    rawField(root, prefix, v, "op").getOrElse("append")
+    entryOf(root, prefix, v).opName
 
   /** Next unallocated version number — the version FILE sequence,
     * independent of which snapshot a commit builds on. (A staged
@@ -1033,7 +884,7 @@ object Snapshots {
     * version, never a data file. */
   def commitTimes(root: String, prefix: String): Seq[(Int, Long)] =
     versions(root, prefix).map(v => v ->
-      Files.getLastModifiedTime(logDir(root, prefix).resolve(f"v$v%05d.json")).toMillis)
+      Files.getLastModifiedTime(versionPath(root, prefix, v)).toMillis)
 
   /** The highest version committed at or before `tsMillis`; None if
     * the table had no commit yet at that time. Filter (not takeWhile):
@@ -1064,28 +915,14 @@ object Snapshots {
     v.map(ver => resolveSnapshot(root, prefix, ver))
   }
 
-  private def parseManifest(s: String, ver: Int): Snapshot = {
-    val maxPos = "\"maxPos\":\\s*(-?\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
-    val files = jsonArr(s, "files")
-    val removed = jsonArr(s, "removed")
-    // pre-"op" snapshots (rounds 1-2): a removed list meant compaction
-    val op = "\"op\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1))
-      .getOrElse(if (removed.nonEmpty) "compact" else "append")
-    val addedCol = "\"addedCol\":\\s*\"([^\"]*)\"".r.findFirstMatchIn(s).map(_.group(1))
-    val dv = "\"dv\":\\s*\"([^\"]*)\"".r.findFirstMatchIn(s).map(_.group(1))
-      .toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
-    Snapshot(ver, maxPos, files, removed, op,
-      jsonArr(s, "txns"), jsonArr(s, "stats").flatMap(FileStat.decode), addedCol, dv)
-  }
+  /** The state an entry spells out itself: a checkpoint's or full
+    * manifest's whole state, a delta's header fields. */
+  private def toSnapshot(e: CommitLog.Entry, ver: Int): Snapshot =
+    Snapshot(ver, e.maxPos, e.files.getOrElse(Seq.empty), e.removed, e.opName,
+      e.txns, e.stats, e.column, e.dv)
 
-  /** Resolve one version's full state: its checkpoint if one exists,
-    * a legacy full manifest as its own checkpoint, else the parent
-    * chain replayed with this version's add/del/txnsAdd/statsAdd
-    * delta. A statsAdd entry REPLACES a carried parent entry for the
-    * same (file, column, kind) — stats are footer-derived, so the
-    * freshest derivation wins. */
   /** Content-addressed parse cache for CHECKPOINT manifests. A
-    * checkpoint is the one log file big enough (O(table)) that regex
+    * checkpoint is the one log file big enough (O(table)) that
     * re-parsing dominates long-history commit loops — the 2000-commit
     * probe showed per-commit latency growing with the newest
     * checkpoint's size. Keyed by (version, content hash): a recreated
@@ -1104,28 +941,34 @@ object Snapshots {
     * JVM's commit loops), and even then every access degrades to
     * parse-on-read — the pre-cache behavior, never worse. */
   private val ckptParseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
+    new java.util.concurrent.ConcurrentHashMap[String, CommitLog.Entry]()
 
   /** Test hook: drop the checkpoint parse cache so the scale probe can
     * time a genuinely COLD parse (the cache is content-keyed, so
     * re-reading the same bytes — even from a copied log — still hits). */
   private[graft] def clearCkptParseCacheForTest(): Unit = ckptParseCache.clear()
 
-  private def parseCkptCached(p: Path, ver: Int): Snapshot = {
+  private def readCheckpoint(root: String, prefix: String, ver: Int): CommitLog.Entry = {
     logOpens.incrementAndGet()
-    val bytes = Files.readAllBytes(p)
+    val bytes = Files.readAllBytes(ckptPath(root, prefix, ver))
     val key = ver.toString + ":" + java.util.Base64.getEncoder.encodeToString(
       java.security.MessageDigest.getInstance("MD5").digest(bytes))
     val hit = ckptParseCache.get(key)
     if (hit != null) hit
     else {
-      val s = parseManifest(new String(bytes, java.nio.charset.StandardCharsets.UTF_8), ver)
+      val e = CommitLog.decode(bytes)
       if (ckptParseCache.size > 64) ckptParseCache.clear()
-      ckptParseCache.put(key, s)
-      s
+      ckptParseCache.put(key, e)
+      e
     }
   }
 
+  /** Resolve one version's full state: its checkpoint if one exists,
+    * a legacy full manifest as its own checkpoint, else the parent
+    * chain replayed with this version's add/del/txnsAdd/statsAdd
+    * delta. A statsAdd entry REPLACES a carried parent entry for the
+    * same (file, column, kind) — stats are footer-derived, so the
+    * freshest derivation wins. */
   private def resolveSnapshot(root: String, prefix: String, ver: Int): Snapshot = {
     // ITERATIVE descend + fold (r9 advisor target): on a healthy log
     // the parent chain is bounded by checkpointInterval, but a legacy
@@ -1134,26 +977,24 @@ object Snapshots {
     // would overflow the stack around ~10k versions. Descend first,
     // collecting delta manifests until a checkpoint / full manifest /
     // root anchors the state, then fold the deltas oldest-first.
-    var pending = List.empty[(Int, String)] // head = oldest after the loop
+    var pending = List.empty[(Int, CommitLog.Entry)] // head = oldest after the loop
     var cur = ver
     var base: Option[Snapshot] = None
     var descending = true
     while (descending) {
-      val cp = ckptPath(root, prefix, cur)
-      if (Files.isRegularFile(cp)) {
-        base = Some(parseCkptCached(cp, cur)); descending = false
+      if (Files.isRegularFile(ckptPath(root, prefix, cur))) {
+        base = Some(toSnapshot(readCheckpoint(root, prefix, cur), cur)); descending = false
       } else {
-        val s = rawJson(root, prefix, cur)
-        if (s.contains("\"files\":")) {
-          base = Some(parseManifest(s, cur)); descending = false
+        val e = entryOf(root, prefix, cur)
+        if (e.files.isDefined) {
+          base = Some(toSnapshot(e, cur)); descending = false
         } else {
-          val pv = "\"parent\":\\s*\"(-?\\d+)\"".r.findFirstMatchIn(s)
-            .map(_.group(1).toInt)
+          val pv = e.parent
             .getOrElse(sys.error(s"delta manifest v$cur of $prefix has no parent"))
-          pending ::= (cur, s)
+          pending ::= (cur, e)
           if (pv < 0) { base = None; descending = false }
           else if (Files.isRegularFile(ckptPath(root, prefix, pv)) ||
-            Files.isRegularFile(logDir(root, prefix).resolve(f"v$pv%05d.json")))
+            Files.isRegularFile(versionPath(root, prefix, pv)))
             cur = pv
           else sys.error(s"log of $prefix truncated: v$cur needs v$pv " +
             "(vacuumed without a checkpoint barrier?)")
@@ -1175,12 +1016,10 @@ object Snapshots {
       if (b.stats.forall(st => fs(st.file))) b
       else b.copy(stats = b.stats.filter(st => fs(st.file)))
     }
-    pending.foldLeft(baseNorm) { (acc, entry) =>
-      val (v, s) = entry
-      val delta = parseManifest(s, v) // files/txns/stats fields absent → empty
-      val add = jsonArr(s, "add")
+    pending.foldLeft(baseNorm) { case (acc, (v, e)) =>
+      val add = e.add
       val addSet = add.toSet
-      val delSet = jsonArr(s, "del").toSet
+      val delSet = e.del.toSet
       val accFiles = acc.map(_.files).getOrElse(Seq.empty)
       val kept = if (delSet.isEmpty) accFiles else accFiles.filterNot(delSet)
       val files = mergeSortedFiles(kept, add)
@@ -1190,7 +1029,7 @@ object Snapshots {
       // round-11 finding). mergeSortedFiles always returns sorted, so
       // the membership probe is O(delta · log n), never an O(table)
       // set rebuild — on healthy logs (statsAdd ⊆ add) nothing drops.
-      val statsAddRaw = jsonArr(s, "statsAdd").flatMap(FileStat.decode)
+      val statsAddRaw = e.statsAdd
       val statsAdd =
         if (statsAddRaw.isEmpty) statsAddRaw
         else {
@@ -1207,8 +1046,8 @@ object Snapshots {
       val stats = acc.map(_.stats).getOrElse(Seq.empty)
         .filter(st => (!delSet(st.file) || addSet(st.file)) &&
           !addKeys((st.file, st.column, st.typ))) ++ statsAdd
-      val txns = acc.map(_.txns).getOrElse(Seq.empty) ++ jsonArr(s, "txnsAdd")
-      Some(delta.copy(files = files, txns = txns, stats = stats))
+      val txns = acc.map(_.txns).getOrElse(Seq.empty) ++ e.txnsAdd
+      Some(toSnapshot(e, v).copy(files = files, txns = txns, stats = stats))
     }.getOrElse(sys.error(s"unresolvable snapshot v$ver of $prefix"))
   }
 
@@ -1233,14 +1072,6 @@ object Snapshots {
     // arrays up front: Seq.apply on a List would make the merge O(n²)
     val av = a.toArray
     val bv = b.toArray
-    def isSorted(xs: Array[String]): Boolean = {
-      var i = 1
-      while (i < xs.length) {
-        if (xs(i - 1) > xs(i)) return false
-        i += 1
-      }
-      true
-    }
     if (bv.isEmpty && isSorted(av)) a
     else if (av.isEmpty && isSorted(bv)) b
     else if (!isSorted(av) || !isSorted(bv)) (a ++ b).sorted
@@ -1304,8 +1135,9 @@ object Snapshots {
   final case class DroppedColumn(version: Int, name: String,
                                  preFiles: Set[String]) extends SchemaEvent
 
-  /** Schema-evolution events up to `upTo` (inclusive; None = all),
-    * oldest first. */
+  private def isSchemaEvent(op: String): Boolean =
+    op == "addcol" || op == "renamecol" || op == "dropcol"
+
   /** Versions ≤ `upTo` that committed a schema event. The newest
     * checkpoint carries the CUMULATIVE list (`evs`), so the probe cost
     * is O(tail since checkpoint), not O(history) — the round-8 raw-op
@@ -1314,35 +1146,28 @@ object Snapshots {
   private def schemaEventVersions(root: String, prefix: String,
                                   upTo: Option[Int]): Seq[Int] = {
     val vs = versions(root, prefix).filter(v => upTo.forall(v <= _))
-    val ckpt: Option[(Int, String)] = vs.reverse.iterator.map { v =>
-      val p = ckptPath(root, prefix, v)
-      if (Files.isRegularFile(p)) Some(v -> readLogFile(p)) else None
-    }.collectFirst { case Some((v, txt)) if txt.contains("\"evs\":") => (v, txt) }
-    val base = ckpt.map { case (_, txt) => jsonArr(txt, "evs").map(_.toInt) }
-      .getOrElse(Seq.empty)
+    val ckpt = newestCheckpoint(root, prefix, vs)(_.evs)
+    val base = ckpt.map(_._2).getOrElse(Seq.empty)
     val tail = vs.filter(v => ckpt.forall(v > _._1))
-      .filter(v => opOf(root, prefix, v) match {
-        case "addcol" | "renamecol" | "dropcol" => true
-        case _ => false
-      })
+      .filter(v => isSchemaEvent(opOf(root, prefix, v)))
     val live = vs.toSet // vacuumed event versions drop out (legacy rule)
     (base.filter(live) ++ tail).distinct.sorted
   }
 
+  /** Schema-evolution events up to `upTo` (inclusive; None = all),
+    * oldest first. */
   def schemaEvents(root: String, prefix: String,
                    upTo: Option[Int] = None): Seq[SchemaEvent] =
     schemaEventVersions(root, prefix, upTo)
       .flatMap(v => snapshot(root, prefix, Some(v)))
       .flatMap { s =>
-        (s.op, s.addedCol.map(_.split('|'))) match {
-          case ("addcol", Some(Array(n, t))) =>
-            Seq(AddedColumn(s.version, n, t, None, s.files.toSet))
-          case ("addcol", Some(Array(n, t, d))) =>
-            Seq(AddedColumn(s.version, n, t, Some(d), s.files.toSet))
-          case ("renamecol", Some(Array(f, t))) =>
+        (s.op, s.column) match {
+          case ("addcol", Some(CommitLog.ColumnChange(n, Some(t), d, _))) =>
+            Seq(AddedColumn(s.version, n, t, d, s.files.toSet))
+          case ("renamecol", Some(CommitLog.ColumnChange(f, _, _, Some(t)))) =>
             Seq(RenamedColumn(s.version, f, t, s.files.toSet))
-          case ("dropcol", Some(Array(n))) =>
-            Seq(DroppedColumn(s.version, n, s.files.toSet))
+          case ("dropcol", Some(c)) =>
+            Seq(DroppedColumn(s.version, c.name, s.files.toSet))
           case _ => Seq.empty
         }
       }
@@ -1370,11 +1195,9 @@ object Snapshots {
       sys.error(s"no snapshot for $prefix — commit data before evolving the schema"))
     require(!currentColumns(root, prefix).contains(name),
       s"column $name already exists in $prefix")
-    val encoded = (Seq(name, ddlType) ++ defaultSql).mkString("|")
     try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "addcol", prev.txns, prev.stats,
-      extraFields = Seq("addedCol" -> encoded) ++ dvField(prev.dv),
-      parent = Some(prev))
+      Seq.empty, "addcol", prev.txns, prev.stats, prev.dv, parent = Some(prev),
+      column = Some(CommitLog.ColumnChange(name, Some(ddlType), defaultSql)))
     catch {
       case e: ConcurrentCommitException =>
         if (retries > 0) addColumn(root, prefix, name, ddlType, defaultSql, retries - 1)
@@ -1401,9 +1224,8 @@ object Snapshots {
     require(cols.contains(from), s"cannot rename absent column $from (schema: ${cols.mkString(", ")})")
     require(!cols.contains(to), s"rename target $to already exists in $prefix")
     try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "renamecol", prev.txns, prev.stats,
-      extraFields = Seq("addedCol" -> s"$from|$to") ++ dvField(prev.dv),
-      parent = Some(prev))
+      Seq.empty, "renamecol", prev.txns, prev.stats, prev.dv, parent = Some(prev),
+      column = Some(CommitLog.ColumnChange(from, to = Some(to))))
     catch {
       case e: ConcurrentCommitException =>
         if (retries > 0) renameColumn(root, prefix, from, to, retries - 1)
@@ -1424,9 +1246,8 @@ object Snapshots {
     require(cols.contains(name), s"cannot drop absent column $name (schema: ${cols.mkString(", ")})")
     require(cols.size > 1, s"cannot drop the last column of $prefix")
     try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "dropcol", prev.txns, prev.stats,
-      extraFields = Seq("addedCol" -> name) ++ dvField(prev.dv),
-      parent = Some(prev))
+      Seq.empty, "dropcol", prev.txns, prev.stats, prev.dv, parent = Some(prev),
+      column = Some(CommitLog.ColumnChange(name)))
     catch {
       case e: ConcurrentCommitException =>
         if (retries > 0) dropColumn(root, prefix, name, retries - 1)
@@ -1726,7 +1547,7 @@ object Snapshots {
       val kept = prev.stats.filterNot(s => missingSet.contains(s.file))
       writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos,
         prev.files, Seq.empty, "restat", prev.txns, kept ++ fresh,
-        extraFields = dvField(prev.dv), parent = Some(prev))
+        prev.dv, parent = Some(prev))
     }
   }
 
@@ -2098,7 +1919,7 @@ object Snapshots {
       // wall-clock rides as _commit_timestamp (the version file's
       // mtime — the same anchor timestamp time travel resolves by)
       val ts = new java.sql.Timestamp(Files.getLastModifiedTime(
-        logDir(root, prefix).resolve(f"v$v%05d.json")).toMillis)
+        versionPath(root, prefix, v)).toMillis)
       evolved.select((cols.map(col) :+ col("_change_type") :+
         org.apache.spark.sql.functions.lit(v.toLong).as("_commit_version") :+
         org.apache.spark.sql.functions.lit(ts).as("_commit_timestamp")): _*)
@@ -2178,7 +1999,7 @@ object Snapshots {
         cur.txns, target.stats,
         // the TARGET's dv set, not the current one: a restore past a
         // merge-on-read delete must bring the deleted rows back
-        extraFields = dvField(target.dv), parent = Some(cur))
+        target.dv, parent = Some(cur))
       catch {
         case e: ConcurrentCommitException =>
           attempts -= 1; if (attempts <= 0) throw e
@@ -2278,7 +2099,7 @@ object Snapshots {
       try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
         cur.maxPos max maxPosFloor, files, removed, op,
         cur.txns ++ txn, assembleStats(base, files, cur.stats),
-        extraFields = dvField(cur.dv), parent = Some(cur))
+        cur.dv, parent = Some(cur))
       catch {
         case e: ConcurrentCommitException =>
           attempts -= 1; if (attempts <= 0) throw e
@@ -3085,7 +2906,7 @@ object Snapshots {
         maxPos.getOrElse(cur.map(_.maxPos).getOrElse(-1L)), files, Seq.empty,
         "append", cur.map(_.txns).getOrElse(Seq.empty) ++ txn,
         assembleStats(base, files, cur.map(_.stats).getOrElse(Seq.empty)),
-        extraFields = dvField(cur.map(_.dv).getOrElse(Seq.empty)), parent = cur)
+        cur.map(_.dv).getOrElse(Seq.empty), parent = cur)
       catch {
         case e: ConcurrentCommitException =>
           attempts -= 1; if (attempts <= 0) throw e
@@ -3182,7 +3003,7 @@ object Snapshots {
           try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
             cur.maxPos max snap.maxPos, files, Seq.empty, "replacewhere",
             cur.txns ++ txn, assembleStats(base, files, cur.stats),
-            extraFields = dvField(cur.dv ++ dvName), parent = Some(cur))
+            cur.dv ++ dvName, parent = Some(cur))
           catch {
             case e: ConcurrentCommitException =>
               attempts -= 1; if (attempts <= 0) throw e
@@ -3278,7 +3099,7 @@ object Snapshots {
             try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
               cur.maxPos, cur.files, Seq.empty, "deletemor",
               cur.txns ++ txn, cur.stats,
-              extraFields = dvField(cur.dv :+ name), parent = Some(cur))
+              cur.dv :+ name, parent = Some(cur))
             catch {
               case e: ConcurrentCommitException =>
                 attempts -= 1; if (attempts <= 0) throw e
@@ -3551,20 +3372,13 @@ object Snapshots {
     val dropping = vs.filter(_ < keepFrom).toSet
     if (dropping.nonEmpty) keepVs.foreach { v =>
       if (!Files.isRegularFile(ckptPath(root, prefix, v))) {
-        val raw = rawJson(root, prefix, v)
-        val parentBelowCut = !raw.contains("\"files\":") &&
-          "\"parent\":\\s*\"(-?\\d+)\"".r.findFirstMatchIn(raw)
-            .map(_.group(1).toInt).exists(p => p >= 0 && dropping(p))
-        if (parentBelowCut) {
-          val snap = resolveSnapshot(root, prefix, v)
-          writeCheckpoint(root, prefix, v, snap.maxPos, snap.files,
-            snap.removed, snap.op, snap.txns, snap.stats,
-            snap.addedCol.map("addedCol" -> _).toSeq ++ dvField(snap.dv))
-        }
+        val e = entryOf(root, prefix, v)
+        if (e.files.isEmpty && e.parent.exists(p => p >= 0 && dropping(p)))
+          writeCheckpoint(root, prefix, resolveSnapshot(root, prefix, v))
       }
     }
     vs.filter(_ < keepFrom).foreach { v =>
-      Files.deleteIfExists(logDir(root, prefix).resolve(f"v$v%05d.json"))
+      Files.deleteIfExists(versionPath(root, prefix, v))
       Files.deleteIfExists(ckptPath(root, prefix, v)) // checkpoints die with their version
       rmTree(cdcDir(root, prefix, v)) // change records die with their version
     }
@@ -3619,10 +3433,7 @@ object Snapshots {
       // only rewrite when something actually fell out — a no-op vacuum
       // must not churn checkpoint bytes
       if (pruned.size < ever.size) {
-        val snap = resolveSnapshot(root, prefix, v)
-        writeCheckpoint(root, prefix, v, snap.maxPos, snap.files,
-          snap.removed, snap.op, snap.txns, snap.stats,
-          snap.addedCol.map("addedCol" -> _).toSeq ++ dvField(snap.dv),
+        writeCheckpoint(root, prefix, resolveSnapshot(root, prefix, v),
           refsOverride = Some(pruned), overwrite = true)
       }
     }
