@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions.{col, input_file_name}
   *  - time travel = reading an old version;
   *  - the commit is one atomic CREATE_NEW file create — two writers
   *    racing to the same version lose deterministically
-  *    ([[ConcurrentCommitException]]); append commits retry against
-  *    the fresh log state (append⋈append never conflicts logically,
-  *    exactly Delta's optimistic-concurrency rule);
+  *    ([[ConcurrentCommitException]]); every commit goes through
+  *    [[commitNext]], which retries a lost race against the fresh log
+  *    state (append⋈append never conflicts logically, exactly Delta's
+  *    optimistic-concurrency rule);
   *  - [[compact]] rewrites a snapshot's small files into one file per
   *    partition and commits a version that supersedes (NOT deletes)
   *    the originals — older versions stay readable until [[vacuum]];
@@ -40,13 +41,13 @@ object Snapshots {
   final class ConcurrentCommitException(version: Int)
     extends RuntimeException(s"concurrent commit lost the race for v$version")
 
-  /** Two rewrites (compact/merge/delete/cluster) raced over the same
-    * files: the loser's output was derived from pre-race file contents,
-    * so committing it would resurrect deleted rows or duplicate
+  /** A concurrent commit changed what this op's output was derived
+    * from — it removed one of the op's input files, or committed a
+    * deletion vector a rewrite's input read did not apply — so
+    * committing the output would resurrect deleted rows or duplicate
     * rewritten ones. Delta aborts these the same way. */
-  final class RewriteConflictException(op: String, files: Seq[String])
-    extends RuntimeException(
-      s"$op conflicts with a concurrent rewrite that already claimed: ${files.mkString(", ")}")
+  final class RewriteConflictException(op: String, detail: String)
+    extends RuntimeException(s"$op conflicts with a concurrent commit: $detail")
 
   /** A full-state checkpoint is written alongside every Nth version
     * file (Delta's `_last_checkpoint` cadence): readers replay at most
@@ -108,31 +109,46 @@ object Snapshots {
       .toSeq).sorted
   }
 
-  /** Every file any committed snapshot pins — O(checkpoint + tail),
-    * not O(versions × files): the newest checkpoint carries the
-    * cumulative `refsEver` set, and versions after it contribute only
-    * their `add` lists (a delta's full state is its parent's plus its
-    * adds, so the union of all states is the union of all adds plus
-    * any full-format roots — Delta derives its tombstone set the same
-    * way from checkpoint + tail actions). Versions above `upTo` are out. */
-  private def referencedFiles(root: String, prefix: String,
-                              upTo: Option[Int] = None): Set[String] = {
+  /** The log's two cumulative sets as of version `upTo` (None = the
+    * whole log): every file any committed snapshot pins (computed only
+    * `withRefs`), and the versions that committed a schema event.
+    * O(checkpoint + tail), not O(versions × files): each set starts
+    * from the newest checkpoint carrying it (`refsEver`, `evs`; older
+    * checkpoints lack them) and folds the versions after it. A
+    * delta's full state is its parent's plus its adds, so the union of
+    * all states is the union of all adds plus any full-format roots —
+    * Delta derives its tombstone set the same way from checkpoint +
+    * tail actions. One pass decodes each tail entry once for both
+    * sets; vacuumed event versions drop out. */
+  private def logSets(root: String, prefix: String, upTo: Option[Int],
+                      withRefs: Boolean): (Set[String], Seq[Int]) = {
     val vs = versions(root, prefix).filter(v => upTo.forall(v <= _))
-    val ckpt = newestCheckpoint(root, prefix, vs)(_.refsEver)
-    vs.filter(v => ckpt.forall(v > _._1))
-      .foldLeft(ckpt.map(_._2.toSet).getOrElse(Set.empty[String])) { (acc, v) =>
-        val e = entryOf(root, prefix, v)
-        acc ++ e.files.getOrElse(e.add)
-      }
+    var refsAt: Option[(Int, Seq[String])] = None
+    var evsAt: Option[(Int, Seq[Int])] = None
+    val ckpts = vs.reverseIterator.filter(v => Files.isRegularFile(ckptPath(root, prefix, v)))
+    while ((evsAt.isEmpty || withRefs && refsAt.isEmpty) && ckpts.hasNext) {
+      val v = ckpts.next()
+      val c = readCheckpoint(root, prefix, v)
+      if (refsAt.isEmpty) refsAt = c.refsEver.map(v -> _)
+      if (evsAt.isEmpty) evsAt = c.evs.map(v -> _)
+    }
+    val refsFrom = if (withRefs) refsAt.fold(-1)(_._1) else Int.MaxValue
+    val evsFrom = evsAt.fold(-1)(_._1)
+    var refs = if (withRefs) refsAt.fold(Set.empty[String])(_._2.toSet) else Set.empty[String]
+    val tailEvs = Seq.newBuilder[Int]
+    vs.filter(_ > (refsFrom min evsFrom)).foreach { v =>
+      val e = entryOf(root, prefix, v)
+      if (v > refsFrom) refs ++= e.files.getOrElse(e.add)
+      if (v > evsFrom && isSchemaEvent(e.opName)) tailEvs += v
+    }
+    val live = vs.toSet
+    (refs, (evsAt.fold(Seq.empty[Int])(_._2).filter(live) ++ tailEvs.result()).distinct.sorted)
   }
 
-  /** The newest checkpoint among `vs` that carries `field` (checkpoints
-    * older than `refsEver`/`evs` lack them), with the field's value. */
-  private def newestCheckpoint[T](root: String, prefix: String, vs: Seq[Int])(
-      field: CommitLog.Entry => Option[T]): Option[(Int, T)] =
-    vs.reverseIterator.filter(v => Files.isRegularFile(ckptPath(root, prefix, v)))
-      .flatMap(v => field(readCheckpoint(root, prefix, v)).map(v -> _))
-      .nextOption()
+  /** Every file any committed snapshot pins, up to version `upTo`. */
+  private def referencedFiles(root: String, prefix: String,
+                              upTo: Option[Int] = None): Set[String] =
+    logSets(root, prefix, upTo, withRefs = true)._1
 
   /** Marker prefix for compaction rewrites. Compaction must write its
     * output BEFORE committing the snapshot that pins it; if that commit
@@ -375,13 +391,12 @@ object Snapshots {
   private def writeCheckpoint(root: String, prefix: String, snap: Snapshot,
                               refsOverride: Option[Seq[String]] = None,
                               overwrite: Boolean = false): Unit = {
-    val below = Some(snap.version - 1)
-    val refs = refsOverride.getOrElse(
-      (referencedFiles(root, prefix, below) ++ snap.files).toSeq.sorted)
+    val (refsBelow, evsBelow) =
+      logSets(root, prefix, Some(snap.version - 1), withRefs = refsOverride.isEmpty)
+    val refs = refsOverride.getOrElse((refsBelow ++ snap.files).toSeq.sorted)
     // cumulative schema-event versions (this version included if it IS
     // one) — what keeps schemaEvents O(tail) on long histories
-    val evs = schemaEventVersions(root, prefix, below) ++
-      (if (isSchemaEvent(snap.op)) Seq(snap.version) else Seq.empty)
+    val evs = evsBelow ++ (if (isSchemaEvent(snap.op)) Seq(snap.version) else Seq.empty)
     val entry = CommitLog.Entry(snap.version, CommitLog.Fmt, Some(snap.op), snap.maxPos,
       removed = snap.removed, dv = snap.dv, column = snap.column,
       files = Some(snap.files), txns = snap.txns, stats = snap.stats,
@@ -495,41 +510,115 @@ object Snapshots {
     moveInto(tmp, p)
   }
 
-  /** Commit the table's current state as the next version. Append
-    * commits never conflict logically, so a lost race is retried
-    * against the re-read log (bounded; then the exception surfaces). */
-  def commit(root: String, prefix: String, maxPos: Long, retries: Int = 5,
-             txn: Option[String] = None): Int = {
-    val prev = snapshot(root, prefix, None)
-    // idempotent replays: a transaction id already in the log means
-    // this commit's effect is present — no new version
-    if (txn.exists(t => prev.exists(_.txns.contains(t)))) prev.get.version
-    else {
-      val next = nextVersion(root, prefix)
-      val referenced = referencedFiles(root, prefix)
-      // a commit = the CURRENT snapshot's state + files that appeared
-      // since (never-yet-referenced paths). Deriving from the current
-      // file set — not from "everything on disk minus everything ever
-      // removed" — keeps restore sound: a file removed by an undone
-      // delete and re-pinned by the restore stays in the set.
-      val newFiles = (listDataFiles(root, prefix).toSet -- referenced)
-        // orphaned compaction rewrites (lost race / mid-compact crash)
-        // re-pack rows the originals still deliver — adopting them
-        // would double those rows
-        .filterNot(isCompacted)
-      val files = (prev.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles)
-        .toSeq.sorted
-      val stats = assembleStats(dataDir(root, prefix), files,
-        prev.map(_.stats).getOrElse(Seq.empty))
-      try writeSnapshot(root, prefix, next, maxPos, files, Seq.empty, "append",
-        prev.map(_.txns).getOrElse(Seq.empty) ++ txn, stats,
-        prev.map(_.dv).getOrElse(Seq.empty), parent = prev)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (retries > 0) commit(root, prefix, maxPos, retries - 1, txn) else throw e
+  /** The state one commit attempt writes on top of the head it read —
+    * [[writeSnapshot]]'s arguments less the version, parent and op,
+    * which [[commitNext]] supplies. */
+  private[graft] final case class NextState(maxPos: Long, files: Seq[String],
+                                            removed: Seq[String] = Seq.empty,
+                                            txns: Seq[String] = Seq.empty,
+                                            stats: Seq[FileStat] = Seq.empty,
+                                            dv: Seq[String] = Seq.empty,
+                                            audit: Option[String] = None,
+                                            publishedFrom: Option[String] = None,
+                                            column: Option[CommitLog.ColumnChange] = None)
+
+  private[graft] object NextState {
+    /** `s`'s whole state, carried unchanged into the next version. */
+    def carry(s: Snapshot): NextState =
+      NextState(s.maxPos, s.files, txns = s.txns, stats = s.stats, dv = s.dv)
+  }
+
+  /** Attempts one commit makes before a lost race surfaces. */
+  private[graft] val CommitAttempts = 6
+
+  /** The one optimistic commit path (Delta Lake, VLDB 2020, §3.2):
+    * every version the log gains is written here. Each attempt
+    *  1. lists the log once: the published head is resolved from that
+    *     listing and the version allocated after its last file, so a
+    *     racer that lands after the listing collides on CREATE_NEW
+    *     instead of being skipped;
+    *  2. applies the conflict rule against the head (below);
+    *  3. asks `next` for the state to commit on top of the head — a
+    *     `Left` returns an existing version and writes nothing (an
+    *     already-applied txn, nothing to do);
+    *  4. writes that state with `parent = head` through
+    *     [[writeSnapshot]].
+    * A lost race ([[ConcurrentCommitException]]) re-runs the attempt
+    * against the new head, [[CommitAttempts]] attempts in all; then the
+    * exception surfaces.
+    *
+    * Conflict rule: `claimed` are the files the op derived its commit
+    * from. A head that no longer pins one of them means a racer
+    * rewrote or dropped it ([[RewriteConflictException]]). A rewrite
+    * also passes `rewriteOf`, the snapshot it read its input at: its
+    * commit drops the claimed files, so any change to the deletion
+    * vectors since that read conflicts too — a DV committed in between
+    * was not applied to the rewrite's input, and the output would
+    * bring its rows back. */
+  private[graft] def commitNext(root: String, prefix: String, op: String,
+                                claimed: Set[String] = Set.empty,
+                                rewriteOf: Option[Snapshot] = None)(
+      next: Option[Snapshot] => Either[Int, NextState]): Int = {
+    @scala.annotation.tailrec
+    def attempt(n: Int): Int = {
+      val vs = versions(root, prefix)
+      val head = latest(root, prefix, vs)
+      if (claimed.nonEmpty) {
+        val lost = claimed -- head.fold(Set.empty[String])(_.files.toSet)
+        if (lost.nonEmpty)
+          throw new RewriteConflictException(op, "it removed " + lost.toSeq.sorted.mkString(", "))
+        rewriteOf.filter(r => head.exists(_.dv != r.dv)).foreach { r =>
+          throw new RewriteConflictException(op,
+            s"its deletion vectors changed after v${r.version}, which this rewrite read")
+        }
+      }
+      next(head) match {
+        case Left(v) => v
+        case Right(s) =>
+          val won =
+            try Some(writeSnapshot(root, prefix, nextVersion(vs), s.maxPos, s.files, s.removed,
+              op, s.txns, s.stats, s.dv, head, s.audit, s.publishedFrom, s.column))
+            catch {
+              case e: ConcurrentCommitException =>
+                if (n >= CommitAttempts) throw e else None
+            }
+          won match {
+            case Some(v) => v
+            case None => attempt(n + 1)
+          }
       }
     }
+    attempt(1)
   }
+
+  /** Commit the table's current state as the next version: the head's
+    * files plus every data file that appeared since. */
+  def commit(root: String, prefix: String, maxPos: Long,
+             txn: Option[String] = None): Int =
+    commitNext(root, prefix, "append") { prev =>
+      // idempotent replays: a transaction id already in the log means
+      // this commit's effect is present — no new version
+      if (txn.exists(t => prev.exists(_.txns.contains(t)))) Left(prev.get.version)
+      else {
+        // a commit = the CURRENT snapshot's state + files that appeared
+        // since (never-yet-referenced paths). Deriving from the current
+        // file set — not from "everything on disk minus everything ever
+        // removed" — keeps restore sound: a file removed by an undone
+        // delete and re-pinned by the restore stays in the set.
+        val newFiles = (listDataFiles(root, prefix).toSet -- referencedFiles(root, prefix))
+          // orphaned compaction rewrites (lost race / mid-compact crash)
+          // re-pack rows the originals still deliver — adopting them
+          // would double those rows
+          .filterNot(isCompacted)
+        val files = (prev.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles)
+          .toSeq.sorted
+        Right(NextState(maxPos, files,
+          txns = prev.map(_.txns).getOrElse(Seq.empty) ++ txn,
+          stats = assembleStats(dataDir(root, prefix), files,
+            prev.map(_.stats).getOrElse(Seq.empty)),
+          dv = prev.map(_.dv).getOrElse(Seq.empty)))
+      }
+    }
 
   // ------------------------- write-audit-publish -------------------------
 
@@ -541,8 +630,7 @@ object Snapshots {
     * staged files stay referenced (vacuum-safe) but invisible.
     * Idempotent per audit id. At 100 TB the whole flow is metadata:
     * stage, audit and publish never rewrite data files. */
-  def commitStaged(root: String, prefix: String, maxPos: Long, audit: String,
-                   retries: Int = 5): Int = {
+  def commitStaged(root: String, prefix: String, maxPos: Long, audit: String): Int =
     // the idempotent lookup runs BEFORE the charset require: a staged
     // commit that landed under an earlier, laxer contract (space, '/',
     // '(') must stay re-acknowledgeable — validating first would
@@ -552,27 +640,21 @@ object Snapshots {
       require(audit.nonEmpty && audit.matches("[A-Za-z0-9._:-]+"),
         s"audit id must be non-empty [A-Za-z0-9._:-] (it is embedded " +
           s"in the commit log); got '$audit'")
-      val prevPub = snapshot(root, prefix, None)
-      val newFiles = (listDataFiles(root, prefix).toSet -- referencedFiles(root, prefix))
-        .filterNot(isCompacted)
-      val files = (prevPub.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles)
-        .toSeq.sorted
-      val stats = assembleStats(dataDir(root, prefix), files,
-        prevPub.map(_.stats).getOrElse(Seq.empty))
-      try writeSnapshot(root, prefix, nextVersion(root, prefix), maxPos, files,
-        Seq.empty, "staged", prevPub.map(_.txns).getOrElse(Seq.empty), stats,
-        prevPub.map(_.dv).getOrElse(Seq.empty),
-        // the delta's built-in parent field IS the staged commit's
-        // published-parent record (publish resolves the staged delta
-        // against it)
-        parent = prevPub, audit = Some(audit))
-      catch {
-        case e: ConcurrentCommitException =>
-          if (retries > 0) commitStaged(root, prefix, maxPos, audit, retries - 1)
-          else throw e
+      // the delta's built-in parent field (the published head) IS the
+      // staged commit's published-parent record (publish resolves the
+      // staged delta against it)
+      commitNext(root, prefix, "staged") { prevPub =>
+        val newFiles = (listDataFiles(root, prefix).toSet -- referencedFiles(root, prefix))
+          .filterNot(isCompacted)
+        val files = (prevPub.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles)
+          .toSeq.sorted
+        Right(NextState(maxPos, files,
+          txns = prevPub.map(_.txns).getOrElse(Seq.empty),
+          stats = assembleStats(dataDir(root, prefix), files,
+            prevPub.map(_.stats).getOrElse(Seq.empty)),
+          dv = prevPub.map(_.dv).getOrElse(Seq.empty), audit = Some(audit)))
       }
     }
-  }
 
   /** The staged (not yet published) version carrying this audit id. */
   def stagedVersion(root: String, prefix: String, audit: String): Option[Int] =
@@ -587,33 +669,34 @@ object Snapshots {
     * staged delta, not the staged file set, is what publishes).
     * Idempotent: re-publishing an already-published audit returns the
     * existing publish version. */
-  def publish(root: String, prefix: String, audit: String, retries: Int = 5): Int = {
+  def publish(root: String, prefix: String, audit: String): Int = {
     val sv = stagedVersion(root, prefix, audit).getOrElse(
       sys.error(s"no staged commit for audit '$audit' on $prefix"))
-    versions(root, prefix).find(v => publishedFrom(root, prefix, v, sv))
-      .getOrElse {
-        val staged = snapshot(root, prefix, Some(sv)).get
-        val parentFiles = entryOf(root, prefix, sv).parent
-          .filter(_ >= 0)
-          .flatMap(pv => snapshot(root, prefix, Some(pv)).map(_.files.toSet))
-          .getOrElse(Set.empty)
-        val stagedNew = staged.files.toSet -- parentFiles
-        val head = snapshot(root, prefix, None)
-        val files = (head.map(_.files.toSet).getOrElse(Set.empty) ++ stagedNew)
-          .toSeq.sorted
-        val stats = assembleStats(dataDir(root, prefix), files,
-          head.map(_.stats).getOrElse(Seq.empty) ++ staged.stats)
-        val txns = (head.map(_.txns).getOrElse(Seq.empty) ++ staged.txns).distinct
-        val dv = (head.map(_.dv).getOrElse(Seq.empty) ++ staged.dv).distinct
-        try writeSnapshot(root, prefix, nextVersion(root, prefix),
-          math.max(head.map(_.maxPos).getOrElse(-1L), staged.maxPos), files,
-          Seq.empty, "publish", txns, stats, dv, parent = head,
-          publishedFrom = Some(sv.toString))
-        catch {
-          case e: ConcurrentCommitException =>
-            if (retries > 0) publish(root, prefix, audit, retries - 1) else throw e
+    val seen = versions(root, prefix)
+    seen.find(v => publishedFrom(root, prefix, v, sv)).getOrElse {
+      val staged = snapshot(root, prefix, Some(sv)).get
+      val parentFiles = entryOf(root, prefix, sv).parent
+        .filter(_ >= 0)
+        .flatMap(pv => snapshot(root, prefix, Some(pv)).map(_.files.toSet))
+        .getOrElse(Set.empty)
+      val stagedNew = staged.files.toSet -- parentFiles
+      commitNext(root, prefix, "publish") { head =>
+        // a racing publisher of the same audit lands above `seen`
+        versions(root, prefix).filter(_ > seen.lastOption.getOrElse(-1))
+          .find(v => publishedFrom(root, prefix, v, sv)) match {
+          case Some(v) => Left(v)
+          case None =>
+            val files = (head.map(_.files.toSet).getOrElse(Set.empty) ++ stagedNew)
+              .toSeq.sorted
+            Right(NextState(math.max(head.map(_.maxPos).getOrElse(-1L), staged.maxPos), files,
+              txns = (head.map(_.txns).getOrElse(Seq.empty) ++ staged.txns).distinct,
+              stats = assembleStats(dataDir(root, prefix), files,
+                head.map(_.stats).getOrElse(Seq.empty) ++ staged.stats),
+              dv = (head.map(_.dv).getOrElse(Seq.empty) ++ staged.dv).distinct,
+              publishedFrom = Some(sv.toString)))
         }
       }
+    }
   }
 
   /** Whether version `v` published staged version `sv`. */
@@ -869,14 +952,14 @@ object Snapshots {
   private def opOf(root: String, prefix: String, v: Int): String =
     entryOf(root, prefix, v).opName
 
-  /** Next unallocated version number — the version FILE sequence,
-    * independent of which snapshot a commit builds on. (A staged
-    * commit can sit at the log tail; allocating "published head + 1"
-    * would collide with its version file on every retry.) Two racers
-    * on the same log state still compute the same number, so the
-    * CREATE_NEW conflict detection is unchanged. */
-  private def nextVersion(root: String, prefix: String): Int =
-    versions(root, prefix).lastOption.map(_ + 1).getOrElse(0)
+  /** Next unallocated version number after listing `vs` — the version
+    * FILE sequence, independent of which snapshot a commit builds on.
+    * (A staged commit can sit at the log tail; allocating "published
+    * head + 1" would collide with its version file on every retry.)
+    * Two racers on the same listing compute the same number, so one
+    * loses on CREATE_NEW. */
+  private def nextVersion(vs: Seq[Int]): Int =
+    vs.lastOption.map(_ + 1).getOrElse(0)
 
   /** Commit time per version = the manifest file's modification time
     * (Delta's `timestampAsOf` anchor): no format change, and it works
@@ -906,14 +989,22 @@ object Snapshots {
     * must be addressed by explicit version). Resolution opens ONE
     * checkpoint (or legacy full manifest) plus the delta tail back to
     * it — bounded by [[checkpointInterval]], never by history. */
-  def snapshot(root: String, prefix: String, version: Option[Int] = None): Option[Snapshot] = {
-    val vs = versions(root, prefix)
-    val v = version match {
-      case Some(x) => if (vs.contains(x)) Some(x) else None
-      case None => vs.reverse.find(x => opOf(root, prefix, x) != "staged")
+  def snapshot(root: String, prefix: String, version: Option[Int] = None): Option[Snapshot] =
+    version match {
+      case Some(x) =>
+        if (versions(root, prefix).contains(x)) Some(resolveSnapshot(root, prefix, x))
+        else None
+      case None => latest(root, prefix, versions(root, prefix))
     }
-    v.map(ver => resolveSnapshot(root, prefix, ver))
-  }
+
+  /** The latest published snapshot among the listed versions `vs`. The
+    * staged probe decodes entries from the tail down; the published
+    * entry it stops at seeds the resolver, so the head file is opened
+    * once. */
+  private def latest(root: String, prefix: String, vs: Seq[Int]): Option[Snapshot] =
+    vs.reverseIterator.map(v => v -> entryOf(root, prefix, v))
+      .find(_._2.opName != "staged")
+      .map { case (v, e) => resolveSnapshot(root, prefix, v, Some(e)) }
 
   /** The state an entry spells out itself: a checkpoint's or full
     * manifest's whole state, a delta's header fields. */
@@ -968,8 +1059,10 @@ object Snapshots {
     * chain replayed with this version's add/del/txnsAdd/statsAdd
     * delta. A statsAdd entry REPLACES a carried parent entry for the
     * same (file, column, kind) — stats are footer-derived, so the
-    * freshest derivation wins. */
-  private def resolveSnapshot(root: String, prefix: String, ver: Int): Snapshot = {
+    * freshest derivation wins. `head` is `ver`'s entry when the caller
+    * already decoded it. */
+  private def resolveSnapshot(root: String, prefix: String, ver: Int,
+                              head: Option[CommitLog.Entry] = None): Snapshot = {
     // ITERATIVE descend + fold (r9 advisor target): on a healthy log
     // the parent chain is bounded by checkpointInterval, but a legacy
     // log written under a huge/misconfigured interval can carry an
@@ -985,7 +1078,7 @@ object Snapshots {
       if (Files.isRegularFile(ckptPath(root, prefix, cur))) {
         base = Some(toSnapshot(readCheckpoint(root, prefix, cur), cur)); descending = false
       } else {
-        val e = entryOf(root, prefix, cur)
+        val e = head.filter(_ => cur == ver).getOrElse(entryOf(root, prefix, cur))
         if (e.files.isDefined) {
           base = Some(toSnapshot(e, cur)); descending = false
         } else {
@@ -1140,19 +1233,11 @@ object Snapshots {
 
   /** Versions ≤ `upTo` that committed a schema event. The newest
     * checkpoint carries the CUMULATIVE list (`evs`), so the probe cost
-    * is O(tail since checkpoint), not O(history) — the round-8 raw-op
-    * probe made each version's check cheap, this makes their COUNT
-    * bounded too (a million-commit table probes ≤ interval versions). */
+    * is O(tail since checkpoint), not O(history) — a million-commit
+    * table probes ≤ interval versions. */
   private def schemaEventVersions(root: String, prefix: String,
-                                  upTo: Option[Int]): Seq[Int] = {
-    val vs = versions(root, prefix).filter(v => upTo.forall(v <= _))
-    val ckpt = newestCheckpoint(root, prefix, vs)(_.evs)
-    val base = ckpt.map(_._2).getOrElse(Seq.empty)
-    val tail = vs.filter(v => ckpt.forall(v > _._1))
-      .filter(v => isSchemaEvent(opOf(root, prefix, v)))
-    val live = vs.toSet // vacuumed event versions drop out (legacy rule)
-    (base.filter(live) ++ tail).distinct.sorted
-  }
+                                  upTo: Option[Int]): Seq[Int] =
+    logSets(root, prefix, upTo, withRefs = false)._2
 
   /** Schema-evolution events up to `upTo` (inclusive; None = all),
     * oldest first. */
@@ -1185,25 +1270,25 @@ object Snapshots {
     * (time travel to an earlier version) see the old schema untouched.
     */
   def addColumn(root: String, prefix: String, name: String, ddlType: String,
-                defaultSql: Option[String] = None, retries: Int = 5): Int = {
+                defaultSql: Option[String] = None): Int = {
     require(Seq(name, ddlType).forall(s =>
       s.nonEmpty && !s.contains("|") && !s.contains("\"") && !s.contains("\\")),
       "column name/type must be non-empty without '|', quotes, or backslashes")
     require(defaultSql.forall(d => !d.contains("\"") && !d.contains("\\") && !d.contains("|")),
       "default must be a simple SQL literal (no double quotes, backslashes, or '|')")
-    val prev = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"no snapshot for $prefix — commit data before evolving the schema"))
-    require(!currentColumns(root, prefix).contains(name),
-      s"column $name already exists in $prefix")
-    try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "addcol", prev.txns, prev.stats, prev.dv, parent = Some(prev),
-      column = Some(CommitLog.ColumnChange(name, Some(ddlType), defaultSql)))
-    catch {
-      case e: ConcurrentCommitException =>
-        if (retries > 0) addColumn(root, prefix, name, ddlType, defaultSql, retries - 1)
-        else throw e
+    commitNext(root, prefix, "addcol") { head =>
+      val prev = evolvable(prefix, head)
+      require(!currentColumns(root, prefix).contains(name),
+        s"column $name already exists in $prefix")
+      Right(NextState.carry(prev).copy(
+        column = Some(CommitLog.ColumnChange(name, Some(ddlType), defaultSql))))
     }
   }
+
+  /** The head a schema change commits on top of. */
+  private def evolvable(prefix: String, head: Option[Snapshot]): Snapshot =
+    head.getOrElse(sys.error(
+      s"no snapshot for $prefix — commit data before evolving the schema"))
 
   /** ALTER TABLE … RENAME COLUMN: a metadata-only commit; no file is
     * touched. Validated against the resolved current schema, so chains
@@ -1212,46 +1297,32 @@ object Snapshots {
     * keyed by each file's PHYSICAL column name, so pruned reads on the
     * new name keep pre-rename files conservatively (stats narrow IO,
     * never semantics). */
-  def renameColumn(root: String, prefix: String, from: String, to: String,
-                   retries: Int = 5): Int = {
+  def renameColumn(root: String, prefix: String, from: String, to: String): Int = {
     require(from != to, "rename requires distinct names")
     require(Seq(from, to).forall(n =>
       n.nonEmpty && !n.contains("|") && !n.contains("\"") && !n.contains("\\")),
       "column names must be non-empty without '|', quotes, or backslashes")
-    val prev = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"no snapshot for $prefix — commit data before evolving the schema"))
-    val cols = currentColumns(root, prefix)
-    require(cols.contains(from), s"cannot rename absent column $from (schema: ${cols.mkString(", ")})")
-    require(!cols.contains(to), s"rename target $to already exists in $prefix")
-    try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "renamecol", prev.txns, prev.stats, prev.dv, parent = Some(prev),
-      column = Some(CommitLog.ColumnChange(from, to = Some(to))))
-    catch {
-      case e: ConcurrentCommitException =>
-        if (retries > 0) renameColumn(root, prefix, from, to, retries - 1)
-        else throw e
+    commitNext(root, prefix, "renamecol") { head =>
+      val prev = evolvable(prefix, head)
+      val cols = currentColumns(root, prefix)
+      require(cols.contains(from), s"cannot rename absent column $from (schema: ${cols.mkString(", ")})")
+      require(!cols.contains(to), s"rename target $to already exists in $prefix")
+      Right(NextState.carry(prev).copy(column = Some(CommitLog.ColumnChange(from, to = Some(to)))))
     }
   }
 
   /** ALTER TABLE … DROP COLUMN: metadata-only; the bytes stay until a
     * rewrite, time travel before this version still reads them. */
-  def dropColumn(root: String, prefix: String, name: String,
-                 retries: Int = 5): Int = {
+  def dropColumn(root: String, prefix: String, name: String): Int = {
     require(name.nonEmpty && !name.contains("|") && !name.contains("\"") &&
       !name.contains("\\"),
       "column name must be non-empty without '|', quotes, or backslashes")
-    val prev = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"no snapshot for $prefix — commit data before evolving the schema"))
-    val cols = currentColumns(root, prefix)
-    require(cols.contains(name), s"cannot drop absent column $name (schema: ${cols.mkString(", ")})")
-    require(cols.size > 1, s"cannot drop the last column of $prefix")
-    try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "dropcol", prev.txns, prev.stats, prev.dv, parent = Some(prev),
-      column = Some(CommitLog.ColumnChange(name)))
-    catch {
-      case e: ConcurrentCommitException =>
-        if (retries > 0) dropColumn(root, prefix, name, retries - 1)
-        else throw e
+    commitNext(root, prefix, "dropcol") { head =>
+      val prev = evolvable(prefix, head)
+      val cols = currentColumns(root, prefix)
+      require(cols.contains(name), s"cannot drop absent column $name (schema: ${cols.mkString(", ")})")
+      require(cols.size > 1, s"cannot drop the last column of $prefix")
+      Right(NextState.carry(prev).copy(column = Some(CommitLog.ColumnChange(name))))
     }
   }
 
@@ -1446,11 +1517,6 @@ object Snapshots {
                  lo: Long, hi: Long, version: Option[Int] = None): Seq[String] =
     pruneFilesMulti(root, prefix, Seq(StatRange.longRange(column, lo, hi)), version)
 
-  /** Files that can satisfy EVERY range in `ranges` at once — the
-    * multi-predicate skip a Z-order layout is built for: each range
-    * prunes on its own column's stats, and the intersection is the
-    * candidate set. Files without a stat for some column stay
-    * candidates for that range (conservative). */
   /** Exact table row count from MANIFEST METADATA alone — no data file
     * opened. Defined only when it is provably exact: every live file
     * carries an "R" stat (commits since the stat existed) AND no
@@ -1529,27 +1595,24 @@ object Snapshots {
     * file set. Tables committed before row-count stats existed gain
     * the metadata-only COUNT(*)/MIN/MAX and LIMIT-prefix paths
     * without touching their data. No-op (current version) when
-    * nothing is missing. Single-administrator maintenance op, like
-    * [[compact]]. */
-  def backfillStats(root: String, prefix: String): Int = {
-    val prev = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to backfill for $prefix"))
-    val withR = prev.stats.filter(_.typ == "R").map(_.file).toSet
-    val missing = prev.files.filterNot(withR)
-    if (missing.isEmpty) prev.version
-    else {
-      val base = dataDir(root, prefix)
-      // refresh the WHOLE stat set of each touched file: pre-"R"
-      // manifests may also predate later stat kinds, and mixing stat
-      // generations per file would be harder to reason about
-      val fresh = missing.flatMap(f => footerStats(base, f))
-      val missingSet = missing.toSet // Seq.contains would be O(stats × files)
-      val kept = prev.stats.filterNot(s => missingSet.contains(s.file))
-      writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos,
-        prev.files, Seq.empty, "restat", prev.txns, kept ++ fresh,
-        prev.dv, parent = Some(prev))
+    * nothing is missing. */
+  def backfillStats(root: String, prefix: String): Int =
+    commitNext(root, prefix, "restat") { head =>
+      val prev = head.getOrElse(sys.error(s"nothing to backfill for $prefix"))
+      val withR = prev.stats.filter(_.typ == "R").map(_.file).toSet
+      val missing = prev.files.filterNot(withR)
+      if (missing.isEmpty) Left(prev.version)
+      else {
+        val base = dataDir(root, prefix)
+        // refresh the WHOLE stat set of each touched file: pre-"R"
+        // manifests may also predate later stat kinds, and mixing stat
+        // generations per file would be harder to reason about
+        val fresh = missing.flatMap(f => footerStats(base, f))
+        val missingSet = missing.toSet // Seq.contains would be O(stats × files)
+        val kept = prev.stats.filterNot(s => missingSet.contains(s.file))
+        Right(NextState.carry(prev).copy(stats = kept ++ fresh))
+      }
     }
-  }
 
   /** Smallest PREFIX of the file list whose "R" row counts cover at
     * least `n` rows — the LIMIT-pushdown file cut (`SELECT ... LIMIT
@@ -1576,6 +1639,11 @@ object Snapshots {
     }
   }
 
+  /** Files that can satisfy EVERY range in `ranges` at once — the
+    * multi-predicate skip a Z-order layout is built for: each range
+    * prunes on its own column's stats, and the intersection is the
+    * candidate set. Files without a stat for some column stay
+    * candidates for that range (conservative). */
   def pruneFilesMulti(root: String, prefix: String, ranges: Seq[StatRange],
                       version: Option[Int] = None): Seq[String] = {
     val snap = snapshot(root, prefix, version).getOrElse(
@@ -1720,11 +1788,6 @@ object Snapshots {
       snap.map(_.dv).getOrElse(Seq.empty))
   }
 
-  /** Read the table as of a version (default latest): exactly the
-    * committed file set, regardless of files appended since. Columns
-    * added by [[addColumn]] at or before the version are present for
-    * every row — filled with their declared default (or NULL) for
-    * files that predate the column. */
   /** The table's resolved schema at `version`, from ONE representative
     * file per (schema-epoch group × partition directory) —
     * deterministically the lexicographically first — with all events
@@ -1748,6 +1811,11 @@ object Snapshots {
     }
   }
 
+  /** Read the table as of a version (default latest): exactly the
+    * committed file set, regardless of files appended since. Columns
+    * added by [[addColumn]] at or before the version are present for
+    * every row — filled with their declared default (or NULL) for
+    * files that predate the column. */
   def read(spark: SparkSession, root: String, prefix: String,
            version: Option[Int] = None): DataFrame = {
     val snap = snapshot(root, prefix, version).getOrElse(
@@ -1757,13 +1825,6 @@ object Snapshots {
       schemaEvents(root, prefix, Some(snap.version)), snap.dv)
   }
 
-  /** Incremental read (CDC-style): exactly the rows ADDED between
-    * `fromVersion` (exclusive) and `toVersion` (inclusive, default
-    * latest) — the file-set difference, excluding compaction rewrites
-    * (a compacted file only re-packs rows an earlier version already
-    * delivered, so it is NOT a change). Consumers that checkpoint the
-    * last version they processed get append-only change feeds without
-    * rescanning the table. */
   /** Per-version file additions for a commit window — the
     * change-attribution rule of [[readChanges]] (staged versions are
     * invisible; compaction/delete/restore rewrites attribute nothing),
@@ -1805,6 +1866,13 @@ object Snapshots {
     try Files.size(dataDir(root, prefix).resolve(rel))
     catch { case _: java.io.IOException => 0L }
 
+  /** Incremental read (CDC-style): exactly the rows ADDED between
+    * `fromVersion` (exclusive) and `toVersion` (inclusive, default
+    * latest) — the file-set difference, excluding compaction rewrites
+    * (a compacted file only re-packs rows an earlier version already
+    * delivered, so it is NOT a change). Consumers that checkpoint the
+    * last version they processed get append-only change feeds without
+    * rescanning the table. */
   def readChanges(spark: SparkSession, root: String, prefix: String,
                   fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
     // -1 = "before the first commit": v0's files count as changes too
@@ -1989,31 +2057,23 @@ object Snapshots {
     if (missing.nonEmpty)
       sys.error(s"restore $prefix to v$toVersion: ${missing.size} pinned file(s) " +
         s"no longer on disk (vacuumed?): ${missing.take(3).mkString(", ")}")
-    var attempts = 5
-    var committed = -1
-    while (committed < 0) {
-      val cur = snapshot(root, prefix, None).get
-      val removedNow = (cur.files.toSet -- target.files.toSet).toSeq.sorted
-      try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-        target.maxPos, target.files, removedNow, "restore",
-        cur.txns, target.stats,
+    commitNext(root, prefix, "restore") { head =>
+      val cur = head.get
+      Right(NextState(target.maxPos, target.files,
+        (cur.files.toSet -- target.files.toSet).toSeq.sorted, cur.txns, target.stats,
         // the TARGET's dv set, not the current one: a restore past a
         // merge-on-read delete must bring the deleted rows back
-        target.dv, parent = Some(cur))
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts -= 1; if (attempts <= 0) throw e
-      }
+        target.dv))
     }
-    committed
   }
 
   /** Compact the latest snapshot: per partition directory, rewrite its
     * small files into one, and commit a version that pins the rewritten
     * set and records the originals as superseded. Data is unchanged
     * (same rows, same watermark); old versions stay readable until
-    * [[vacuum]]. Returns the committed version. */
-  /** @param partitions optional OPTIMIZE scope: only hive directories
+    * [[vacuum]]. Returns the committed version.
+    *
+    * @param partitions optional OPTIMIZE scope: only hive directories
     *   carrying ALL the given `col -> value` pairs are rewritten,
     *   everything else survives untouched — at 100 TB compaction is a
     *   per-partition maintenance task, never a whole-table rewrite.
@@ -2066,46 +2126,37 @@ object Snapshots {
     }
     val removed = superseded.result()
     if (removed.isEmpty) snap.version // nothing rewritten — no new version
-    else commitRewrite(root, prefix, "compact", removed.toSet, keep.result(),
-      removed, snap.maxPos, txn = None)
+    else commitRewrite(root, prefix, "compact", snap, removed, keep.result(), txn = None)
   }
 
-  /** Shared commit loop for rewriting ops (compact/merge/delete): the
-    * new snapshot = (CURRENT latest files − `gone`) + `added`,
-    * recomputed on each attempt so a lost race against a concurrent
-    * append retries with that append's files included (append ⋈ rewrite
-    * never conflicts logically — they touch disjoint files). A
-    * concurrent REWRITE that claimed any of this op's input files is a
-    * real conflict — the output in `added` was derived from pre-race
-    * contents — and aborts instead of committing.
+  /** The commit of a rewriting op (compact, cluster, merge, delete,
+    * update, apply): the op read snapshot `read`, derived `added` from
+    * the rows of its `gone` files, and commits (head files − `gone`) +
+    * `added` through [[commitNext]], recording `gone` as removed.
+    *  - The new state is recomputed on the head of every attempt, so a
+    *    racing append is kept (append ⋈ rewrite never conflicts
+    *    logically — they touch disjoint files).
+    *  - A racer that removed any `gone` file, or changed the deletion
+    *    vectors after `read`, is a real conflict: `added` was derived
+    *    from pre-race contents. The op aborts with
+    *    [[RewriteConflictException]] instead of committing.
+    *  - The head's deletion vectors carry forward. Entries for files
+    *    leaving the set go stale harmlessly (the path join can't match
+    *    them again); entries for untouched files keep deleting.
+    *  - The watermark never moves below `read`'s; `txn` is recorded.
     * (private[graft]: the conflict spec drives the stale-input case
     * directly — a live thread race can't be scheduled deterministically.) */
   private[graft] def commitRewrite(root: String, prefix: String, op: String,
-                            gone: Set[String], added: Seq[String],
-                            removed: Seq[String], maxPosFloor: Long,
-                            txn: Option[String]): Int = {
+                                   read: Snapshot, gone: Seq[String],
+                                   added: Seq[String], txn: Option[String]): Int = {
     val base = dataDir(root, prefix)
-    var attempts = 5
-    var committed = -1
-    while (committed < 0) {
-      val cur = snapshot(root, prefix, None).get
-      val claimed = gone -- cur.files.toSet
-      if (claimed.nonEmpty)
-        throw new RewriteConflictException(op, claimed.toSeq.sorted)
-      val files = ((cur.files.toSet -- gone) ++ added).toSeq.sorted
-      // carry the dv set forward: entries for files leaving the set go
-      // stale harmlessly (the path join can't match them again), while
-      // entries for untouched files must keep deleting
-      try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-        cur.maxPos max maxPosFloor, files, removed, op,
-        cur.txns ++ txn, assembleStats(base, files, cur.stats),
-        cur.dv, parent = Some(cur))
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts -= 1; if (attempts <= 0) throw e
-      }
+    val goneSet = gone.toSet
+    commitNext(root, prefix, op, claimed = goneSet, rewriteOf = Some(read)) { head =>
+      val cur = head.get
+      val files = ((cur.files.toSet -- goneSet) ++ added).toSeq.sorted
+      Right(NextState(cur.maxPos max read.maxPos, files, gone, cur.txns ++ txn,
+        assembleStats(base, files, cur.stats), cur.dv))
     }
-    committed
   }
 
   /** MERGE INTO (copy-on-write upsert): rows of `source` replace
@@ -2191,8 +2242,7 @@ object Snapshots {
         .drop("_graft_matched")
         .unionByName(preImages)
       writeCdc(root, prefix, cdc) {
-        commitRewrite(root, prefix, "merge", matchedFiles.toSet, added,
-          matchedFiles, snap.maxPos, txn)
+        commitRewrite(root, prefix, "merge", snap, matchedFiles, added, txn)
       }
     }
   }
@@ -2295,8 +2345,7 @@ object Snapshots {
         val cdc = touched.filter(matches)
           .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
         writeCdc(root, prefix, cdc) {
-          commitRewrite(root, prefix, "delete", matchedFiles.toSet, added,
-            matchedFiles, snap.maxPos, txn)
+          commitRewrite(root, prefix, "delete", snap, matchedFiles, added, txn)
         }
       }
     }
@@ -2315,8 +2364,9 @@ object Snapshots {
     *  - assigned values are cast to the column's declared type.
     * CHECK constraints are enforced on the POST-image of matched rows
     * before any commit; updates ride the change feed as
-    * update_preimage/update_postimage pairs (Delta CDF parity). */
-  /** @param ranges advisory manifest-prunable bounds extracted from
+    * update_preimage/update_postimage pairs (Delta CDF parity).
+    *
+    * @param ranges advisory manifest-prunable bounds extracted from
     *   the predicate's conjuncts (the DML rule supplies them): the
     *   attribution read opens only files whose stats can overlap EVERY
     *   range — a selective UPDATE against a 100 TB table reads a
@@ -2344,114 +2394,56 @@ object Snapshots {
       val hit = "_graft_hit"
       val setMap = sets.toMap
       def newCol(c: String) = s"_graft_new_$c"
-      // r15 (guide §5: driver work in the query path; §2.4 fewer
-      // passes): the old shape planned and executed the predicate + SET
-      // expressions — including any decorrelated-subquery joins — in
-      // FOUR separate actions (attribution, staged write, CDC
-      // pre-image, CDC post-image), each a full QueryExecution with its
-      // own AQE stages, broadcasts and Hadoop-conf serialization;
-      // per-action fixed driver cost dominated small DML (q305–q307
-      // profile: ~60 ms driver gap per job, ~12 jobs per statement).
-      // Fused shape: ONE pass over the candidate files evaluates the
-      // predicate and every SET value (pre+post image columns side by
-      // side, plus the row's file identity) into a materialized frame;
-      // attribution is an observed metric of the same job, and the
-      // rewrite output and both CDC images are trivial column
-      // selections — nothing downstream re-plans joins or subqueries.
-      // Gated by the candidates' size estimate: the materialized rows
-      // live in executor memory/disk (localCheckpoint), a win for the
-      // selective-DML shape but not for a many-GB rewrite — those keep
-      // the recompute path below, semantically identical (same
-      // expressions over the same pre-image rows; assignments stay
-      // simultaneous, constraints still precede any commit).
-      val fuseMax = BigInt(spark.conf.get("spark.graft.dml.fuseMaxBytes",
-        (2L << 30).toString).toLong)
-      val candEst =
-        try withFile.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case _: Throwable => BigInt(Long.MaxValue) }
-      if (candEst <= fuseMax) {
-        val dataCols = withFile.columns
-          .filterNot(c => c == DvPathCol || c == DvPosCol).toSeq
-        require(setMap.keySet.subsetOf(dataCols.toSet),
-          s"UPDATE of unknown column(s): ${(setMap.keySet -- dataCols).mkString(", ")}")
-        val assigned = dataCols.filter(setMap.contains)
-        // attribution rides the SAME job as the rewrite evaluation: an
-        // observe() of the hit rows' distinct file names (bounded by
-        // the candidate file count — metadata scale) — zero extra
-        // actions for the attribution question
-        val filesMetric = "graft_update_files"
-        val observed = withFile.withColumn(hit, matches)
-          .select(dataCols.map(col) ++ Seq(col(DvPathCol), col(hit)) ++
-            assigned.map(c => org.apache.spark.sql.functions
-              .when(col(hit), setMap(c).cast(withFile.schema(c).dataType))
-              .otherwise(col(c)).as(newCol(c))): _*)
-          .observe(filesMetric, org.apache.spark.sql.functions.collect_set(
-            org.apache.spark.sql.functions.when(col(hit), col(DvPathCol))))
-        val combined = labeled(spark, "update rewrite")(observed.localCheckpoint(true))
-        val matchedUris = observedMetric(observed, filesMetric).getSeq[String](0).sorted
-        val matchedFiles = attribute(snap, matchedUris)
-        if (matchedFiles.isEmpty) {
-          // a no-op commits nothing, so confirm it on the frame itself
-          if (!labeled(spark, "update no-match check")(combined.filter(col(hit)).isEmpty))
-            throw new IllegalStateException(
-              "UPDATE: the observed matched-file set is empty but the rewrite frame has hits")
-          snap.version
-        } else {
-          val rows = combined.filter(col(DvPathCol).isin(matchedUris: _*))
-          val out = rows.select(dataCols.map { c =>
-            if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
-          }: _*)
-          val post = rows.filter(col(hit)).select(dataCols.map { c =>
-            if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
-          }: _*)
-          enforceConstraints(root, prefix, post)
-          val added = writeStaged(root, prefix, out,
-            if (dataCols.contains("topic")) Seq("topic") else Seq.empty)
-          val pre = rows.filter(col(hit)).select(dataCols.map(col): _*)
-          val cdc = pre
-            .withColumn("_change_type",
-              org.apache.spark.sql.functions.lit("update_preimage"))
-            .unionByName(post
-              .withColumn("_change_type",
-                org.apache.spark.sql.functions.lit("update_postimage")))
-          writeCdc(root, prefix, cdc) {
-            commitRewrite(root, prefix, "update", matchedFiles.toSet, added,
-              matchedFiles, snap.maxPos, txn)
-          }
-        }
+      // One pass over the candidate files evaluates the predicate and
+      // every SET value (pre- and post-image columns side by side, plus
+      // the row's file identity) into a materialized frame; attribution
+      // is an observed metric of the same job, and the rewrite output
+      // and both CDC images are column selections over that frame —
+      // nothing downstream re-plans joins or subqueries (MERGE's
+      // shape). Assignments stay simultaneous: every SET value is
+      // evaluated against the pre-image row.
+      val dataCols = withFile.columns
+        .filterNot(c => c == DvPathCol || c == DvPosCol).toSeq
+      require(setMap.keySet.subsetOf(dataCols.toSet),
+        s"UPDATE of unknown column(s): ${(setMap.keySet -- dataCols).mkString(", ")}")
+      val assigned = dataCols.filter(setMap.contains)
+      val filesMetric = "graft_update_files"
+      val observed = withFile.withColumn(hit, matches)
+        .select(dataCols.map(col) ++ Seq(col(DvPathCol), col(hit)) ++
+          assigned.map(c => org.apache.spark.sql.functions
+            .when(col(hit), setMap(c).cast(withFile.schema(c).dataType))
+            .otherwise(col(c)).as(newCol(c))): _*)
+        .observe(filesMetric, org.apache.spark.sql.functions.collect_set(
+          org.apache.spark.sql.functions.when(col(hit), col(DvPathCol))))
+      val combined = labeled(spark, "update rewrite")(observed.localCheckpoint(true))
+      val matchedUris = observedMetric(observed, filesMetric).getSeq[String](0).sorted
+      val matchedFiles = attribute(snap, matchedUris)
+      if (matchedFiles.isEmpty) {
+        // a no-op commits nothing, so confirm it on the frame itself
+        if (!labeled(spark, "update no-match check")(combined.filter(col(hit)).isEmpty))
+          throw new IllegalStateException(
+            "UPDATE: the observed matched-file set is empty but the rewrite frame has hits")
+        snap.version
       } else {
-        val matchedFiles = attribute(snap, labeled(spark, "update attribution")(
-          distinctCollected(withFile.filter(matches), DvPathCol)))
-        if (matchedFiles.isEmpty) snap.version // nothing matched
-        else {
-          val touched = readFilesFilled(spark, root, prefix, matchedFiles, evs, snap.dv)
-          require(setMap.keySet.subsetOf(touched.columns.toSet),
-            s"UPDATE of unknown column(s): ${(setMap.keySet -- touched.columns).mkString(", ")}")
-          // the hit column pins the predicate's PRE-image verdict per
-          // row: the post-image select below must not re-evaluate the
-          // predicate against assigned values
-          val marked = touched.withColumn(hit, matches)
-          val out = marked.select(touched.columns.map { c =>
-            setMap.get(c) match {
-              case Some(v) => org.apache.spark.sql.functions
-                .when(col(hit), v.cast(touched.schema(c).dataType))
-                .otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          } :+ col(hit): _*)
-          enforceConstraints(root, prefix, out.filter(col(hit)).drop(hit))
-          val added = writeStaged(root, prefix, out.drop(hit),
-            if (touched.columns.contains("topic")) Seq("topic") else Seq.empty)
-          val cdc = touched.filter(matches)
+        val rows = combined.filter(col(DvPathCol).isin(matchedUris: _*))
+        val out = rows.select(dataCols.map { c =>
+          if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
+        }: _*)
+        val post = rows.filter(col(hit)).select(dataCols.map { c =>
+          if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
+        }: _*)
+        enforceConstraints(root, prefix, post)
+        val added = writeStaged(root, prefix, out,
+          if (dataCols.contains("topic")) Seq("topic") else Seq.empty)
+        val pre = rows.filter(col(hit)).select(dataCols.map(col): _*)
+        val cdc = pre
+          .withColumn("_change_type",
+            org.apache.spark.sql.functions.lit("update_preimage"))
+          .unionByName(post
             .withColumn("_change_type",
-              org.apache.spark.sql.functions.lit("update_preimage"))
-            .unionByName(out.filter(col(hit)).drop(hit)
-              .withColumn("_change_type",
-                org.apache.spark.sql.functions.lit("update_postimage")))
-          writeCdc(root, prefix, cdc) {
-            commitRewrite(root, prefix, "update", matchedFiles.toSet, added,
-              matchedFiles, snap.maxPos, txn)
-          }
+              org.apache.spark.sql.functions.lit("update_postimage")))
+        writeCdc(root, prefix, cdc) {
+          commitRewrite(root, prefix, "update", snap, matchedFiles, added, txn)
         }
       }
     }
@@ -2504,8 +2496,9 @@ object Snapshots {
     * exactly Delta's behavior. Cardinality is enforced before any write
     * ([[MergeCardinalityException]]); CHECK constraints run on the
     * post-images; all changes ride the feed (insert /
-    * update_preimage+postimage / delete). */
-  /** @param equiKeys equi conjuncts of the merge condition as
+    * update_preimage+postimage / delete).
+    *
+    * @param equiKeys equi conjuncts of the merge condition as
     *   (targetCol, sourceCol-in-the-src-namespace) pairs, extracted by
     *   the DML rule from the RESOLVED condition. Used for stage-1
     *   manifest pruning: if a target column carries INT64 stats, files
@@ -2652,63 +2645,12 @@ object Snapshots {
           .unionByName(post(rows.filter(!inTarget && changed))
             .withColumn("_change_type", lit("insert")))
         writeCdc(root, prefix, cdc) {
-          commitRewrite(root, prefix, "merge", matchedFiles.toSet, added,
-            matchedFiles, snap.maxPos, txn)
+          commitRewrite(root, prefix, "merge", snap, matchedFiles, added, txn)
         }
       }
     }
   }
 
-  /** INSERT OVERWRITE (full-table replace, copy-on-write): `data`
-    * becomes the table's ENTIRE content in one commit. New files land
-    * beside the old bytes (append-mode write, then rename-marked so a
-    * racing plain [[commit]] can never adopt them as an append); one
-    * "overwrite" version then pins exactly the new set and records
-    * every previous file as removed. Old versions stay readable —
-    * time travel and [[restore]] work across an overwrite — and
-    * [[vacuum]] reclaims the replaced bytes later. Deletion vectors
-    * die with the files they pointed at (the new snapshot carries
-    * none). Fresh footer stats are assembled for the new files only,
-    * so the manifest metadata paths (COUNT(*) / MIN / MAX / LIMIT
-    * prefix / range pruning) are live immediately after the replace.
-    *
-    * Change feed: the replaced rows ride as row-grain "delete"
-    * pre-images and the new rows as "insert"s — the same contract
-    * [[delete]] and [[merge]] keep, so a replica applying the feed
-    * converges. Both images are read back from committed bytes (the
-    * old snapshot's files, the newly written files), never from
-    * re-evaluating `data`'s plan.
-    *
-    * Concurrency: overwrite REPLACES the state at commit time,
-    * recomputed per retry — a commit that lands mid-overwrite is
-    * replaced too (Delta's serializable overwrite answer), never
-    * resurrected next to the new content. Idempotent per `txn`.
-    * At 100 TB: the write cost is the new data (unavoidable — that IS
-    * the operation); the replace itself is one manifest commit. */
-  /** Write `data` as new parquet files under the table dir and
-    * rename-mark them so a racing listing-adoption [[commit]] can
-    * never sweep them in — the caller pins them in its own snapshot
-    * commit (a crash before that commit leaves marked orphans no
-    * commit ever adopts; [[vacuum]] reclaims them). Returns the
-    * marked names relative to the table dir, sorted. */
-  /** Write `data` through a STAGING directory beside the table dir and
-    * move the parquet output into place under rename-markers. The
-    * writer learns its own output files from the staging listing —
-    * O(files written), NEVER a walk of the table directory (at 1M
-    * files the before/after-listing idiom cost two full tree walks per
-    * write) — and a racing listing-adoption [[commit]] can never sweep
-    * half-written output: the staging dir lives outside the data dir
-    * and the moved files carry the marker prefix no sweep adopts.
-    * Same-filesystem moves are renames — zero data bytes.
-    *
-    * Concurrent writers to ONE table are safe by construction (r9
-    * advisor target): each writer owns a UUID-named staging dir (no
-    * shared mutable path), the moved part files carry task-unique
-    * names (a collision would fail the move loudly, never clobber),
-    * and a writer that crashes mid-move leaves only marker-named
-    * orphans plus its staging dir — no commit adopts either, and
-    * [[vacuum]] reclaims both age-gated. The racing COMMITS serialize
-    * on the log's CREATE_NEW as always. */
   /** Output-partition budget for a staged write (guide §6: aim for
     * few, well-sized files, not one tiny file per input partition).
     * The optimizer's size estimate picks ceil(bytes / target) writer
@@ -2785,6 +2727,24 @@ object Snapshots {
     if (n < cur) data.coalesce(n) else data
   }
 
+  /** Write `data` through a STAGING directory beside the table dir and
+    * move the parquet output into place under rename-markers. The
+    * writer learns its own output files from the staging listing —
+    * O(files written), NEVER a walk of the table directory (at 1M
+    * files the before/after-listing idiom cost two full tree walks per
+    * write) — and a racing listing-adoption [[commit]] can never sweep
+    * half-written output: the staging dir lives outside the data dir
+    * and the moved files carry the marker prefix no sweep adopts.
+    * Same-filesystem moves are renames — zero data bytes.
+    *
+    * Concurrent writers to ONE table are safe by construction (r9
+    * advisor target): each writer owns a UUID-named staging dir (no
+    * shared mutable path), the moved part files carry task-unique
+    * names (a collision would fail the move loudly, never clobber),
+    * and a writer that crashes mid-move leaves only marker-named
+    * orphans plus its staging dir — no commit adopts either, and
+    * [[vacuum]] reclaims both age-gated. The racing COMMITS serialize
+    * on the log's CREATE_NEW as always. */
   private[ingest] def writeStaged(root: String, prefix: String, data: DataFrame,
                                   partitionCols: Seq[String] = Seq.empty,
                                   subDir: String = "",
@@ -2816,6 +2776,32 @@ object Snapshots {
     out
   }
 
+  /** INSERT OVERWRITE (full-table replace, copy-on-write): `data`
+    * becomes the table's ENTIRE content in one commit. New files land
+    * beside the old bytes (append-mode write, then rename-marked so a
+    * racing plain [[commit]] can never adopt them as an append); one
+    * "overwrite" version then pins exactly the new set and records
+    * every previous file as removed. Old versions stay readable —
+    * time travel and [[restore]] work across an overwrite — and
+    * [[vacuum]] reclaims the replaced bytes later. Deletion vectors
+    * die with the files they pointed at (the new snapshot carries
+    * none). Fresh footer stats are assembled for the new files only,
+    * so the manifest metadata paths (COUNT(*) / MIN / MAX / LIMIT
+    * prefix / range pruning) are live immediately after the replace.
+    *
+    * Change feed: the replaced rows ride as row-grain "delete"
+    * pre-images and the new rows as "insert"s — the same contract
+    * [[delete]] and [[merge]] keep, so a replica applying the feed
+    * converges. Both images are read back from committed bytes (the
+    * old snapshot's files, the newly written files), never from
+    * re-evaluating `data`'s plan.
+    *
+    * Concurrency: overwrite REPLACES the state at commit time,
+    * recomputed per retry — a commit that lands mid-overwrite is
+    * replaced too (Delta's serializable overwrite answer), never
+    * resurrected next to the new content. Idempotent per `txn`.
+    * At 100 TB: the write cost is the new data (unavoidable — that IS
+    * the operation); the replace itself is one manifest commit. */
   def overwrite(spark: SparkSession, root: String, prefix: String,
                 data: DataFrame, txn: Option[String] = None): Int = {
     val snap0 = snapshot(root, prefix, None)
@@ -2842,20 +2828,11 @@ object Snapshots {
           readFilesFilled(spark, root, prefix, added, evs)
             .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")))
       writeCdc(root, prefix, cdc) {
-        var attempts = 5
-        var committed = -1
-        while (committed < 0) {
-          val cur = snapshot(root, prefix, None).get
-          try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-            cur.maxPos max snap.maxPos, added, cur.files.sorted, "overwrite",
-            cur.txns ++ txn, assembleStats(base, added, Seq.empty),
-            parent = Some(cur))
-          catch {
-            case e: ConcurrentCommitException =>
-              attempts -= 1; if (attempts <= 0) throw e
-          }
+        commitNext(root, prefix, "overwrite") { head =>
+          val cur = head.get
+          Right(NextState(cur.maxPos max snap.maxPos, added, cur.files.sorted,
+            cur.txns ++ txn, assembleStats(base, added, Seq.empty)))
         }
-        committed
       }
     }
   }
@@ -2893,26 +2870,18 @@ object Snapshots {
                                   maxPos: Option[Long] = None,
                                   txn: Option[String] = None): Int = {
     val base = dataDir(root, prefix)
-    var attempts = 5
-    var committed = -1
-    while (committed < 0) {
-      val cur = snapshot(root, prefix, None)
+    commitNext(root, prefix, "append") { cur =>
       // a racing first delivery of the SAME txn may have landed while
       // we wrote — re-check, orphaning our copy (vacuum's problem)
-      if (txn.exists(t => cur.exists(_.txns.contains(t))))
-        return cur.get.version
-      val files = (cur.map(_.files).getOrElse(Seq.empty) ++ added).sorted
-      try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-        maxPos.getOrElse(cur.map(_.maxPos).getOrElse(-1L)), files, Seq.empty,
-        "append", cur.map(_.txns).getOrElse(Seq.empty) ++ txn,
-        assembleStats(base, files, cur.map(_.stats).getOrElse(Seq.empty)),
-        cur.map(_.dv).getOrElse(Seq.empty), parent = cur)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts -= 1; if (attempts <= 0) throw e
+      if (txn.exists(t => cur.exists(_.txns.contains(t)))) Left(cur.get.version)
+      else {
+        val files = (cur.map(_.files).getOrElse(Seq.empty) ++ added).sorted
+        Right(NextState(maxPos.getOrElse(cur.map(_.maxPos).getOrElse(-1L)), files,
+          txns = cur.map(_.txns).getOrElse(Seq.empty) ++ txn,
+          stats = assembleStats(base, files, cur.map(_.stats).getOrElse(Seq.empty)),
+          dv = cur.map(_.dv).getOrElse(Seq.empty)))
       }
     }
-    committed
   }
 
   /** replaceWhere (PARTIAL overwrite — Delta's `option("replaceWhere",
@@ -2992,24 +2961,12 @@ object Snapshots {
           readFilesFilled(spark, root, prefix, added, evs)
             .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")))
       writeCdc(root, prefix, cdc) {
-        var attempts = 5
-        var committed = -1
-        while (committed < 0) {
-          val cur = snapshot(root, prefix, None).get
-          val claimed = touched -- cur.files.toSet
-          if (claimed.nonEmpty)
-            throw new RewriteConflictException("replacewhere", claimed.toSeq.sorted)
+        commitNext(root, prefix, "replacewhere", claimed = touched) { head =>
+          val cur = head.get
           val files = (cur.files ++ added).sorted
-          try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-            cur.maxPos max snap.maxPos, files, Seq.empty, "replacewhere",
-            cur.txns ++ txn, assembleStats(base, files, cur.stats),
-            cur.dv ++ dvName, parent = Some(cur))
-          catch {
-            case e: ConcurrentCommitException =>
-              attempts -= 1; if (attempts <= 0) throw e
-          }
+          Right(NextState(cur.maxPos max snap.maxPos, files, txns = cur.txns ++ txn,
+            stats = assembleStats(base, files, cur.stats), dv = cur.dv ++ dvName))
         }
-        committed
       }
     }
   }
@@ -3034,8 +2991,9 @@ object Snapshots {
     * any file it marked (the positions it computed no longer exist).
     * Old versions keep reading the rows (snapshot isolation);
     * [[restore]] past this commit restores its target's dv set, so
-    * the deletion is undone with it. */
-  /** @param ranges advisory manifest-prunable bounds from the delete
+    * the deletion is undone with it.
+    *
+    * @param ranges advisory manifest-prunable bounds from the delete
     *   predicate (the SQL DELETE path maps its pushed filters): the
     *   hit scan opens only stat-overlapping files — a keyed DELETE
     *   against a 100 TB table reads candidates, never the table. */
@@ -3084,28 +3042,14 @@ object Snapshots {
         val touched = hitStats.getSeq[String](1).map(_.substring(relOffset - 1)).toSet
         val cdc = hits.drop(DvPathCol, DvPosCol)
           .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
+        // positions were computed against the touched files: a rewrite
+        // that removed any of them relocated the rows, and this sidecar
+        // would silently miss them — the claim aborts the commit
         writeCdc(root, prefix, cdc) {
-          var attempts = 5
-          var committed = -1
-          while (committed < 0) {
-            val cur = snapshot(root, prefix, None).get
-            // positions were computed against these files: a rewrite
-            // that claimed any of them relocated the rows, and this
-            // sidecar would silently miss them — abort, like any
-            // rewrite-rewrite race
-            val claimed = touched -- cur.files.toSet
-            if (claimed.nonEmpty)
-              throw new RewriteConflictException("deletemor", claimed.toSeq.sorted)
-            try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-              cur.maxPos, cur.files, Seq.empty, "deletemor",
-              cur.txns ++ txn, cur.stats,
-              cur.dv :+ name, parent = Some(cur))
-            catch {
-              case e: ConcurrentCommitException =>
-                attempts -= 1; if (attempts <= 0) throw e
-            }
+          commitNext(root, prefix, "deletemor", claimed = touched) { head =>
+            val cur = head.get
+            Right(NextState.carry(cur).copy(txns = cur.txns ++ txn, dv = cur.dv :+ name))
           }
-          committed
         }
       }
     }
@@ -3181,8 +3125,7 @@ object Snapshots {
         // time-travel reads of the replica for that)
         writeCdc(root, prefix,
           last.drop("_rn", "_commit_version", "_commit_timestamp")) {
-          commitRewrite(root, prefix, "merge", matchedFiles.toSet, added,
-            matchedFiles, snap.maxPos, txn)
+          commitRewrite(root, prefix, "merge", snap, matchedFiles, added, txn)
         }
       }
     }
@@ -3261,8 +3204,7 @@ object Snapshots {
       .repartitionByRange(targetFiles, col(column))
     val added = writeStaged(root, prefix, df,
       if (df.columns.contains("topic")) Seq("topic") else Seq.empty)
-    commitRewrite(root, prefix, "compact", snap.files.toSet, added,
-      snap.files, snap.maxPos, txn = None)
+    commitRewrite(root, prefix, "compact", snap, snap.files, added, txn = None)
   }
 
   /** Equi-depth split points for one column, metadata-scale on the
@@ -3328,8 +3270,7 @@ object Snapshots {
       .drop("_graft_z")
     val added = writeStaged(root, prefix, out,
       if (out.columns.contains("topic")) Seq("topic") else Seq.empty)
-    commitRewrite(root, prefix, "compact", snap.files.toSet, added,
-      snap.files, snap.maxPos, txn = None)
+    commitRewrite(root, prefix, "compact", snap, snap.files, added, txn = None)
   }
 
   /** Physically delete files that only versions older than `keepFrom`

@@ -673,4 +673,75 @@ class DeltaLogSpec extends SparkTestBase {
       assert(leftover.isEmpty, s"leaked temp files: $leftover")
     } finally Snapshots.checkpointInterval = iv
   }
+
+  test("one commit path: a racer that lands mid-attempt pushes the commit to the next version") {
+    val root = Files.createTempDirectory("graft_dlog").toString
+    ProduceJob.produceBatch(spark, root, "oc", topics = 1, numMessages = 10)
+    val s0 = Snapshots.snapshot(root, "oc").get
+    var calls = 0
+    val v = Snapshots.commitNext(root, "oc", "append") { head =>
+      calls += 1
+      val h = head.get
+      // the racer commits after this attempt listed the log and before
+      // it writes: the attempt's version is taken
+      if (calls == 1)
+        Snapshots.writeSnapshot(root, "oc", h.version + 1, h.maxPos,
+          (h.files :+ "topic=oc/racer.parquet").sorted, Seq.empty,
+          txns = h.txns, stats = h.stats, parent = Some(h))
+      Right(Snapshots.NextState.carry(h).copy(files = (h.files :+ "topic=oc/mine.parquet").sorted))
+    }
+    assert(calls == 2)
+    assert(v == s0.version + 2)
+    val s = Snapshots.snapshot(root, "oc").get
+    assert(s.version == v)
+    assert(s.files.toSet == s0.files.toSet + "topic=oc/racer.parquet" + "topic=oc/mine.parquet")
+  }
+
+  test("one commit path: a commit that loses every race gives up after CommitAttempts attempts") {
+    val root = Files.createTempDirectory("graft_dlog").toString
+    ProduceJob.produceBatch(spark, root, "ol", topics = 1, numMessages = 10)
+    var calls = 0
+    intercept[Snapshots.ConcurrentCommitException] {
+      Snapshots.commitNext(root, "ol", "append") { head =>
+        calls += 1
+        val h = head.get
+        Snapshots.writeSnapshot(root, "ol", h.version + 1, h.maxPos, h.files, Seq.empty,
+          txns = h.txns, stats = h.stats, parent = Some(h))
+        Right(Snapshots.NextState.carry(h))
+      }
+    }
+    assert(calls == Snapshots.CommitAttempts)
+    // v0 plus one racer per attempt; the loser wrote nothing
+    assert(Snapshots.versions(root, "ol") == (0 to Snapshots.CommitAttempts))
+  }
+
+  test("one commit path: concurrent UPDATE and append both commit and conserve rows") {
+    val root = Files.createTempDirectory("graft_dlog").toString
+    ProduceJob.produceBatch(spark, root, "cc", topics = 1, numMessages = 200)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 3).foreach { round =>
+        val before = Snapshots.read(spark, root, "cc").localCheckpoint()
+        val (rows, ages) = (before.count(),
+          before.agg(sum("age")).head().getLong(0))
+        val hits = before.filter(col("ba") < 50).count()
+        // the appended batch copies the pre-UPDATE rows under new keys
+        val batch = before.withColumn("ba", col("ba") + round * 1000L).localCheckpoint()
+        val up = pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = Snapshots.updateWhere(spark, root, "cc",
+            col("ba") < 50, Seq("age" -> (col("age") + 1)))
+        })
+        val ap = pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = Snapshots.appendBatch(spark, root, "cc", batch,
+            partitionCols = Seq("topic"))
+        })
+        val (vu, va) = (up.get(), ap.get())
+        assert(vu != va)
+        val after = Snapshots.read(spark, root, "cc")
+        assert(after.count() == 2 * rows)
+        assert(after.agg(sum("age")).head().getLong(0) == 2 * ages + hits)
+        assert(Snapshots.snapshot(root, "cc").get.version == (vu max va))
+      }
+    } finally pool.shutdown()
+  }
 }

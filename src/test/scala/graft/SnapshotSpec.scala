@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ingest.{ProduceJob, Snapshots}
 
@@ -782,16 +783,60 @@ class SnapshotSpec extends SparkTestBase {
     // rewrite B derived its output from `contested`'s PRE-race contents;
     // committing it would resurrect rows A deleted — it must abort
     intercept[Snapshots.RewriteConflictException] {
-      Snapshots.commitRewrite(root, "s20", "delete",
-        gone = Set(contested), added = Seq.empty,
-        removed = Seq(contested), maxPosFloor = snap.maxPos, txn = None)
+      Snapshots.commitRewrite(root, "s20", "delete", read = snap,
+        gone = Seq(contested), added = Seq.empty, txn = None)
     }
     // disjoint rewrites still commit: B claiming a DIFFERENT file is fine
     val other = snap.files.last
-    val v = Snapshots.commitRewrite(root, "s20", "delete",
-      gone = Set(other), added = Seq.empty,
-      removed = Seq(other), maxPosFloor = snap.maxPos, txn = None)
+    val v = Snapshots.commitRewrite(root, "s20", "delete", read = snap,
+      gone = Seq(other), added = Seq.empty, txn = None)
     assert(v == snap.version + 2)
+  }
+
+  test("a rewrite conflicts with a deletion vector committed after its read") {
+    // the rewrite read file f at `read0`; a merge-on-read DELETE then
+    // put one of f's rows into a deletion vector. Committing the
+    // rewrite drops f, and with it the vector's only target, so its
+    // output (here a byte copy of f) would bring the row back.
+    val root = Files.createTempDirectory("graft_snap").toString
+    withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s22", topics = 1, numMessages = 1000) }
+    val read0 = Snapshots.snapshot(root, "s22").get
+    val f = read0.files.head
+    val tableDir = java.nio.file.Paths.get(graft.ingest.Topics.tableDir(root, "s22"))
+    val victim = spark.read.parquet(tableDir.resolve(f).toString).agg(min("ba")).head().getLong(0)
+    val copy = java.nio.file.Paths.get(f).resolveSibling("compacted-copy.parquet").toString
+    Files.copy(tableDir.resolve(f), tableDir.resolve(copy))
+    Snapshots.deleteMoR(spark, root, "s22", col("ba") === victim)
+    def victims() = Snapshots.read(spark, root, "s22").filter(col("ba") === victim).count()
+    assert(victims() == 0)
+    intercept[Snapshots.RewriteConflictException] {
+      Snapshots.commitRewrite(root, "s22", "compact", read = read0,
+        gone = Seq(f), added = Seq(copy), txn = None)
+    }
+    assert(victims() == 0)
+    assert(Snapshots.read(spark, root, "s22").count() == 999)
+  }
+
+  test("a deletion vector committed before a rewrite's read does not conflict") {
+    val root = Files.createTempDirectory("graft_snap").toString
+    withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s23", topics = 1, numMessages = 1000) }
+    val f = Snapshots.snapshot(root, "s23").get.files.head
+    val tableDir = java.nio.file.Paths.get(graft.ingest.Topics.tableDir(root, "s23"))
+    val victim = spark.read.parquet(tableDir.resolve(f).toString).agg(min("ba")).head().getLong(0)
+    Snapshots.deleteMoR(spark, root, "s23", col("ba") === victim)
+    // the rewrite reads after the DELETE: its input applies the vector
+    val read1 = Snapshots.snapshot(root, "s23").get
+    val tmp = Files.createTempDirectory("graft_snap_rw")
+    Snapshots.readFileSubset(spark, root, "s23", Seq(f), Some(read1.version)).drop("topic")
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = Files.list(tmp).iterator().asScala.find(_.toString.endsWith(".parquet")).get
+    val copy = java.nio.file.Paths.get(f).resolveSibling("compacted-filtered.parquet").toString
+    Files.move(part, tableDir.resolve(copy))
+    val v = Snapshots.commitRewrite(root, "s23", "compact", read = read1,
+      gone = Seq(f), added = Seq(copy), txn = None)
+    assert(v == read1.version + 1)
+    assert(Snapshots.read(spark, root, "s23").filter(col("ba") === victim).count() == 0)
+    assert(Snapshots.read(spark, root, "s23").count() == 999)
   }
 
   test("vacuum keeps in-flight rewrite output inside the grace window") {
@@ -1276,38 +1321,31 @@ class SnapshotSpec extends SparkTestBase {
     assert(viaPrune == viaScan)
   }
 
-  test("updateWhere fused and recompute paths commit identical tables and change feeds") {
-    // r15: small UPDATEs evaluate predicate + SET values in ONE
-    // materialized pass (spark.graft.dml.fuseMaxBytes gate); large
-    // rewrites keep the recompute shape. Both must produce the same
-    // committed rows AND the same row-grain change feed.
-    def build(fuseMax: String): (Seq[String], Seq[String]) = {
-      val root = Files.createTempDirectory("graft_updpath").toString
-      ProduceJob.produceBatch(spark, root, "u", topics = 1, numMessages = 200)
-      val k = "spark.graft.dml.fuseMaxBytes"
-      val prior = spark.conf.getOption(k)
-      spark.conf.set(k, fuseMax)
-      try Snapshots.updateWhere(spark, root, "u",
-        col("ba") % 3 === 0 && col("ba") < 100,
-        Seq("name" -> concat(lit("u"), col("ba")), "age" -> (col("age") + 1)))
-      finally prior match {
-        case Some(v) => spark.conf.set(k, v)
-        case None => spark.conf.unset(k)
-      }
-      val rows = Snapshots.read(spark, root, "u")
-        .orderBy("ba").collect().toSeq.map(_.toString)
-      val feed = Snapshots.readChangeFeed(spark, root, "u", fromVersion = 0)
-        .drop("_commit_timestamp") // wall-clock differs between builds
-        .orderBy(col("_commit_version"), col("_change_type"), col("ba"))
-        .collect().toSeq.map(_.toString)
-      (rows, feed)
-    }
-    val (fusedRows, fusedFeed) = build(Long.MaxValue.toString)
-    val (recomputeRows, recomputeFeed) = build("0")
-    assert(fusedRows == recomputeRows)
-    assert(fusedFeed == recomputeFeed)
-    // the fused path must have actually updated something
-    assert(fusedFeed.exists(_.contains("update_postimage")))
+  test("updateWhere commits its SET over the pre-image to the table and the change feed") {
+    // the expectation is computed independently of updateWhere: the
+    // same assignments as a plain select(when(pred, …)) over a
+    // time-travel read of the pre-image
+    val root = Files.createTempDirectory("graft_updpath").toString
+    ProduceJob.produceBatch(spark, root, "u", topics = 1, numMessages = 200)
+    val pred = col("ba") % 3 === 0 && col("ba") < 100
+    val sets = Map("name" -> concat(lit("u"), col("ba")), "age" -> (col("age") + 1))
+    val v = Snapshots.updateWhere(spark, root, "u", pred, sets.toSeq)
+    val pre = Snapshots.read(spark, root, "u", Some(v - 1))
+    val cols = pre.columns.toSeq
+    val expected = pre.withColumn("_hit", coalesce(pred, lit(false))).select(cols.map { c =>
+      sets.get(c).fold(col(c))(e =>
+        when(col("_hit"), e.cast(pre.schema(c).dataType)).otherwise(col(c)).as(c))
+    } :+ col("_hit"): _*)
+    def rows(df: DataFrame): Seq[String] =
+      df.select(cols.map(col): _*).orderBy("ba").collect().toSeq.map(_.toString)
+    assert(rows(Snapshots.read(spark, root, "u")) == rows(expected))
+    val feed = Snapshots.readChangeFeed(spark, root, "u", fromVersion = v - 1)
+    def images(t: String) = rows(feed.filter(col("_change_type") === t))
+    assert(images("update_preimage") == rows(pre.filter(pred)))
+    assert(images("update_postimage") == rows(expected.filter(col("_hit"))))
+    assert(feed.filter(!col("_change_type").isin("update_preimage", "update_postimage")).isEmpty)
+    // the update must have actually updated something
+    assert(images("update_postimage").nonEmpty)
   }
 
   test("sizedForWrite bounds the shrink under row-exploding projections") {
