@@ -549,29 +549,19 @@ object Snapshots {
     *
     * Conflict rule: `claimed` are the files the op derived its commit
     * from. A head that no longer pins one of them means a racer
-    * rewrote or dropped it ([[RewriteConflictException]]). A rewrite
-    * also passes `rewriteOf`, the snapshot it read its input at: its
-    * commit drops the claimed files, so any change to the deletion
-    * vectors since that read conflicts too — a DV committed in between
-    * was not applied to the rewrite's input, and the output would
-    * bring its rows back. */
+    * rewrote or dropped it ([[RewriteConflictException]]). Rules that
+    * need more than the head's file set (a rewrite's deletion-vector
+    * check) run first thing in `next`, which may throw the same. */
   private[graft] def commitNext(root: String, prefix: String, op: String,
-                                claimed: Set[String] = Set.empty,
-                                rewriteOf: Option[Snapshot] = None)(
+                                claimed: Set[String] = Set.empty)(
       next: Option[Snapshot] => Either[Int, NextState]): Int = {
     @scala.annotation.tailrec
     def attempt(n: Int): Int = {
       val vs = versions(root, prefix)
       val head = latest(root, prefix, vs)
-      if (claimed.nonEmpty) {
-        val lost = claimed -- head.fold(Set.empty[String])(_.files.toSet)
-        if (lost.nonEmpty)
-          throw new RewriteConflictException(op, "it removed " + lost.toSeq.sorted.mkString(", "))
-        rewriteOf.filter(r => head.exists(_.dv != r.dv)).foreach { r =>
-          throw new RewriteConflictException(op,
-            s"its deletion vectors changed after v${r.version}, which this rewrite read")
-        }
-      }
+      val lost = claimed -- head.fold(Set.empty[String])(_.files.toSet)
+      if (lost.nonEmpty)
+        throw new RewriteConflictException(op, "it removed " + lost.toSeq.sorted.mkString(", "))
       next(head) match {
         case Left(v) => v
         case Right(s) =>
@@ -630,20 +620,33 @@ object Snapshots {
     * staged files stay referenced (vacuum-safe) but invisible.
     * Idempotent per audit id. At 100 TB the whole flow is metadata:
     * stage, audit and publish never rewrite data files. */
-  def commitStaged(root: String, prefix: String, maxPos: Long, audit: String): Int =
+  def commitStaged(root: String, prefix: String, maxPos: Long, audit: String): Int = {
     // the idempotent lookup runs BEFORE the charset require: a staged
     // commit that landed under an earlier, laxer contract (space, '/',
     // '(') must stay re-acknowledgeable — validating first would
     // strand it forever. New stagings still refuse below.
-    stagedVersion(root, prefix, audit).getOrElse {
+    val seen = versions(root, prefix)
+    stagedIn(root, prefix, seen, audit).getOrElse {
       // same charset contract as tag names
       require(audit.nonEmpty && audit.matches("[A-Za-z0-9._:-]+"),
         s"audit id must be non-empty [A-Za-z0-9._:-] (it is embedded " +
           s"in the commit log); got '$audit'")
-      // the delta's built-in parent field (the published head) IS the
-      // staged commit's published-parent record (publish resolves the
-      // staged delta against it)
-      commitNext(root, prefix, "staged") { prevPub =>
+      commitNext(root, prefix, "staged")(stageNext(root, prefix, maxPos, audit, seen))
+    }
+  }
+
+  /** One [[commitStaged]] attempt on top of published head `prevPub`.
+    * A racing stager of the same audit id lands above `seen`, the
+    * listing the idempotent lookup read: its version is returned, so
+    * an audit id never stages twice. The delta's built-in parent field
+    * (the published head) IS the staged commit's published-parent
+    * record: publish resolves the staged delta against it. */
+  private[graft] def stageNext(root: String, prefix: String, maxPos: Long, audit: String,
+                               seen: Seq[Int])(prevPub: Option[Snapshot]): Either[Int, NextState] =
+    stagedIn(root, prefix, versions(root, prefix).filter(_ > seen.lastOption.getOrElse(-1)),
+        audit) match {
+      case Some(v) => Left(v)
+      case None =>
         val newFiles = (listDataFiles(root, prefix).toSet -- referencedFiles(root, prefix))
           .filterNot(isCompacted)
         val files = (prevPub.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles)
@@ -653,12 +656,15 @@ object Snapshots {
           stats = assembleStats(dataDir(root, prefix), files,
             prevPub.map(_.stats).getOrElse(Seq.empty)),
           dv = prevPub.map(_.dv).getOrElse(Seq.empty), audit = Some(audit)))
-      }
     }
 
   /** The staged (not yet published) version carrying this audit id. */
   def stagedVersion(root: String, prefix: String, audit: String): Option[Int] =
-    versions(root, prefix).reverse.find { v =>
+    stagedIn(root, prefix, versions(root, prefix), audit)
+
+  /** The newest of versions `vs` staged under this audit id. */
+  private def stagedIn(root: String, prefix: String, vs: Seq[Int], audit: String): Option[Int] =
+    vs.reverse.find { v =>
       val e = entryOf(root, prefix, v)
       e.opName == "staged" && e.audit.contains(audit)
     }
@@ -2136,10 +2142,14 @@ object Snapshots {
     *  - The new state is recomputed on the head of every attempt, so a
     *    racing append is kept (append ⋈ rewrite never conflicts
     *    logically — they touch disjoint files).
-    *  - A racer that removed any `gone` file, or changed the deletion
-    *    vectors after `read`, is a real conflict: `added` was derived
-    *    from pre-race contents. The op aborts with
-    *    [[RewriteConflictException]] instead of committing.
+    *  - A racer that removed any `gone` file is a real conflict:
+    *    `added` was derived from pre-race contents. So is a deletion
+    *    vector committed or dropped after `read` that may mark a `gone`
+    *    file ([[dvMayMark]]): `added` carries the rows as `read` saw
+    *    them, and committing would bring back (or keep deleted) rows
+    *    that vector changed. The op aborts with
+    *    [[RewriteConflictException]] instead of committing. A vector
+    *    that marks only files outside `gone` does not conflict.
     *  - The head's deletion vectors carry forward. Entries for files
     *    leaving the set go stale harmlessly (the path join can't match
     *    them again); entries for untouched files keep deleting.
@@ -2151,12 +2161,44 @@ object Snapshots {
                                    added: Seq[String], txn: Option[String]): Int = {
     val base = dataDir(root, prefix)
     val goneSet = gone.toSet
-    commitNext(root, prefix, op, claimed = goneSet, rewriteOf = Some(read)) { head =>
+    commitNext(root, prefix, op, claimed = goneSet) { head =>
       val cur = head.get
+      if (goneSet.nonEmpty) {
+        val (had, has) = (read.dv.toSet, cur.dv.toSet)
+        ((has -- had) ++ (had -- has)).toSeq.sorted.find(dvMayMark(root, prefix, _, goneSet))
+          .foreach { d =>
+            throw new RewriteConflictException(op, s"deletion vector $d changed after " +
+              s"v${read.version}, which this rewrite read, and may mark a file it rewrote")
+          }
+      }
       val files = ((cur.files.toSet -- goneSet) ++ added).toSeq.sorted
       Right(NextState(cur.maxPos max read.maxPos, files, gone, cur.txns ++ txn,
         assembleStats(base, files, cur.stats), cur.dv))
     }
+  }
+
+  /** Whether deletion vector `name` may mark rows of any of `files`:
+    * some row group of its sidecar has `file` bounds (footer min/max,
+    * no data read) that cover one of them. Conservative: a row group
+    * without complete bounds, or a sidecar that cannot be read, may
+    * mark any file. */
+  private def dvMayMark(root: String, prefix: String, name: String,
+                        files: Set[String]): Boolean = {
+    val keys = files.toSeq.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def covered(lo: Array[Byte], hi: Array[Byte]) = keys.exists(k =>
+      java.util.Arrays.compareUnsigned(lo, k) <= 0 && java.util.Arrays.compareUnsigned(k, hi) <= 0)
+    try Using.resource(Files.list(dvDir(root, prefix).resolve(name)))(
+        _.iterator.asScala.filterNot(p => Footers.hidden(p.getFileName.toString)).toSeq)
+      .exists { part =>
+        Using.resource(Footers.open(part))(_.getFooter.getBlocks.asScala.exists { b =>
+          b.getRowCount > 0 && b.getColumns.asScala.find(_.getPath.toDotString == "file")
+            .map(_.getStatistics).forall { st =>
+              st == null || st.isEmpty || !st.hasNonNullValue ||
+                covered(st.getMinBytes, st.getMaxBytes)
+            }
+        })
+      }
+    catch { case NonFatal(_) => true }
   }
 
   /** MERGE INTO (copy-on-write upsert): rows of `source` replace

@@ -715,6 +715,28 @@ class DeltaLogSpec extends SparkTestBase {
     assert(Snapshots.versions(root, "ol") == (0 to Snapshots.CommitAttempts))
   }
 
+  test("one commit path: a same-audit stager that wins the race is the staging's version") {
+    val root = Files.createTempDirectory("graft_dlog").toString
+    ProduceJob.produceBatch(spark, root, "os", topics = 1, numMessages = 100)
+    ProduceJob.personProjection(spark.range(100, 150).toDF("cnt"), "cnt", "os", 1)
+      .write.mode("append").partitionBy("topic").parquet(Topics.tableDir(root, "os"))
+    // the idempotent lookup has run and found nothing
+    val seen = Snapshots.versions(root, "os")
+    var racer = -1
+    val v = Snapshots.commitNext(root, "os", "staged") { head =>
+      val next = Snapshots.stageNext(root, "os", 149, "a1", seen)(head)
+      // a second stager of the same audit id commits after this
+      // attempt's check and before its write
+      if (racer < 0) racer = Snapshots.commitStaged(root, "os", 149, audit = "a1")
+      next
+    }
+    assert(v == racer)
+    assert(Snapshots.versions(root, "os") == seen :+ racer)
+    assert(Snapshots.read(spark, root, "os").count() == 100)
+    Snapshots.publish(root, "os", "a1")
+    assert(Snapshots.read(spark, root, "os").count() == 150)
+  }
+
   test("one commit path: concurrent UPDATE and append both commit and conserve rows") {
     val root = Files.createTempDirectory("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "cc", topics = 1, numMessages = 200)

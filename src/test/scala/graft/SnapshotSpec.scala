@@ -817,6 +817,25 @@ class SnapshotSpec extends SparkTestBase {
     assert(Snapshots.read(spark, root, "s22").count() == 999)
   }
 
+  test("a deletion vector on files a rewrite does not drop does not conflict") {
+    val root = Files.createTempDirectory("graft_snap").toString
+    withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s22d", topics = 1, numMessages = 1000) }
+    val read0 = Snapshots.snapshot(root, "s22d").get
+    assert(read0.files.size >= 2)
+    val (f, g) = (read0.files.head, read0.files.last)
+    val tableDir = java.nio.file.Paths.get(graft.ingest.Topics.tableDir(root, "s22d"))
+    val victim = spark.read.parquet(tableDir.resolve(g).toString).agg(min("ba")).head().getLong(0)
+    val copy = java.nio.file.Paths.get(f).resolveSibling("compacted-copy.parquet").toString
+    Files.copy(tableDir.resolve(f), tableDir.resolve(copy))
+    // the DELETE commits while the rewrite of f runs, but marks only g
+    Snapshots.deleteMoR(spark, root, "s22d", col("ba") === victim)
+    val v = Snapshots.commitRewrite(root, "s22d", "compact", read = read0,
+      gone = Seq(f), added = Seq(copy), txn = None)
+    assert(v == read0.version + 2)
+    assert(Snapshots.read(spark, root, "s22d").filter(col("ba") === victim).count() == 0)
+    assert(Snapshots.read(spark, root, "s22d").count() == 999)
+  }
+
   test("a deletion vector committed before a rewrite's read does not conflict") {
     val root = Files.createTempDirectory("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s23", topics = 1, numMessages = 1000) }
