@@ -7,7 +7,9 @@ import scala.util.control.NonFatal
 
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftStreamingShim, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, OuterReference, SubqueryExpression}
+import org.apache.spark.sql.classic.ColumnConversions
 import org.apache.spark.sql.functions.{col, input_file_name}
 
 /** Versioned snapshot log for topic tables — the minimal transactional
@@ -2393,6 +2395,41 @@ object Snapshots {
     }
   }
 
+  /** `c` rebound onto `frame`, the output of the read a DML primitive
+    * evaluates it on. The SQL DML rule ([[graft.sources.GraftDml]])
+    * hands over the analyzer's resolved expressions, whose attributes
+    * belong to the catalog relation (and, for MERGE, the source plan),
+    * while the primitive re-reads the files into a frame with fresh
+    * attributes. Every attribute of `c` that `frame` does not produce
+    * (by exprId) is replaced by the frame attribute of the same name:
+    * at top level, and as an outer reference inside any subquery plan.
+    * A column a subquery reads from its own plan, or that a nested
+    * subquery takes from its enclosing subquery, is not in that set,
+    * so a name it shares with a table column never captures it.
+    * Columns built by name (`col`, `expr`) are left to the analyzer. */
+  private[graft] def rebound(frame: Seq[Attribute])(c: Column): Column = {
+    val e = ColumnConversions.expression(c)
+    val stale = if (e.resolved) e.references -- frame else AttributeSet.empty
+    if (stale.isEmpty) c
+    else {
+      val byName = frame.map(a => a.name -> a).toMap
+      GraftStreamingShim.column(replaceAttributes(e, stale, a => byName.getOrElse(a.name,
+        throw new IllegalStateException(s"column ${a.name} is not in the re-read frame"))))
+    }
+  }
+
+  /** `e` with every attribute in `these` replaced by `to(a)`: at top
+    * level, and as an outer reference inside any subquery plan. */
+  private[graft] def replaceAttributes(e: Expression, these: AttributeSet,
+                                       to: Attribute => Attribute): Expression =
+    e.transform {
+      case a: AttributeReference if these.contains(a) => to(a)
+      case s: SubqueryExpression =>
+        s.withNewPlan(s.plan.transformAllExpressionsWithSubqueries {
+          case OuterReference(a: Attribute) if these.contains(a) => OuterReference(to(a))
+        })
+    }
+
   /** UPDATE (copy-on-write): rows matching `predicate` get `sets`
     * applied; everything else survives byte-identical. Only files that
     * actually contain matching rows are rewritten (same attribution as
@@ -2407,6 +2444,9 @@ object Snapshots {
     * CHECK constraints are enforced on the POST-image of matched rows
     * before any commit; updates ride the change feed as
     * update_preimage/update_postimage pairs (Delta CDF parity).
+    *
+    * The predicate and SET values may carry attributes resolved
+    * against another read of the table ([[rebound]]).
     *
     * @param ranges advisory manifest-prunable bounds extracted from
     *   the predicate's conjuncts (the DML rule supplies them): the
@@ -2424,8 +2464,6 @@ object Snapshots {
       sys.error(s"nothing to update for $prefix"))
     if (txn.exists(snap.txns.contains)) snap.version
     else {
-      val matches = org.apache.spark.sql.functions.coalesce(
-        predicate, org.apache.spark.sql.functions.lit(false))
       val evs = schemaEvents(root, prefix, Some(snap.version))
       val candidates =
         if (ranges.isEmpty) snap.files
@@ -2433,8 +2471,11 @@ object Snapshots {
       if (candidates.isEmpty) return snap.version // stats exclude every file
       val withFile = readFilesFilled(spark, root, prefix, candidates, evs,
         snap.dv, keepPositions = true)
+      val bind = rebound(withFile.queryExecution.analyzed.output) _
+      val matches = org.apache.spark.sql.functions.coalesce(
+        bind(predicate), org.apache.spark.sql.functions.lit(false))
       val hit = "_graft_hit"
-      val setMap = sets.toMap
+      val setMap = sets.toMap.view.mapValues(bind).toMap
       def newCol(c: String) = s"_graft_new_$c"
       // One pass over the candidate files evaluates the predicate and
       // every SET value (pre- and post-image columns side by side, plus
@@ -2491,17 +2532,18 @@ object Snapshots {
     }
   }
 
-  /** One SQL MERGE clause. `condition` is a SQL predicate over the
-    * joined row — target columns by their own names, source columns
-    * under the `_graft_src_` prefix ([[SrcColPrefix]]); None = always
-    * fires. `set` maps target columns to SQL value expressions (same
-    * namespace); None means DELETE, for INSERT clauses unassigned
-    * target columns become NULL. Clauses fire FIRST-WINS in
-    * declaration order (the SQL standard's rule). */
-  final case class MergeClause(condition: Option[String],
-                               set: Option[Seq[(String, String)]])
+  /** One SQL MERGE clause. `condition` is a predicate over the joined
+    * row — target columns by their own names, source columns under the
+    * `_graft_src_` prefix ([[SrcColPrefix]]); None = always fires.
+    * `set` maps target columns to value columns (same namespace); None
+    * means DELETE, for INSERT clauses unassigned target columns become
+    * NULL. Columns may carry resolved attributes of another plan with
+    * those names ([[rebound]]). Clauses fire FIRST-WINS in declaration
+    * order (the SQL standard's rule). */
+  final case class MergeClause(condition: Option[Column],
+                               set: Option[Seq[(String, Column)]])
 
-  /** Source-column namespace inside [[MergeClause]] SQL. */
+  /** Source-column namespace inside [[MergeClause]] columns. */
   val SrcColPrefix = "_graft_src_"
 
   /** SQL MERGE's cardinality rule: a target row matched by more than
@@ -2549,13 +2591,13 @@ object Snapshots {
     *   small SQL MERGE against a 100 TB table attributes against a
     *   handful of candidate files instead of scanning the table. */
   def mergeInto(spark: SparkSession, root: String, prefix: String,
-                source: DataFrame, condSql: String,
+                source: DataFrame, condition: Column,
                 matched: Seq[MergeClause], notMatched: Seq[MergeClause],
                 notMatchedBySource: Seq[MergeClause],
                 tableSchema: org.apache.spark.sql.types.StructType,
                 txn: Option[String] = None,
                 equiKeys: Seq[(String, String)] = Seq.empty): Int = {
-    import org.apache.spark.sql.functions.{collect_set, count, expr, lit, max, min,
+    import org.apache.spark.sql.functions.{collect_set, count, lit, max, min,
       monotonically_increasing_id, when}
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
@@ -2613,12 +2655,15 @@ object Snapshots {
       val tSchema = org.apache.spark.sql.types.StructType(
         target.schema.filterNot(f => f.name == DvPathCol || f.name == DvPosCol))
       val tCols = tSchema.fieldNames.toSeq
+      // the join and every frame below keep these attributes
+      val bind = rebound(target.queryExecution.analyzed.output ++
+        src.queryExecution.analyzed.output) _
       // one index space for every clause: matched, then not matched by
       // source, then not matched; 0 = none fired
       val clauses = matched ++ notMatchedBySource ++ notMatched
       def fired(family: Seq[MergeClause], offset: Int): org.apache.spark.sql.Column =
         family.zipWithIndex.foldRight(lit(0)) { case ((cl, i), rest) =>
-          when(cl.condition.map(expr).getOrElse(lit(true)), lit(offset + i + 1))
+          when(cl.condition.map(bind).getOrElse(lit(true)), lit(offset + i + 1))
             .otherwise(rest)
         }
       val deletes = clauses.zipWithIndex.collect { case (c, i) if c.set.isEmpty =>
@@ -2634,7 +2679,7 @@ object Snapshots {
       // select, so they share one Window node and one exchange.
       val targetRow = org.apache.spark.sql.expressions.Window.partitionBy(
         col(DvPathCol), col(DvPosCol), when(!inTarget, col(SrcRowCol)))
-      val tagged = target.join(src, expr(condSql), "full_outer")
+      val tagged = target.join(src, bind(condition), "full_outer")
         .withColumn(act, when(pair, fired(matched, 0))
           .when(inTarget, fired(notMatchedBySource, matched.size))
           .otherwise(fired(notMatched, matched.size + notMatchedBySource.size)))
@@ -2671,7 +2716,7 @@ object Snapshots {
           clauses.zipWithIndex.foldLeft(col(c)) { case (acc, (cl, i)) =>
             cl.set.flatMap(_.toMap.get(c)) match {
               case Some(v) => when(col(act) === (i + 1),
-                expr(v).cast(tSchema(c).dataType)).otherwise(acc)
+                bind(v).cast(tSchema(c).dataType)).otherwise(acc)
               case None => acc
             }
           }.as(c)
@@ -2735,9 +2780,15 @@ object Snapshots {
     val target = math.max(1L,
       data.sparkSession.conf.get("spark.graft.write.targetFileBytes",
         (128L << 20).toString).toLong)
+    // a failed probe keeps the frame's own partitioning: the write
+    // then costs file-size balance, never correctness
+    def unsized(probe: String, e: Throwable): DataFrame = {
+      System.err.println(s"[graft] staged write keeps its partitioning: $probe failed: $e")
+      data
+    }
     val est =
       try data.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => return data }
+      catch { case NonFatal(e) => return unsized("size estimate", e) }
     val want = (est / target) + (if (est % target == 0) 0 else 1)
     // a plainly-wide estimate can never shrink a local/cluster stage's
     // partition count — skip the partition-count probe outright
@@ -2748,7 +2799,7 @@ object Snapshots {
     // optimizedPlan was just computed for the estimate above)
     val cur =
       try data.queryExecution.toRdd.getNumPartitions
-      catch { case _: Throwable => return data }
+      catch { case NonFatal(e) => return unsized("partition count", e) }
     // r14 verdict hazard: `coalesce` is narrow, so it shrinks the whole
     // upstream stage, and the size estimate does not model per-row
     // EXPRESSION cost — a tiny scan feeding row-exploding (Generate) or
@@ -3035,6 +3086,9 @@ object Snapshots {
     * [[restore]] past this commit restores its target's dv set, so
     * the deletion is undone with it.
     *
+    * The predicate may carry attributes resolved against another read
+    * of the table ([[rebound]]).
+    *
     * @param ranges advisory manifest-prunable bounds from the delete
     *   predicate (the SQL DELETE path maps its pushed filters): the
     *   hit scan opens only stat-overlapping files — a keyed DELETE
@@ -3048,22 +3102,23 @@ object Snapshots {
     if (txn.exists(snap.txns.contains)) snap.version
     else {
       val base = dataDir(root, prefix)
-      // same null rule as DELETE: predicate NULL keeps the row
-      val matches = org.apache.spark.sql.functions.coalesce(
-        predicate, org.apache.spark.sql.functions.lit(false))
       val evs = schemaEvents(root, prefix, Some(snap.version))
       val candidates =
         if (ranges.isEmpty) snap.files
         else pruneFilesMulti(root, prefix, ranges, Some(snap.version))
       if (candidates.isEmpty) return snap.version // stats exclude every file
+      val frame = readFilesFilled(spark, root, prefix, candidates, evs,
+        snap.dv, keepPositions = true)
+      // same null rule as DELETE: predicate NULL keeps the row
+      val matches = org.apache.spark.sql.functions.coalesce(
+        rebound(frame.queryExecution.analyzed.output)(predicate),
+        org.apache.spark.sql.functions.lit(false))
       // one materialization reused three ways: sidecar rows, touched
       // files for the conflict check, CDC pre-images. The hit set is
       // what a MoR delete is FOR — small next to the table. Its count
       // and touched files are observed metrics of the same job.
       val hitsMetric = "graft_delete_hits"
-      val observed = readFilesFilled(spark, root, prefix, candidates, evs,
-          snap.dv, keepPositions = true)
-        .filter(matches)
+      val observed = frame.filter(matches)
         .observe(hitsMetric, org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)),
           org.apache.spark.sql.functions.collect_set(col(DvPathCol)))
@@ -3074,8 +3129,7 @@ object Snapshots {
         val relOffset = base.toString.length + 2 // past base and its '/'
         val name = "dv-" + java.util.UUID.randomUUID().toString.take(8)
         labeled(spark, "dv sidecar write")(hits.select(
-          org.apache.spark.sql.functions.expr(
-            s"substring($DvPathCol, $relOffset)").as("file"),
+          col(DvPathCol).substr(relOffset, Int.MaxValue).as("file"),
           col(DvPosCol).as("pos"))
           // a sidecar is kilobytes-per-commit metadata: one file keeps
           // the read path's broadcast build cheap
@@ -3138,19 +3192,21 @@ object Snapshots {
             else pruneFiles(root, prefix, keys.head, mm.getLong(0), mm.getLong(1), Some(snap.version))
           case None => snap.files
         }
+        val evs = schemaEvents(root, prefix, Some(snap.version))
         val matchedFiles: Seq[String] =
           if (candidates.isEmpty) Seq.empty
           else {
             val withFile = readFilesFilled(spark, root, prefix, candidates,
-              schemaEvents(root, prefix, Some(snap.version)), snap.dv,
-              keepPositions = true)
+              evs, snap.dv, keepPositions = true)
             attribute(snap, labeled(spark, "apply attribution")(
               distinctCollected(withFile.join(changedKeys, keys, "left_semi"), DvPathCol)))
           }
+        // the rewrite carries the old rows minus the snapshot's
+        // deletion vectors: a row a merge-on-read DELETE removed from
+        // a rewritten file stays removed
         val oldMatched =
           if (matchedFiles.isEmpty) upserts.limit(0)
-          else readFilesFilled(spark, root, prefix, matchedFiles,
-            schemaEvents(root, prefix, Some(snap.version)))
+          else readFilesFilled(spark, root, prefix, matchedFiles, evs, snap.dv)
         // using-join reorders (keys first) — restore the logical order,
         // same reasoning as merge()
         val survivors = oldMatched.join(changedKeys, keys, "left_anti")

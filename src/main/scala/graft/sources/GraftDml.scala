@@ -1,51 +1,50 @@
 package graft.sources
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, GraftStreamingShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, EqualTo, Expression, GetStructField, OuterReference, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, CreateNamedStruct, EqualTo, Expression, GetStructField, Literal, OuterReference, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.Snapshots
 
-/** SQL row-level DML on graft tables: `UPDATE t SET … WHERE …` and the
-  * full three-clause `MERGE INTO` — the Delta-style route. Spark's own
-  * analyzer resolves `UpdateTable` / `MergeIntoTable` (references,
-  * star-expansion, type coercion) but only REWRITES them for tables
+/** SQL row-level DML on graft tables: `UPDATE t SET … WHERE …`, the
+  * full three-clause `MERGE INTO` and `DELETE … WHERE … (SELECT …)` —
+  * the Delta-style route. Spark's own analyzer resolves `UpdateTable`
+  * / `MergeIntoTable` / `DeleteFromTable` (references, star-expansion,
+  * type coercion, subqueries) but only REWRITES them for tables
   * implementing `SupportsRowLevelOperations`; for anything else the
   * nodes reach the planner and throw. This post-hoc resolution rule
   * (installed by [[graft.GraftExtensions]]) intercepts the resolved
   * nodes over graft tables and lowers them to commands that run the
   * copy-on-write primitives ([[Snapshots.updateWhere]] /
-  * [[Snapshots.mergeInto]]) — the exact interception point Delta used
+  * [[Snapshots.mergeInto]]) and the merge-on-read
+  * [[Snapshots.deleteMoR]] — the exact interception point Delta used
   * for years before row-level operations existed.
   *
-  * Expression hand-off: clause conditions and SET values arrive as
-  * RESOLVED catalyst expressions against the relation's attributes,
-  * but the primitives re-read the matched files into fresh frames with
-  * fresh attribute ids — so expressions cross as SQL TEXT, re-resolved
-  * by name. Target attributes keep their names; MERGE source
-  * attributes are renamed into the [[Snapshots.SrcColPrefix]]
-  * namespace (both sides of a merge may share column names — `t.id` vs
-  * `s.id` — and text has no exprIds). UNCORRELATED subqueries (`IN
-  * (SELECT …)`, scalar, `EXISTS`) cross too: each subquery's resolved
-  * plan rides the command (like MERGE's source) and is registered as a
-  * uniquely-named temp view at run time, with the textualized
-  * predicate referencing it — the optimizer then plans the membership
-  * test as a distributed semi/anti join against the re-read frames, so
-  * a billion-key `DELETE … WHERE k IN (SELECT bad_keys …)` never
-  * collects to the driver. EQUALITY-correlated subqueries — scalar
-  * aggregates, EXISTS/NOT EXISTS, IN/NOT IN of the `… WHERE s.k = t.k`
-  * shape — lift too ([[stripCorrelatedSpine]]): the correlation is
-  * stripped from the carried plan and re-stated in the emitted text
-  * against the view's renamed columns, so Spark's optimizer
-  * decorrelates it into a distributed join. Anything beyond that
-  * contract is refused up front; everything else (functions, casts,
-  * literals, conjunctions) round-trips exactly.
+  * Rebinding contract: each command carries the analyzer's node as a
+  * plan field, the way MERGE carries its source (a subquery-bearing
+  * expression cannot sit in a command's `expressions`, where analyzer
+  * checks and optimizer rules would rewrite it). At run time the
+  * resolved expressions cross to the primitive as columns, and the
+  * primitive rebinds them onto the frame it re-reads
+  * ([[Snapshots.rebound]]): each attribute the frame does not produce
+  * (by exprId) becomes the frame attribute of the same name, at top
+  * level and as an outer reference inside subquery plans. MERGE source
+  * attributes move into the [[Snapshots.SrcColPrefix]] namespace first,
+  * since both sides of a merge may share column names (`t.id` vs
+  * `s.id`). Nothing is re-parsed: lambdas, TRY-mode arithmetic,
+  * collations and replacement-rendered functions evaluate exactly as
+  * analyzed, and a column a subquery reads from its own plan is never
+  * captured by a target column's name. Spark's optimizer then plans
+  * each subquery against the re-read frame — `IN (SELECT …)` and
+  * equality-correlated EXISTS / IN / scalar aggregates decorrelate into
+  * distributed joins, so a billion-key `DELETE … WHERE k IN (SELECT
+  * bad_keys …)` never collects to the driver. One refusal remains, a
+  * cost policy ([[checkCorrelation]]).
   *
   * Scale: both commands rewrite only the files that contain affected
   * rows (manifest-attributed, like DELETE) — a 10-row UPDATE against a
@@ -62,11 +61,6 @@ object GraftDml extends Rule[LogicalPlan] {
       }
       case _ => None
     }
-
-  /** Accumulates one command's subquery hand-offs: index i holds the
-    * resolved plan whose run-time temp view replaces the token
-    * `__graft_view_i__` inside the textualized expression. */
-  private type SubqAcc = scala.collection.mutable.ArrayBuffer[LogicalPlan]
 
   private def refuseCorrelated(): Nothing =
     throw new UnsupportedOperationException(
@@ -87,561 +81,36 @@ object GraftDml extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  /** Rendering shim for lambdas: an analyzed LambdaFunction's .sql is
-    * the unparseable `lambdafunction(body, namedlambdavariable())` —
-    * this node emits arrow syntax instead. Variables are renamed to
-    * `_graft_lv<exprId>` in both the argument list and the body, so
-    * the re-parsed lambda can never capture-shadow a frame column that
-    * happened to share the user's variable name (the original binding
-    * was by exprId; bare text would re-bind by name). */
-  private case class SqlLambda(args: Seq[String], body: Expression)
-      extends Expression
-      with org.apache.spark.sql.catalyst.expressions.Unevaluable {
-    override def children: Seq[Expression] = Seq(body)
-    override def dataType: org.apache.spark.sql.types.DataType = body.dataType
-    override def nullable: Boolean = body.nullable
-    override lazy val resolved: Boolean = body.resolved
-    override def sql: String =
-      (if (args.length == 1) args.head
-       else args.mkString("(", ", ", ")")) + s" -> ${body.sql}"
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(body = newChildren.head)
-  }
+  private def hasOuter(e: Expression): Boolean = e.exists(_.isInstanceOf[OuterReference])
 
-  private def inlineLambdas(e: Expression): Expression = e.transformUp {
-    case lf: org.apache.spark.sql.catalyst.expressions.LambdaFunction =>
-      val fresh = lf.arguments
-        .map(v => v.exprId -> s"_graft_lv${v.exprId.id}").toMap
-      val body = lf.function.transform {
-        case v: org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable
-            if fresh.contains(v.exprId) =>
-          AttributeReference(fresh(v.exprId), v.dataType, v.nullable)(v.exprId)
+  /** The one refusal, a cost policy rather than a limit of the
+    * lowering: every correlated subquery (nested ones too) must carry
+    * at least one `inner = outer` equality conjunct in its filters, so
+    * Spark's decorrelation gets a hash-joinable key — a purely
+    * non-equi correlation decorrelates into a nested-loop join against
+    * the re-read table, the 100 TB hazard. A nondeterministic
+    * correlated conjunct (`rand() < s.p + t.x`) is refused too: where
+    * and how often decorrelation evaluates it is not the row-by-row
+    * semantics the statement states. */
+  private def checkCorrelation(e: Expression): Unit = e.foreach {
+    case s: SubqueryExpression =>
+      val correlated = s.plan.collect {
+        case f: Filter => conjunctsOf(f.condition).filter(hasOuter)
+      }.flatten
+      def equi(c: Expression): Boolean = c match {
+        case EqualTo(l, r) =>
+          (hasOuter(r) && !hasOuter(l) && r.references.isEmpty) ||
+            (hasOuter(l) && !hasOuter(r) && l.references.isEmpty)
+        case _ => false
       }
-      SqlLambda(lf.arguments.map(v => fresh(v.exprId)), body)
-  }
-
-  /** Generic call-syntax rendering shim (the SqlLambda idea for plain
-    * functions): children textualize normally, the call name is
-    * pinned. Used where a node's own .sql DROPS semantics. */
-  private case class SqlFunc(name: String, args: Seq[Expression],
-                             dt: org.apache.spark.sql.types.DataType)
-      extends Expression
-      with org.apache.spark.sql.catalyst.expressions.Unevaluable {
-    override def children: Seq[Expression] = args
-    override def dataType: org.apache.spark.sql.types.DataType = dt
-    override def nullable: Boolean = true
-    override lazy val resolved: Boolean = args.forall(_.resolved)
-    override def sql: String = s"$name(${args.map(_.sql).mkString(", ")})"
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[Expression]): Expression =
-      copy(args = newChildren)
-  }
-
-  /** TRY-mode arithmetic (`try_divide(a, b)` analyzes to
-    * `Divide(a, b, EvalMode.TRY)`) textualizes as a PLAIN `a / b` —
-    * the .sql drops the per-expression eval mode, silently turning
-    * return-NULL semantics into the session's ANSI behavior (a
-    * divide-by-zero THROW). Re-render the try_* call form; an
-    * unmapped TRY node refuses rather than mis-lowering. ANSI/LEGACY
-    * modes are session-level and survive re-parse unchanged. */
-  private def shimTryArithmetic(e: Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions._
-    e.transformUp {
-      case b: BinaryArithmetic if b.evalMode == EvalMode.TRY =>
-        val fn = b match {
-          case _: Add => "try_add"
-          case _: Subtract => "try_subtract"
-          case _: Multiply => "try_multiply"
-          case _: Divide => "try_divide"
-          case _: Remainder => "try_mod"
-          case other =>
-            throw new UnsupportedOperationException(
-              s"graft DML: cannot re-state TRY-mode ${other.prettyName} " +
-                "as text — rewrite without the try_ wrapper or compute " +
-                "it into a source column first")
-        }
-        SqlFunc(fn, Seq(b.left, b.right), b.dataType)
-    }
-  }
-
-  /** `collate(x, 'UNICODE_CI')` analyzes to
-    * `Collate(x, ResolvedCollation(UNICODE_CI))`, and BOTH nodes render
-    * .sql with the collation name UNQUOTED — the re-parsed text then
-    * resolves `UNICODE_CI` as a COLUMN reference and fails analysis
-    * (found by the round-14 textualization hunt). Re-render the call
-    * with the name as a proper string literal; the child keeps
-    * receiving transforms as a SqlFunc argument. */
-  private def shimCollate(e: Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Collate, Literal, ResolvedCollation}
-    e.transformUp {
-      case c: Collate => c.collation match {
-        case rc: ResolvedCollation =>
-          SqlFunc("collate", Seq(c.child, Literal.create(rc.collationName)), c.dataType)
-        case lit: Literal => SqlFunc("collate", Seq(c.child, lit), c.dataType)
-        case other =>
-          throw new UnsupportedOperationException(
-            "graft DML: cannot re-state collate(...) with a non-literal " +
-              s"collation (${other.getClass.getSimpleName}) as text")
-      }
-    }
-  }
-
-  /** Everything that must happen to an expression tree BEFORE .sql is
-    * trustworthy: inline replacement-rendered functions (whose stored
-    * parameters transforms can't reach), then convert lambdas to the
-    * arrow-syntax shim (replacements like array_sort's default
-    * comparator introduce lambdas) and re-render TRY-mode arithmetic
-    * (inlining try_divide exposes the mode-carrying nodes, hence the
-    * order) plus collations (whose .sql drops the name's quotes). */
-  private def sqlReady(e: Expression): Expression =
-    shimCollate(shimTryArithmetic(inlineLambdas(inlineReplacements(e))))
-
-  /** RuntimeReplaceable expressions (nullif, ifnull, count_if, …)
-    * render `.sql` from constructor-stored PARAMETERS, while tree
-    * transforms rewrite only `children` (= the replacement tree) — so
-    * a rename/unwrap applied before textualization silently misses
-    * them and the emitted text carries stale attribute names (or a
-    * literal `outer(...)` wrapper), which at best fails re-analysis
-    * and at worst re-resolves against the WRONG scope (found by the
-    * round-13 residual fuzz: `nullif(s.ts, t.ba % 47)`). Inline every
-    * such node to its replacement BEFORE any .sql emission: the
-    * replacement is the expression's definitional semantics, and as a
-    * child it received every transform. */
-  private def inlineReplacements(e: Expression): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{InheritAnalysisRules, RuntimeReplaceable, TryEval}
-    // FLAG-BASED try_* functions (round-13 ADVICE): TryElementAt /
-    // TryMod / TryParseUrl / TryUrlDecode / TryMakeTimestamp /
-    // TryToBinary / interval TryAdd/TryDivide are RuntimeReplaceables
-    // whose replacement carries failOnError=false — and the
-    // replacement's .sql renders the NON-try name (TryMod → `a % b`,
-    // TryElementAt → `element_at(a, b)`), so inlining them silently
-    // turns return-NULL semantics into the session's ANSI throw; the
-    // interval variants inline to TryEval whose .sql is the
-    // unparseable `tryeval(...)`. Re-render the original try_* call
-    // instead: parameters become SqlFunc CHILDREN, so the later
-    // attrFix/innerFix transforms still reach every argument (storing
-    // them as out-of-tree text would recreate the stale-name bug this
-    // whole pass exists to fix). This MUST run top-down: an IAR node's
-    // only child IS its replacement, so a bottom-up pass would descend
-    // into the TryEval wrapper before this case could detach it.
-    val pre = e.transformDown {
-      case rr: RuntimeReplaceable with InheritAnalysisRules
-          if rr.prettyName.startsWith("try_") =>
-        SqlFunc(rr.prettyName, rr.parameters, rr.dataType)
-    }
-    pre.transformUp {
-      // Non-IAR try variants (ParseToTimestamp/ParseToDate with
-      // failOnError=false render prettyName try_to_timestamp/
-      // try_to_date but replace with a PLAIN Cast — TRY dropped): keep
-      // the node. Unlike IAR nodes their .sql derives from real,
-      // transform-reachable children, so the emitted `try_to_x(...)`
-      // text is both fresh and re-parseable.
-      case rr: RuntimeReplaceable if rr.prettyName.startsWith("try_") =>
-        rr
-      // A TryEval that still surfaces here came out of some OTHER
-      // node's replacement — its .sql is the unparseable `tryeval(...)`
-      // and dropping it would flip NULL-on-error into a throw, so
-      // refuse loudly rather than emit either.
-      case t: TryEval =>
-        throw new UnsupportedOperationException(
-          "graft DML: a TRY-semantics expression (" + t.child.prettyName +
-            ") cannot be re-stated as text — rewrite without the try_ " +
-            "wrapper or compute it into a source column first")
-      // RECURSE on the replacement: some nodes (count_if) DERIVE it
-      // lazily from their parameters, so the tree it returns is built
-      // fresh AFTER the traversal visited this position and can itself
-      // contain never-visited RuntimeReplaceables (count_if → Count
-      // over a brand-new NullIf). Terminates: replacements ground out
-      // in non-replaceable expressions.
-      case rr: RuntimeReplaceable =>
-        inlineReplacements(rr.replacement)
-    // replacements use With(defs) to evaluate a shared argument once
-    // (nullif's left appears in both the predicate and a branch) —
-    // With's own .sql is the unparseable `with(...)`, so expand each
-    // common-expression ref to its definition. Textual duplication is
-    // sound only for deterministic defs; a nondeterministic one would
-    // draw twice, so refuse loudly.
-    case w: org.apache.spark.sql.catalyst.expressions.With =>
-      val defs = w.defs.map { d =>
-        require(d.child.deterministic,
-          "graft DML: a non-deterministic argument to a replacement-" +
-            "rendered function (nullif/ifnull/...) cannot be re-stated " +
-            "as text — compute it into a source column first")
-        d.id -> d.child
-      }.toMap
-      w.child.transformUp {
-        case r: org.apache.spark.sql.catalyst.expressions.CommonExpressionRef
-            if defs.contains(r.id) => defs(r.id)
-      }
-    }
-  }
-
-  private def hasOuter(e: Expression): Boolean = e.exists {
-    case _: OuterReference => true
-    case s: SubqueryExpression => s.getOuterAttrs.nonEmpty
-    case _ => false
-  }
-
-  /** The shared strip behind every equality-correlated lift: remove
-    * correlated conjuncts from Filters on the Project/Filter/alias
-    * SPINE of `plan`, then WIDEN spine Projects so every correlation
-    * column survives to the output (a derived table `(SELECT x+1 AS y
-    * FROM s WHERE s.k = t.k)` drops `k`; appending the original
-    * attribute is a pure column addition — row multiplicity and every
-    * remaining predicate are untouched — and lets the re-emitted
-    * correlation reference it by its RENAMED name, which is what makes
-    * the lift sound). Two conjunct classes lift (round 12 added the
-    * second):
-    *   - `inner = outer` EQUI pairs — at least one is REQUIRED, so
-    *     Spark's decorrelation always has a hash-joinable key (a
-    *     purely non-equi correlation would decorrelate into a
-    *     nested-loop join against the re-read table — the 100 TB
-    *     hazard this contract exists to prevent);
-    *   - arbitrary RESIDUAL correlated conjuncts (`s.ts > t.ts`,
-    *     `abs(s.x - t.x) < 5`, …) with no nested subquery: hoisting a
-    *     conjunct off a spine Filter and re-stating it verbatim inside
-    *     the re-emitted subquery text is placement-identical, so any
-    *     textualizable shape is sound; it lands as the join's
-    *     non-equi filter after decorrelation.
-    * Returns the cleaned, outer-reference-free plan, the (innerExpr,
-    * outerSide) equi pairs, and the residual conjuncts.
-    *
-    * Returns None (→ loud refusal) for anything outside the contract
-    * (advisor round-11 high finding — never mis-lower):
-    *   - no equi pair at all, or a correlated conjunct carrying a
-    *     nested subquery;
-    *   - a correlated Filter below a NON-spine node (Aggregate, Join,
-    *     Window, Limit, …): it decides group/join/limit membership, so
-    *     hoisting it changes semantics — the residual-outer-ref check
-    *     catches it;
-    *   - a correlation column that widening could not surface into
-    *     the output. */
-  private def stripCorrelatedSpine(plan: LogicalPlan)
-      : Option[(LogicalPlan, Seq[(Expression, Expression)], Seq[Expression])] = {
-    val corr = scala.collection.mutable.ArrayBuffer[(Expression, Expression)]()
-    val resid = scala.collection.mutable.ArrayBuffer[Expression]()
-    var bad = false
-    // descend ONLY through Project/Filter/alias: any correlated Filter
-    // deeper than that is left in place and caught by the
-    // residual-outer-ref check below → refusal, never a mis-lower
-    def strip(p: LogicalPlan): LogicalPlan = p match {
-      case f: Filter if hasOuter(f.condition) =>
-        val (outerCj, localCj) = conjunctsOf(f.condition).partition(hasOuter)
-        outerCj.foreach {
-          // a NONDETERMINISTIC correlated conjunct (rand() < s.p + t.x)
-          // is evaluated at a different place and cardinality once
-          // hoisted and re-stated — and rand()'s .sql text re-seeds on
-          // re-parse — so no placement can preserve its semantics:
-          // refuse (round-12 advisor (a))
-          case nd if !nd.deterministic => bad = true
-          case EqualTo(l, r) if hasOuter(r) && !hasOuter(l) &&
-              r.references.isEmpty => corr += ((l, r))
-          case EqualTo(l, r) if hasOuter(l) && !hasOuter(r) &&
-              l.references.isEmpty => corr += ((r, l))
-          // any other correlated conjunct rides whole into the emitted
-          // text — unless it nests a subquery (no view equivalent)
-          case other if !other.exists(_.isInstanceOf[SubqueryExpression]) =>
-            resid += other
-          case _ => bad = true
-        }
-        val child = strip(f.child)
-        localCj.reduceOption(And).map(Filter(_, child)).getOrElse(child)
-      case f: Filter => f.copy(child = strip(f.child))
-      case pr: Project => pr.copy(child = strip(pr.child))
-      // alias wrappers (derived tables, views) are output-preserving
-      // no-ops — hoisting a Filter across one is always sound
-      case sa: SubqueryAlias => sa.copy(child = strip(sa.child))
-      case other => other
-    }
-    val stripped = strip(plan)
-    if (bad || corr.isEmpty) return None
-    val needed = AttributeSet(corr.flatMap(_._1.references)) ++
-      AttributeSet(resid.flatMap(_.references))
-    def widen(p: LogicalPlan): LogicalPlan = p match {
-      case pr: Project =>
-        val child = widen(pr.child)
-        // sorted for a deterministic emitted column order; a name
-        // collision with an existing output is FINE — viewAndCond
-        // disambiguates duplicate names positionally
-        val missing = (needed -- AttributeSet(pr.projectList.map(_.toAttribute)))
-          .filter(a => child.outputSet.contains(a)).toSeq.sortBy(_.name)
-        if (missing.isEmpty) pr.copy(child = child)
-        else pr.copy(projectList = pr.projectList ++ missing, child = child)
-      case f: Filter => f.copy(child = widen(f.child))
-      case sa: SubqueryAlias => sa.copy(child = widen(sa.child))
-      case other => other
-    }
-    val cleaned = widen(stripped)
-    // outside the contract: residual outer refs (OR mixing scopes,
-    // join-condition correlation, double nesting, a correlated Filter
-    // below a non-spine node, or an outer ref in a Project list), or a
-    // correlation column that widening could not surface
-    if (bad ||
-        cleaned.exists(_.expressions.exists(hasOuter)) ||
-        !needed.subsetOf(cleaned.outputSet)) None
-    else Some((cleaned, corr.toSeq, resid.toSeq))
-  }
-
-  /** Rename `cleaned`'s output into the per-subquery namespace (the
-    * run-time view's column set) and build the re-correlation WHERE
-    * text. Duplicate output names — a self-join on the spine, or
-    * widening appending a column whose name an alias already took
-    * (including names differing only by case under the default
-    * case-insensitive resolution, the round-11 advisor shape) — are
-    * disambiguated POSITIONALLY (`_graft_sqN_c3_k`): inner attributes
-    * are renamed by exprId, so every re-emitted reference hits exactly
-    * one view column and the shapes lift instead of dying ambiguous at
-    * re-analysis. Returns (view plan, correlation SQL, the inner-attr
-    * → renamed-name fixer for use in select lists / aggregates). */
-  private def viewAndCond(cleaned: LogicalPlan,
-                          corr: Seq[(Expression, Expression)],
-                          resid: Seq[Expression], idx: Int,
-                          attrFix: Expression => Expression)
-      : (LogicalPlan, String, Expression => Expression) = {
-    val pfx = s"_graft_sq${idx}_"
-    // one view column per exprId: `SELECT k, k FROM s` repeats an
-    // attribute — dropping the duplicate COLUMN never changes row
-    // multiplicity, and every emitted reference resolves by renamed
-    // name, so the collapsed view is reference-equivalent
-    val outAttrs = cleaned.output.distinctBy(_.exprId)
-    // EVERY column gets the positional form (round-12 advisor): the
-    // position `i` is delimited by the first '_', so two distinct
-    // positions can never render the same name — whereas a dup-only
-    // scheme ("c1_k" for dups, plain name otherwise) collides when a
-    // distinct user column is literally named `c1_k`. The original
-    // name rides along as a suffix purely for debuggability of the
-    // emitted SQL.
-    val nameOf: Map[org.apache.spark.sql.catalyst.expressions.ExprId, String] =
-      outAttrs.zipWithIndex.map { case (a, i) =>
-        a.exprId -> s"${pfx}c${i}_${a.name}"
-      }.toMap
-    val renamed = Project(
-      outAttrs.map(a => Alias(a, nameOf(a.exprId))()), cleaned)
-    val innerIds = cleaned.outputSet
-    def innerFix(e: Expression): Expression = e.transform {
-      case a: AttributeReference if innerIds.contains(a) =>
-        a.withName(nameOf(a.exprId)).withQualifier(Seq.empty)
-    }
-    val eqSql = corr.map { case (inner, outerSide) =>
-      val o = sqlReady(outerSide)
-        .transform { case OuterReference(a) => a }
-      s"(${innerFix(sqlReady(inner)).sql} = ${attrFix(o).sql})"
-    }
-    // a residual conjunct mixes inner and outer attrs in one tree:
-    // inline replacement-rendered functions, unwrap the outer refs,
-    // qualifier-fix everything (inner exprIds survive attrFix, so
-    // innerFix still recognizes them), then rename the inner side into
-    // the view namespace
-    val residSql = resid.map { r =>
-      val unwrapped = sqlReady(r)
-        .transform { case OuterReference(a) => a }
-      s"(${innerFix(attrFix(unwrapped)).sql})"
-    }
-    (renamed, (eqSql ++ residSql).mkString(" AND "), innerFix)
-  }
-
-  /** Lower an EQUALITY-CORRELATED aggregated scalar subquery —
-    * `(SELECT agg(x) FROM s WHERE s.k = t.k [AND local])` — the form a
-    * user reaches for right after the uncorrelated one (and the one
-    * Delta historically refused). The correlated equi-conjuncts are
-    * stripped out of the subquery's plan ([[stripCorrelatedSpine]]);
-    * what remains registers as a run-time view with its columns
-    * renamed into a per-subquery namespace, and the emitted text
-    * re-states the SAME correlated scalar subquery against that view —
-    * Spark's analyzer then resolves the bare outer columns against the
-    * re-read frame and its optimizer DECORRELATES the lookup into an
-    * aggregate + join, so the per-row evaluation is distributed (no
-    * collect, no size cap) with standard scalar semantics (no match →
-    * NULL; COUNT over no match → 0). Grouped aggregates and non-
-    * aggregated scalars return None → refusal. */
-  private def liftCorrelatedScalar(plan: LogicalPlan, idx: Int,
-                                   attrFix: Expression => Expression): Option[(LogicalPlan, String)] =
-    plan match {
-      case agg: Aggregate if agg.groupingExpressions.isEmpty &&
-          agg.aggregateExpressions.length == 1 &&
-          !agg.aggregateExpressions.exists(hasOuter) =>
-        stripCorrelatedSpine(agg.child).map { case (cleaned, corr, resid) =>
-          val (renamed, condSql, innerFix) =
-            viewAndCond(cleaned, corr, resid, idx, attrFix)
-          val aggExpr = agg.aggregateExpressions.head match {
-            case al: Alias => al.child
-            case other => other
-          }
-          (renamed,
-            s"(SELECT ${innerFix(sqlReady(aggExpr)).sql} " +
-              s"FROM __graft_view_${idx}__ WHERE $condSql)")
-        }
-      case _ => None
-    }
-
-  /** Lower an equality-correlated `EXISTS (SELECT … FROM s WHERE s.k =
-    * t.k [AND local])` — same machinery as the scalar lift, emitted as
-    * an EXISTS against the renamed view; Spark's optimizer plans it as
-    * a distributed left-semi join (anti under NOT, which wraps the
-    * lifted text unchanged). The subquery's own select list is
-    * irrelevant to EXISTS semantics, so the view exposes `*`. */
-  private def liftCorrelatedExists(plan: LogicalPlan, idx: Int,
-                                   attrFix: Expression => Expression): Option[(LogicalPlan, String)] =
-    stripCorrelatedSpine(plan).map { case (cleaned, corr, resid) =>
-      val (renamed, condSql, _) = viewAndCond(cleaned, corr, resid, idx, attrFix)
-      (renamed, s"EXISTS (SELECT * FROM __graft_view_${idx}__ WHERE $condSql)")
-    }
-
-  /** Lower an equality-correlated `lhs IN (SELECT c FROM s WHERE s.k =
-    * t.k)`. The original select list usually DROPS the correlation
-    * column — [[stripCorrelatedSpine]]'s widening appends it to the
-    * view, and the emitted IN re-selects exactly the ORIGINAL output
-    * columns (by their renamed names) so the membership arity is
-    * unchanged. Plans as a distributed semi join (null-aware anti
-    * under NOT IN — Spark's own semantics, since the emitted text is a
-    * genuine IN subquery). */
-  private def liftCorrelatedIn(plan: LogicalPlan,
-                               origOutput: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-                               idx: Int,
-                               attrFix: Expression => Expression): Option[(LogicalPlan, String)] =
-    stripCorrelatedSpine(plan).map { case (cleaned, corr, resid) =>
-      val (renamed, condSql, innerFix) =
-        viewAndCond(cleaned, corr, resid, idx, attrFix)
-      val sel = origOutput.map(a => innerFix(a).sql).mkString(", ")
-      (renamed, s"(SELECT $sel FROM __graft_view_${idx}__ WHERE $condSql)")
-    }
-
-  /** Resolved expression → SQL text, with source-side attributes moved
-    * into the `_graft_src_` namespace (target attrs keep their name).
-    * Uncorrelated subqueries are lifted out: the plan lands in `subq`
-    * and the text references the run-time view token (see [[SubqAcc]]). */
-  private def toSql(e0: Expression, srcAttrs: AttributeSet,
-                    subq: SubqAcc = new SubqAcc): String = {
-    import org.apache.spark.sql.catalyst.expressions.{Exists, InSubquery, ScalarSubquery}
-    def attrFix(x: Expression): Expression = x.transform {
-      // strip qualifiers (`spark_catalog`.`default`.`t`.`ba` won't
-      // re-resolve against the primitives' fresh frames) and move
-      // source attrs into their namespace
-      case a: AttributeReference if srcAttrs.contains(a) =>
-        a.withName(Snapshots.SrcColPrefix + a.name).withQualifier(Seq.empty)
-      case a: AttributeReference => a.withQualifier(Seq.empty)
-    }
-    def placeholder(i: Int, dt: org.apache.spark.sql.types.DataType) =
-      AttributeReference(s"__graft_subq_${i}__", dt)()
-    val templates = scala.collection.mutable.Map[Int, String]()
-    // inline replacement-rendered functions FIRST: the whole tree is
-    // ultimately textualized via .sql at the bottom of this method,
-    // and a RuntimeReplaceable's stored parameters would bypass
-    // attrFix's source-namespace rename (stale text that could
-    // re-resolve against the wrong scope). Subquery PLANS are plan
-    // fields, untouched by expression transforms — their own emission
-    // paths inline at their own .sql sites.
-    val e = sqlReady(e0)
-    // NESTED subqueries must refuse on the ORIGINAL tree: transformUp
-    // rewrites bottom-up, so by the time the outer InSubquery case runs
-    // its lhs subquery is already a placeholder attribute and the
-    // in.values guard below can never fire — the refusal would instead
-    // surface later as an unresolved `__graft_subq_i__` token
-    e.foreach {
-      case in: InSubquery
-          if in.values.exists(_.exists(_.isInstanceOf[SubqueryExpression])) =>
+      if (s.getOuterAttrs.nonEmpty &&
+          (!correlated.exists(equi) || !correlated.forall(_.deterministic)))
         refuseCorrelated()
-      case _ => ()
-    }
-    val lifted = e.transformUp {
-      case in: InSubquery =>
-        if (in.values.exists(_.exists(_.isInstanceOf[SubqueryExpression])))
-          refuseCorrelated() // a subquery inside the IN's lhs tuple
-        val lhs = in.values.map(v => attrFix(v).sql).mkString("(", ", ", ")")
-        val i = subq.length
-        if (in.query.outerAttrs.nonEmpty) {
-          // the membership arity is the ListQuery's DECLARED numCols,
-          // not plan.output.length — the analyzer may append columns
-          // to a correlated plan, and the user's select list is always
-          // the prefix (advisor round-11 low finding: make the arity
-          // contract explicit rather than relying on the two being
-          // equal today)
-          val q = in.query
-          if (q.numCols < 1 || q.numCols > q.plan.output.length) refuseCorrelated()
-          val (viewPlan, rhs) =
-            liftCorrelatedIn(q.plan, q.plan.output.take(q.numCols), i, attrFix)
-              .getOrElse(refuseCorrelated())
-          subq += viewPlan
-          templates(i) = s"($lhs IN $rhs)"
-        } else {
-          subq += in.query.plan
-          templates(i) = s"($lhs IN (SELECT * FROM __graft_view_${i}__))"
-        }
-        placeholder(i, org.apache.spark.sql.types.BooleanType)
-      case sc: ScalarSubquery =>
-        val i = subq.length
-        if (sc.outerAttrs.nonEmpty) {
-          val (viewPlan, template) = liftCorrelatedScalar(sc.plan, i, attrFix)
-            .getOrElse(refuseCorrelated())
-          subq += viewPlan
-          templates(i) = template
-        } else {
-          subq += sc.plan
-          templates(i) = s"(SELECT * FROM __graft_view_${i}__)"
-        }
-        placeholder(i, sc.dataType)
-      case ex: Exists =>
-        val i = subq.length
-        if (ex.outerAttrs.nonEmpty) {
-          val (viewPlan, template) = liftCorrelatedExists(ex.plan, i, attrFix)
-            .getOrElse(refuseCorrelated())
-          subq += viewPlan
-          templates(i) = template
-        } else {
-          subq += ex.plan
-          templates(i) = s"EXISTS (SELECT * FROM __graft_view_${i}__)"
-        }
-        placeholder(i, org.apache.spark.sql.types.BooleanType)
-    }
-    // whatever subquery kind survived the lift has no view equivalent
-    if (lifted.exists(_.isInstanceOf[SubqueryExpression])) refuseCorrelated()
-    // AttributeReference.sql backticks the name only when it needs
-    // quoting — replace both spellings. Substitution runs to FIXPOINT:
-    // a template spliced into another template (template i's text can
-    // reference tokens j < i) still gets its tokens replaced regardless
-    // of the map's iteration order. Terminates because template i never
-    // contains its own token (placeholders are minted after their
-    // template's children were already lifted).
-    var out = attrFix(lifted).sql
-    var changed = true
-    while (changed) {
-      val next = templates.foldLeft(out) { case (s, (i, tpl)) =>
-        s.replace(s"`__graft_subq_${i}__`", tpl)
-          .replace(s"__graft_subq_${i}__", tpl)
-      }
-      changed = next != out
-      out = next
-    }
-    out
+      s.plan.foreach(_.expressions.foreach(checkCorrelation))
+    case _ => ()
   }
 
-  /** Register each carried subquery plan as a uniquely-named temp view
-    * for the duration of `f` (dropped in finally), returning the names
-    * positionally — [[bindViews]] splices them into the SQL text.
-    * Concurrent DML on ONE session is safe (r9 advisor target): every
-    * command mints fresh UUID view names, `createOrReplaceTempView` on
-    * a fresh name can never replace another command's view, and the
-    * finally-drop removes only the names this command created. */
-  private[sources] def withSubqViews[T](spark: SparkSession,
-                                        subqPlans: Seq[LogicalPlan])
-                                       (f: Seq[String] => T): T = {
-    val names = subqPlans.map(_ => "graft_subq_" +
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    subqPlans.zip(names).foreach { case (p, n) =>
-      org.apache.spark.sql.GraftStreamingShim.ofRows(spark, p)
-        .createOrReplaceTempView(n)
-    }
-    try f(names)
-    finally names.foreach(n => spark.catalog.dropTempView(n))
-  }
-
-  private[sources] def bindViews(sql: String, names: Seq[String]): String =
-    names.zipWithIndex.foldLeft(sql) { case (s, (n, i)) =>
-      s.replace(s"__graft_view_${i}__", n)
-    }
-
-  private def keyName(key: Expression): String = key match {
+  private[sources] def keyName(key: Expression): String = key match {
     case a: AttributeReference => a.name
     case other => throw new UnsupportedOperationException(
       s"graft DML: only top-level column assignment is supported, got ${other.sql}")
@@ -654,7 +123,7 @@ object GraftDml extends Rule[LogicalPlan] {
     * resolves `SET ST.A = …` case-insensitively but extractFieldName
     * returns the user's typed casing, which would then miss the
     * schema's `a` in [[lowerAssignments]]. */
-  private def keyPath(key: Expression): Seq[String] = key match {
+  private[sources] def keyPath(key: Expression): Seq[String] = key match {
     case a: AttributeReference => Seq(a.name)
     case g: GetStructField => g.child.dataType match {
       case st: StructType => keyPath(g.child) :+ st(g.ordinal).name
@@ -667,53 +136,55 @@ object GraftDml extends Rule[LogicalPlan] {
   }
 
   /** Nested assignments lowered to TOP-LEVEL ones: every sub-path set
-    * on a struct column becomes one `named_struct(…)` value over the
-    * PRE-image (unassigned fields copy through by reference), so the
-    * primitives' simultaneous-assignment contract is untouched — all
-    * lowered values still evaluate against the old row in one select.
-    * Assigning a field of a NULL struct yields a NON-null struct with
-    * the other fields null (Delta's nested-update semantics — the
-    * field extraction on the null parent is null). Conflicts (a path
-    * and its prefix both assigned, or one path assigned twice) are
-    * refused, matching the SQL standard's ambiguity rule. */
-  private def lowerAssignments(assigns: Seq[(Seq[String], String)],
-                               schema: StructType): Seq[(String, String)] = {
-    def quote(n: String) = "`" + n.replace("`", "``") + "`"
-    def build(prefixSql: String, st: StructType,
-              subs: Seq[(Seq[String], String)]): String = {
+    * on a struct column becomes one `CreateNamedStruct` value over the
+    * PRE-image (unassigned fields copy through as `GetStructField`s of
+    * the old value), so the primitives' simultaneous-assignment
+    * contract is untouched — all lowered values still evaluate against
+    * the old row in one select. Assigning a field of a NULL struct
+    * yields a NON-null struct with the other fields null (Delta's
+    * nested-update semantics — the field extraction on the null parent
+    * is null). Conflicts (a path and its prefix both assigned, or one
+    * path assigned twice) are refused, matching the SQL standard's
+    * ambiguity rule. */
+  private[sources] def lowerAssignments(assigns: Seq[(Seq[String], Expression)],
+                                        target: Seq[Attribute]): Seq[(String, Expression)] = {
+    def conflicting(path: String) = new UnsupportedOperationException(
+      s"graft DML: conflicting assignments to '$path' and its sub-fields")
+    def build(parent: Expression, path: String, st: StructType,
+              subs: Seq[(Seq[String], Expression)]): Expression = {
       val byHead = subs.groupBy(_._1.head)
       byHead.keys.foreach { f =>
         if (!st.fieldNames.contains(f)) throw new UnsupportedOperationException(
-          s"graft DML: no field '$f' under $prefixSql")
+          s"graft DML: no field '$f' under $path")
       }
-      "named_struct(" + st.fields.map { f =>
-        val lit = s"'${f.name}'"
-        val self = s"$prefixSql.${quote(f.name)}"
-        byHead.get(f.name) match {
-          case None => s"$lit, $self"
-          case Some(Seq((path, v))) if path.length == 1 => s"$lit, ($v)"
+      CreateNamedStruct(st.fields.toSeq.zipWithIndex.flatMap { case (f, i) =>
+        val self = GetStructField(parent, i, Some(f.name))
+        val value = byHead.get(f.name) match {
+          case None => self
+          case Some(Seq((p, v))) if p.length == 1 => v
           case Some(list) =>
-            if (list.exists(_._1.length == 1)) throw new UnsupportedOperationException(
-              s"graft DML: conflicting assignments to '$self' and its sub-fields")
+            if (list.exists(_._1.length == 1)) throw conflicting(s"$path.${f.name}")
             f.dataType match {
               case inner: StructType =>
-                s"$lit, ${build(self, inner, list.map { case (p, v) => (p.tail, v) })}"
+                build(self, s"$path.${f.name}", inner, list.map { case (p, v) => (p.tail, v) })
               case other => throw new UnsupportedOperationException(
-                s"graft DML: cannot assign into ${other.simpleString} at $self")
+                s"graft DML: cannot assign into ${other.simpleString} at $path.${f.name}")
             }
         }
-      }.mkString(", ") + ")"
+        Seq(Literal(f.name), value)
+      })
     }
     assigns.groupBy(_._1.head).toSeq.map {
       case (col, Seq((path, v))) if path.length == 1 => (col, v)
       case (col, list) =>
-        if (list.exists(_._1.length == 1)) throw new UnsupportedOperationException(
-          s"graft DML: conflicting assignments to '$col' and its sub-fields")
-        schema.find(_.name == col).map(_.dataType) match {
-          case Some(st: StructType) =>
-            (col, build(quote(col), st, list.map { case (p, v) => (p.tail, v) }))
-          case Some(other) => throw new UnsupportedOperationException(
-            s"graft DML: cannot assign into ${other.simpleString} column '$col'")
+        if (list.exists(_._1.length == 1)) throw conflicting(col)
+        target.find(_.name == col) match {
+          case Some(a) => a.dataType match {
+            case st: StructType =>
+              (col, build(a, col, st, list.map { case (p, v) => (p.tail, v) }))
+            case other => throw new UnsupportedOperationException(
+              s"graft DML: cannot assign into ${other.simpleString} column '$col'")
+          }
           case None => throw new UnsupportedOperationException(
             s"graft DML: unknown column '$col'")
         }
@@ -725,13 +196,9 @@ object GraftDml extends Rule[LogicalPlan] {
     * .toRanges]] owns the key encoding). Conjuncts that don't map are
     * simply not used for pruning — the exact predicate still decides
     * row membership, so this can only narrow IO, never semantics. */
-  private def rangeFilters(cond: Expression): Seq[org.apache.spark.sql.sources.Filter] = {
+  private[sources] def rangeFilters(cond: Expression): Seq[org.apache.spark.sql.sources.Filter] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.{sources => v1}
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
     // the analyzer wraps literals in casts (`ba >= CAST(20 AS
     // BIGINT)`) and this rule runs pre-optimizer, so fold any
     // constant side rather than pattern-matching bare Literals;
@@ -744,7 +211,7 @@ object GraftDml extends Rule[LogicalPlan] {
           case x => x
         }
       else None
-    conjuncts(cond).flatMap {
+    conjunctsOf(cond).flatMap {
       case EqualTo(a: AttributeReference, r) if litOf(r).isDefined =>
         Some(v1.EqualTo(a.name, litOf(r).get))
       case EqualTo(l, a: AttributeReference) if litOf(l).isDefined =>
@@ -769,91 +236,52 @@ object GraftDml extends Rule[LogicalPlan] {
     }
   }
 
+  /** Equi conjuncts (t.c = s.c2) of a merge condition as (targetCol,
+    * sourceCol-in-the-src-namespace) pairs: they feed the primitive's
+    * stage-1 manifest pruning — a small MERGE against a huge table
+    * attributes against stat-bounded candidate files only. */
+  private[sources] def equiKeys(cond: Expression, srcAttrs: AttributeSet): Seq[(String, String)] =
+    conjunctsOf(cond).collect {
+      case EqualTo(a: AttributeReference, b: AttributeReference)
+          if !srcAttrs.contains(a) && srcAttrs.contains(b) =>
+        (a.name, Snapshots.SrcColPrefix + b.name)
+      case EqualTo(a: AttributeReference, b: AttributeReference)
+          if srcAttrs.contains(a) && !srcAttrs.contains(b) =>
+        (b.name, Snapshots.SrcColPrefix + a.name)
+    }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
-    case u @ UpdateTable(table, assignments, condition) if u.resolved =>
-      graftTable(table) match {
-        case Some(t) =>
-          val subq = new SubqAcc
-          val condSql = condition.map(toSql(_, AttributeSet.empty, subq)).getOrElse("true")
-          val sets = lowerAssignments(assignments.map(a =>
-            (keyPath(a.key), toSql(a.value, AttributeSet.empty, subq))),
-            EliminateSubqueryAliases(table).schema)
-          GraftUpdateCommand(t.root, t.prefix, condSql, sets,
-            condition.map(rangeFilters).getOrElse(Seq.empty), subq.toSeq)
-        case None => u
+    case u: UpdateTable if u.resolved =>
+      graftTable(u.table).fold[LogicalPlan](u) { t =>
+        u.expressions.foreach(checkCorrelation)
+        GraftUpdateCommand(t.root, t.prefix, u)
       }
 
     // `DELETE FROM t WHERE k IN (SELECT …)`: the native SupportsDelete
     // path needs the condition as V1 filters, which a subquery can
     // never be — intercept ONLY those deletes (plain ones keep the
-    // metadata-only MoR route) and lower to the same deleteMoR with
-    // the subquery riding as a plan + run-time view.
+    // metadata-only MoR route) and lower to the same deleteMoR.
     case d @ DeleteFromTable(table, condition)
-        if d.resolved && condition.exists(_.isInstanceOf[SubqueryExpression]) =>
-      graftTable(table) match {
-        case Some(t) =>
-          val subq = new SubqAcc
-          val condSql = toSql(condition, AttributeSet.empty, subq)
-          GraftDeleteCommand(t.root, t.prefix, condSql,
-            rangeFilters(condition), subq.toSeq)
-        case None => d
+        if d.resolved && SubqueryExpression.hasSubquery(condition) =>
+      graftTable(table).fold[LogicalPlan](d) { t =>
+        checkCorrelation(condition)
+        GraftDeleteCommand(t.root, t.prefix, d)
       }
 
+    // WITH SCHEMA EVOLUTION needs no handling here: GraftTable declares
+    // AUTOMATIC_SCHEMA_EVOLUTION, so the analyzer's own
+    // ResolveMergeIntoSchemaEvolution has ALREADY routed the new source
+    // columns through the catalog's alterTable (a metadata-only
+    // addColumn commit) and re-loaded the relation by the time this
+    // node is resolved — the target schema the command sees is the
+    // evolved one.
     case m: MergeIntoTable if m.resolved =>
-      graftTable(m.targetTable) match {
-        case Some(t) =>
-          val subq = new SubqAcc
-          // WITH SCHEMA EVOLUTION needs no handling here: GraftTable
-          // declares AUTOMATIC_SCHEMA_EVOLUTION, so the analyzer's own
-          // ResolveMergeIntoSchemaEvolution has ALREADY routed the new
-          // source columns through the catalog's alterTable (a
-          // metadata-only addColumn commit) and re-loaded the relation
-          // by the time this node is resolved — the target schema seen
-          // below is the evolved one.
-          val srcAttrs = AttributeSet(m.sourceTable.output)
-          val dupSrc = m.sourceTable.output.groupBy(_.name).filter(_._2.size > 1).keys
-          if (dupSrc.nonEmpty) throw new UnsupportedOperationException(
-            s"graft MERGE: duplicate source column name(s): ${dupSrc.mkString(", ")}")
-          val targetSchema0 = EliminateSubqueryAliases(m.targetTable).schema
-          def clause(a: MergeAction): Snapshots.MergeClause = a match {
-            case UpdateAction(c, assigns, _) => Snapshots.MergeClause(
-              c.map(toSql(_, srcAttrs, subq)),
-              Some(lowerAssignments(assigns.map(asn =>
-                (keyPath(asn.key), toSql(asn.value, srcAttrs, subq))), targetSchema0)))
-            case DeleteAction(c) =>
-              Snapshots.MergeClause(c.map(toSql(_, srcAttrs, subq)), None)
-            case InsertAction(c, assigns) => Snapshots.MergeClause(
-              c.map(toSql(_, srcAttrs, subq)),
-              Some(assigns.map(asn => (keyName(asn.key), toSql(asn.value, srcAttrs, subq)))))
-            case other => throw new UnsupportedOperationException(
-              s"graft MERGE: unsupported action ${other.getClass.getSimpleName}")
-          }
-          // equi conjuncts (t.c = s.c2) feed the primitive's stage-1
-          // manifest pruning — a small MERGE against a huge table
-          // attributes against stat-bounded candidate files only
-          def conjuncts(e: Expression): Seq[Expression] = e match {
-            case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-              conjuncts(l) ++ conjuncts(r)
-            case other => Seq(other)
-          }
-          val equiKeys = conjuncts(m.mergeCondition).collect {
-            case org.apache.spark.sql.catalyst.expressions.EqualTo(
-                a: AttributeReference, b: AttributeReference)
-              if !srcAttrs.contains(a) && srcAttrs.contains(b) =>
-              (a.name, Snapshots.SrcColPrefix + b.name)
-            case org.apache.spark.sql.catalyst.expressions.EqualTo(
-                a: AttributeReference, b: AttributeReference)
-              if srcAttrs.contains(a) && !srcAttrs.contains(b) =>
-              (b.name, Snapshots.SrcColPrefix + a.name)
-          }
-          GraftMergeCommand(t.root, t.prefix, m.sourceTable,
-            toSql(m.mergeCondition, srcAttrs, subq),
-            m.matchedActions.map(clause),
-            m.notMatchedActions.map(clause),
-            m.notMatchedBySourceActions.map(clause),
-            EliminateSubqueryAliases(m.targetTable).schema, equiKeys,
-            subq.toSeq)
-        case None => m
+      graftTable(m.targetTable).fold[LogicalPlan](m) { t =>
+        val dupSrc = m.sourceTable.output.groupBy(_.name).filter(_._2.size > 1).keys
+        if (dupSrc.nonEmpty) throw new UnsupportedOperationException(
+          s"graft MERGE: duplicate source column name(s): ${dupSrc.mkString(", ")}")
+        m.expressions.foreach(checkCorrelation)
+        GraftMergeCommand(t.root, t.prefix, m)
       }
   }
 }
@@ -862,73 +290,68 @@ object GraftDml extends Rule[LogicalPlan] {
   * [[Snapshots.updateWhere]] — only files containing matched rows are
   * rewritten; simultaneous-assignment semantics; pre/post images on
   * the change feed. */
-case class GraftUpdateCommand(root: String, prefix: String,
-                              condSql: String,
-                              sets: Seq[(String, String)],
-                              pruning: Seq[org.apache.spark.sql.sources.Filter],
-                              subqPlans: Seq[LogicalPlan] = Seq.empty)
+case class GraftUpdateCommand(root: String, prefix: String, update: UpdateTable)
   extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = subqPlans
+  override def innerChildren: Seq[LogicalPlan] = Seq(update)
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.expr
-    GraftDml.withSubqViews(spark, subqPlans) { names =>
-      Snapshots.updateWhere(spark, root, prefix,
-        expr(GraftDml.bindViews(condSql, names)),
-        sets.map { case (c, v) => (c, expr(GraftDml.bindViews(v, names))) },
-        ranges = pruning.flatMap(GraftSource.toRanges))
-    }
+    val cond = update.condition.getOrElse(Literal.TrueLiteral)
+    val sets = GraftDml.lowerAssignments(
+      update.assignments.map(a => (GraftDml.keyPath(a.key), a.value)), update.table.output)
+    Snapshots.updateWhere(spark, root, prefix, GraftStreamingShim.column(cond),
+      sets.map { case (c, v) => (c, GraftStreamingShim.column(v)) },
+      ranges = GraftDml.rangeFilters(cond).flatMap(GraftSource.toRanges))
     Seq.empty
   }
 }
 
 /** `DELETE FROM t WHERE … (SELECT …) …` — the subquery-bearing delete
   * the native SupportsDelete filter path can't express, lowered to the
-  * same merge-on-read [[Snapshots.deleteMoR]] with the membership test
-  * planned as a distributed join against the run-time view. */
-case class GraftDeleteCommand(root: String, prefix: String,
-                              condSql: String,
-                              pruning: Seq[org.apache.spark.sql.sources.Filter],
-                              subqPlans: Seq[LogicalPlan])
+  * same merge-on-read [[Snapshots.deleteMoR]] with the subquery
+  * planned as a distributed join against the re-read files. */
+case class GraftDeleteCommand(root: String, prefix: String, delete: DeleteFromTable)
   extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = subqPlans
+  override def innerChildren: Seq[LogicalPlan] = Seq(delete)
   override def run(spark: SparkSession): Seq[Row] = {
-    GraftDml.withSubqViews(spark, subqPlans) { names =>
-      Snapshots.deleteMoR(spark, root, prefix,
-        org.apache.spark.sql.functions.expr(GraftDml.bindViews(condSql, names)),
-        ranges = pruning.flatMap(GraftSource.toRanges))
-    }
+    Snapshots.deleteMoR(spark, root, prefix, GraftStreamingShim.column(delete.condition),
+      ranges = GraftDml.rangeFilters(delete.condition).flatMap(GraftSource.toRanges))
     Seq.empty
   }
 }
 
 /** `MERGE INTO t USING s ON cond WHEN …` lowered to
   * [[Snapshots.mergeInto]]. The source rides as its resolved logical
-  * plan and is evaluated (then renamed into the `_graft_src_`
-  * namespace) at run time — Delta's MergeIntoCommand shape. */
-case class GraftMergeCommand(root: String, prefix: String,
-                             source: LogicalPlan, condSql: String,
-                             matched: Seq[Snapshots.MergeClause],
-                             notMatched: Seq[Snapshots.MergeClause],
-                             notMatchedBySource: Seq[Snapshots.MergeClause],
-                             targetSchema: StructType,
-                             equiKeys: Seq[(String, String)],
-                             subqPlans: Seq[LogicalPlan] = Seq.empty)
+  * plan and is evaluated (renamed into the `_graft_src_` namespace) at
+  * run time — Delta's MergeIntoCommand shape. */
+case class GraftMergeCommand(root: String, prefix: String, merge: MergeIntoTable)
   extends LeafRunnableCommand {
-  override def innerChildren: Seq[LogicalPlan] = source +: subqPlans
+  override def innerChildren: Seq[LogicalPlan] = Seq(merge)
   override def run(spark: SparkSession): Seq[Row] = {
-    val srcRaw = org.apache.spark.sql.GraftStreamingShim.ofRows(spark, source)
-    val src = srcRaw.select(srcRaw.columns.map(c =>
-      col(c).as(Snapshots.SrcColPrefix + c)): _*)
-    GraftDml.withSubqViews(spark, subqPlans) { names =>
-      def bindClause(cl: Snapshots.MergeClause) = cl.copy(
-        condition = cl.condition.map(GraftDml.bindViews(_, names)),
-        set = cl.set.map(_.map { case (c, v) => (c, GraftDml.bindViews(v, names)) }))
-      Snapshots.mergeInto(spark, root, prefix, src,
-        GraftDml.bindViews(condSql, names),
-        matched.map(bindClause), notMatched.map(bindClause),
-        notMatchedBySource.map(bindClause), targetSchema,
-        equiKeys = equiKeys)
+    val source = merge.sourceTable
+    val srcAttrs = AttributeSet(source.output)
+    // source attributes keep their exprIds under their namespaced
+    // names; the primitive rebinds them onto its source frame by name
+    def column(e: Expression): Column = GraftStreamingShim.column(
+      Snapshots.replaceAttributes(e, srcAttrs, a => a.withName(Snapshots.SrcColPrefix + a.name)))
+    val target = merge.targetTable.output
+    def clause(a: MergeAction): Snapshots.MergeClause = a match {
+      case UpdateAction(c, assigns, _) => Snapshots.MergeClause(c.map(column),
+        Some(GraftDml.lowerAssignments(
+          assigns.map(asn => (GraftDml.keyPath(asn.key), asn.value)), target)
+          .map { case (k, v) => (k, column(v)) }))
+      case DeleteAction(c) => Snapshots.MergeClause(c.map(column), None)
+      case InsertAction(c, assigns) => Snapshots.MergeClause(c.map(column),
+        Some(assigns.map(asn => (GraftDml.keyName(asn.key), column(asn.value)))))
+      case other => throw new UnsupportedOperationException(
+        s"graft MERGE: unsupported action ${other.getClass.getSimpleName}")
     }
+    val src = GraftStreamingShim.ofRows(spark, Project(
+      source.output.map(a => Alias(a, Snapshots.SrcColPrefix + a.name)()), source))
+    Snapshots.mergeInto(spark, root, prefix, src, column(merge.mergeCondition),
+      merge.matchedActions.map(clause),
+      merge.notMatchedActions.map(clause),
+      merge.notMatchedBySourceActions.map(clause),
+      EliminateSubqueryAliases(merge.targetTable).schema,
+      equiKeys = GraftDml.equiKeys(merge.mergeCondition, srcAttrs))
     Seq.empty
   }
 }

@@ -29,6 +29,12 @@ object GraftStreamingShim {
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `classic.ExpressionUtils.column` is `private[sql]`: the SQL DML
+    * commands hand the analyzer's resolved expressions to the
+    * copy-on-write primitives as columns (`graft.sources.GraftDml`). */
+  def column(e: catalyst.expressions.Expression): Column =
+    classic.ExpressionUtils.column(e)
+
   /** `StructType.asNullable` is `private[spark]`: a file relation's
     * data schema is nullable all the way down, as
     * `DataSource.resolveRelation` makes it

@@ -610,6 +610,24 @@ class SnapshotSpec extends SparkTestBase {
     assert(Snapshots.read(spark, root, "cr").count() == src.count())
   }
 
+  test("applyChangeBatch keeps rows a merge-on-read DELETE removed from a file it rewrites") {
+    val root = Files.createTempDirectory("graft_snap").toString
+    ProduceJob.produceBatch(spark, root, "cd", topics = 1, numMessages = 1000) // v0
+    assert(Snapshots.snapshot(root, "cd").get.files.size == 1, "fixture must be one file")
+    Snapshots.deleteMoR(spark, root, "cd", col("ba") === 5) // v1
+    // a change batch updating another key of the same file rewrites it
+    val feed = Snapshots.read(spark, root, "cd").filter(col("ba") === 6)
+      .withColumn("name", lit("chg"))
+      .withColumn("_change_type", lit("update_postimage"))
+      .withColumn("_commit_version", lit(1L))
+    Snapshots.applyChangeBatch(spark, root, "cd", feed, Seq("ba"))
+    assert(Snapshots.snapshot(root, "cd").get.removed.nonEmpty, "the file must be rewritten")
+    val after = Snapshots.read(spark, root, "cd")
+    assert(after.filter(col("ba") === 5).count() == 0)
+    assert(after.count() == 999L)
+    assert(after.filter(col("ba") === 6).select("name").head().getString(0) == "chg")
+  }
+
   test("AggView: incremental refresh tracks updates/deletes; empty groups leave; replays no-op") {
     import graft.ingest.AggView
     val root = Files.createTempDirectory("graft_snap").toString

@@ -10,7 +10,14 @@ import graft.ingest.{ProduceJob, Snapshots}
 /** SQL row-level DML (UPDATE / MERGE INTO) over graft tables: the
   * GraftDml lowering must honor SQL semantics (simultaneous
   * assignment, first-wins clauses, the cardinality rule), rewrite only
-  * matched files, keep old versions readable, and feed the CDC. */
+  * matched files, keep old versions readable, and feed the CDC.
+  *
+  * Many specs below pin shapes that broke an earlier lowering, which
+  * re-stated the resolved expressions as SQL text: lambdas, try_*
+  * functions, collations, nullif, and names shared between a subquery
+  * and the target. They stay as regression guards for the exprId
+  * rebinding that replaced it, each pinned to the value Spark computes
+  * for the same predicate in a plain SELECT where one is given. */
 class GraftDmlSpec extends SparkTestBase {
 
   private def fresh(tag: String): (String, String) = {
@@ -316,7 +323,7 @@ class GraftDmlSpec extends SparkTestBase {
       SELECT * FROM VALUES (1L, 10L), (2L, 20L), (3L, 30L) AS v(ba, bump)""")
     // whitelist view: keys 1 and 3 (correlates to the TARGET's ba) and
     // bumps 20 (correlates to the SOURCE's bump — exercises the
-    // _graft_src_ rename inside the lifted correlation text)
+    // _graft_src_ rename of an outer reference inside a subquery)
     spark.sql("""CREATE OR REPLACE TEMP VIEW mcorr_allow AS
       SELECT * FROM VALUES (1L, 'k'), (3L, 'k'), (20L, 'b') AS v(k, kind)""")
     spark.sql(s"""MERGE INTO $tbl t USING mcorr_src s
@@ -332,9 +339,9 @@ class GraftDmlSpec extends SparkTestBase {
     // ba=1: first clause (target-correlated) fires; ba=2: only the
     // source-correlated clause matches (bump=20 allowed); ba=3: first
     assert(rows == Seq((1L, 801), (2L, 802), (3L, 801)), rows.toString)
-    // round 12: a RESIDUAL range conjunct in a MERGE clause whose
-    // outer side is a SOURCE column — the residual's re-emitted text
-    // must carry the _graft_src_ rename (a.k = s.ba equi key keeps
+    // a RESIDUAL range conjunct in a MERGE clause whose outer side is
+    // a SOURCE column — its outer reference must move into the
+    // _graft_src_ namespace too (a.k = s.ba equi key keeps
     // the hash join; a.k * 10 <= s.bump is the residual). Allowed
     // pairs: (1,'k')→10≤10 ✓, (3,'k')→30≤30 ✓, so ba 1 and 3 fire.
     spark.sql(s"""MERGE INTO $tbl t USING mcorr_src s
@@ -349,7 +356,7 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("lifted correlated EXISTS executes as a distributed semi join, not a per-row probe") {
-    // the lift's scale claim, checked at the PLAN level: the re-emitted
+    // the scale claim, checked at the PLAN level: the rebound
     // correlated EXISTS must be decorrelated by the optimizer into a
     // (left semi) join inside the copy-on-write rewrite's executed
     // plans — never a per-row subquery evaluation or driver collect
@@ -384,21 +391,20 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("subquery temp views are session-invisible after the command (finally-drop)") {
+    // subquery DML leaves the session's table list as it found it, on
+    // success and on a run-time failure (a subquery whose evaluation
+    // explodes)
     val (_, tbl) = fresh("viewdrop")
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
     spark.sql(s"DELETE FROM $tbl WHERE ba IN (SELECT CAST(id AS BIGINT) FROM range(5))")
     spark.sql(s"UPDATE $tbl SET name = 'x' WHERE ba IN (SELECT CAST(id AS BIGINT) + 5 FROM range(5))")
-    val lingering = spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_subq_"))
-    assert(lingering.isEmpty, lingering.map(_.name).mkString(", "))
-    // and the failure path drops them too (correlated refusal happens
-    // at ANALYSIS, before views exist; force a RUN-time failure via a
-    // subquery whose evaluation explodes)
+    assert(tables() == before)
     intercept[Exception] {
       spark.sql(s"DELETE FROM $tbl WHERE ba IN " +
         "(SELECT CAST(raise_error('boom') AS BIGINT) FROM range(1))")
     }
-    assert(spark.catalog.listTables().collect()
-      .forall(!_.name.startsWith("graft_subq_")))
+    assert(tables() == before)
   }
 
   test("subquery DELETE works through the catalog route too") {
@@ -439,7 +445,7 @@ class GraftDmlSpec extends SparkTestBase {
       s"ba > (SELECT min(x) FROM corr_src2 WHERE corr_src2.k = ba - 5)")
     // ba in 5..9: min x at k=ba-5 is 2(ba-5) → delete where ba > 2ba-10 → ba < 10 → all 5
     assert(spark.sql(s"SELECT count(*) FROM $tbl").head().getLong(0) == before - 5)
-    // local conjuncts inside the subquery survive the strip
+    // local conjuncts inside the subquery keep filtering
     spark.sql(s"UPDATE $tbl SET age = (SELECT count(*) FROM corr_src " +
       s"WHERE corr_src.k = ba % 10 AND corr_src.x >= 50) WHERE ba >= 30 AND ba < 40")
     assert(spark.sql(s"SELECT count(*) FROM $tbl WHERE ba >= 30 AND ba < 40 AND age = 5")
@@ -447,29 +453,18 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("correlated-scalar lift is spine-restricted: pathological trees refuse or widen, never mis-lower") {
-    // advisor round-11 high finding: the old strip removed correlated
-    // Filters ANYWHERE in the subquery tree; when an intervening
-    // Project dropped the correlation column, the re-emitted top-level
-    // WHERE's bare inner name re-resolved against the UPDATE TARGET
-    // (here: `ba = ba`, a tautology) and silently wrote wrong values.
-    // The dropped-column shape is now SUPPORTED via sound Project
-    // widening (case a); true out-of-contract trees still refuse.
+    // the text lowering once hoisted correlated Filters out of the
+    // subquery; when an intervening Project dropped the correlation
+    // column, the re-stated WHERE's bare inner name re-resolved against
+    // the UPDATE TARGET (here: `ba = ba`, a tautology) and silently
+    // wrote wrong values. Every shape below now stays where the
+    // analyzer put it and is decorrelated by Spark itself.
     val (_, tbl) = fresh("corrpatho")
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: causes(t.getCause)
-    def assertRefused(sql: String): Unit = {
-      val e = intercept[Exception] { spark.sql(sql) }
-      assert(causes(e).exists(c => c.isInstanceOf[UnsupportedOperationException] &&
-        c.getMessage.contains("correlated or nested subqueries")), e.toString)
-    }
     // source shares the target's column name `ba` so a mis-lower would
     // be SILENT (tautology), not an analysis error — the dangerous case
     spark.sql("""CREATE OR REPLACE TEMP VIEW patho_src AS
       SELECT CAST(id % 5 AS BIGINT) AS ba, CAST(id AS INT) AS x FROM range(50)""")
-    // (a) intervening Project DROPS the correlation column: the lift
-    // WIDENS the derived table's output with the original attribute
-    // (pure column addition), renames it into the view namespace, and
-    // the re-emitted correlation references the renamed column — never
+    // (a) intervening Project DROPS the correlation column — never
     // the old silent `WHERE ba = ba` tautology against the target.
     // Group ba=k has x ∈ {k, k+5, …, k+45} → max(x+1) = k + 46.
     spark.sql(s"UPDATE $tbl SET age = (SELECT max(y) FROM " +
@@ -478,11 +473,8 @@ class GraftDmlSpec extends SparkTestBase {
     val widened = spark.sql(s"SELECT ba, age FROM $tbl WHERE ba < 5 ORDER BY ba")
       .collect().map(r => (r.getLong(0), r.getInt(1)))
     widened.foreach { case (ba, age) => assert(age == (ba + 46).toInt, s"ba=$ba age=$age") }
-    // (a') widening APPENDS even when the column's name is already
-    // taken by a different output (`x AS ba` shadows the correlation
-    // column `ba`): viewAndCond disambiguates duplicate view names
-    // positionally, so the correlation references exactly the widened
-    // column — round 11 refused this shape, round 12 lifts it.
+    // (a') the derived table's output reuses the correlation column's
+    // name (`x AS ba` shadows the correlation column `ba`).
     // Same algebra as (a): max(x+1) over group ba=k is k+46.
     spark.sql(s"UPDATE $tbl SET age = -1 WHERE ba < 5")
     spark.sql(s"UPDATE $tbl SET age = (SELECT max(y) FROM " +
@@ -492,9 +484,7 @@ class GraftDmlSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getInt(1)))
     shadowed.foreach { case (ba, age) => assert(age == (ba + 46).toInt, s"ba=$ba age=$age") }
     // (a'') names differing only by CASE collide under Spark's default
-    // case-insensitive resolution (round-11 advisor finding: this
-    // slipped past the old case-sensitive shadow check into a raw
-    // AnalysisException) — positional disambiguation lifts it too
+    // case-insensitive resolution
     spark.sql(s"UPDATE $tbl SET age = -1 WHERE ba < 5")
     spark.sql(s"UPDATE $tbl SET age = (SELECT max(y) FROM " +
       s"(SELECT x AS BA, x + 1 AS y FROM patho_src WHERE patho_src.ba = dml_corrpatho.ba) sub) " +
@@ -503,13 +493,20 @@ class GraftDmlSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getInt(1)))
     cased.foreach { case (ba, age) => assert(age == (ba + 46).toInt, s"ba=$ba age=$age") }
     // (b) correlated Filter below an inner Aggregate: it decides GROUP
-    // membership — hoisting to a top-level WHERE changes semantics
-    assertRefused(s"UPDATE $tbl SET age = CAST((SELECT sum(cnt) FROM " +
-      s"(SELECT count(*) AS cnt FROM patho_src " +
-      s"WHERE patho_src.ba = dml_corrpatho.ba GROUP BY patho_src.x) g) AS INT) " +
-      s"WHERE ba < 5")
+    // membership, so no hoist may move it; Spark decorrelates it
+    // natively and the UPDATE equals a plain SELECT of the same value
+    // (a tautological correlation would count all 50 groups, not 10)
+    val grouped = "CAST((SELECT sum(cnt) FROM " +
+      "(SELECT count(*) AS cnt FROM patho_src " +
+      "WHERE patho_src.ba = dml_corrpatho.ba GROUP BY patho_src.x) g) AS INT)"
+    val expGrouped = spark.sql(s"SELECT ba, $grouped FROM $tbl WHERE ba < 5")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    spark.sql(s"UPDATE $tbl SET age = $grouped WHERE ba < 5")
+    val gotGrouped = spark.sql(s"SELECT ba, age FROM $tbl WHERE ba < 5")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(gotGrouped == expGrouped, s"got $gotGrouped expected $expGrouped")
     // (c) positive control — an intervening Project/derived table that
-    // KEEPS the correlation column still lifts and computes correctly
+    // KEEPS the correlation column computes correctly
     spark.sql(s"UPDATE $tbl SET age = (SELECT max(y) FROM " +
       s"(SELECT ba AS k, x + 1 AS y FROM patho_src) sub WHERE sub.k = dml_corrpatho.ba) " +
       s"WHERE ba < 5")
@@ -522,13 +519,13 @@ class GraftDmlSpec extends SparkTestBase {
   test("equality-correlated EXISTS/NOT EXISTS and IN/NOT IN lift to distributed joins") {
     val (_, tbl) = fresh("correx")
     // k = even numbers 0..198; x = id % 7 (dropped by the IN's select
-    // list below → exercises the widening through a temp-view alias)
+    // list below, through a temp-view alias)
     spark.sql("""CREATE OR REPLACE TEMP VIEW correx_src AS
       SELECT CAST(id * 2 AS BIGINT) AS k, CAST(id % 7 AS BIGINT) AS x FROM range(100)""")
     // EXISTS: even ba < 200 match
     spark.sql(s"UPDATE $tbl SET age = 701 WHERE ba < 200 AND " +
       s"EXISTS (SELECT 1 FROM correx_src WHERE correx_src.k = ba)")
-    // NOT EXISTS: odd ba < 200 (the same lifted EXISTS under NOT)
+    // NOT EXISTS: odd ba < 200 (the same EXISTS under NOT)
     spark.sql(s"UPDATE $tbl SET age = 702 WHERE ba < 200 AND " +
       s"NOT EXISTS (SELECT 1 FROM correx_src WHERE correx_src.k = ba)")
     val byAge = spark.sql(
@@ -562,18 +559,18 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("correlated lifts carry non-equality RESIDUAL conjuncts (equi key + range)") {
-    // round 12: `EXISTS (SELECT 1 FROM s WHERE s.k = t.k AND s.ts >
-    // t.ts)` — the equi conjunct is stripped (so decorrelation gets a
-    // hash-join key), the range conjunct rides whole into the emitted
-    // text. Fixture: rsrc rows (k = id % 10, ts = id) for id 0..49.
+    // `EXISTS (SELECT 1 FROM s WHERE s.k = t.k AND s.ts > t.ts)` — the
+    // equi conjunct gives decorrelation a hash-join key, the range
+    // conjunct becomes its join filter. Fixture: rsrc rows
+    // (k = id % 10, ts = id) for id 0..49.
     val (_, tbl) = fresh("resid")
     spark.sql("""CREATE OR REPLACE TEMP VIEW resid_src AS
       SELECT CAST(id % 10 AS BIGINT) AS k, CAST(id AS BIGINT) AS ts FROM range(50)""")
     val srcRows = (0L until 50L).map(id => (id % 10, id))
     // EXISTS with residual range — and the scale claim pinned at the
-    // PLAN level: the stripped equi key must keep the decorrelated
-    // join HASH-based (the residual rides as its join filter); a
-    // BroadcastNestedLoopJoin here would mean the lift shipped a
+    // PLAN level: the equi key must keep the decorrelated join
+    // HASH-based (the residual rides as its join filter); a
+    // BroadcastNestedLoopJoin here would mean the DML shipped a
     // correlation Spark could only nested-loop, the exact 100 TB
     // hazard the ≥1-equi-conjunct contract exists to prevent
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -617,7 +614,7 @@ class GraftDmlSpec extends SparkTestBase {
       assert(age == exp, s"ba=$ba age=$age exp=$exp")
     }
     // correlated IN with residual range (select list drops BOTH the
-    // equi and the residual columns → widening surfaces each)
+    // equi and the residual columns)
     spark.sql(s"UPDATE $tbl SET age = 803 WHERE ba >= 200 AND ba < 300 AND " +
       s"(ba % 50) IN (SELECT ts FROM resid_src " +
       s"WHERE resid_src.k = ba % 10 AND resid_src.ts >= ba % 30)")
@@ -639,40 +636,33 @@ class GraftDmlSpec extends SparkTestBase {
       c.getMessage.contains("correlated or nested subqueries")), e.toString)
   }
 
-  test("correlated lift disambiguates duplicate view columns (spine self-join) and refuses DISTINCT spines") {
+  test("correlated subqueries over a self-join, a repeated IN column and a DISTINCT match their expected rows") {
     val (_, tbl) = fresh("dupcol")
     spark.sql("""CREATE OR REPLACE TEMP VIEW dup_a AS
       SELECT CAST(id AS BIGINT) AS k, CAST(id * 10 AS BIGINT) AS v FROM range(10)""")
     spark.sql("""CREATE OR REPLACE TEMP VIEW dup_b AS
       SELECT CAST(id AS BIGINT) AS k, CAST(id * 100 AS BIGINT) AS w FROM range(10)""")
-    // the spine Filter sits ABOVE a comma-join whose sides share the
-    // column name `k` — the renamed view would carry two
-    // `_graft_sqN_k` columns; positional renaming keeps every emitted
-    // reference unambiguous. Matches: a.k = ba%10 ∧ a.k = b.k → always
+    // the correlated Filter sits ABOVE a comma-join whose sides share
+    // the column name `k`. Matches: a.k = ba%10 ∧ a.k = b.k → always
     // exists for ba%10 ∈ [0,10) → all of ba < 30 take 811.
     spark.sql(s"UPDATE $tbl SET age = 811 WHERE ba < 30 AND EXISTS " +
       s"(SELECT * FROM dup_a a, dup_b b " +
       s"WHERE a.k = b.k AND a.k = ba % 10 AND b.w >= a.v)")
     assert(spark.sql(s"SELECT count(*) FROM $tbl WHERE age = 811").head().getLong(0) == 30L)
-    // the SAME attribute twice in an IN's select list: the view
-    // collapses to one column per exprId (column dedup never changes
-    // row multiplicity) and the emitted 2-tuple re-states it by name
+    // the SAME attribute twice in an IN's select list
     spark.sql(s"UPDATE $tbl SET age = 812 WHERE ba >= 30 AND ba < 60 AND " +
       s"(ba % 10, ba % 10) IN (SELECT k, k FROM dup_a WHERE dup_a.v = (ba % 10) * 10)")
     assert(spark.sql(s"SELECT count(*) FROM $tbl WHERE age = 812").head().getLong(0) == 30L)
-    // a DISTINCT in the subquery is a NON-spine node: the correlated
-    // Filter below it stays put → clean refusal, never a mis-lower
-    // (hoisting across DISTINCT is sound for EXISTS but not for
-    // counting aggregates — the contract refuses uniformly)
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: causes(t.getCause)
-    val e = intercept[Exception] {
-      spark.sql(s"UPDATE $tbl SET age = CAST((SELECT count(x) FROM " +
-        s"(SELECT DISTINCT v AS x FROM dup_a WHERE dup_a.k = ba % 10) d) AS INT) " +
-        s"WHERE ba < 5")
-    }
-    assert(causes(e).exists(c => c.isInstanceOf[UnsupportedOperationException] &&
-      c.getMessage.contains("correlated or nested subqueries")), e.toString)
+    // a correlated Filter below a DISTINCT under a counting aggregate:
+    // Spark decorrelates it natively, pinned to a plain SELECT
+    val distinct = "CAST((SELECT count(x) FROM " +
+      "(SELECT DISTINCT v AS x FROM dup_a WHERE dup_a.k = ba % 10) d) AS INT)"
+    val expDistinct = spark.sql(s"SELECT ba, $distinct FROM $tbl WHERE ba < 5")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    spark.sql(s"UPDATE $tbl SET age = $distinct WHERE ba < 5")
+    val gotDistinct = spark.sql(s"SELECT ba, age FROM $tbl WHERE ba < 5")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(gotDistinct == expDistinct, s"got $gotDistinct expected $expDistinct")
   }
 
   test("DML refuses correlated subqueries and unknown assignment shapes") {
@@ -680,7 +670,7 @@ class GraftDmlSpec extends SparkTestBase {
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: causes(t.getCause)
     // correlated beyond the equality contract: a NON-equality
-    // correlated conjunct (the equality form now lifts — see the
+    // correlated conjunct (the equality form runs — see the
     // equality-correlated EXISTS/IN test)
     val e = intercept[Exception] {
       spark.sql(s"UPDATE $tbl SET name = 'x' WHERE EXISTS (" +
@@ -698,32 +688,26 @@ class GraftDmlSpec extends SparkTestBase {
     assert(cause.get.getMessage.contains("MERGE INTO"))
   }
 
-  test("DML refuses NESTED subqueries cleanly (pre-scan, not a leaked placeholder token)") {
+  test("a scalar subquery in an IN's left-hand side matches a plain SELECT") {
+    // a subquery nested in the IN's lhs: the UPDATE's matched set
+    // equals the SELECT's (2 + ba % 20 ∈ [0, 10) → ba % 20 < 8)
     val (_, tbl) = fresh("nested")
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: causes(t.getCause)
-    // a subquery inside the IN's lhs: transformUp lifts the inner one
-    // first, so without the pre-scan this surfaced as a confusing
-    // unresolved `__graft_subq_i__` attribute at run time instead of
-    // the intended refusal
-    val e = intercept[Exception] {
-      spark.sql(s"UPDATE $tbl SET name = 'x' WHERE " +
-        "(SELECT max(CAST(id AS BIGINT)) FROM range(3)) IN " +
-        "(SELECT CAST(id AS BIGINT) FROM range(10))")
-    }
-    val all = causes(e)
-    assert(all.exists(c => c.isInstanceOf[UnsupportedOperationException] &&
-      c.getMessage.contains("correlated or nested subqueries")), e.toString)
-    assert(!all.exists(c => Option(c.getMessage).exists(_.contains("__graft_subq_"))),
-      "the placeholder token leaked into the error instead of a clean refusal")
+    val pred = "ba < 100 AND (SELECT max(CAST(id AS BIGINT)) FROM range(3)) + ba % 20 IN " +
+      "(SELECT CAST(id AS BIGINT) FROM range(10))"
+    val expected = spark.sql(s"SELECT ba FROM $tbl WHERE $pred")
+      .collect().map(_.getLong(0)).toSet
+    assert(expected.size == 40, s"fixture degenerate: ${expected.size}")
+    spark.sql(s"UPDATE $tbl SET name = 'x' WHERE $pred")
+    val got = spark.sql(s"SELECT ba FROM $tbl WHERE name = 'x'")
+      .collect().map(_.getLong(0)).toSet
+    assert(got == expected, s"got ${got.size} rows, expected ${expected.size}")
   }
 
   test("NONDETERMINISTIC correlated conjuncts refuse (hoisting changes their evaluation site)") {
-    // round-12 advisor (a): a conjunct like rand() < s.v + t.ba is
-    // evaluated at a different place and cardinality once hoisted off
-    // the spine and re-stated as text (and rand()'s .sql re-seeds on
-    // re-parse) — no placement preserves its semantics, so the lift
-    // must refuse rather than pick one silently.
+    // a conjunct like rand() < s.v + t.ba is evaluated wherever and
+    // as often as decorrelation places it — no placement preserves
+    // its row-by-row semantics, so the DML refuses rather than pick
+    // one silently.
     val (_, tbl) = fresh("nondet")
     spark.sql("""CREATE OR REPLACE TEMP VIEW nd_src AS
       SELECT CAST(id % 10 AS BIGINT) AS k, CAST(id AS BIGINT) AS v FROM range(50)""")
@@ -736,19 +720,16 @@ class GraftDmlSpec extends SparkTestBase {
     }
     assert(causes(e).exists(c => c.isInstanceOf[UnsupportedOperationException] &&
       c.getMessage.contains("correlated or nested subqueries")), e.toString)
-    // a DETERMINISTIC residual of the same shape still lifts
+    // a DETERMINISTIC residual of the same shape runs
     spark.sql(s"UPDATE $tbl SET age = 831 WHERE ba < 20 AND EXISTS (" +
       s"SELECT 1 FROM nd_src WHERE nd_src.k = ba % 10 AND 0.5 < nd_src.v + ba)")
     assert(spark.sql(s"SELECT count(*) FROM $tbl WHERE age = 831").head().getLong(0) == 20L)
   }
 
   test("positional view names can never collide with user columns literally named c<i>_<name>") {
-    // round-12 ADVICE: under the dup-only scheme, output [c1_k, k, k]
-    // rendered TWO _graft_sqN_c1_k view columns (the plain rename of a
-    // distinct user column named c1_k vs the positional rename of the
-    // dup at index 1) — a spurious ambiguous-reference failure on a
-    // liftable shape. Every column is now named positionally, so
-    // generated names are mutually distinct by construction.
+    // the text lowering renamed a subquery's columns to `c<i>_<name>`
+    // and once collided with a user column literally named c1_k; the
+    // shape stays pinned.
     val (_, tbl) = fresh("collide")
     spark.sql("""CREATE OR REPLACE TEMP VIEW coll_a AS
       SELECT CAST(id AS BIGINT) AS c1_k, CAST(id AS BIGINT) AS k FROM range(10)""")
@@ -764,10 +745,9 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("positional rename under spark.sql.caseSensitive=true (case-only name collisions)") {
-    // round-12 advisor (b): columns differing only by case are
-    // DISTINCT names under a case-sensitive session — the positional
-    // scheme names every view column uniquely regardless of the
-    // session's resolution mode.
+    // columns differing only by case are DISTINCT names under a
+    // case-sensitive session and the same name otherwise; the DML
+    // must work in both resolution modes.
     val (_, tbl) = fresh("csense")
     val prev = spark.conf.get("spark.sql.caseSensitive")
     spark.conf.set("spark.sql.caseSensitive", "true")
@@ -777,7 +757,7 @@ class GraftDmlSpec extends SparkTestBase {
       spark.sql("""CREATE OR REPLACE TEMP VIEW cs_b AS
         SELECT CAST(id AS BIGINT) AS k FROM range(10)""")
       // output [K, v, k]: K and k collide only case-insensitively; the
-      // lift must work identically in BOTH resolution modes
+      // DML must work identically in BOTH resolution modes
       spark.sql(s"UPDATE $tbl SET age = 833 WHERE ba < 30 AND EXISTS " +
         s"(SELECT * FROM cs_a a, cs_b b " +
         s"WHERE a.K = b.k AND b.k = ba % 10 AND a.v >= a.K)")
@@ -791,8 +771,7 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("MERGE: WHEN NOT MATCHED BY SOURCE carries a correlated residual crossing subquery and target") {
-    // round-12 verdict #4: the one clause-scope × residual cell the
-    // matrix did not cross — a NOT MATCHED BY SOURCE condition whose
+    // a NOT MATCHED BY SOURCE condition whose
     // correlated subquery carries an equi key (a.k = t.ba % 10) PLUS a
     // residual conjunct referencing both the subquery source and the
     // target in one tree (a.ts > t.ba + 30).
@@ -816,13 +795,12 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("residual-conjunct .sql round-trip fuzz: the lift equals Spark's native correlated evaluation") {
-    // round-12 advisor (a), part 2: the lift re-states each residual
-    // conjunct as TEXT (.sql) inside the emitted subquery — fuzz a
-    // panel of exotic-but-textualizable shapes (arithmetic, CASE,
-    // string ops, IN-lists, null-safe ops, bitwise, OR-trees) and pin
-    // each UPDATE's matched set to the ground truth Spark itself
-    // computes for the SAME predicate in a plain SELECT (where no lift
-    // runs — the analyzer/optimizer evaluate the correlation natively).
+    // a panel of exotic residual shapes (arithmetic, CASE, string ops,
+    // IN-lists, null-safe ops, bitwise, OR-trees, lambdas, try_*,
+    // replacement-rendered functions) — each broke or needed a shim
+    // when the lowering re-stated them as SQL text. Each UPDATE's
+    // matched set is pinned to the ground truth Spark itself computes
+    // for the SAME predicate in a plain SELECT.
     val (_, tbl) = fresh("fuzz")
     spark.sql("""CREATE OR REPLACE TEMP VIEW fz_src AS
       SELECT CAST(id % 10 AS BIGINT) AS k, CAST(id AS BIGINT) AS ts FROM range(50)""")
@@ -850,9 +828,9 @@ class GraftDmlSpec extends SparkTestBase {
       "try_divide(fz_src.ts, ba % 5) > 8.0",
       "try_add(fz_src.ts, ba % 20) % 7 = 2",
       "try_cast(CAST(fz_src.ts AS STRING) AS BIGINT) = ba % 45",
-      // round-14 ADVICE: FLAG-based try_* RuntimeReplaceables, whose
-      // replacement's .sql renders the NON-try name — each shape has a
-      // band slice where the error case actually fires, so a lift that
+      // FLAG-based try_* RuntimeReplaceables, whose replacement's .sql
+      // renders the NON-try name — each shape has a band slice where
+      // the error case actually fires, so a lowering that
       // dropped TRY would either throw (ANSI) or mis-match
       // index 3 is out of bounds for the 2-element array — NULL under
       // TRY, a throw under plain ANSI element_at (index 0 would throw
@@ -891,7 +869,7 @@ class GraftDmlSpec extends SparkTestBase {
     // of their band (a trivially-true/false residual tests nothing)
     assert(sharp >= residuals.size - 3, s"only $sharp/${residuals.size} shapes discriminate")
     // replacement-rendered AGGREGATE (count_if) in a correlated scalar
-    // SET value — the aggExpr textualization path, pinned the same way
+    // SET value, pinned the same way
     val lo = residuals.size * 100
     val expAgg = spark.sql(s"SELECT ba, CAST((SELECT count_if(ts > 25) " +
         s"FROM fz_src WHERE fz_src.k = ba % 10 AND fz_src.ts <= ba % 60) AS INT) c FROM $tbl " +
@@ -907,14 +885,11 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("residual textualization: backtick-needing view columns (in lambda bodies) and collation") {
-    // round-13 roadmap hunt surface: (a) a SqlLambda whose BODY
-    // references a view column whose name needs backtick quoting — the
-    // positional rename prepends `_graft_sqN_c<i>_` but keeps the
-    // user's name tail, so the attr must re-quote on emission; (b) a
-    // collation-carrying comparison (collate(...) = 'X'), where the
-    // collation must survive the text round-trip or matching silently
-    // reverts to binary. Both pinned to Spark's native correlated
-    // evaluation of the same predicate.
+    // (a) a lambda whose BODY references a subquery column whose name
+    // needs backtick quoting; (b) a collation-carrying comparison
+    // (collate(...) = 'X'), where losing the collation would silently
+    // revert matching to binary. Both pinned to Spark's native
+    // correlated evaluation of the same predicate.
     val (_, tbl) = fresh("fzbq")
     spark.sql("""CREATE OR REPLACE TEMP VIEW fzbq_src AS
       SELECT CAST(id % 10 AS BIGINT) AS k, CAST(id AS BIGINT) AS `my col`,
@@ -947,14 +922,12 @@ class GraftDmlSpec extends SparkTestBase {
   }
 
   test("window-family functions: subquery plans lift intact; direct conditions refuse in Spark's analyzer") {
-    // round-13 roadmap hunt surface, REFUTED as a silent hazard:
     // session_window/window_time resolve away inside PLANS (the
     // analyzer injects a Project computing precisetimestampconversion
-    // arithmetic) — and DML subquery plans are registered as temp
-    // views, never textualized, so the rewrite rides along unharmed.
-    // In a DIRECT DML condition there is no plan to inject into (and a
+    // arithmetic), and a DML subquery plan rides as analyzed. In a
+    // DIRECT DML condition there is no plan to inject into (and a
     // stored column lacks the window marker metadata), so Spark itself
-    // refuses during analysis — nothing ever reaches the textualizer.
+    // refuses during analysis, before the DML rule runs.
     val (_, tbl) = fresh("wfam")
     // sessions of 5 rows (4 s spacing < 5 s gap) split by 10 s jumps
     spark.sql("""CREATE OR REPLACE TEMP VIEW wf_src AS
@@ -979,12 +952,11 @@ class GraftDmlSpec extends SparkTestBase {
 
   test("replacement-rendered functions (nullif) textualize correctly across the source/target namespace") {
     // RuntimeReplaceable expressions render .sql from stored
-    // PARAMETERS that tree transforms never touch — before the
-    // round-13 fix, `nullif(s.age, 5)` in a MERGE emitted text naming
-    // the bare `age`, which re-resolved against the TARGET's age
-    // column: silently wrong values, not even an error. The inline-
-    // before-textualize fix makes the emitted text reference the
-    // _graft_src_ namespace like every other source attribute.
+    // PARAMETERS that tree transforms never touch — when the lowering
+    // re-stated expressions as text, `nullif(s.age, 5)` in a MERGE
+    // named the bare `age`, which re-resolved against the TARGET's age
+    // column: silently wrong values, not even an error. The source
+    // attribute must move into the _graft_src_ namespace.
     val (_, tbl) = fresh("rrepl")
     spark.sql("""CREATE OR REPLACE TEMP VIEW rrepl_src AS
       SELECT * FROM VALUES (1L, 5), (2L, 7) AS v(ba, age)""")
@@ -994,7 +966,7 @@ class GraftDmlSpec extends SparkTestBase {
     val rows = spark.sql(s"SELECT ba, age FROM $tbl WHERE ba IN (1, 2) ORDER BY ba")
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getInt(1)))).toSeq
     // s.age=5 nullifies; s.age=7 lands — target-age values (19, 20)
-    // would mean the stale text resolved the WRONG scope
+    // would mean the source column was bound to the WRONG scope
     assert(rows == Seq((1L, None), (2L, Some(7))), rows.toString)
     // and ifnull in a clause CONDITION referencing both scopes
     spark.sql(s"""MERGE INTO $tbl t USING rrepl_src s
@@ -1003,5 +975,66 @@ class GraftDmlSpec extends SparkTestBase {
     val named = spark.sql(s"SELECT ba FROM $tbl WHERE name = 'repl'")
       .collect().map(_.getLong(0)).toSeq
     assert(named == Seq(2L), named.toString)
+  }
+
+  test("a self-MERGE rebinds target and source columns of the same table by exprId") {
+    // source and target read the same table, so every column name
+    // exists on both sides: `s.age + t.age` must add the two rows'
+    // values, never one side's value twice
+    val (_, tbl) = fresh("selfm")
+    val src = s"SELECT * FROM $tbl WHERE ba % 7 = 0 AND ba < 500"
+    val expected = spark.sql(s"""SELECT t.ba, coalesce(s.age + t.age, t.age)
+      FROM $tbl t LEFT JOIN ($src) s ON t.ba = s.ba""")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    spark.sql(s"""MERGE INTO $tbl t USING ($src) s ON t.ba = s.ba
+      WHEN MATCHED THEN UPDATE SET age = s.age + t.age""")
+    val got = spark.sql(s"SELECT ba, age FROM $tbl")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == expected, s"diff=${(got.toSet diff expected.toSet).take(5)}")
+    assert(got.count { case (ba, age) => age != (18 + ba) % 100 } > 0, "fixture degenerate")
+  }
+
+  test("a nested subquery's correlation to an inner column named like a target column is not rebound") {
+    // the inner EXISTS correlates to nn_s.ba, a column of the MIDDLE
+    // level that shares the target's column name `ba`: rebinding by
+    // name would turn it into the target's ba (3 rows match then)
+    val (_, tbl) = fresh("nestname")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW nn_s AS
+      SELECT CAST(id % 10 AS BIGINT) AS k, CAST(id AS BIGINT) AS ba FROM range(50)""")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW nn_u AS
+      SELECT * FROM VALUES (0L), (3L), (6L) AS v(ba)""")
+    val pred = s"ba < 200 AND EXISTS (SELECT 1 FROM nn_s WHERE nn_s.k = $tbl.ba % 10 " +
+      "AND EXISTS (SELECT 1 FROM nn_u WHERE nn_u.ba = nn_s.ba))"
+    val expected = spark.sql(s"SELECT ba FROM $tbl WHERE $pred")
+      .collect().map(_.getLong(0)).toSet
+    assert(expected.size == 60, s"fixture degenerate: ${expected.size}")
+    spark.sql(s"UPDATE $tbl SET age = 904 WHERE $pred")
+    val got = spark.sql(s"SELECT ba FROM $tbl WHERE age = 904")
+      .collect().map(_.getLong(0)).toSet
+    assert(got == expected, s"got ${got.size} rows, expected ${expected.size}")
+  }
+
+  test("a correlated subquery in MERGE SET and INSERT values reaches the table and the change feed") {
+    // the value is evaluated after classification, once per output
+    // (constraints, staged write, each change-feed image)
+    val (root, tbl) = fresh("msetsubq")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW msq_src AS
+      SELECT CAST(id AS BIGINT) AS ba FROM range(3990, 4010)""")
+    spark.sql("""CREATE OR REPLACE TEMP VIEW msq_aux AS
+      SELECT CAST(id % 7 AS BIGINT) AS k, CAST(id AS INT) AS x FROM range(70)""")
+    val v = "(SELECT max(x) FROM msq_aux WHERE msq_aux.k = s.ba % 7)"
+    val expected = spark.sql(s"SELECT s.ba, $v FROM msq_src s")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(expected.values.toSet.size == 7, "fixture degenerate")
+    spark.sql(s"""MERGE INTO $tbl t USING msq_src s ON t.ba = s.ba
+      WHEN MATCHED THEN UPDATE SET age = $v
+      WHEN NOT MATCHED THEN INSERT (ba, age) VALUES (s.ba, $v)""")
+    val got = spark.sql(s"SELECT ba, age FROM $tbl WHERE ba >= 3990")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == expected, s"table: ${(got.toSet diff expected.toSet).take(5)}")
+    val feed = Snapshots.readChangeFeed(spark, root, "t", fromVersion = 0)
+      .filter(col("_change_type").isin("update_postimage", "insert"))
+      .select("ba", "age").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(feed == expected, s"feed: ${(feed.toSet diff expected.toSet).take(5)}")
   }
 }

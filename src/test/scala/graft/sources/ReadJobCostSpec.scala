@@ -109,6 +109,31 @@ class ReadJobCostSpec extends SparkTestBase {
     assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 2500L - deleted)
   }
 
+  test("an UPDATE with an equality-correlated EXISTS runs at most 4 jobs") {
+    val (t, _) = people()
+    spark.sql("""CREATE OR REPLACE TEMP VIEW jobs_allow AS
+      SELECT id * 3 AS k FROM range(0, 100)""")
+    val (_, descs) = described(spark.sql(
+      s"UPDATE $t SET name = 'x' WHERE EXISTS (SELECT 1 FROM jobs_allow a WHERE a.k = ba)"))
+    assert(descs.size <= 4, s"update ran ${descs.size} jobs: ${descs.mkString("; ")}")
+    assert(spark.sql(s"SELECT count(*) FROM $t WHERE name = 'x'").head().getLong(0) == 100L)
+  }
+
+  test("a MERGE whose clause condition has an uncorrelated IN subquery runs at most 8 jobs") {
+    val (t, root) = people()
+    val v0 = Snapshots.snapshot(root, "t").get.version
+    spark.sql("""CREATE OR REPLACE TEMP VIEW jobs_msrc AS
+      SELECT id AS ba, CAST(id % 97 AS INT) AS nage FROM range(1500, 2500)""")
+    val (_, descs) = described(spark.sql(s"""MERGE INTO $t t USING jobs_msrc s ON t.ba = s.ba
+      WHEN MATCHED AND t.ba IN (SELECT id * 2 FROM range(750, 1000)) THEN DELETE
+      WHEN MATCHED THEN UPDATE SET age = s.nage
+      WHEN NOT MATCHED THEN INSERT (name, age, ba, topic) VALUES ('m', s.nage, s.ba, 't0')"""))
+    assert(descs.size <= 8, s"merge ran ${descs.size} jobs: ${descs.mkString("; ")}")
+    assert(Snapshots.snapshot(root, "t").get.version == v0 + 1)
+    // even keys 1500..1998 deleted, 500 inserted
+    assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 2250L)
+  }
+
   test("a merge-on-read DELETE runs at most 4 jobs") {
     val (t, root) = people()
     val (_, descs) = described(spark.sql(s"DELETE FROM $t WHERE ba BETWEEN 100 AND 199"))
