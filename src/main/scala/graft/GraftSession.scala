@@ -21,7 +21,19 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Apply engine configs to an existing builder (used by Verify/Bench
-    * which own their master/cpu settings). */
+    * which own their master/cpu settings).
+    *
+    * Codegen: every generated class compiles once per JVM. Spark
+    * caches compiled classes by (class loader, source body), and in
+    * local mode the driver compiles under the application loader while
+    * tasks compile under the executor's loader, so each body takes two
+    * entries. `spark.sql.codegen.cache.maxEntries` (default 100) is
+    * therefore set to 256: the 13 perfbench `olap_read` queries settle
+    * at 198–200 entries, and at 100 the LRU evicted bodies before their
+    * next use, so a two-pass timed run recompiled about 330 classes
+    * (about 5 at 256). Guava splits the cap over its segments and
+    * evicts per segment, so the cap needs headroom over the working
+    * set. Static conf: it must be set here, on the builder. */
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
     // native-function + optimizer-rule pack (FuseDotProduct/FuseCosine
     // rewrite the HOF dot/cosine idiom into fused codegen expressions;
@@ -71,6 +83,8 @@ object GraftSession {
     // filesystem forks a `chmod` per created file and directory; this
     // one sets the same bits in-process (.crc checksums unchanged)
     .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+    // codegen cache sized to the working set: see the scaladoc above
+    .config("spark.sql.codegen.cache.maxEntries", "256")
 
   /** Local session for tests / ad-hoc mains. */
   def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32),

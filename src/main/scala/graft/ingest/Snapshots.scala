@@ -8,9 +8,10 @@ import scala.util.control.NonFatal
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.{Column, DataFrame, GraftStreamingShim, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, OuterReference, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, InSet, OuterReference, SubqueryExpression}
 import org.apache.spark.sql.classic.ColumnConversions
 import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Versioned snapshot log for topic tables — the minimal transactional
   * lakehouse layer (the reference offloads to Delta; with no Delta jar
@@ -1560,9 +1561,8 @@ object Snapshots {
     * decline). Files written AFTER the event carry the current
     * physical layout, so their stats stay live — the invalidation is
     * file-precise, not column-wide. */
-  private def statStaleFiles(root: String, prefix: String, column: String,
-                             upTo: Option[Int]): Set[String] =
-    schemaEvents(root, prefix, upTo).collect {
+  private def statStaleFiles(events: Seq[SchemaEvent], column: String): Set[String] =
+    events.collect {
       case a: AddedColumn if a.name == column => a.preFiles
       case r: RenamedColumn if r.from == column || r.to == column => r.preFiles
       case d: DroppedColumn if d.name == column => d.preFiles
@@ -1590,7 +1590,7 @@ object Snapshots {
     else {
       val st = snap.stats.filter(s => s.typ == "L" && s.column == column)
         .map(s => s.file -> s).toMap
-      val stale = statStaleFiles(root, prefix, column, Some(snap.version))
+      val stale = statStaleFiles(schemaEvents(root, prefix, Some(snap.version)), column)
       if (snap.files.forall(f => st.contains(f) && !stale.contains(f)))
         Some((snap.files.map(st(_).min).min, snap.files.map(st(_).max).max))
       else None
@@ -1656,6 +1656,14 @@ object Snapshots {
                       version: Option[Int] = None): Seq[String] = {
     val snap = snapshot(root, prefix, version).getOrElse(
       sys.error(s"no snapshot for $prefix"))
+    if (ranges.isEmpty) snap.files
+    else prunedFiles(snap, schemaEvents(root, prefix, Some(snap.version)), ranges)
+  }
+
+  /** [[pruneFilesMulti]] on a resolved snapshot and its schema events
+    * (the DML primitives hold both already). */
+  private def prunedFiles(snap: Snapshot, events: Seq[SchemaEvent],
+                          ranges: Seq[StatRange]): Seq[String] = {
     val byCol = ranges.map(r =>
       r -> snap.stats.filter(s => s.column == r.column && s.typ == r.typ)
         .map(s => s.file -> s).toMap).toMap
@@ -1663,7 +1671,7 @@ object Snapshots {
     // describe a previous logical column — treat as absent (keep the
     // file; stats narrow IO, never semantics)
     val stale = ranges.map(_.column).distinct
-      .map(c => c -> statStaleFiles(root, prefix, c, Some(snap.version))).toMap
+      .map(c => c -> statStaleFiles(events, c)).toMap
     snap.files.filter(f => ranges.forall(r =>
       stale(r.column).contains(f) ||
         byCol(r).get(f).forall(s => s.max >= r.loKey && s.min <= r.hiKey)))
@@ -2227,6 +2235,7 @@ object Snapshots {
       enforceConstraints(root, prefix, source)
       val base = dataDir(root, prefix)
       val srcKeys = source.select(keys.map(col): _*).distinct().localCheckpoint(true)
+      lazy val evs = schemaEvents(root, prefix, Some(snap.version))
       // stage 1 — manifest pruning: a file whose stats exclude the
       // source's key range can't contain a match and is never opened
       val candidates = snap.stats.find(s => s.column == keys.head && s.typ == "L") match {
@@ -2235,7 +2244,7 @@ object Snapshots {
             org.apache.spark.sql.functions.min(keys.head),
             org.apache.spark.sql.functions.max(keys.head)).head()
           if (mm.isNullAt(0)) Seq.empty
-          else pruneFiles(root, prefix, keys.head, mm.getLong(0), mm.getLong(1), Some(snap.version))
+          else prunedFiles(snap, evs, Seq(StatRange.longRange(keys.head, mm.getLong(0), mm.getLong(1))))
         case None => snap.files
       }
       // stage 2 — exact attribution: which candidate files hold a
@@ -2254,8 +2263,7 @@ object Snapshots {
       // the current schema
       val oldMatched =
         if (matchedFiles.isEmpty) source.limit(0)
-        else readFilesFilled(spark, root, prefix, matchedFiles,
-          schemaEvents(root, prefix, Some(snap.version)), snap.dv)
+        else readFilesFilled(spark, root, prefix, matchedFiles, evs, snap.dv)
       // a using-columns join REORDERS output (keys first) — restore the
       // table's logical order so rewritten files keep the canonical
       // physical layout (mixed per-file orders make multi-file schema
@@ -2418,6 +2426,17 @@ object Snapshots {
     }
   }
 
+  /** Rows of the files in `uris`, by their `DvPathCol` key. Catalyst's
+    * `InSet` holds the set as a reference object, so the plan and the
+    * generated class are the same for any number of files; `isin`
+    * plans one literal per file, and below `OptimizeIn`'s threshold
+    * every distinct file count compiles a class of its own. The set is
+    * a `HashSet` at every size: the generated code casts to the set's
+    * runtime class, and `toSet` picks `Set1`…`Set4` for small sets. */
+  private def inFiles(uris: Seq[String]): Column =
+    GraftStreamingShim.column(InSet(ColumnConversions.expression(col(DvPathCol)),
+      scala.collection.immutable.HashSet.from[Any](uris.map(UTF8String.fromString))))
+
   /** `e` with every attribute in `these` replaced by `to(a)`: at top
     * level, and as an outer reference inside any subquery plan. */
   private[graft] def replaceAttributes(e: Expression, these: AttributeSet,
@@ -2465,9 +2484,7 @@ object Snapshots {
     if (txn.exists(snap.txns.contains)) snap.version
     else {
       val evs = schemaEvents(root, prefix, Some(snap.version))
-      val candidates =
-        if (ranges.isEmpty) snap.files
-        else pruneFilesMulti(root, prefix, ranges, Some(snap.version))
+      val candidates = prunedFiles(snap, evs, ranges)
       if (candidates.isEmpty) return snap.version // stats exclude every file
       val withFile = readFilesFilled(spark, root, prefix, candidates, evs,
         snap.dv, keepPositions = true)
@@ -2508,7 +2525,7 @@ object Snapshots {
             "UPDATE: the observed matched-file set is empty but the rewrite frame has hits")
         snap.version
       } else {
-        val rows = combined.filter(col(DvPathCol).isin(matchedUris: _*))
+        val rows = combined.filter(inFiles(matchedUris))
         val out = rows.select(dataCols.map { c =>
           if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
         }: _*)
@@ -2637,7 +2654,7 @@ object Snapshots {
         else pruneKey.fold(snap.files) { case (tc, _) =>
           val mm = observedMetric(srcObserved, srcMetric)
           if (mm.isNullAt(0)) Seq.empty
-          else pruneFiles(root, prefix, tc, mm.getLong(0), mm.getLong(1), Some(snap.version))
+          else prunedFiles(snap, evs, Seq(StatRange.longRange(tc, mm.getLong(0), mm.getLong(1))))
         }
       // a SCHEMA-TYPED empty target (readFilesFilled on zero files is
       // column-less, which would fail the condition's resolution) —
@@ -2706,7 +2723,7 @@ object Snapshots {
       else {
         // the rows of the rewritten files, plus the source-only rows
         val rows = classified.filter(!inTarget ||
-          (if (notMatchedBySource.nonEmpty) lit(true) else col(DvPathCol).isin(matchedUris: _*)))
+          (if (notMatchedBySource.nonEmpty) lit(true) else inFiles(matchedUris)))
         val survivor = inTarget && col(nFired) === 0 && firstOfRow
         val changed = col(act) =!= 0 && !col(act).isin(deletes: _*)
         def pre(df: DataFrame): DataFrame = df.select(tCols.map(col): _*)
@@ -3103,9 +3120,7 @@ object Snapshots {
     else {
       val base = dataDir(root, prefix)
       val evs = schemaEvents(root, prefix, Some(snap.version))
-      val candidates =
-        if (ranges.isEmpty) snap.files
-        else pruneFilesMulti(root, prefix, ranges, Some(snap.version))
+      val candidates = prunedFiles(snap, evs, ranges)
       if (candidates.isEmpty) return snap.version // stats exclude every file
       val frame = readFilesFilled(spark, root, prefix, candidates, evs,
         snap.dv, keepPositions = true)
@@ -3177,7 +3192,10 @@ object Snapshots {
         .localCheckpoint(true) // reused by keys + upserts below
       if (last.isEmpty) snap.version // empty increment — no new version
       else {
-        val tableCols = read(spark, root, prefix, Some(snap.version)).columns.toSeq
+        val evs = schemaEvents(root, prefix, Some(snap.version))
+        // the snapshot's resolved columns (deletion vectors drop rows,
+        // never columns)
+        val tableCols = readFilesFilled(spark, root, prefix, snap.files, evs).columns.toSeq
         val changedKeys = last.select(keys.map(col): _*).distinct()
           .localCheckpoint(true)
         val upserts = last.filter(isUpsert).select(tableCols.map(col): _*)
@@ -3189,10 +3207,9 @@ object Snapshots {
               org.apache.spark.sql.functions.min(keys.head),
               org.apache.spark.sql.functions.max(keys.head)).head()
             if (mm.isNullAt(0)) Seq.empty
-            else pruneFiles(root, prefix, keys.head, mm.getLong(0), mm.getLong(1), Some(snap.version))
+            else prunedFiles(snap, evs, Seq(StatRange.longRange(keys.head, mm.getLong(0), mm.getLong(1))))
           case None => snap.files
         }
-        val evs = schemaEvents(root, prefix, Some(snap.version))
         val matchedFiles: Seq[String] =
           if (candidates.isEmpty) Seq.empty
           else {

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +38,11 @@ object SkewTools {
     val want = df.sparkSession.sparkContext.defaultParallelism
     val cur =
       try df.queryExecution.toRdd.getNumPartitions
-      catch { case _: Throwable => return df }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[graft] spreadForCompute keeps the frame's partitioning: partition probe failed: $e")
+          return df
+      }
     if (cur * 2 < want) df.repartition(want) else df
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -176,7 +177,11 @@ object StreamingQueries extends QueryRegistry {
         } finally rd.close()
       }
       if (maxes.exists(_.isEmpty)) None else Some(maxes.flatten.max)
-    } catch { case _: Throwable => None }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[graft] maxTsMicros falls back to a scan: footer walk failed: $e")
+        None
+    }
 
     footerMax() match {
       case Some(m) => m

@@ -11,7 +11,7 @@ import graft.ingest.CommitLog.{ColumnChange, Entry}
 /** The commit-log codec: exact round trips for any string the engine
   * may put in a log entry, versions past five digits, and the small
   * position files that share its mapper. */
-class CommitLogSpec extends AnyFunSuite {
+class CommitLogSpec extends SparkTestBase {
 
   // quote, backslash, ']', '|', ',', control characters and non-BMP
   // code points: every character the regex-parsed format could not carry
@@ -60,7 +60,7 @@ class CommitLogSpec extends AnyFunSuite {
   }
 
   test("a table keeps committing past v99999, and readers see the new versions") {
-    val root = Files.createTempDirectory("graft_clog").toString
+    val root = tempDir("graft_clog").toString
     Snapshots.writeSnapshot(root, "t", 99999, 0L, Seq.empty, Seq.empty)
     assert(Snapshots.commit(root, "t", maxPos = 1) == 100000)
     assert(Snapshots.commit(root, "t", maxPos = 2) == 100001)
@@ -71,7 +71,7 @@ class CommitLogSpec extends AnyFunSuite {
   }
 
   test("position files: a missing file reads as None, a file without its key fails") {
-    val root = Files.createTempDirectory("graft_pos").toString
+    val root = tempDir("graft_pos").toString
     assert(ProduceJob.readManifest(root, "p").isEmpty)
     assert(ConsumeJob.readProgress(root, "p").isEmpty)
     ProduceJob.commitManifest(root, "p", 41)

@@ -126,7 +126,7 @@ class CurationSpec extends SparkTestBase {
     assert(top.head.getLong(1) == selfScore.get.getLong(1),
       "a vector scored strictly below the probe's ADC lower bound")
     // sidecar round-trip is bit-exact
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = tempDir("graft_pq").toString
     PqIndex.writeCodebooks(cb, dir)
     assert(PqIndex.readCodebooks(dir, m = 8) == cb)
     enc.unpersist()
@@ -190,7 +190,7 @@ class CurationSpec extends SparkTestBase {
   test("persisted IVF index prunes partitions on cell filter") {
     val (index, _) = operators.IvfIndex.build(
       Tables.embeddings(spark, sf), "vec_id", "embedding", k = 16)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/index"
+    val path = tempDir("graft_ivf").toString + "/index"
     index.write.mode("overwrite").partitionBy("cell").parquet(path)
     val reloaded = spark.read.parquet(path)
     val probed = reloaded.filter(col("cell").isin(0, 1))

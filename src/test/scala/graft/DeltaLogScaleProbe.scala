@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
-import scala.util.Using
 
 import graft.ingest.{Snapshots, Topics}
 
@@ -18,9 +17,9 @@ class DeltaLogScaleProbe extends SparkTestBase {
   /** A temp root for one probe, deleted with everything under it when
     * `f` returns or throws: the roots are up to 0.7 GB each. */
   private def withRoot[T](name: String)(f: String => T): T = {
-    val root = Files.createTempDirectory(name)
+    val root = tempDir(name)
     try f(root.toString)
-    finally Using.resource(Files.walk(root))(_.iterator.asScala.toSeq.reverse.foreach(Files.delete))
+    finally deleteTree(root)
   }
 
   test("2000-commit log: flat commit latency, O(adds) bytes, bounded open") {

@@ -19,7 +19,7 @@ import graft.ingest.{CommitLog, ProduceJob, Snapshots, Topics}
 class DeltaLogSpec extends SparkTestBase {
 
   test("commit metadata is O(files added), not O(table): version files stay flat as the table grows") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     // 25 commits of k files each → the table holds 25k files at v24,
     // but each version file mentions only ITS OWN k additions
     (0 until 25).foreach { i =>
@@ -47,7 +47,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("snapshot resolution opens one checkpoint + bounded delta tail, not the history") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     (0 until 25).foreach { i =>
       ProduceJob.produceBatch(spark, root, "dr", topics = 1, numMessages = 10 + i)
     }
@@ -69,7 +69,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("delta chain state equals a from-scratch fold: files, stats, txns, maxPos carry exactly") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     // mixed history inside one checkpoint window: appends, a delete
     // (file rewrite), an update, a schema add — all delta-encoded
     ProduceJob.produceBatch(spark, root, "dm", topics = 1, numMessages = 100)
@@ -95,7 +95,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("vacuum past a delta's parent writes a checkpoint barrier first; truncated chains still resolve") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 1000 // force a long chain with NO periodic checkpoint
     try {
@@ -116,7 +116,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("vacuum sweeps crashed writeStaged staging dirs (age-gated), never young ones") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "sw", topics = 1, numMessages = 50)
     val base = Paths.get(Topics.tableDir(root, "sw"))
     // simulate a crash between the staged write and the move: an
@@ -143,7 +143,7 @@ class DeltaLogSpec extends SparkTestBase {
     // and the files-only comparison trusted an abandoned checkpoint
     // differing only in txns/stats/refsEver. Unreadable or different
     // now both mean stale-and-replace (our json is known-good).
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 2
     try {
@@ -167,7 +167,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("refsEver is bounded by live files after vacuum, not by files ever written") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 4
     try {
@@ -215,7 +215,7 @@ class DeltaLogSpec extends SparkTestBase {
     // containing dead names can never cause re-adoption of a live file
     // or loss of a new one; the bound then re-establishes at the next
     // vacuum. This spec replays that worst case deterministically.
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 2
     try {
@@ -278,7 +278,7 @@ class DeltaLogSpec extends SparkTestBase {
     // staged version in the window; the backward find for the first
     // published base stops at the first non-staged version — bounded
     // by the contiguous staged run, never O(history).
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 4
     try {
@@ -334,7 +334,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("a 20k-version un-checkpointed chain resolves iteratively (no stack overflow)") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = Int.MaxValue // NO periodic checkpoints
     try {
@@ -356,7 +356,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("concurrent appendBatch writers to one table: both commit, rows conserved") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "cw", topics = 1, numMessages = 100) // v0
     // two writers race writeStaged + commitFiles on the same table:
     // UUID staging dirs can't collide, the commits serialize on the
@@ -377,7 +377,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("legacy full manifests read as their own checkpoints; new deltas chain on top") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     // hand-write a pre-round-9 FULL manifest (the legacy format)
     val rows = ProduceJob.personProjection(
       spark.range(20).toDF("cnt"), "cnt", "lg", 1)
@@ -413,7 +413,7 @@ class DeltaLogSpec extends SparkTestBase {
     // shapes a hand-written/legacy log can contain: del of an absent
     // file, del+re-add of one file in the same delta, statsAdd
     // replacing a carried stat, phantom statsAdd, UNSORTED add array.
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     withMultiFileWrites {
       ProduceJob.produceBatch(spark, root, "gt", topics = 1, numMessages = 40) // v0
     }
@@ -484,7 +484,7 @@ class DeltaLogSpec extends SparkTestBase {
     // check silently builds on). The fold now probes the sorted file
     // list (O(delta · log n)) and drops phantoms at the offending
     // delta itself.
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "ph", topics = 1, numMessages = 20)
     val snap0 = Snapshots.snapshot(root, "ph").get
     val realFile = snap0.files.head
@@ -512,7 +512,7 @@ class DeltaLogSpec extends SparkTestBase {
     // a hand-written pre-round-9 manifest carries no such guarantee —
     // pin the verify-and-fallback so delta folds over it still produce
     // the canonical sorted file list (and the read still sees all rows)
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val rows = ProduceJob.personProjection(
       spark.range(20).toDF("cnt"), "cnt", "ulg", 1)
     rows.write.mode("append").partitionBy("topic")
@@ -543,7 +543,7 @@ class DeltaLogSpec extends SparkTestBase {
     // the log codec escapes every string, so txn ids need no charset of
     // their own: quotes, brackets, backslashes and control characters
     // commit, carry through checkpoints, and replay as no-ops
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 2
     try {
@@ -567,7 +567,7 @@ class DeltaLogSpec extends SparkTestBase {
 
   test("a column named p|q gets manifest stats and prunes files") {
     // stats are objects in the log, so no column name loses its stats
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val dir = Topics.tableDir(root, "hz")
     Seq(0L -> 50L, 50L -> 100L).foreach { case (lo, hi) =>
       spark.range(lo, hi).selectExpr("id AS k", "id * 2 AS `p|q`").coalesce(1)
@@ -590,7 +590,7 @@ class DeltaLogSpec extends SparkTestBase {
     // a writer before the codec could leave a raw newline inside a txn
     // id; the reader accepts it, and the boundary checkpoint carries
     // it, escaped, like any other string
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 2
     try {
@@ -628,7 +628,7 @@ class DeltaLogSpec extends SparkTestBase {
     // ATOMIC_MOVE — a reader polling that path must only ever observe
     // the pre-existing bytes or the WHOLE new checkpoint, never a
     // truncated new one, and no .cmp-*/.tmp-* intermediate survives.
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 1 // a checkpoint per commit
     try {
@@ -675,7 +675,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("one commit path: a racer that lands mid-attempt pushes the commit to the next version") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "oc", topics = 1, numMessages = 10)
     val s0 = Snapshots.snapshot(root, "oc").get
     var calls = 0
@@ -698,7 +698,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("one commit path: a commit that loses every race gives up after CommitAttempts attempts") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "ol", topics = 1, numMessages = 10)
     var calls = 0
     intercept[Snapshots.ConcurrentCommitException] {
@@ -716,7 +716,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("one commit path: a same-audit stager that wins the race is the staging's version") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "os", topics = 1, numMessages = 100)
     ProduceJob.personProjection(spark.range(100, 150).toDF("cnt"), "cnt", "os", 1)
       .write.mode("append").partitionBy("topic").parquet(Topics.tableDir(root, "os"))
@@ -738,7 +738,7 @@ class DeltaLogSpec extends SparkTestBase {
   }
 
   test("one commit path: concurrent UPDATE and append both commit and conserve rows") {
-    val root = Files.createTempDirectory("graft_dlog").toString
+    val root = tempDir("graft_dlog").toString
     ProduceJob.produceBatch(spark, root, "cc", topics = 1, numMessages = 200)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {

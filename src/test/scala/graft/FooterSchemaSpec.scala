@@ -86,7 +86,7 @@ class FooterSchemaSpec extends SparkTestBase {
   }
 
   test("a footer without Spark's schema key reads like inference (converter fallback)") {
-    val base = Files.createTempDirectory("graft_footer")
+    val base = tempDir("graft_footer")
     val rel = Paths.get("k=1", "plain.parquet")
     val file = base.resolve(rel)
     Files.createDirectories(file.getParent)
@@ -115,7 +115,7 @@ class FooterSchemaSpec extends SparkTestBase {
   }
 
   test("a directory read takes its schema from the file inference reads") {
-    val dir = Files.createTempDirectory("graft_footer_dir")
+    val dir = tempDir("graft_footer_dir")
     // full-path order puts k=a-b/… before k=a/… ('-' sorts before '/')
     spark.range(0, 10).toDF("id").write.parquet(dir.resolve("k=a").toString)
     spark.range(10, 20).selectExpr("id", "id * 2 AS extra")
@@ -126,7 +126,7 @@ class FooterSchemaSpec extends SparkTestBase {
       spark.read.parquet(dir.toString))
     // a data column named like a partition column keeps inference,
     // which places it at its file position
-    val clash = Files.createTempDirectory("graft_footer_clash")
+    val clash = tempDir("graft_footer_clash")
     spark.range(0, 5).selectExpr("id AS k", "id").write.parquet(clash.resolve("k=7").toString)
     val clashRel = Footers.firstDataFile(clash).get
     val read = Footers.withSchema(spark, spark.read, clash, clashRel).parquet(clash.toString)
@@ -135,7 +135,7 @@ class FooterSchemaSpec extends SparkTestBase {
   }
 
   test("a footer reader's options carry the shared configuration") {
-    val dir = Files.createTempDirectory("graft_footer_conf")
+    val dir = tempDir("graft_footer_conf")
     spark.range(0, 10).toDF("id").write.parquet(dir.resolve("d").toString)
     val file = dir.resolve("d").resolve(Footers.firstDataFile(dir.resolve("d")).get)
     val options = classOf[ParquetFileReader].getDeclaredField("options")

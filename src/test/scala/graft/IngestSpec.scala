@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ingest._
 
@@ -11,7 +9,7 @@ import graft.ingest._
 class IngestSpec extends SparkTestBase {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_ingest").toString
+    tempDir("graft_ingest").toString
 
   test("fan-out naming matches the reference (prefix-0..n-1)") {
     assert(Topics.expand("t", 3) == Seq("t-0", "t-1", "t-2"))

@@ -27,7 +27,7 @@ class NioLocalFileSystemSpec extends SparkTestBase {
   }
 
   test("Spark writes keep 0644 files, 0755 directories and .crc sidecars") {
-    val out = Files.createTempDirectory("graft_nio").resolve("w")
+    val out = tempDir("graft_nio").resolve("w")
     spark.range(0, 100).selectExpr("id", "concat('p', id % 3) AS p")
       .write.partitionBy("p").parquet(out.toString)
     val all = walk(out)
@@ -42,7 +42,7 @@ class NioLocalFileSystemSpec extends SparkTestBase {
   }
 
   test("staged-write table files keep 0644 under 0755 partition directories") {
-    val root = Files.createTempDirectory("graft_nio").toString
+    val root = tempDir("graft_nio").toString
     ProduceJob.produceBatch(spark, root, "t", topics = 3, numMessages = 300)
     val base = Paths.get(root, "t")
     val files = Snapshots.snapshot(root, "t").get.files.map(base.resolve)
@@ -54,7 +54,7 @@ class NioLocalFileSystemSpec extends SparkTestBase {
   }
 
   test("bits NIO cannot express (sticky) still apply") {
-    val d = Files.createTempDirectory("graft_nio")
+    val d = tempDir("graft_nio")
     val fs = FileSystem.get(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
     fs.setPermission(new HadoopPath(d.toUri), new FsPermission(octal("1750").toShort))
     assert(mode(d) == octal("1750"), f"mode ${mode(d)}%o")

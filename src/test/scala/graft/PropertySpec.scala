@@ -13,6 +13,8 @@ import graft.operators.TextAnalysis
   * determinism over generated inputs. */
 class PropertySpec extends SparkTestBase {
 
+  private lazy val csvDir = tempDir("graft_prop")
+
   /** Deterministic property driver (no scalatest-scalacheck bridge in
     * the offline cache): sample `gen` across fixed seeds. */
   private def forAllG[A](gen: Gen[A], trials: Int = 20)(f: A => Unit): Unit =
@@ -33,7 +35,7 @@ class PropertySpec extends SparkTestBase {
     forAllG(Gen.listOfN(20, Gen.zip(fieldGen, fieldGen, fieldGen))) {
       rows: List[(String, String, String)] =>
       if (rows.nonEmpty) {
-        val file = Files.createTempFile("graft_prop", ".csv")
+        val file = Files.createTempFile(csvDir, "graft_prop", ".csv")
         val lines = rows.map { case (a, b, c) => s"${quote(a)},${quote(b)},${quote(c)}" }
         Files.writeString(file, lines.mkString("\n"))
         val parsed = spark.read
@@ -121,7 +123,7 @@ class PropertySpec extends SparkTestBase {
     val srcGen = Gen.zip(Gen.choose(0L, 400L), Gen.choose(100L, 700L))
       .suchThat { case (lo, hi) => hi > lo }
     forAllG(srcGen, trials = 3) { case (lo, hi) =>
-      val root = Files.createTempDirectory("graft_prop_merge").toString
+      val root = tempDir("graft_prop_merge").toString
       ProduceJob.produceBatch(spark, root, "pm", topics = 1, numMessages = 300)
       val source = ProduceJob.personProjection(
         spark.range(lo, hi).toDF("cnt"), "cnt", "pm", 1)

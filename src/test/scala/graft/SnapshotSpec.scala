@@ -13,7 +13,7 @@ import graft.ingest.{ProduceJob, Snapshots}
 class SnapshotSpec extends SparkTestBase {
 
   test("append commits produce monotonic versions with time travel") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s1", topics = 2, numMessages = 1000)
     ProduceJob.produceBatch(spark, root, "s1", topics = 2, numMessages = 500)
     assert(Snapshots.versions(root, "s1") == Seq(0, 1))
@@ -26,7 +26,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("snapshot isolation: files appended after a commit stay invisible") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s2", topics = 1, numMessages = 300)
     val v0 = Snapshots.read(spark, root, "s2", Some(0))
     // append WITHOUT a commit — raw directory read would see it
@@ -41,7 +41,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("partition column is recovered through the snapshot read") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s3", topics = 3, numMessages = 300)
     val topics = Snapshots.read(spark, root, "s3")
       .select("topic").distinct().collect().map(_.getString(0)).sorted
@@ -49,7 +49,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("schema evolution: appended columns merge; old rows read as null") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s5", topics = 1, numMessages = 100)
     // producer upgrade: new optional column lands in later files
     ProduceJob.personProjection(spark.range(100, 200).toDF("cnt"), "cnt", "s5", 1)
@@ -65,7 +65,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("addColumn: default fill for old files, physical values for new, old readers untouched") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "ev", topics = 1, numMessages = 100) // v0
     assert(Snapshots.addColumn(root, "ev", "tier", "STRING", Some("'std'")) == 1)
     // post-evolution append carries the column physically, with
@@ -92,7 +92,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("addColumn: CDC across the boundary; rewrites materialize the evolved schema") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "ev2", topics = 1, numMessages = 100) // v0
     Snapshots.addColumn(root, "ev2", "tier", "STRING", Some("'std'")) // v1
     // merge AFTER evolution updates two pre-evolution rows
@@ -120,7 +120,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("renameColumn: old files re-label at read time, old readers keep the old name") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "rn", topics = 1, numMessages = 100) // v0
     assert(Snapshots.currentColumns(root, "rn").contains("name"))
     assert(Snapshots.renameColumn(root, "rn", "name", "full_name") == 1)
@@ -155,7 +155,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("dropColumn hides values; re-adding the name yields defaults, never the dropped bytes") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "dr", topics = 1, numMessages = 100) // v0
     assert(Snapshots.dropColumn(root, "dr", "address") == 1)
     val afterDrop = Snapshots.read(spark, root, "dr")
@@ -176,7 +176,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("schema evolution invalidates stale stats: re-added column declines bounds, pruning keeps pre-event files") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "ss", topics = 1, numMessages = 100) // v0: ba 0..99
     // pre-evolution: footer stats are live, bounds are exact
     assert(Snapshots.metadataLongBounds(root, "ss", "ba").contains((0L, 99L)))
@@ -197,7 +197,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("delete on a pre-evolution file materializes defaults into survivors") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "dm", topics = 1, numMessages = 100) // v0
     Snapshots.addColumn(root, "dm", "tier", "STRING", Some("'std'")) // v1
     // the deleted file predates the addcol; its survivor rewrite must
@@ -215,7 +215,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("deleteMoR hides rows via deletion vectors without touching a data file") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "mr", topics = 2, numMessages = 1000) // v0
     val v0files = Snapshots.snapshot(root, "mr", Some(0)).get.files
     val v1 = Snapshots.deleteMoR(spark, root, "mr", col("ba") < 100, txn = Some("mr-1"))
@@ -244,7 +244,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("rewrites materialize deletion vectors; restore past a MoR delete undoes it") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites {
       ProduceJob.produceBatch(spark, root, "mm", topics = 2, numMessages = 1000) // v0
     }
@@ -275,7 +275,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("vacuum drops deletion-vector sidecars with the versions that pinned them") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "mv", topics = 1, numMessages = 100) // v0
     val v1 = Snapshots.deleteMoR(spark, root, "mv", col("ba") < 10) // v1
     Snapshots.compact(spark, root, "mv") // v2: materializes; dv carried but stale
@@ -294,7 +294,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("deleteMoR fills added-column defaults before matching the predicate") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "me", topics = 1, numMessages = 100) // v0
     Snapshots.addColumn(root, "me", "tier", "STRING", Some("'std'")) // v1
     // every row predates the column: the predicate must see the fill
@@ -305,15 +305,15 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("snapshot stream source: commits are batches, checkpoint restart resumes exactly") {
-    val root = Files.createTempDirectory("graft_snap").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val root = tempDir("graft_snap").toString
+    val ckpt = tempDir("graft_ckpt").toString
     ProduceJob.produceBatch(spark, root, "ss", topics = 1, numMessages = 300) // v0
     ProduceJob.produceBatch(spark, root, "ss", topics = 1, numMessages = 200) // v1
     Snapshots.deleteMoR(spark, root, "ss", col("ba") < 10) // v2: no files → empty batch
     // a parquet sink: the memory sink cannot recover a checkpoint,
     // and resume-exactly is the point of this test. Counts below are
     // CUMULATIVE over the sink directory.
-    val out = Files.createTempDirectory("graft_stream_out").toString
+    val out = tempDir("graft_stream_out").toString
     def drain(): Long = {
       val q = spark.readStream
         .format(classOf[graft.streaming.SnapshotSourceProvider].getName)
@@ -352,7 +352,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("compaction rewrites small files, preserves data and time travel") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s6", topics = 2, numMessages = 400)
     ProduceJob.produceBatch(spark, root, "s6", topics = 2, numMessages = 200)
     val before = Snapshots.snapshot(root, "s6").get
@@ -378,7 +378,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("compaction honors the target file size: big partitions split, small skip") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s6b", topics = 1, numMessages = 2000)
     ProduceJob.produceBatch(spark, root, "s6b", topics = 1, numMessages = 2000)
     ProduceJob.produceBatch(spark, root, "s6b", topics = 1, numMessages = 2000)
@@ -404,7 +404,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("concurrent commit to the same version loses deterministically") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s7", topics = 1, numMessages = 100)
     val taken = Snapshots.versions(root, "s7").max
     // two writers racing to the same version: the second CREATE_NEW
@@ -421,7 +421,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("vacuum drops pre-compaction files and old versions") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s8", topics = 1, numMessages = 300)
     ProduceJob.produceBatch(spark, root, "s8", topics = 1, numMessages = 300)
     val vCompact = Snapshots.compact(spark, root, "s8")
@@ -435,7 +435,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("incremental read: changes between versions, compaction excluded") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s9", topics = 1, numMessages = 200)  // v0
     ProduceJob.personProjection(spark.range(200, 500).toDF("cnt"), "cnt", "s9", 1)
       .write.mode("append").partitionBy("topic")
@@ -459,7 +459,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("orphaned compaction rewrites are never adopted by a later commit") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s10", topics = 1, numMessages = 200)
     val tableDir = java.nio.file.Paths.get(graft.ingest.Topics.tableDir(root, "s10"))
     // simulate a compaction that wrote its rewrite but DIED before its
@@ -487,7 +487,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("merge updates matched rows, inserts new keys, rewrites only matched files") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites {
       ProduceJob.produceBatch(spark, root, "s11", topics = 2, numMessages = 1000)
     }
@@ -515,7 +515,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("merge transaction ids make replays no-ops") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s12", topics = 1, numMessages = 200)
     val src = ProduceJob.personProjection(
       spark.range(100, 300).toDF("cnt"), "cnt", "s12", 1)
@@ -534,7 +534,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("manifest stats prune range reads to overlapping files only") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s14", topics = 1, numMessages = 4000) }
     val snap = Snapshots.snapshot(root, "s14").get
     assert(snap.stats.exists(_.column == "ba")) // footer stats committed
@@ -551,7 +551,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("streaming upsert merges each micro-batch exactly once") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s15", topics = 1, numMessages = 100)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -584,7 +584,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("applyChangeBatch replicates a feed window in one pass; replays are no-ops") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     // source: v0 append 0..99, v1 merge 50..119, v2 delete ba%10=0
     ProduceJob.produceBatch(spark, root, "cs", topics = 1, numMessages = 100)
     Snapshots.merge(spark, root, "cs",
@@ -611,7 +611,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("applyChangeBatch keeps rows a merge-on-read DELETE removed from a file it rewrites") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "cd", topics = 1, numMessages = 1000) // v0
     assert(Snapshots.snapshot(root, "cd").get.files.size == 1, "fixture must be one file")
     Snapshots.deleteMoR(spark, root, "cd", col("ba") === 5) // v1
@@ -628,9 +628,24 @@ class SnapshotSpec extends SparkTestBase {
     assert(after.filter(col("ba") === 6).select("name").head().getString(0) == "chg")
   }
 
+  test("applyChangeBatch reads the log only for its snapshot, schema events and commit") {
+    val root = tempDir("graft_snap").toString
+    ProduceJob.produceBatch(spark, root, "co", topics = 1, numMessages = 1000) // v0
+    Snapshots.deleteMoR(spark, root, "co", col("ba") === 5) // v1
+    val feed = Snapshots.read(spark, root, "co").filter(col("ba") === 6)
+      .withColumn("name", lit("chg"))
+      .withColumn("_change_type", lit("update_postimage"))
+      .withColumn("_commit_version", lit(1L))
+    val before = Snapshots.logOpens.get()
+    Snapshots.applyChangeBatch(spark, root, "co", feed, Seq("ba"))
+    val opens = Snapshots.logOpens.get() - before
+    assert(Snapshots.snapshot(root, "co").get.version == 2)
+    assert(opens <= 8, s"applyChangeBatch opened $opens log files")
+  }
+
   test("AggView: incremental refresh tracks updates/deletes; empty groups leave; replays no-op") {
     import graft.ingest.AggView
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "av", topics = 1, numMessages = 100) // v0
     // seed at v0: one group (hangc, 100)
     AggView.refresh(spark, root, "av", root, "avm", Seq("name"), Seq("ba"))
@@ -664,7 +679,7 @@ class SnapshotSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "ss", topics = 1, numMessages = 100) // src v0
     Snapshots.read(spark, root, "ss", Some(0))
       .write.mode("append").partitionBy("topic")
@@ -700,7 +715,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("delete removes matching rows copy-on-write, untouched files survive") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s17", topics = 1, numMessages = 1000) }
     val v0 = Snapshots.snapshot(root, "s17").get
     val v = Snapshots.delete(spark, root, "s17", col("ba") < 100, txn = Some("d1"))
@@ -721,7 +736,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("clustering rewrite tightens file stats and sharpens pruning") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     // worst layout: round-robin shuffled writes put the full ba range
     // in every file, so range pruning can skip nothing
     ProduceJob.personProjection(spark.range(4000).toDF("cnt"), "cnt", "s16", 1)
@@ -745,7 +760,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("CHECK constraints refuse violating merges atomically") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s18", topics = 1, numMessages = 100)
     Snapshots.setConstraint(root, "s18", "ba_bounded", "ba >= 0 AND ba < 10000")
     Snapshots.setConstraint(root, "s18", "age_valid", "age BETWEEN 0 AND 99")
@@ -770,7 +785,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("delete keeps rows where the predicate evaluates to NULL") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     // tag: 'x' on ba<10 (delete targets), NULL on 10<=ba<20, 'keep' above —
     // all three classes land in the same files, so the rewrite path sees
     // null-predicate rows alongside true matches
@@ -789,7 +804,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("concurrent rewrites over the same files conflict instead of committing") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s20", topics = 1, numMessages = 1000) }
     val snap = Snapshots.snapshot(root, "s20").get
     assert(snap.files.size >= 2)
@@ -816,7 +831,7 @@ class SnapshotSpec extends SparkTestBase {
     // put one of f's rows into a deletion vector. Committing the
     // rewrite drops f, and with it the vector's only target, so its
     // output (here a byte copy of f) would bring the row back.
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s22", topics = 1, numMessages = 1000) }
     val read0 = Snapshots.snapshot(root, "s22").get
     val f = read0.files.head
@@ -836,7 +851,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("a deletion vector on files a rewrite does not drop does not conflict") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s22d", topics = 1, numMessages = 1000) }
     val read0 = Snapshots.snapshot(root, "s22d").get
     assert(read0.files.size >= 2)
@@ -855,7 +870,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("a deletion vector committed before a rewrite's read does not conflict") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s23", topics = 1, numMessages = 1000) }
     val f = Snapshots.snapshot(root, "s23").get.files.head
     val tableDir = java.nio.file.Paths.get(graft.ingest.Topics.tableDir(root, "s23"))
@@ -863,7 +878,7 @@ class SnapshotSpec extends SparkTestBase {
     Snapshots.deleteMoR(spark, root, "s23", col("ba") === victim)
     // the rewrite reads after the DELETE: its input applies the vector
     val read1 = Snapshots.snapshot(root, "s23").get
-    val tmp = Files.createTempDirectory("graft_snap_rw")
+    val tmp = tempDir("graft_snap_rw")
     Snapshots.readFileSubset(spark, root, "s23", Seq(f), Some(read1.version)).drop("topic")
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).iterator().asScala.find(_.toString.endsWith(".parquet")).get
@@ -877,7 +892,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("vacuum keeps in-flight rewrite output inside the grace window") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s21", topics = 1, numMessages = 200)
     val tableDir = java.nio.file.Paths.get(graft.ingest.Topics.tableDir(root, "s21"))
     // an in-flight compaction wrote its marked output but has not yet
@@ -900,7 +915,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("incremental read: delete commits contribute no changes") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s22", topics = 1, numMessages = 500) // v0
     val vDel = Snapshots.delete(spark, root, "s22", col("ba") < 100)
     // the delete's added files are survivor rewrites — not new rows
@@ -915,7 +930,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("change feed: row-grain inserts, update post-images, delete pre-images") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s25", topics = 1, numMessages = 400) } // v0
     val src = ProduceJob.personProjection(
       spark.range(300, 500).toDF("cnt"), "cnt", "s25", 1)
@@ -974,7 +989,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("footer stats cover double and string columns; typed pruning is exact-conservative") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     import spark.implicits._
     (0L until 4000L).map(i => (i, i / 40.0, f"doc${i}%06d"))
       .toDF("ba", "weight", "doc_id")
@@ -1003,7 +1018,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("null-count stats: IS NULL / IS NOT NULL conjuncts skip files") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     val dir = graft.ingest.Topics.tableDir(root, "nn")
     def put(lo: Int, hi: Int, v: org.apache.spark.sql.Column): Unit = {
       ProduceJob.personProjection(spark.range(lo, hi).toDF("cnt"), "cnt", "nn", 1)
@@ -1036,7 +1051,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("readWhere prunes from arbitrary predicates across column types") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     import spark.implicits._
     (0L until 4000L).map(i => (i, i / 40.0, f"doc${i}%06d", s"r$i"))
       .toDF("ba", "weight", "doc_id", "payload")
@@ -1076,7 +1091,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("Z-order clustering makes pruning compose across columns") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     import spark.implicits._
     // two INDEPENDENT dimensions (x, y): single-column clustering can
     // serve only one of them; start hash-shuffled so nothing prunes
@@ -1111,7 +1126,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("unknown version is refused") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s4", topics = 1, numMessages = 10)
     intercept[RuntimeException] {
       Snapshots.read(spark, root, "s4", Some(99))
@@ -1119,7 +1134,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("restore rolls back to a version, preserves history, and feeds no rows") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s25", topics = 1, numMessages = 1000) // v0
     Snapshots.delete(spark, root, "s25", col("ba") % 10 === 0) // v1: 900 left
     assert(Snapshots.read(spark, root, "s25").count() == 900)
@@ -1141,7 +1156,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("vacuum after restore keeps the re-pinned files") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s26", topics = 1, numMessages = 500) // v0
     Snapshots.delete(spark, root, "s26", col("ba") >= 250) // v1: rewrite drops half
     val v2 = Snapshots.restore(root, "s26", toVersion = 0)
@@ -1154,7 +1169,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("write-audit-publish: staged commits are invisible until published") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "w1", topics = 1, numMessages = 400) // v0
     // stage a batch: the version file exists, default readers skip it
     ProduceJob.personProjection(spark.range(400, 600).toDF("cnt"), "cnt", "w1", 1)
@@ -1183,7 +1198,7 @@ class SnapshotSpec extends SparkTestBase {
     // idempotently re-acknowledgeable and publishable, so the
     // idempotent lookup runs BEFORE the charset require. New stagings
     // still refuse.
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "w7", topics = 1, numMessages = 200) // v0
     ProduceJob.personProjection(spark.range(200, 300).toDF("cnt"), "cnt", "w7", 1)
       .write.mode("append").partitionBy("topic")
@@ -1205,7 +1220,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("write-audit-publish: a commit landing mid-audit is preserved") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "w2", topics = 1, numMessages = 300) // v0
     ProduceJob.personProjection(spark.range(300, 500).toDF("cnt"), "cnt", "w2", 1)
       .write.mode("append").partitionBy("topic")
@@ -1221,7 +1236,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("abandoned staged commits never publish and never surface") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "w3", topics = 1, numMessages = 200) // v0
     ProduceJob.personProjection(spark.range(200, 260).toDF("cnt"), "cnt", "w3", 1)
       .write.mode("append").partitionBy("topic")
@@ -1248,7 +1263,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("dropStaged removes the staged CHECKPOINT too; the reallocated version resolves to the new commit") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 2
     try {
@@ -1277,7 +1292,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("a stale checkpoint at a reallocated version is replaced, never trusted (crashed dropStaged)") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     val iv = Snapshots.checkpointInterval
     Snapshots.checkpointInterval = 2
     try {
@@ -1301,7 +1316,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("dropStaged refuses to drop a published audit") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "w4", topics = 1, numMessages = 100)
     ProduceJob.personProjection(spark.range(100, 150).toDF("cnt"), "cnt", "w4", 1)
       .write.mode("append").partitionBy("topic")
@@ -1313,7 +1328,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("tags are immutable named refs resolving through later history") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "t1", topics = 1, numMessages = 100) // v0
     Snapshots.tag(root, "t1", "release-1", 0)
     ProduceJob.produceBatch(spark, root, "t1", topics = 1, numMessages = 900) // v1
@@ -1328,7 +1343,7 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("partition-layout evolution: stats pruning bites on both generations") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap").toString
     def gen(lo: Long, hi: Long) = spark.range(lo, hi)
       .select(col("id").as("ba"), expr("id % 32").as("x"),
         expr("(id DIV 32) % 32").as("y"))
@@ -1362,7 +1377,7 @@ class SnapshotSpec extends SparkTestBase {
     // the expectation is computed independently of updateWhere: the
     // same assignments as a plain select(when(pred, …)) over a
     // time-travel read of the pre-image
-    val root = Files.createTempDirectory("graft_updpath").toString
+    val root = tempDir("graft_updpath").toString
     ProduceJob.produceBatch(spark, root, "u", topics = 1, numMessages = 200)
     val pred = col("ba") % 3 === 0 && col("ba") < 100
     val sets = Map("name" -> concat(lit("u"), col("ba")), "age" -> (col("age") + 1))
@@ -1391,7 +1406,7 @@ class SnapshotSpec extends SparkTestBase {
     // upstream stage — a tiny scan feeding a Generate (explode) must
     // NOT collapse to one task. The shrink floors at cur/8 when the
     // plan carries opaque/row-exploding work.
-    val root = Files.createTempDirectory("graft_szbound").toString
+    val root = tempDir("graft_szbound").toString
     val exploding = spark.range(0, 1000, 1, 32).toDF("ba")
       .select(col("ba"), explode(array(lit(1), lit(2))).as("x"))
     Snapshots.appendBatch(spark, root, "sz", exploding)

@@ -1,13 +1,41 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite (lazy; GraftSession.getOrCreate
   * reuses the same session across suites in one JVM run). */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.local(cpus = 4, shufflePartitions = 8)
   val sf: String = "/root/testdata/sf0.001"
+
+  private val tempRoots = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A fresh directory under the system temp dir, deleted with
+    * everything under it after the suite. */
+  def tempDir(prefix: String): Path = {
+    val p = Files.createTempDirectory(prefix)
+    tempRoots.add(p)
+    p
+  }
+
+  /** Delete `root` and everything under it. */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root))
+      Using.resource(Files.walk(root))(_.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists))
+
+  override protected def afterAll(): Unit =
+    try tempRoots.asScala.foreach { p =>
+      try deleteTree(p)
+      catch { case NonFatal(e) => System.err.println(s"[test] could not delete $p: $e") }
+    } finally super.afterAll()
 
   def run(name: String): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf)

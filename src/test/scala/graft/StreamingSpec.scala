@@ -401,7 +401,6 @@ class StreamingSpec extends SparkTestBase {
     // r15 (r14 ADVICE medium): the footer path must convert per the
     // parquet LogicalTypeAnnotation unit, never assume micros — a
     // MILLIS fixture (same INT64 physical) was 1000x off before.
-    import java.nio.file.Files
     def expected(dir: String): Long = {
       val raw = spark.read.parquet(Tables.path(dir, "events"))
       val micros = raw.schema("ts").dataType match {
@@ -416,17 +415,17 @@ class StreamingSpec extends SparkTestBase {
     val base = spark.range(1, 1000)
       .selectExpr("timestamp_micros(1700000000000000 + id * 1000000) as ts", "id")
     // (a) TIMESTAMP(MICROS) — the session default
-    val dMicros = Files.createTempDirectory("graft_tsenc").toString
+    val dMicros = tempDir("graft_tsenc").toString
     base.write.parquet(Tables.path(dMicros, "events")); check(dMicros)
     // (b) TIMESTAMP(MILLIS) — same physical INT64, 1000x smaller values
-    val dMillis = Files.createTempDirectory("graft_tsenc").toString
+    val dMillis = tempDir("graft_tsenc").toString
     val prior = spark.conf.get("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
     try base.write.parquet(Tables.path(dMillis, "events"))
     finally spark.conf.set("spark.sql.parquet.outputTimestampType", prior)
     check(dMillis)
     // (c) plain INT64 epoch-nanos (the events fixture contract)
-    val dNanos = Files.createTempDirectory("graft_tsenc").toString
+    val dNanos = tempDir("graft_tsenc").toString
     spark.range(1, 1000)
       .selectExpr("1700000000000000000 + id * 1000000000 as ts", "id")
       .write.parquet(Tables.path(dNanos, "events"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.SparkTestBase
 import graft.ingest.{ProduceJob, Snapshots}
 
@@ -15,7 +13,7 @@ import graft.ingest.{ProduceJob, Snapshots}
 class DsvLogCostSpec extends SparkTestBase {
 
   test("a DSv2 query against a long-history table opens O(interval) log files, not O(history)") {
-    val root = Files.createTempDirectory("graft_dsvlog").toString
+    val root = tempDir("graft_dsvlog").toString
     // 25 commits: tail of 4 deltas past the v20 checkpoint
     (0 until 25).foreach { i =>
       ProduceJob.produceBatch(spark, root, "c", topics = 1, numMessages = 10 + i)

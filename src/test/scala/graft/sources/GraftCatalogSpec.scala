@@ -325,7 +325,7 @@ class GraftCatalogSpec extends SparkTestBase {
     spark.sql(s"CREATE TABLE graft.$ns.s (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.s SELECT id FROM range(0, 100)")   // v0
     spark.sql(s"INSERT INTO graft.$ns.s SELECT id FROM range(100, 150)") // v1
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mbr_ckpt").toString
+    val ckpt = tempDir("graft_mbr_ckpt").toString
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
       val q = spark.readStream.table(s"graft.$ns.s")

@@ -276,7 +276,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("INSERT OVERWRITE replaces the table in one commit; old versions stay readable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_ow").toString
+    val dir = tempDir("graft_dsv2_ow").toString
     ProduceJob.produceBatch(spark, dir, "ow", topics = 1, numMessages = 1000) // v0: ba 0..999
     val t = s"$dir/ow"
     // overwrite with a transformed subset of itself through the DSv2 writer
@@ -315,7 +315,7 @@ class GraftSourceSpec extends SparkTestBase {
   test("writeStream.format(graft): micro-batches commit exactly once; Complete mode replaces") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_sink").toString
+    val dir = tempDir("graft_dsv2_sink").toString
     val ckpt = s"$dir/_ckpt"
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[Long]
@@ -360,7 +360,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("replaceWhere overwrites only the matched region, in one commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_rw").toString
+    val dir = tempDir("graft_dsv2_rw").toString
     ProduceJob.produceBatch(spark, dir, "rw", topics = 1, numMessages = 1000) // v0: ba 0..999
     val t = s"$dir/rw"
     // region replace through the write option: ba>=900 → 10 new rows
@@ -398,7 +398,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("readStream.format(graft): commits stream as micro-batches; checkpoint resumes at the next commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_src").toString
+    val dir = tempDir("graft_dsv2_src").toString
     ProduceJob.produceBatch(spark, dir, "p", topics = 1, numMessages = 100) // v0: ba 0..99
     Snapshots.appendBatch(spark, dir, "p",
       ProduceJob.personProjection(spark.range(100, 150).toDF("cnt"), "cnt", "p", 1),
@@ -436,7 +436,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("readChangeFeed option: the CDC feed as a batch relation and as a stream") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdf").toString
+    val dir = tempDir("graft_cdf").toString
     ProduceJob.produceBatch(spark, dir, "c", topics = 1, numMessages = 100) // v0: ba 0..99
     spark.sql(s"DROP TABLE IF EXISTS graft_cdf_spec")
     spark.sql(s"CREATE TABLE graft_cdf_spec USING graft OPTIONS (path '$dir/c')")
@@ -493,7 +493,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("a bounded CDC window / stream batch never touches files outside its commits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdfw").toString
+    val dir = tempDir("graft_cdfw").toString
     // three plain appends (produceBatch would add internal
     // produce/compact versions and shift the window)
     Snapshots.appendBatch(spark, dir, "w",
@@ -546,7 +546,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("mergeSchema: appends evolve new columns, null-fill missing, refuse type changes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ms").toString
+    val dir = tempDir("graft_ms").toString
     spark.sql(s"DROP TABLE IF EXISTS ms_spec")
     spark.sql(s"CREATE TABLE ms_spec (id BIGINT, v STRING) USING graft OPTIONS (path '$dir/t')")
     spark.sql("INSERT INTO ms_spec SELECT id, 'x' FROM range(0, 10)")
@@ -585,7 +585,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("txnAppId/txnVersion make writes idempotent across retries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_txn").toString
+    val dir = tempDir("graft_txn").toString
     ProduceJob.produceBatch(spark, dir, "w", topics = 1, numMessages = 100) // v0
     def append(ver: String): Unit =
       spark.read.format("graft").load(s"$dir/w").limit(10)
@@ -602,7 +602,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("txn ids committed under the LEGACY (un-prefixed) encoding still match on replay") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_txn_legacy").toString
+    val dir = tempDir("graft_txn_legacy").toString
     ProduceJob.produceBatch(spark, dir, "w", topics = 1, numMessages = 100) // v0
     // a pre-round-9 log carries the bare "user-$app-$v" form — plant
     // one the way an old writer would have committed it
@@ -633,7 +633,7 @@ class GraftSourceSpec extends SparkTestBase {
     // legitimate FIRST write. Dash-bearing pairs skip the legacy
     // lookup entirely and commit under the unambiguous length-prefixed
     // encoding.
-    val dir = java.nio.file.Files.createTempDirectory("graft_txn_dash").toString
+    val dir = tempDir("graft_txn_dash").toString
     ProduceJob.produceBatch(spark, dir, "w", topics = 1, numMessages = 100) // v0
     // the OTHER pair's pre-upgrade commit, as an old writer left it
     Snapshots.commit(dir, "w", maxPos = 99, txn = Some("user-a-1-2"))
@@ -657,7 +657,7 @@ class GraftSourceSpec extends SparkTestBase {
     // — a '"', '\\', ']' or newline in either option used to corrupt
     // the table's history (round-12 verdict). The writer now refuses
     // at the door, naming the option.
-    val dir = java.nio.file.Files.createTempDirectory("graft_txn_bad").toString
+    val dir = tempDir("graft_txn_bad").toString
     ProduceJob.produceBatch(spark, dir, "w", topics = 1, numMessages = 100) // v0
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: causes(t.getCause)
@@ -681,7 +681,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("CDC column pruning reaches the change-feed scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdfp2").toString
+    val dir = tempDir("graft_cdfp2").toString
     ProduceJob.produceBatch(spark, dir, "p", topics = 1, numMessages = 50)
     val df = spark.read.format("graft").option("readChangeFeed", "true")
       .load(s"$dir/p").select("ba", "_change_type")
@@ -692,7 +692,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("SQL DELETE FROM routes to one merge-on-read commit; untranslatable predicates refuse") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_del").toString
+    val dir = tempDir("graft_dsv2_del").toString
     ProduceJob.produceBatch(spark, dir, "dl", topics = 1, numMessages = 1000) // v0: ba 0..999
     val tbl = "graft_del_spec"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -712,7 +712,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("timestampAsOf resolves the version committed at or before the instant") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_tt").toString
+    val dir = tempDir("graft_dsv2_tt").toString
     ProduceJob.produceBatch(spark, dir, "tt", topics = 1, numMessages = 100) // v0
     Snapshots.appendBatch(spark, dir, "tt",
       ProduceJob.personProjection(spark.range(100, 150).toDF("cnt"), "cnt", "tt", 1),
@@ -778,7 +778,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("startingTimestamp/endingTimestamp resolve CDC windows and stream floors by commit time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts").toString
+    val dir = tempDir("graft_ts").toString
     ProduceJob.produceBatch(spark, dir, "w", topics = 1, numMessages = 100) // v0
     ProduceJob.produceBatch(spark, dir, "w", topics = 1, numMessages = 50)  // v1
     ProduceJob.produceBatch(spark, dir, "w", topics = 1, numMessages = 25)  // v2
@@ -821,7 +821,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("maxFilesPerTrigger / maxBytesPerTrigger pace micro-batches by added files, never stall") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_adm").toString
+    val dir = tempDir("graft_adm").toString
     // 3 commits of 4 files each (range default parallelism under the
     // shared session writes 4 splits)
     (0 until 3).foreach { i =>

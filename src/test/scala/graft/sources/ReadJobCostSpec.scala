@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.graftspec.JobCounter
 
 import graft.SparkTestBase
@@ -47,7 +45,7 @@ class ReadJobCostSpec extends SparkTestBase {
   }
 
   test("Snapshots.tableSchema runs no Spark job") {
-    val root = Files.createTempDirectory("graft_jobs").toString
+    val root = tempDir("graft_jobs").toString
     ProduceJob.produceBatch(spark, root, "t", topics = 4, numMessages = 2000)
     val (schema, n) = jobs(Snapshots.tableSchema(spark, root, "t"))
     assert(schema.fieldNames.toSeq ==
