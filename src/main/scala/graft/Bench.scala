@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{count, lit}
@@ -163,7 +165,11 @@ object Bench {
           "\"cpu_mops\":\\s*([0-9.]+)".r
             .findFirstMatchIn(Files.readString(p)).map(_.group(1).toDouble)
         else None
-      } catch { case _: Throwable => None }
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] record cpu_mops read from $detailPath failed: $e")
+          None
+      }
     val fallbackMops = 577.0 * 1.1
     val minCpuMops = sys.env.get("SPARK_GRAFT_MIN_CPU_MOPS").map(_.toDouble)
       .orElse(recordMops.map(m => (m * 0.94).max(fallbackMops)))
@@ -201,7 +207,7 @@ object Bench {
     try {
       spark.range(100000).selectExpr("sum(id)", "count(distinct id % 7)").collect()
       Tables.lineitem(spark, sfDir).agg(count(lit(1))).collect()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] warm-up (lineitem count) failed: $e") }
     // untimed fixture staging: the lakehouse queries read snapshot
     // tables built once in a content-keyed staging dir; constructing
     // each query's frame forces that build NOW so measurements capture
@@ -226,7 +232,8 @@ object Bench {
       queries.PipelineQueries, queries.CurationQueries,
       queries.AnalyticsQueries, queries.TrainingQueries)
       .foreach(_.defs.foreach { d =>
-        try { d.run(spark, sfDir); () } catch { case _: Throwable => () }
+        try { d.run(spark, sfDir); () }
+        catch { case NonFatal(e) => System.err.println(s"[bench] frame staging of ${d.name} failed: $e") }
       })
     // the streaming queries' one shared staged artifact (the chunked
     // events dir with ascending mtimes) is the same class of fixture:
@@ -236,7 +243,10 @@ object Bench {
     // replay measurement order-independent; the replays themselves
     // stay fully timed (round 14 opt).
     try { queries.StreamingQueries.stageEventsDir(spark, sfDir); () }
-    catch { case _: Throwable => () }
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] events staging (streaming queries) failed: $e")
+    }
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // per-query hygiene: no cached plans/blocks may leak across

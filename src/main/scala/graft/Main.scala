@@ -28,7 +28,7 @@ object Main {
     }
     val root = flag("--root", "/tmp/graft/topics")
     val prefix = positional.headOption.getOrElse {
-      System.err.println("missing <topicPrefix>"); usage(); sys.exit(2); ""
+      System.err.println("missing <topicPrefix>"); usage(); sys.exit(2)
     }
     val spark = GraftSession.local()
     try {

@@ -8,9 +8,10 @@ import scala.util.control.NonFatal
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.{Column, DataFrame, GraftStreamingShim, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, InSet, OuterReference, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, Expression, InSet, Literal, OuterReference, SubqueryExpression}
 import org.apache.spark.sql.classic.ColumnConversions
 import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.sources
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Versioned snapshot log for topic tables — the minimal transactional
@@ -409,17 +410,17 @@ object Snapshots {
         StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       // a mid-write failure (disk full) must not leak a partial file
       // into the log dir. close() itself can throw on the SAME
-      // condition (it flushes the buffered remainder), so the cleanup
-      // path swallows its failure — otherwise the delete would be
-      // skipped and the original exception masked (round-13 ADVICE);
-      // the delete is guarded for the same reason. The success-path
-      // close is inside the try so a flush-time disk-full also cleans
-      // up (a second close on the already-closed writer is a no-op).
+      // condition (it flushes the buffered remainder), so each cleanup
+      // step's failure rides on the original as a suppressed exception
+      // — otherwise the delete would be skipped and the original
+      // masked. The success-path close is inside the try so a
+      // flush-time disk-full also cleans up (a second close on the
+      // already-closed writer is a no-op).
       try { CommitLog.write(w, entry); w.close() }
       catch {
         case e: Throwable =>
-          try w.close() catch { case _: Throwable => () }
-          try Files.deleteIfExists(p) catch { case _: Throwable => () }
+          try w.close() catch { case NonFatal(c) => e.addSuppressed(c) }
+          try Files.deleteIfExists(p) catch { case NonFatal(c) => e.addSuppressed(c) }
           throw e
       }
     }
@@ -1266,11 +1267,6 @@ object Snapshots {
         }
       }
 
-  /** [[AddedColumn]] events only (compat accessor). */
-  def addedColumns(root: String, prefix: String,
-                   upTo: Option[Int] = None): Seq[AddedColumn] =
-    schemaEvents(root, prefix, upTo).collect { case a: AddedColumn => a }
-
   /** ALTER TABLE … ADD COLUMN (Delta/Iceberg schema evolution): commit
     * a new version declaring `name ddlType`, optionally with a default
     * SQL literal. No data file is touched — the read path fills the
@@ -1490,33 +1486,76 @@ object Snapshots {
       s.iterator
     }.collect().distinct.toSeq
 
-  /** One column-range predicate in manifest-stat key space, paired
-    * with the exact Catalyst predicate the pruned read re-applies
-    * (stats narrow IO, never semantics). */
-  final case class StatRange(column: String, typ: String,
-                             loKey: Long, hiKey: Long,
-                             predicate: org.apache.spark.sql.Column)
+  /** One column range in manifest-stat key space: the files whose
+    * `typ` stat for `column` overlaps [loKey, hiKey] can match. */
+  final case class StatRange(column: String, typ: String, loKey: Long, hiKey: Long)
   object StatRange {
     def longRange(column: String, lo: Long, hi: Long): StatRange =
-      StatRange(column, "L", lo, hi, col(column) >= lo && col(column) <= hi)
+      StatRange(column, "L", lo, hi)
     def doubleRange(column: String, lo: Double, hi: Double): StatRange =
-      StatRange(column, "D", SortKeys.doubleKey(lo), SortKeys.doubleKey(hi),
-        col(column) >= lo && col(column) <= hi)
+      StatRange(column, "D", SortKeys.doubleKey(lo), SortKeys.doubleKey(hi))
     /** String bounds map to conservative prefix keys: every string in
       * [lo, hi] has a prefix key in [key(lo), key(hi)] because the
       * prefix map is monotone — overlap checks can keep extra files
       * but never skip a match. */
     def stringRange(column: String, lo: String, hi: String): StatRange =
-      StatRange(column, "S", SortKeys.stringKey(lo), SortKeys.stringKey(hi),
-        col(column) >= lo && col(column) <= hi)
+      StatRange(column, "S", SortKeys.stringKey(lo), SortKeys.stringKey(hi))
     /** `IS NULL` in nullness-domain key space: only files holding at
       * least one null (N-stat max = 1) can match. */
-    def isNull(column: String): StatRange =
-      StatRange(column, "N", 1L, 1L, col(column).isNull)
+    def isNull(column: String): StatRange = StatRange(column, "N", 1L, 1L)
     /** `IS NOT NULL`: only files holding at least one non-null value
       * (N-stat min = 0) can match — an all-null file is skipped. */
-    def isNotNull(column: String): StatRange =
-      StatRange(column, "N", 0L, 0L, col(column).isNotNull)
+    def isNotNull(column: String): StatRange = StatRange(column, "N", 0L, 0L)
+  }
+
+  /** Pushed V1 filters → manifest-stat ranges (conjuncts only; a
+    * filter that doesn't map is simply not used for pruning). Strict
+    * bounds widen to inclusive — stat overlap is conservative anyway.
+    * The one predicate-to-ranges translation: the DSv2 scan feeds it
+    * the filters Spark pushed, [[statRanges]] the conjuncts of a
+    * resolved condition. */
+  def toRanges(f: sources.Filter): Seq[StatRange] = {
+    def keyed(v: Any): Option[(Long, String)] = v match {
+      case l: Long => Some((l, "L"))
+      case i: Int => Some((i.toLong, "L"))
+      case s: Short => Some((s.toLong, "L"))
+      case d: Double => if (d.isNaN) None else Some((SortKeys.doubleKey(d), "D"))
+      case fl: Float => if (fl.isNaN) None else Some((SortKeys.doubleKey(fl.toDouble), "D"))
+      case s: String => Some((SortKeys.stringKey(s), "S"))
+      case _ => None
+    }
+    def bound(a: String, v: Any, lower: Boolean, upper: Boolean): Seq[StatRange] =
+      keyed(v).map { case (k, t) =>
+        StatRange(a, t, if (lower) k else Long.MinValue, if (upper) k else Long.MaxValue)
+      }.toSeq
+    f match {
+      case sources.And(l, r) => toRanges(l) ++ toRanges(r)
+      case sources.EqualTo(a, v) => bound(a, v, lower = true, upper = true)
+      case sources.GreaterThan(a, v) => bound(a, v, lower = true, upper = false)
+      case sources.GreaterThanOrEqual(a, v) => bound(a, v, lower = true, upper = false)
+      case sources.LessThan(a, v) => bound(a, v, lower = false, upper = true)
+      case sources.LessThanOrEqual(a, v) => bound(a, v, lower = false, upper = true)
+      case sources.IsNull(a) => Seq(StatRange.isNull(a))
+      case sources.IsNotNull(a) => Seq(StatRange.isNotNull(a))
+      case _ => Seq.empty
+    }
+  }
+
+  /** Stat ranges of a resolved condition: constant sub-expressions
+    * fold to literals (the analyzer wraps literals in casts), each
+    * top-level conjunct goes through Spark's own filter translation —
+    * the one that produces a scan's pushed filters — and then
+    * [[toRanges]]. Conjuncts that don't translate just don't prune. */
+  private[graft] def statRanges(cond: Expression): Seq[StatRange] = {
+    val folded = cond.transformUp {
+      case e if e.foldable && !e.isInstanceOf[Literal] =>
+        try Literal.create(e.eval(), e.dataType) catch { case NonFatal(_) => e }
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    conjuncts(folded).flatMap(c => GraftStreamingShim.translateFilter(c).toSeq.flatMap(toRanges))
   }
 
   /** The files of a snapshot that can hold `column` values in
@@ -1661,134 +1700,50 @@ object Snapshots {
   }
 
   /** [[pruneFilesMulti]] on a resolved snapshot and its schema events
-    * (the DML primitives hold both already). */
+    * (the DML primitives hold both already). The ranges on one
+    * (column, stat kind) intersect first, so each stat is looked up
+    * once however many bounds a predicate puts on its column. */
   private def prunedFiles(snap: Snapshot, events: Seq[SchemaEvent],
                           ranges: Seq[StatRange]): Seq[String] = {
-    val byCol = ranges.map(r =>
-      r -> snap.stats.filter(s => s.column == r.column && s.typ == r.typ)
-        .map(s => s.file -> s).toMap).toMap
-    // stats on files that predate a schema event touching the column
-    // describe a previous logical column — treat as absent (keep the
-    // file; stats narrow IO, never semantics)
-    val stale = ranges.map(_.column).distinct
-      .map(c => c -> statStaleFiles(events, c)).toMap
-    snap.files.filter(f => ranges.forall(r =>
-      stale(r.column).contains(f) ||
-        byCol(r).get(f).forall(s => s.max >= r.loKey && s.min <= r.hiKey)))
-  }
-
-  /** Range read through manifest data-skipping: only files whose
-    * min/max overlap [lo, hi] are opened (the predicate is still
-    * applied — stats narrow IO, never semantics). */
-  def readPruned(spark: SparkSession, root: String, prefix: String,
-                 column: String, lo: Long, hi: Long,
-                 version: Option[Int] = None): DataFrame =
-    readPrunedMulti(spark, root, prefix,
-      Seq(StatRange.longRange(column, lo, hi)), version)
-
-  /** Conjunctive range read through multi-column data skipping: only
-    * files whose stats overlap EVERY range are opened, then the exact
-    * predicates are re-applied. */
-  def readPrunedMulti(spark: SparkSession, root: String, prefix: String,
-                      ranges: Seq[StatRange],
-                      version: Option[Int] = None): DataFrame = {
-    require(ranges.nonEmpty, "readPrunedMulti needs at least one range")
-    val files = pruneFilesMulti(root, prefix, ranges, version)
-    val pred = ranges.map(_.predicate).reduce(_ && _)
-    if (files.isEmpty)
-      read(spark, root, prefix, version).filter(pred).limit(0)
-    else {
-      val snap = snapshot(root, prefix, version)
-      readFilesFilled(spark, root, prefix, files,
-        schemaEvents(root, prefix, snap.map(_.version)),
-        snap.map(_.dv).getOrElse(Seq.empty)).filter(pred)
+    val bounds = ranges.groupBy(r => (r.column, r.typ)).toSeq.map { case ((c, t), rs) =>
+      val st = snap.stats.filter(s => s.column == c && s.typ == t).map(s => s.file -> s).toMap
+      // stats on files that predate a schema event touching the column
+      // describe a previous logical column — treat as absent (keep the
+      // file; stats narrow IO, never semantics)
+      (st, statStaleFiles(events, c), rs.map(_.loKey).max, rs.map(_.hiKey).min)
     }
+    snap.files.filter(f => bounds.forall { case (st, stale, lo, hi) =>
+      stale.contains(f) || st.get(f).forall(s => s.max >= lo && s.min <= hi)
+    })
   }
 
   /** Predicate-driven pruned read: the filter a caller would hand to
     * `.filter(...)` anyway, analyzed for manifest skipping. Top-level
-    * AND conjuncts of the shape `column (=|<|<=|>|>=) literal` (either
-    * operand order) on INT64/DOUBLE/STRING columns become stat ranges;
-    * everything else is ignored for pruning. The FULL predicate is
-    * re-applied after the scan, so unrecognized conjuncts cost skipping
-    * opportunities, never correctness — the same contract a DSv2
-    * SupportsPushDownFilters source gives the optimizer. */
+    * conjuncts Spark translates into filters of the shape `column
+    * (=|<|<=|>|>=) literal` (either operand order) or `IS [NOT] NULL`
+    * become stat ranges ([[statRanges]]); everything else is ignored
+    * for pruning. The FULL predicate is re-applied after the scan, so
+    * unrecognized conjuncts cost skipping opportunities, never
+    * correctness — the same contract a DSv2 SupportsPushDownFilters
+    * source gives the optimizer. */
   def readWhere(spark: SparkSession, root: String, prefix: String,
                 predicate: org.apache.spark.sql.Column,
                 version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    val table = read(spark, root, prefix, version)
+    val snap = snapshot(root, prefix, version).getOrElse(
+      sys.error(s"no snapshot for $prefix${version.map(" v" + _).getOrElse("")}"))
+    val events = schemaEvents(root, prefix, Some(snap.version))
+    val table =
+      if (snap.files.isEmpty) spark.emptyDataFrame
+      else readFilesFilled(spark, root, prefix, snap.files, events, snap.dv)
     // the ANALYZED filter condition: attributes resolved, literal casts
     // inserted — the same tree a DSv2 pushdown would receive
-    val predExpr = table.filter(predicate).queryExecution.analyzed
-      .collectFirst { case f: LFilter => f.condition }
-      .getOrElse(return table.filter(predicate))
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
+    val cond = table.filter(predicate).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: Attribute => Some(a.name)
-      case _ => None
-    }
-    // a comparison operand is usable when it folds to a scalar (covers
-    // bare literals and the analyzer's inserted casts around them)
-    def litVal(e: Expression): Option[Any] =
-      if (e.foldable) Option(e.eval(null)) else None
-    def keyed(v: Any): Option[(Long, String)] = v match {
-      case l: Long => Some((l, "L"))
-      case i: Int => Some((i.toLong, "L"))
-      case s: Short => Some((s.toLong, "L"))
-      case d: Double => if (d.isNaN) None else Some((SortKeys.doubleKey(d), "D"))
-      case f: Float => if (f.isNaN) None else Some((SortKeys.doubleKey(f.toDouble), "D"))
-      case u: org.apache.spark.unsafe.types.UTF8String =>
-        Some((SortKeys.bytesKey(u.getBytes), "S"))
-      case _ => None
-    }
-    // one conjunct → (column, loKey, hiKey, typ) in stat-key space
-    def range(e: Expression): Option[(String, Long, Long, String)] = {
-      def bound(a: Expression, v: Expression, lower: Boolean, upper: Boolean) =
-        for {
-          c <- attrName(a)
-          value <- litVal(v)
-          (k, t) <- keyed(value)
-        } yield (c, if (lower) k else Long.MinValue, if (upper) k else Long.MaxValue, t)
-      e match {
-        case EqualTo(a, v) => bound(a, v, lower = true, upper = true)
-          .orElse(bound(v, a, lower = true, upper = true))
-        case GreaterThan(a, v) => bound(a, v, lower = true, upper = false)
-          .orElse(bound(v, a, lower = false, upper = true))
-        case GreaterThanOrEqual(a, v) => bound(a, v, lower = true, upper = false)
-          .orElse(bound(v, a, lower = false, upper = true))
-        case LessThan(a, v) => bound(a, v, lower = false, upper = true)
-          .orElse(bound(v, a, lower = true, upper = false))
-        case LessThanOrEqual(a, v) => bound(a, v, lower = false, upper = true)
-          .orElse(bound(v, a, lower = true, upper = false))
-        // nullness conjuncts prune through the N-stat's nullness
-        // domain — the same interval machinery as value ranges
-        case IsNull(a) => attrName(a).map(c => (c, 1L, 1L, "N"))
-        case IsNotNull(a) => attrName(a).map(c => (c, 0L, 0L, "N"))
-        case _ => None
-      }
-    }
-    // intersect all bounds per (column, typ): strict bounds are safe to
-    // widen to inclusive — stat overlap checks are conservative anyway
-    val ranges = conjuncts(predExpr).flatMap(range(_))
-      .groupBy(r => (r._1, r._4)).map { case ((c, t), rs) =>
-        StatRange(c, t, rs.map(_._2).max, rs.map(_._3).min,
-          org.apache.spark.sql.functions.lit(true))
-      }.toSeq
-    val files =
-      if (ranges.isEmpty) snapshot(root, prefix, version).map(_.files).getOrElse(Seq.empty)
-      else pruneFilesMulti(root, prefix, ranges, version)
+    val files = prunedFiles(snap, events, cond.toSeq.flatMap(statRanges))
     if (files.isEmpty) table.filter(predicate).limit(0)
-    else {
-      val snap = snapshot(root, prefix, version)
-      readFilesFilled(spark, root, prefix, files,
-        schemaEvents(root, prefix, snap.map(_.version)),
-        snap.map(_.dv).getOrElse(Seq.empty)).filter(predicate)
-    }
+    else if (files.size == snap.files.size) table.filter(predicate)
+    else readFilesFilled(spark, root, prefix, files, events, snap.dv).filter(predicate)
   }
 
   /** A specific file subset of a snapshot, read through the full
@@ -1841,22 +1796,18 @@ object Snapshots {
       schemaEvents(root, prefix, Some(snap.version)), snap.dv)
   }
 
-  /** Per-version file additions for a commit window — the
-    * change-attribution rule of [[readChanges]] (staged versions are
-    * invisible; compaction/delete/restore rewrites attribute nothing),
-    * exposed for streaming ADMISSION CONTROL (maxFilesPerTrigger /
-    * maxBytesPerTrigger): the scheduler sizes a micro-batch from the
-    * window's additions without planning a frame. Cost is O(window ×
-    * checkpointInterval) log reads — window-bounded, never O(table).
-    * On a STAGED-commit-heavy log (r9 advisor target) the cost gains
-    * only the op-probes that skip staged versions: one small-file read
-    * per staged version inside the window, plus the backward find for
-    * the first published base, which stops at the first non-staged
-    * version — bounded by the contiguous staged run, never O(history). */
-  def additionsInWindow(root: String, prefix: String,
-                        fromExclusive: Int, toInclusive: Int): Seq[(Int, Seq[String])] = {
-    // op-probe only the window plus the one published version before
-    // it (the window's first diff base) — NOT the whole history
+  /** The published commits of a window, each with the files it added
+    * over the previous PUBLISHED version — the one version walk the
+    * change reads share. Staged (write-audit-publish) versions are
+    * invisible to readers, so they are invisible here too: a publish
+    * commit's additions are the staged files, surfacing exactly when
+    * readers first see them, and an abandoned audit never surfaces.
+    * Cost is O(window × checkpointInterval) log reads — the op-probes
+    * cover only the window plus the backward find for its first diff
+    * base, which stops at the first non-staged version: bounded by the
+    * contiguous staged run, never O(history). */
+  private def publishedAdditions(root: String, prefix: String, fromExclusive: Int,
+                                 toInclusive: Int): Seq[(Snapshot, Seq[String])] = {
     val vs = versions(root, prefix)
     val window = vs.filter(v => v > fromExclusive && v <= toInclusive)
       .filter(v => opOf(root, prefix, v) != "staged")
@@ -1867,14 +1818,29 @@ object Snapshots {
     window.map { v =>
       val cur = snapshot(root, prefix, Some(v)).get
       val curFiles = cur.files.toSet
-      val adds =
-        if (cur.op == "compact" || cur.op == "delete" ||
-          cur.op == "deletemor" || cur.op == "restore") Seq.empty[String]
-        else (curFiles -- prevPub).toSeq.sorted
+      val adds = (curFiles -- prevPub).toSeq.sorted
       prevPub = curFiles
-      (v, adds)
+      (cur, adds)
     }
   }
+
+  /** Per-version row additions for a commit window — the
+    * change-attribution rule of [[readChanges]]: an append/merge
+    * commit's changes are its file additions; compaction, delete and
+    * restore commits add no rows (they re-pin or re-pack rows earlier
+    * versions already delivered, and deletions are invisible at file
+    * grain), so they attribute nothing, which keeps earlier appends'
+    * files — not their rewrites — as the change source. Exposed for
+    * streaming ADMISSION CONTROL (maxFilesPerTrigger /
+    * maxBytesPerTrigger): the scheduler sizes a micro-batch from the
+    * window's additions without planning a frame. */
+  def additionsInWindow(root: String, prefix: String,
+                        fromExclusive: Int, toInclusive: Int): Seq[(Int, Seq[String])] =
+    publishedAdditions(root, prefix, fromExclusive, toInclusive).map { case (cur, adds) =>
+      (cur.version,
+        if (Set("compact", "delete", "deletemor", "restore").contains(cur.op)) Seq.empty
+        else adds)
+    }
 
   /** On-disk bytes of one table-relative data file (0 when missing —
     * admission control must not die on a vacuumed straggler). */
@@ -1884,52 +1850,37 @@ object Snapshots {
 
   /** Incremental read (CDC-style): exactly the rows ADDED between
     * `fromVersion` (exclusive) and `toVersion` (inclusive, default
-    * latest) — the file-set difference, excluding compaction rewrites
-    * (a compacted file only re-packs rows an earlier version already
-    * delivered, so it is NOT a change). Consumers that checkpoint the
-    * last version they processed get append-only change feeds without
-    * rescanning the table. */
+    * latest) — the union of [[additionsInWindow]]'s per-commit
+    * additions. Compaction rewrites are excluded (a compacted file only
+    * re-packs rows an earlier version already delivered, so it is NOT
+    * a change), as are delete and restore commits. A merge's added
+    * files also carry the copied-along unmatched rows of the files it
+    * rewrote — the manifest records upserts at file grain, not row
+    * grain. Consumers that checkpoint the last version they processed
+    * get append-only change feeds without rescanning the table. */
   def readChanges(spark: SparkSession, root: String, prefix: String,
                   fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
-    // -1 = "before the first commit": v0's files count as changes too
-    // (the stream-source bootstrap case)
-    require(fromVersion == -1 || snapshot(root, prefix, Some(fromVersion)).isDefined,
-      s"no snapshot v$fromVersion for $prefix")
-    val to = snapshot(root, prefix, toVersion).getOrElse(
-      sys.error(s"no snapshot for $prefix"))
-    // per-commit attribution: an append/merge commit's changes are its
-    // file additions; a compaction commit re-packs rows earlier
-    // versions already delivered — it contributes nothing, and
-    // skipping it keeps earlier appends' files (not their compacted
-    // replacements) as the change source. A delete commit's additions
-    // are likewise only survivor rewrites — no new rows — so it is
-    // skipped too (deletions themselves are invisible at file grain).
-    // (A merge's added files also carry the copied-along unmatched
-    // rows of the files it rewrote — the manifest records upserts at
-    // file grain, not row grain.)
-    // staged (write-audit-publish) versions are invisible to readers,
-    // so they are invisible to the change feed too: each published
-    // version diffs against the previous PUBLISHED one — a publish
-    // commit's changes are the staged files, surfacing exactly when
-    // readers first see them.
-    val published = versions(root, prefix)
-      .filter(v => opOf(root, prefix, v) != "staged")
-    val added = published
-      .filter(v => v > fromVersion && v <= to.version)
-      .flatMap { v =>
-        val cur = snapshot(root, prefix, Some(v)).get
-        if (cur.op == "compact" || cur.op == "delete" ||
-          cur.op == "deletemor" || cur.op == "restore") Seq.empty
-        else (cur.files.toSet --
-          published.filter(_ < v).lastOption
-            .flatMap(pv => snapshot(root, prefix, Some(pv)).map(_.files.toSet))
-            .getOrElse(Set.empty)).toSeq
-      }.distinct.sorted
+    val to = windowEnd(root, prefix, fromVersion, toVersion)
+    val added = additionsInWindow(root, prefix, fromVersion, to).flatMap(_._2).distinct.sorted
     if (added.isEmpty) {
       // empty frame with the table's schema
-      read(spark, root, prefix, Some(to.version)).limit(0)
-    } else readFilesFilled(spark, root, prefix, added,
-      schemaEvents(root, prefix, Some(to.version)))
+      read(spark, root, prefix, Some(to)).limit(0)
+    } else readFilesFilled(spark, root, prefix, added, schemaEvents(root, prefix, Some(to)))
+  }
+
+  /** The last version of a change window (`toVersion`, default the
+    * latest published), checked against the log listing together with
+    * the window's start. -1 = "before the first commit": v0's changes
+    * count too (the stream-source bootstrap case). */
+  private def windowEnd(root: String, prefix: String, fromVersion: Int,
+                        toVersion: Option[Int]): Int = {
+    val vs = versions(root, prefix)
+    require(fromVersion == -1 || vs.contains(fromVersion),
+      s"no snapshot v$fromVersion for $prefix")
+    toVersion match {
+      case Some(v) => if (vs.contains(v)) v else sys.error(s"no snapshot v$v for $prefix")
+      case None => latest(root, prefix, vs).getOrElse(sys.error(s"no snapshot for $prefix")).version
+    }
   }
 
   private def cdcDir(root: String, prefix: String, version: Int): Path =
@@ -1972,18 +1923,13 @@ object Snapshots {
     * attribution of its added files, tagged `insert`. */
   def readChangeFeed(spark: SparkSession, root: String, prefix: String,
                      fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
-    // -1 = "before the first commit": v0's insert records ride too
-    // (the CDC-relation bootstrap case, mirroring readChanges)
-    require(fromVersion == -1 || snapshot(root, prefix, Some(fromVersion)).isDefined,
-      s"no snapshot v$fromVersion for $prefix")
-    val to = snapshot(root, prefix, toVersion).getOrElse(
-      sys.error(s"no snapshot for $prefix"))
+    val to = windowEnd(root, prefix, fromVersion, toVersion)
     // O(epochs) schema resolution, NOT read(...).columns: analyzing a
     // full-table frame path-checks every live file — metadata cost
     // proportional to the table, paid just for a column list (and it
     // would wrongly require files OUTSIDE the window to exist)
-    val cols = tableSchema(spark, root, prefix, Some(to.version)).fieldNames.toSeq
-    val events = schemaEvents(root, prefix, Some(to.version))
+    val cols = tableSchema(spark, root, prefix, Some(to)).fieldNames.toSeq
+    val events = schemaEvents(root, prefix, Some(to))
     def shape(df: DataFrame, v: Int): DataFrame = {
       // rows committed before a column existed (CDC records staged
       // pre-evolution, or an addcol inside the window) read as the
@@ -2008,23 +1954,11 @@ object Snapshots {
         org.apache.spark.sql.functions.lit(v.toLong).as("_commit_version") :+
         org.apache.spark.sql.functions.lit(ts).as("_commit_timestamp")): _*)
     }
-    // staged (write-audit-publish) versions are invisible to readers,
-    // so they are invisible to the change feed too (readChanges' rule):
-    // a staged batch's rows surface as the PUBLISH commit's inserts —
-    // exactly when readers first see them — and an abandoned audit
-    // never surfaces at all. Each version therefore diffs against the
-    // previous PUBLISHED version, not v-1 (which may be the staged
-    // head itself, whose files would make the publish diff empty).
-    val published = versions(root, prefix)
-      .filter(v => opOf(root, prefix, v) != "staged")
-    val parts = published
-      .filter(v => v > fromVersion && v <= to.version)
-      .flatMap { v =>
-        val cur = snapshot(root, prefix, Some(v)).get
-        lazy val addedFiles = (cur.files.toSet --
-          published.filter(_ < v).lastOption
-            .flatMap(pv => snapshot(root, prefix, Some(pv)).map(_.files.toSet))
-            .getOrElse(Set.empty)).toSeq.sorted
+    // a staged batch's rows surface as the PUBLISH commit's inserts
+    // (the shared walk's staged-version rule)
+    val parts = publishedAdditions(root, prefix, fromVersion, to)
+      .flatMap { case (cur, addedFiles) =>
+        val v = cur.version
         def fromFiles(tag: String): Option[DataFrame] =
           if (addedFiles.isEmpty) None
           else Some(shape(readFilesFilled(spark, root, prefix, addedFiles, events)
@@ -2039,7 +1973,7 @@ object Snapshots {
         }
       }
     if (parts.isEmpty)
-      shape(read(spark, root, prefix, Some(to.version))
+      shape(read(spark, root, prefix, Some(to))
         .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")), 0).limit(0)
     else parts.reduce(_.unionByName(_))
   }
@@ -2364,7 +2298,6 @@ object Snapshots {
       sys.error(s"nothing to delete from for $prefix"))
     if (txn.exists(snap.txns.contains)) snap.version
     else {
-      val base = dataDir(root, prefix)
       // SQL DELETE semantics: a row is deleted only when the predicate
       // is TRUE — a NULL predicate keeps the row (like Delta). Coalesce
       // to false so attribution and survivorship agree on null rows.
@@ -3181,7 +3114,6 @@ object Snapshots {
       sys.error(s"nothing to apply into for $prefix"))
     if (txn.exists(snap.txns.contains)) snap.version
     else {
-      val base = dataDir(root, prefix)
       val isUpsert = col("_change_type").isin("insert", "update_postimage")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keys.map(col): _*)
@@ -3366,7 +3298,6 @@ object Snapshots {
     require(columns.nonEmpty, "clusterZOrder needs at least one column")
     val snap = snapshot(root, prefix, None).getOrElse(
       sys.error(s"nothing to cluster for $prefix"))
-    val base = dataDir(root, prefix)
     val df = read(spark, root, prefix, Some(snap.version))
     import org.apache.spark.sql.functions.{lit => flit, shiftleft, shiftright, when}
     val bucketCols = columns.map { c =>

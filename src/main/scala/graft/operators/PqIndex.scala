@@ -83,7 +83,6 @@ object PqIndex {
   def encode(emb: DataFrame, idCol: String, vecCol: String,
              cb: Seq[Seq[Seq[Double]]]): DataFrame = {
     val m = cb.size
-    val k = cb.head.size
     val subLen = cb.head.head.size
     val vecs = emb.select(col(idCol).as("id"),
       transform(col(vecCol), x => x.cast("double")).as("v"))

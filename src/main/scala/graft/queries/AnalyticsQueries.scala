@@ -718,9 +718,8 @@ object AnalyticsQueries extends QueryRegistry {
         }
         val probes = Seq("spark", "join")
         val buckets = probes.map(t => MinHashLSH.baseHashJvm(t) % 16).distinct.sorted
-        val idx = buckets.map(b => graft.ingest.Snapshots.readPrunedMulti(
-            s, root, "inv",
-            Seq(graft.ingest.Snapshots.StatRange.longRange("bucket", b, b))))
+        val idx = buckets.map(b => graft.ingest.Snapshots.readWhere(
+            s, root, "inv", col("bucket") === b.toLong))
           .reduce(_.unionByName(_))
         val w = Window.partitionBy("term").orderBy(col("tf").desc, col("doc_id"))
         idx.filter(col("term").isin(probes: _*))

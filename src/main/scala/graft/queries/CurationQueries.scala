@@ -893,9 +893,8 @@ object CurationQueries extends QueryRegistry {
         val nearest = cs.zipWithIndex
           .map { case (c, i) => i -> c.zip(probe).map { case (a, b) => (a - b) * (a - b) }.sum }
           .sortBy(_._2).take(4).map(_._1)
-        val idx = nearest.map(c => graft.ingest.Snapshots.readPrunedMulti(
-            s, root, "ix",
-            Seq(graft.ingest.Snapshots.StatRange.longRange("cell", c, c))))
+        val idx = nearest.map(c => graft.ingest.Snapshots.readWhere(
+            s, root, "ix", col("cell") === c.toLong))
           .reduce(_.unionByName(_))
         idx.filter(col("id") =!= 0)
           .select(col("id"), AnnLsh.cosine(col("v"), array(probe.map(lit): _*)).as("sim"))

@@ -243,7 +243,7 @@ object LakehouseQueries extends QueryRegistry {
           ProduceJob.produceBatch(s, tmp, "p", topics = 1, numMessages = 5000)
           ()
         }
-        Snapshots.readPruned(s, root, "p", "ba", 1000L, 1999L)
+        Snapshots.readWhere(s, root, "p", col("ba").between(1000L, 1999L))
           .agg(count(lit(1)).as("cnt"),
             sum("ba").cast("bigint").as("sum_ba"),
             min("ba").cast("bigint").as("min_ba"),
@@ -402,11 +402,9 @@ object LakehouseQueries extends QueryRegistry {
       (s, _) => {
         val root = stagedMorTable(s)
         val name = "graft_snapsrc_" + UUID.randomUUID().toString.replace("-", "")
-        val q = s.readStream
-          .format(classOf[graft.streaming.SnapshotSourceProvider].getName)
-          .option("root", root).option("prefix", "d")
+        val q = s.readStream.format("graft")
           .option("maxVersionsPerTrigger", "1")
-          .load()
+          .load(s"$root/d")
           .writeStream.format("memory").queryName(name)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -720,9 +718,8 @@ object LakehouseQueries extends QueryRegistry {
     QueryDef("q136_zorder_pruned_read",
       (s, _) => {
         val root = stagedZorderTable(s)
-        Snapshots.readPrunedMulti(s, root, "z", Seq(
-            Snapshots.StatRange.longRange("x", 0, 15),
-            Snapshots.StatRange.longRange("y", 0, 15)))
+        Snapshots.readWhere(s, root, "z",
+            col("x").between(0L, 15L) && col("y").between(0L, 15L))
           .agg(count(lit(1)).as("cnt"),
             sum("ba").cast("bigint").as("sum_ba"),
             max("x").cast("bigint").as("max_x"),

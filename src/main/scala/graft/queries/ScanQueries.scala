@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, QueryRegistry, Tables}
-import Qf._
 
 /** Q01–Q08: scans, sources, sinks, projection, predicates.
   *

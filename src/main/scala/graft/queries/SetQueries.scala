@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, QueryRegistry, Tables}
-import Qf._
 
 /** Q29–Q31: global sort / top-k / set operations.
   *

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, QueryRegistry, Tables}
 import graft.functions.{EventMoments, TokenizeGenerator}
-import Qf._
 
 /** Q51–Q53: user-defined function surface — scalar UDF, typed
   * Aggregator UDAF, custom Catalyst Generator (UDTF).

@@ -191,51 +191,6 @@ object GraftDml extends Rule[LogicalPlan] {
     }
   }
 
-  /** Advisory stat-pruning bounds from the UPDATE predicate's
-    * attr-vs-literal comparisons, as V1 filters ([[GraftSource
-    * .toRanges]] owns the key encoding). Conjuncts that don't map are
-    * simply not used for pruning — the exact predicate still decides
-    * row membership, so this can only narrow IO, never semantics. */
-  private[sources] def rangeFilters(cond: Expression): Seq[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.{sources => v1}
-    // the analyzer wraps literals in casts (`ba >= CAST(20 AS
-    // BIGINT)`) and this rule runs pre-optimizer, so fold any
-    // constant side rather than pattern-matching bare Literals;
-    // internal string values (UTF8String) normalize to java String
-    // for the V1 filter encoding
-    def litOf(e: Expression): Option[Any] =
-      if (e.foldable)
-        Option(e.eval(org.apache.spark.sql.catalyst.InternalRow.empty)).map {
-          case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-          case x => x
-        }
-      else None
-    conjunctsOf(cond).flatMap {
-      case EqualTo(a: AttributeReference, r) if litOf(r).isDefined =>
-        Some(v1.EqualTo(a.name, litOf(r).get))
-      case EqualTo(l, a: AttributeReference) if litOf(l).isDefined =>
-        Some(v1.EqualTo(a.name, litOf(l).get))
-      case GreaterThan(a: AttributeReference, r) if litOf(r).isDefined =>
-        Some(v1.GreaterThan(a.name, litOf(r).get))
-      case GreaterThan(l, a: AttributeReference) if litOf(l).isDefined =>
-        Some(v1.LessThan(a.name, litOf(l).get))
-      case GreaterThanOrEqual(a: AttributeReference, r) if litOf(r).isDefined =>
-        Some(v1.GreaterThanOrEqual(a.name, litOf(r).get))
-      case GreaterThanOrEqual(l, a: AttributeReference) if litOf(l).isDefined =>
-        Some(v1.LessThanOrEqual(a.name, litOf(l).get))
-      case LessThan(a: AttributeReference, r) if litOf(r).isDefined =>
-        Some(v1.LessThan(a.name, litOf(r).get))
-      case LessThan(l, a: AttributeReference) if litOf(l).isDefined =>
-        Some(v1.GreaterThan(a.name, litOf(l).get))
-      case LessThanOrEqual(a: AttributeReference, r) if litOf(r).isDefined =>
-        Some(v1.LessThanOrEqual(a.name, litOf(r).get))
-      case LessThanOrEqual(l, a: AttributeReference) if litOf(l).isDefined =>
-        Some(v1.GreaterThanOrEqual(a.name, litOf(l).get))
-      case _ => None
-    }
-  }
-
   /** Equi conjuncts (t.c = s.c2) of a merge condition as (targetCol,
     * sourceCol-in-the-src-namespace) pairs: they feed the primitive's
     * stage-1 manifest pruning — a small MERGE against a huge table
@@ -299,7 +254,7 @@ case class GraftUpdateCommand(root: String, prefix: String, update: UpdateTable)
       update.assignments.map(a => (GraftDml.keyPath(a.key), a.value)), update.table.output)
     Snapshots.updateWhere(spark, root, prefix, GraftStreamingShim.column(cond),
       sets.map { case (c, v) => (c, GraftStreamingShim.column(v)) },
-      ranges = GraftDml.rangeFilters(cond).flatMap(GraftSource.toRanges))
+      ranges = Snapshots.statRanges(cond))
     Seq.empty
   }
 }
@@ -313,7 +268,7 @@ case class GraftDeleteCommand(root: String, prefix: String, delete: DeleteFromTa
   override def innerChildren: Seq[LogicalPlan] = Seq(delete)
   override def run(spark: SparkSession): Seq[Row] = {
     Snapshots.deleteMoR(spark, root, prefix, GraftStreamingShim.column(delete.condition),
-      ranges = GraftDml.rangeFilters(delete.condition).flatMap(GraftSource.toRanges))
+      ranges = Snapshots.statRanges(delete.condition))
     Seq.empty
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ingest.{Snapshots, SortKeys, Topics}
+import graft.ingest.{Snapshots, Topics}
 
 /** DataSource V2 provider over the snapshot (lakehouse) layer — the
   * table format the reference offloads into, made first-class SQL:
@@ -54,71 +54,18 @@ import graft.ingest.{Snapshots, SortKeys, Topics}
   * unchanged. At 100 TB the wins compose: manifest pruning drops
   * files driver-side from metadata only, and column pruning keeps the
   * scan at ReadSchema width.
+  *
+  * `spark.readStream.format("graft").load(root/prefix)` reads the table
+  * as a stream: the table declares MICRO_BATCH_READ, and its scan is
+  * the one table stream source ([[graft.streaming.GraftMicroBatchStream]]).
+  * Combined with the sink below, `readStream("graft") → transform →
+  * writeStream("graft")` is an incremental lakehouse-to-lakehouse
+  * pipeline.
   */
 class GraftSource extends TableProvider with DataSourceRegister
-  with StreamSinkProvider with StreamSourceProvider {
+  with StreamSinkProvider {
 
   override def shortName(): String = "graft"
-
-  /** `spark.readStream.format("graft").load(root/prefix)` — the table
-    * as a STREAMING SOURCE: every snapshot commit becomes a micro-batch
-    * of the rows it appended ([[graft.streaming.SnapshotStreamSource]]
-    * — offsets ARE commit versions, so checkpointed restarts resume at
-    * the exact commit the log says). Options: `startingVersion` (first
-    * commit to deliver; default 0 = replay the whole log),
-    * `maxVersionsPerTrigger` (poll cap). Combined with the sink above,
-    * `readStream("graft") → transform → writeStream("graft")` is an
-    * incremental lakehouse-to-lakehouse pipeline — the reference's
-    * consume→offload loop with tables on both ends. GraftTable now
-    * declares MICRO_BATCH_READ, so MicroBatchExecution prefers the
-    * native DSv2 stream ([[graft.streaming.GraftMicroBatchStream]],
-    * same offsets and options); this V1 Source remains the fallback
-    * Spark uses when v2 readers are disabled
-    * (spark.sql.streaming.disabledV2MicroBatchReaders). */
-  override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
-                            providerName: String,
-                            parameters: Map[String, String]): (String, StructType) = {
-    val opts = new CaseInsensitiveStringMap(parameters.asJava)
-    val (root, prefix, version) = GraftSource.resolve(opts)
-    require(version.isEmpty,
-      "a streaming read starts from 'startingVersion', not a pinned 'version'/'tag'")
-    // the v1 fallback relation is constructed EAGERLY at load() even
-    // when the v2 stream will serve the query — return the widened CDC
-    // schema here so the fallback's schema matches; createSource (only
-    // reached if v2 readers are disabled) is where a CDC stream refuses.
-    // tableSchema, NOT read().schema: deriving a schema must stay
-    // O(epochs x partition dirs), never analyze a full-table frame
-    val base = Snapshots.tableSchema(ctx.sparkSession, root, prefix)
-    val out =
-      if (opts.getBoolean("readChangeFeed", false))
-        StructType(base.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("_commit_version",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("_commit_timestamp",
-            org.apache.spark.sql.types.TimestampType, nullable = false)))
-      else base
-    (shortName(), out)
-  }
-
-  override def createSource(ctx: SQLContext, metadataPath: String,
-                            schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String])
-      : org.apache.spark.sql.execution.streaming.Source = {
-    val opts = new CaseInsensitiveStringMap(parameters.asJava)
-    val (root, prefix, version) = GraftSource.resolve(opts)
-    require(version.isEmpty,
-      "a streaming read starts from 'startingVersion', not a pinned 'version'/'tag'")
-    require(!opts.getBoolean("readChangeFeed", false),
-      "readChangeFeed streaming needs the DSv2 path (v2 readers disabled?)")
-    new graft.streaming.SnapshotStreamSource(ctx.sparkSession, root, prefix,
-      Option(opts.get("startingVersion")).map(_.toLong - 1)
-        .orElse(Option(opts.get("startingTimestamp")).map(t =>
-          GraftSource.resolveFromTs(root, prefix, t).toLong - 1))
-        .getOrElse(-1L),
-      Option(opts.get("maxVersionsPerTrigger")).map(_.toInt))
-  }
 
   /** `df.writeStream.format("graft").option("checkpointLocation", …)
     * .start(root/prefix)` — every micro-batch commits to the snapshot
@@ -344,7 +291,7 @@ object GraftSource {
     }
 
   /** V1 overwrite filters → an exact Column predicate. Unlike
-    * [[toRanges]] (advisory pruning — unmapped filters just don't
+    * [[Snapshots.toRanges]] (advisory pruning — unmapped filters just don't
     * prune), an overwrite predicate defines WHICH ROWS ARE REPLACED:
     * dropping a conjunct would delete too much, so anything
     * untranslatable fails loudly. */
@@ -367,34 +314,6 @@ object GraftSource {
     case AlwaysTrue() => lit(true)
     case AlwaysFalse() => lit(false)
     case other => sys.error(s"unsupported overwrite predicate: $other")
-  }
-
-  /** V1 pushed filters → manifest-stat ranges (conjuncts only; any
-    * filter that doesn't map is simply not used for pruning). Strict
-    * bounds widen to inclusive — stat overlap is conservative anyway. */
-  private[sources] def toRanges(f: Filter): Seq[Snapshots.StatRange] = {
-    def keyed(v: Any): Option[(Long, String)] = v match {
-      case l: Long => Some((l, "L"))
-      case i: Int => Some((i.toLong, "L"))
-      case s: Short => Some((s.toLong, "L"))
-      case d: Double => if (d.isNaN) None else Some((SortKeys.doubleKey(d), "D"))
-      case fl: Float => if (fl.isNaN) None else Some((SortKeys.doubleKey(fl.toDouble), "D"))
-      case s: String => Some((SortKeys.stringKey(s), "S"))
-      case _ => None
-    }
-    def range(c: String, t: String, lo: Long, hi: Long) =
-      Snapshots.StatRange(c, t, lo, hi, lit(true))
-    f match {
-      case And(l, r) => toRanges(l) ++ toRanges(r)
-      case EqualTo(a, v) => keyed(v).map { case (k, t) => range(a, t, k, k) }.toSeq
-      case GreaterThan(a, v) => keyed(v).map { case (k, t) => range(a, t, k, Long.MaxValue) }.toSeq
-      case GreaterThanOrEqual(a, v) => keyed(v).map { case (k, t) => range(a, t, k, Long.MaxValue) }.toSeq
-      case LessThan(a, v) => keyed(v).map { case (k, t) => range(a, t, Long.MinValue, k) }.toSeq
-      case LessThanOrEqual(a, v) => keyed(v).map { case (k, t) => range(a, t, Long.MinValue, k) }.toSeq
-      case IsNull(a) => Seq(range(a, "N", 1L, 1L))
-      case IsNotNull(a) => Seq(range(a, "N", 0L, 0L))
-      case _ => Seq.empty
-    }
   }
 }
 
@@ -426,7 +345,7 @@ private[sources] class GraftTable(val root: String, val prefix: String,
     // advisory manifest pruning: the hit scan opens only files whose
     // stats can overlap the delete's range conjuncts
     Snapshots.deleteMoR(SparkSession.active, root, prefix, cond,
-      ranges = filters.toSeq.flatMap(GraftSource.toRanges))
+      ranges = filters.toSeq.flatMap(Snapshots.toRanges))
     ()
   }
 
@@ -675,7 +594,7 @@ private[sources] class GraftScanBuilder(root: String, prefix: String,
   private var limitFiles: Option[Seq[String]] = None // covering prefix, pinned at pushLimit
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftSource.toRanges(f).nonEmpty)
+    pushed = filters.filter(f => Snapshots.toRanges(f).nonEmpty)
     filters // ALL residual: stats narrow IO, never replace evaluation
   }
 
@@ -829,10 +748,10 @@ private[sources] class GraftScan(root: String, prefix: String, version: Option[I
   override def readSchema(): StructType = required
 
   /** `spark.readStream.table("graft.ns.t")` / `.format("graft")` —
-    * the table as a NATIVE micro-batch source (the capability routes
-    * MicroBatchExecution here instead of the V1 StreamSourceProvider).
-    * Offsets are commit versions; options `startingVersion` /
-    * `maxVersionsPerTrigger` keep the V1 source's meaning. */
+    * the table as a micro-batch source. Offsets are commit versions;
+    * `startingVersion` (or `startingTimestamp`) is the first commit to
+    * deliver, default 0 = replay the whole log; `maxVersionsPerTrigger`,
+    * `maxFilesPerTrigger` and `maxBytesPerTrigger` cap a batch. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     require(version.isEmpty,
@@ -874,7 +793,7 @@ private[sources] class GraftScan(root: String, prefix: String, version: Option[I
     * the same snapshot even if a commit lands mid-query, and the
     * manifest is read once per scan, not once per caller. */
   private lazy val prunedFiles: Seq[String] = {
-    val ranges = pushed.toSeq.flatMap(GraftSource.toRanges)
+    val ranges = pushed.toSeq.flatMap(Snapshots.toRanges)
     if (ranges.nonEmpty) Snapshots.pruneFilesMulti(root, prefix, ranges, version)
     else limitFiles.getOrElse( // prefix pinned at pushLimit — no re-read
       Snapshots.snapshot(root, prefix, version).map(_.files).getOrElse(Seq.empty))

@@ -14,16 +14,17 @@ import org.apache.spark.sql.types.StructType
 
 import graft.ingest.Snapshots
 
-/** The snapshot table as a DSv2 MICRO-BATCH STREAM — what makes
-  * `spark.readStream.table("graft.ns.t")` (and the `format("graft")`
-  * path, which Spark routes here once the table declares
-  * MICRO_BATCH_READ) a native streaming source. Semantics are
-  * IDENTICAL to the V1 [[SnapshotStreamSource]]: offsets ARE commit
-  * versions, batch (start, end] delivers the rows those commits
-  * appended ([[Snapshots.readChanges]] — compaction/delete/restore
-  * commits contribute nothing), `startingVersion` floors the replay
-  * and `maxVersionsPerTrigger` caps batch width (admission control),
-  * Trigger.AvailableNow pins the drain target at trigger start.
+/** The snapshot table as a DSv2 MICRO-BATCH STREAM — the one stream
+  * source behind `spark.readStream.table("graft.ns.t")` and
+  * `readStream.format("graft")` (the table declares MICRO_BATCH_READ).
+  * Offsets ARE commit versions, so a checkpointed restart resumes at
+  * the exact commit the log says. Batch (start, end] delivers the rows
+  * those commits appended ([[Snapshots.readChanges]] — compaction,
+  * delete and restore commits contribute nothing); `startingVersion`
+  * floors the replay and `maxVersionsPerTrigger` caps batch width
+  * (admission control); Trigger.AvailableNow pins the drain target at
+  * trigger start. The schema is pinned at stream start: evolve the
+  * table, restart the stream (Delta's rule).
   *
   * Execution: each micro-batch's DataFrame is planned DRIVER-side
   * through the full snapshot machinery (schema-evolution replay,

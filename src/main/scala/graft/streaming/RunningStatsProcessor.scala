@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Arbitrary stateful processing on the Spark 4 `transformWithState`

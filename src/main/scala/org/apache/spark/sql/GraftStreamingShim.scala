@@ -1,22 +1,13 @@
 package org.apache.spark.sql
 
-/** The one `private[sql]` hop a DSv1 streaming [[org.apache.spark.sql.execution.streaming.Source]]
-  * cannot avoid: `MicroBatchExecution` rejects a `getBatch` result
-  * whose plan is not flagged `isStreaming`, and the only way to set
-  * the flag is `SparkSession.internalCreateDataFrame` — exactly how
-  * Spark's own `FileStreamSource` marks its batches. The other
-  * members are the same kind of hop for the batch read and DML paths. */
+/** The `private[sql]` hops the graft sources cannot avoid, each the
+  * same one Spark's own sources or Delta take. */
 object GraftStreamingShim {
-  def asStreaming(spark: SparkSession, df: DataFrame): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = true)
-
-  /** The inverse hop, for the SINK side: `Sink.addBatch` receives a
-    * frame still flagged `isStreaming`, on which `.write` refuses —
-    * re-wrap its executed plan as a batch frame (Delta's sink does
-    * exactly this). The RDD is the micro-batch's physical plan, so
-    * re-evaluation recomputes the batch — callers should evaluate it
-    * once. */
+  /** The SINK side: `Sink.addBatch` receives a frame still flagged
+    * `isStreaming`, on which `.write` refuses — re-wrap its executed
+    * plan as a batch frame (Delta's sink does exactly this). The RDD
+    * is the micro-batch's physical plan, so re-evaluation recomputes
+    * the batch — callers should evaluate it once. */
   def asBatch(spark: SparkSession, df: DataFrame): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = false)
@@ -40,4 +31,13 @@ object GraftStreamingShim {
     * `DataSource.resolveRelation` makes it
     * (`graft.ingest.Footers.relation`). */
   def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
+  /** `DataSourceStrategy.translateFilter` is `protected[sql]`: it is the
+    * translation that turns a resolved predicate into the V1 filter a
+    * scan receives as pushed, and manifest pruning reads stat ranges
+    * from exactly those filters (`graft.ingest.Snapshots.statRanges`).
+    * Top-level columns only, named as the plan names them. */
+  def translateFilter(e: catalyst.expressions.Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = false)
 }

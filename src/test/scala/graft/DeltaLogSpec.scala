@@ -68,6 +68,33 @@ class DeltaLogSpec extends SparkTestBase {
     assert(Snapshots.logOpens.get() - b2 <= 2)
   }
 
+  test("readChanges opens only its window's log files, as additionsInWindow does") {
+    val root = tempDir("graft_dlog").toString
+    val one = tempDir("graft_dlog_src").resolve("one")
+    spark.range(10).toDF("ba").coalesce(1).write.parquet(one.toString)
+    val file = Files.list(one).iterator.asScala.find(_.toString.endsWith(".parquet")).get
+    val dir = Paths.get(Topics.tableDir(root, "rc"))
+    Files.createDirectories(dir)
+    // a 60-version log, one file added per version
+    (0 until 60).foreach { v =>
+      Files.copy(file, dir.resolve(f"part-$v%05d.parquet"))
+      Snapshots.commit(root, "rc", maxPos = v)
+    }
+    def opens[T](f: => T): (T, Long) = {
+      val before = Snapshots.logOpens.get()
+      val r = f
+      (r, Snapshots.logOpens.get() - before)
+    }
+    val (adds, windowOpens) = opens(Snapshots.additionsInWindow(root, "rc", 58, 59))
+    assert(adds == Seq(59 -> Seq("part-00059.parquet")))
+    // beyond the walk, readChanges reads only the schema events of its
+    // window end: one checkpoint plus its delta tail
+    val (changes, readOpens) = opens(Snapshots.readChanges(spark, root, "rc", 58, Some(59)))
+    assert(readOpens <= windowOpens + Snapshots.checkpointInterval + 2,
+      s"readChanges opened $readOpens log files, additionsInWindow $windowOpens")
+    assert(changes.count() == 10)
+  }
+
   test("delta chain state equals a from-scratch fold: files, stats, txns, maxPos carry exactly") {
     val root = tempDir("graft_dlog").toString
     // mixed history inside one checkpoint window: appends, a delete
@@ -580,7 +607,7 @@ class DeltaLogSpec extends SparkTestBase {
       s"no p|q stat: ${snap.stats.map(_.column).distinct}")
     // a filter on it opens only the file whose range it can match
     assert(Snapshots.pruneFiles(root, "hz", "p|q", 0, 10).size == 1)
-    assert(Snapshots.readPruned(spark, root, "hz", "p|q", 0, 10).count() == 6)
+    assert(Snapshots.readWhere(spark, root, "hz", col("p|q").between(0L, 10L)).count() == 6)
     val df = Snapshots.read(spark, root, "hz")
     assert(df.count() == 100)
     assert(df.selectExpr("sum(`p|q`)").head().getLong(0) == (0L until 100L).map(_ * 2).sum)

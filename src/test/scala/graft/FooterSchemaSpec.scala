@@ -37,8 +37,7 @@ class FooterSchemaSpec extends SparkTestBase {
     Using.resource(Footers.open(file))(_.getFooter.getFileMetaData.getKeyValueMetaData)
 
   test("an evolved partitioned table reads like Spark's inference, epoch by epoch") {
-    val ns = "footer" + java.util.UUID.randomUUID().toString.take(6).replace("-", "")
-    spark.sql(s"CREATE NAMESPACE graft.$ns")
+    val ns = graftNamespace("footer")
     val t = s"graft.$ns.t"
     spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING, d DOUBLE, topic STRING) PARTITIONED BY (topic)")
     def insert(cols: String, from: Int): Unit =

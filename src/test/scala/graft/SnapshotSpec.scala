@@ -187,7 +187,7 @@ class SnapshotSpec extends SparkTestBase {
     assert(Snapshots.metadataLongBounds(root, "ss", "ba").isEmpty)
     // pruning on the re-added name must KEEP pre-event files — their
     // stale stat ranges would otherwise skip files whose rows all match
-    assert(Snapshots.readPruned(spark, root, "ss", "ba", 4242L, 4242L).count() == 100)
+    assert(Snapshots.readWhere(spark, root, "ss", col("ba") === 4242L).count() == 100)
     // the DSv2 aggregate pushdown declines and the exact scan answers
     val agg = spark.read.format("graft").load(s"$root/ss")
       .agg(min("ba"), max("ba")).collect()(0)
@@ -315,11 +315,9 @@ class SnapshotSpec extends SparkTestBase {
     // CUMULATIVE over the sink directory.
     val out = tempDir("graft_stream_out").toString
     def drain(): Long = {
-      val q = spark.readStream
-        .format(classOf[graft.streaming.SnapshotSourceProvider].getName)
-        .option("root", root).option("prefix", "ss")
+      val q = spark.readStream.format("graft")
         .option("maxVersionsPerTrigger", "1")
-        .load()
+        .load(s"$root/ss")
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -337,11 +335,9 @@ class SnapshotSpec extends SparkTestBase {
     ProduceJob.produceBatch(spark, root, "ss", topics = 1, numMessages = 100) // v3
     assert(drain() == 600)
     // startingVersion skips history without a checkpoint
-    val fromV1 = spark.readStream
-      .format(classOf[graft.streaming.SnapshotSourceProvider].getName)
-      .option("root", root).option("prefix", "ss")
+    val fromV1 = spark.readStream.format("graft")
       .option("startingVersion", "1")
-      .load()
+      .load(s"$root/ss")
     val name = "ss_sink4"
     val q4 = fromV1.writeStream.format("memory").queryName(name)
       .outputMode("append")
@@ -540,7 +536,7 @@ class SnapshotSpec extends SparkTestBase {
     assert(snap.stats.exists(_.column == "ba")) // footer stats committed
     val pruned = Snapshots.pruneFiles(root, "s14", "ba", 100, 199)
     assert(pruned.size < snap.files.size) // skipping actually skips
-    val df = Snapshots.readPruned(spark, root, "s14", "ba", 100, 199)
+    val df = Snapshots.readWhere(spark, root, "s14", col("ba").between(100L, 199L))
     assert(df.count() == 100)
     assert(df.agg(sum("ba")).head().getLong(0) == (100L to 199L).sum)
     // pruning never changes semantics vs the unpruned filtered read
@@ -755,7 +751,7 @@ class SnapshotSpec extends SparkTestBase {
     val t = Snapshots.read(spark, root, "s16")
     assert(t.count() == 4000)
     assert(t.agg(sum("ba")).head().getLong(0) == (0L until 4000L).sum)
-    assert(Snapshots.readPruned(spark, root, "s16", "ba", 0, 99).count() == 100)
+    assert(Snapshots.readWhere(spark, root, "s16", col("ba").between(0L, 99L)).count() == 100)
     assert(Snapshots.read(spark, root, "s16", Some(v - 1)).count() == 4000)
   }
 
@@ -1003,12 +999,13 @@ class SnapshotSpec extends SparkTestBase {
     // monotone function of ba, so a narrow weight range skips files
     val dRange = Snapshots.StatRange.doubleRange("weight", 10.0, 19.975)
     assert(Snapshots.pruneFilesMulti(root, "s23", Seq(dRange)).size < snap.files.size)
-    val dRead = Snapshots.readPrunedMulti(spark, root, "s23", Seq(dRange))
+    val dRead = Snapshots.readWhere(spark, root, "s23", col("weight").between(10.0, 19.975))
     assert(dRead.count() == 400) // ba 400..799
     // string pruning: doc ids are zero-padded, so lexical order = numeric
     val sRange = Snapshots.StatRange.stringRange("doc_id", "doc001000", "doc001399")
     assert(Snapshots.pruneFilesMulti(root, "s23", Seq(sRange)).size < snap.files.size)
-    val sRead = Snapshots.readPrunedMulti(spark, root, "s23", Seq(sRange))
+    val sRead = Snapshots.readWhere(spark, root, "s23",
+      col("doc_id").between("doc001000", "doc001399"))
     assert(sRead.count() == 400)
     // pruning never changes semantics vs the unpruned filtered read
     val full = Snapshots.read(spark, root, "s23")
@@ -1059,18 +1056,22 @@ class SnapshotSpec extends SparkTestBase {
       .write.parquet(graft.ingest.Topics.tableDir(root, "s26"))
     Snapshots.commit(root, "s26", 3999)
     val nFiles = Snapshots.snapshot(root, "s26").get.files.size
-    def filesRead(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numFiles")).map { m =>
-          df.count() // force execution so metrics populate
-          m.value
-        }.headOption.getOrElse(-1L)
+    assert(nFiles == 8)
+    // files the scan opened: execute THIS plan, then read its file
+    // scans' numFiles metric (inside AQE's final plan)
+    def filesRead(df: DataFrame): Long = {
+      df.collect()
+      object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      Aqe.collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+      }.sum
+    }
     // compound predicate: long range + double bound + an unprunable
     // conjunct (endsWith) — pruning uses the first two, semantics all
     val pred = col("ba") >= 100 && col("ba") < 200 &&
       col("weight") <= lit(4.9) && col("payload").endsWith("9")
     val pruned = Snapshots.readWhere(spark, root, "s26", pred)
-    assert(filesRead(pruned) < nFiles)
+    assert(filesRead(pruned) == 1)
     val full = Snapshots.read(spark, root, "s26").filter(pred)
     assert(pruned.count() == full.count() && pruned.count() > 0)
     assert(pruned.select("ba").except(full.select("ba")).count() == 0)
@@ -1078,16 +1079,58 @@ class SnapshotSpec extends SparkTestBase {
     // string equality prunes on prefix-key stats
     val sPred = col("doc_id") === "doc000123"
     val sRead = Snapshots.readWhere(spark, root, "s26", sPred)
-    assert(filesRead(sRead) < nFiles)
+    assert(filesRead(sRead) == 1)
     assert(sRead.count() == 1)
     // literal-first orientation and contradictory bounds
     assert(Snapshots.readWhere(spark, root, "s26", lit(300L) > col("ba")).count() == 300)
     assert(Snapshots.readWhere(spark, root, "s26",
       col("ba") > 100 && col("ba") < 50).count() == 0)
     // unprunable-only predicate falls back to the full file set, same rows
-    assert(Snapshots.readWhere(spark, root, "s26",
-      col("payload").startsWith("r39")).count() ==
+    val unpruned = Snapshots.readWhere(spark, root, "s26", col("payload").startsWith("r39"))
+    assert(filesRead(unpruned) == nFiles)
+    assert(unpruned.count() ==
       Snapshots.read(spark, root, "s26").filter(col("payload").startsWith("r39")).count())
+  }
+
+  test("one translation maps predicate shapes to stat ranges") {
+    import Snapshots.StatRange
+    import graft.ingest.SortKeys
+    val df = spark.range(1).selectExpr("id AS ba", "CAST(id AS DOUBLE) AS w",
+      "CAST(id AS STRING) AS s", "CAST(id AS INT) AS i")
+    def ranges(p: org.apache.spark.sql.Column): Set[StatRange] =
+      df.filter(p).queryExecution.analyzed.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.toSeq.flatMap(Snapshots.statRanges).toSet
+    val lo = Long.MinValue
+    val hi = Long.MaxValue
+    val cases: Seq[(org.apache.spark.sql.Column, Set[StatRange])] = Seq(
+      (col("ba") === 5) -> Set(StatRange("ba", "L", 5, 5)),
+      (col("ba") > 5) -> Set(StatRange("ba", "L", 5, hi)),
+      (col("ba") >= 5) -> Set(StatRange("ba", "L", 5, hi)),
+      (col("ba") < 5) -> Set(StatRange("ba", "L", lo, 5)),
+      (col("ba") <= 5) -> Set(StatRange("ba", "L", lo, 5)),
+      (lit(5L) > col("ba")) -> Set(StatRange("ba", "L", lo, 5)),
+      col("ba").between(1, 9) -> Set(StatRange("ba", "L", 1, hi), StatRange("ba", "L", lo, 9)),
+      (col("ba") === lit(2) + lit(3)) -> Set(StatRange("ba", "L", 5, 5)),
+      (col("i") === 3) -> Set(StatRange("i", "L", 3, 3)),
+      (col("w") <= 4.9) -> Set(StatRange("w", "D", lo, SortKeys.doubleKey(4.9))),
+      (col("s") === "abc") ->
+        Set(StatRange("s", "S", SortKeys.stringKey("abc"), SortKeys.stringKey("abc"))),
+      col("ba").isNull -> Set(StatRange.isNull("ba")),
+      col("ba").isNotNull -> Set(StatRange.isNotNull("ba")),
+      (col("ba") > 1 && col("s") === "x" && col("s").endsWith("x")) ->
+        Set(StatRange("ba", "L", 1, hi),
+          StatRange("s", "S", SortKeys.stringKey("x"), SortKeys.stringKey("x"))),
+      // shapes that cannot prune
+      (col("w") === Double.NaN) -> Set.empty,
+      (col("ba") === lit(null)) -> Set.empty,
+      (col("ba") + 1 === 5) -> Set.empty,
+      (col("ba") === 5 || col("ba") === 6) -> Set.empty,
+      col("ba").isin(1, 2) -> Set.empty,
+      col("s").startsWith("a") -> Set.empty)
+    cases.foreach { case (p, expected) =>
+      assert(ranges(p) == expected, s"predicate $p")
+    }
   }
 
   test("Z-order clustering makes pruning compose across columns") {
@@ -1119,7 +1162,8 @@ class SnapshotSpec extends SparkTestBase {
     val t = Snapshots.read(spark, root, "s24")
     assert(t.count() == n)
     assert(t.agg(sum("x")).head().getLong(0) == (0L until n.toLong).map(_ % 128).sum)
-    val zRead = Snapshots.readPrunedMulti(spark, root, "s24", Seq(xr, yr))
+    val zRead = Snapshots.readWhere(spark, root, "s24",
+      col("x").between(0L, 15L) && col("y").between(0L, 15L))
     assert(zRead.count() == 16 * 16)
     // time travel to the pre-Z version intact
     assert(Snapshots.read(spark, root, "s24", Some(v - 1)).count() == n)
@@ -1365,7 +1409,7 @@ class SnapshotSpec extends SparkTestBase {
     assert(yFiles.size < total && yFiles.size >= 5,
       s"y-prune kept ${yFiles.size} of $total")
     // pruning narrows IO, never semantics — equal to the full scan
-    val viaPrune = Snapshots.readPruned(spark, root, "pe", "x", 0, 3)
+    val viaPrune = Snapshots.readWhere(spark, root, "pe", col("x").between(0L, 3L))
       .agg(sum("ba")).collect()(0).getLong(0)
     val viaScan = Snapshots.read(spark, root, "pe")
       .filter(col("x") >= 0 && col("x") <= 3)

@@ -17,6 +17,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   val sf: String = "/root/testdata/sf0.001"
 
   private val tempRoots = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+  private val namespaces = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   /** A fresh directory under the system temp dir, deleted with
     * everything under it after the suite. */
@@ -26,15 +27,31 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     p
   }
 
+  /** A fresh namespace `graft.<prefix><6 hex>` in the graft catalog,
+    * dropped with its tables and their files after the suite. Returns
+    * the namespace name without the catalog. */
+  def graftNamespace(prefix: String): String = {
+    val ns = prefix + java.util.UUID.randomUUID().toString.take(6).replace("-", "")
+    spark.sql(s"CREATE NAMESPACE graft.$ns")
+    namespaces.add(ns)
+    ns
+  }
+
   /** Delete `root` and everything under it. */
   def deleteTree(root: Path): Unit =
     if (Files.exists(root))
       Using.resource(Files.walk(root))(_.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists))
 
   override protected def afterAll(): Unit =
-    try tempRoots.asScala.foreach { p =>
-      try deleteTree(p)
-      catch { case NonFatal(e) => System.err.println(s"[test] could not delete $p: $e") }
+    try {
+      namespaces.asScala.foreach { ns =>
+        try spark.sql(s"DROP NAMESPACE IF EXISTS graft.$ns CASCADE")
+        catch { case NonFatal(e) => System.err.println(s"[test] could not drop graft.$ns: $e") }
+      }
+      tempRoots.asScala.foreach { p =>
+        try deleteTree(p)
+        catch { case NonFatal(e) => System.err.println(s"[test] could not delete $p: $e") }
+      }
     } finally super.afterAll()
 
   def run(name: String): org.apache.spark.sql.DataFrame =

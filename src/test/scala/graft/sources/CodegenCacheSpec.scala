@@ -22,8 +22,7 @@ class CodegenCacheSpec extends SparkTestBase {
 
   /** A catalog table of 2,000 rows partitioned over four topics. */
   private def people(): String = {
-    val ns = "cg" + java.util.UUID.randomUUID().toString.take(6).replace("-", "")
-    spark.sql(s"CREATE NAMESPACE graft.$ns")
+    val ns = graftNamespace("cg")
     val t = s"graft.$ns.people"
     spark.sql(s"CREATE TABLE $t (name STRING, age INT, ba BIGINT, topic STRING) PARTITIONED BY (topic)")
     spark.sql(s"INSERT INTO $t SELECT 'p', CAST(id % 100 AS INT), id, concat('t', id % 4) " +

@@ -10,14 +10,8 @@ import graft.ingest.Snapshots
   * created-empty paths), and the CALL maintenance procedures. */
 class GraftCatalogSpec extends SparkTestBase {
 
-  private def freshNs(): String = {
-    val ns = "spec" + java.util.UUID.randomUUID().toString.take(6).replace("-", "")
-    spark.sql(s"CREATE NAMESPACE graft.$ns")
-    ns
-  }
-
   test("namespace + table lifecycle: create, list, insert, rename, drop") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.a (id BIGINT, topic STRING) PARTITIONED BY (topic)")
     spark.sql(s"CREATE TABLE graft.$ns.b (id BIGINT)")
     assert(spark.sql(s"SHOW TABLES IN graft.$ns").collect()
@@ -46,7 +40,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("SQL time travel: VERSION AS OF int + tag, TIMESTAMP AS OF") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.t (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.t SELECT id FROM range(0, 50)")   // v0
     spark.sql(s"INSERT INTO graft.$ns.t SELECT id FROM range(50, 80)")  // v1
@@ -68,7 +62,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("ALTER TABLE evolves committed tables via snapshot commits") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.t (id BIGINT, v STRING)")
     spark.sql(s"INSERT INTO graft.$ns.t SELECT id, 'x' FROM range(0, 10)")
     spark.sql(s"ALTER TABLE graft.$ns.t ADD COLUMN tier STRING DEFAULT 'std'")
@@ -82,7 +76,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("ALTER TABLE on a still-empty table edits the DDL schema directly") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.e (id BIGINT, v STRING)")
     spark.sql(s"ALTER TABLE graft.$ns.e ADD COLUMN w INT")
     spark.sql(s"ALTER TABLE graft.$ns.e RENAME COLUMN v TO label")
@@ -95,7 +89,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("CALL procedures: compact, zorder, vacuum, restore, backfill_stats") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.m (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.m SELECT id FROM range(0, 100)")
     spark.sql(s"INSERT INTO graft.$ns.m SELECT id FROM range(100, 200)")
@@ -133,7 +127,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("CALL clone: zero-copy replica with history; sides diverge freely") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.src (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.src SELECT id FROM range(0, 100)")   // v0
     spark.sql(s"INSERT INTO graft.$ns.src SELECT id FROM range(100, 150)") // v1
@@ -172,7 +166,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("CALL compact with a partition scope rewrites only that partition") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.pc (id BIGINT, topic STRING) PARTITIONED BY (topic)")
     spark.sql(s"INSERT INTO graft.$ns.pc SELECT id, concat('t', id % 2) FROM range(0, 100)")
     spark.sql(s"INSERT INTO graft.$ns.pc SELECT id, concat('t', id % 2) FROM range(100, 200)")
@@ -194,7 +188,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("SQL UPDATE and MERGE INTO work on catalog tables (GraftDml fires)") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.d (id BIGINT, v STRING)")
     spark.sql(s"INSERT INTO graft.$ns.d SELECT id, 'x' FROM range(0, 100)")
     spark.sql(s"UPDATE graft.$ns.d SET v = 'upd' WHERE id >= 90")
@@ -211,7 +205,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("DML sees evolved schemas: defaults work in WHERE and SET") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.ev (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.ev SELECT id FROM range(0, 50)")
     spark.sql(s"ALTER TABLE graft.$ns.ev ADD COLUMN tier STRING DEFAULT 'std'")
@@ -231,7 +225,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("MERGE WITH SCHEMA EVOLUTION adds new source columns via the catalog") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.se (id BIGINT, v STRING)")
     spark.sql(s"INSERT INTO graft.$ns.se SELECT id, 'x' FROM range(0, 100)")
     val v0 = Snapshots.snapshot(s"/tmp/graft/lake/$ns/se", "t").get.version
@@ -273,7 +267,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("CALL branch + fast_forward: write-audit-publish at table grain") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.main (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.main SELECT id FROM range(0, 100)") // v0
     val fork = spark.sql(
@@ -321,7 +315,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("readStream.table streams a catalog graft table via the native DSv2 stream") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.s (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.s SELECT id FROM range(0, 100)")   // v0
     spark.sql(s"INSERT INTO graft.$ns.s SELECT id FROM range(100, 150)") // v1
@@ -354,7 +348,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("CALL detail: current version, files, bytes, DVs, partitioning") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.d (id BIGINT, topic STRING) PARTITIONED BY (topic)")
     // created-empty: version -1, zero files
     val empty = spark.sql(s"CALL graft.system.detail(table => '$ns.d')").head()
@@ -371,7 +365,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("TRUNCATE TABLE routes through SupportsDelete; old versions stay readable") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.tr (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.tr SELECT id FROM range(0, 100)") // v0
     spark.sql(s"TRUNCATE TABLE graft.$ns.tr")                           // v1
@@ -386,7 +380,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("by-name reads refuse path-form options instead of mis-serving") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.g (id BIGINT)")
     spark.sql(s"INSERT INTO graft.$ns.g SELECT id FROM range(0, 10)")
     def causes(t: Throwable): Seq[Throwable] =
@@ -409,7 +403,7 @@ class GraftCatalogSpec extends SparkTestBase {
   }
 
   test("catalog metadata survives a fresh catalog instance (file-based)") {
-    val ns = freshNs()
+    val ns = graftNamespace("spec")
     spark.sql(s"CREATE TABLE graft.$ns.p (id BIGINT, topic STRING) PARTITIONED BY (topic)")
     val cat = new GraftCatalog
     cat.initialize("g2", new org.apache.spark.sql.util.CaseInsensitiveStringMap(

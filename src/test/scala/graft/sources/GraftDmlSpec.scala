@@ -21,9 +21,7 @@ import graft.ingest.{ProduceJob, Snapshots}
 class GraftDmlSpec extends SparkTestBase {
 
   private def fresh(tag: String): (String, String) = {
-    val root = s"/tmp/graft/dmlspec-$tag-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    new java.io.File(root).mkdirs()
+    val root = tempDir(s"dmlspec-$tag").toString
     // several files with disjoint contiguous ba spans (range partitions)
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "t", topics = 1, numMessages = 4000) }
     val tbl = "dml_" + tag
@@ -238,10 +236,27 @@ class GraftDmlSpec extends SparkTestBase {
     assert(Snapshots.snapshot(root, "t").get.files.contains(far))
   }
 
+  test("UPDATE … WHERE v IS NULL scans only files that hold nulls") {
+    val root = tempDir("dmlspec-null").toString
+    val dir = graft.ingest.Topics.tableDir(root, "t")
+    // one 3,000-row file without nulls, one 10-row file with five
+    spark.range(0, 3000).selectExpr("id", "id AS v").coalesce(1).write.parquet(dir)
+    spark.range(3000, 3010)
+      .selectExpr("id", "CAST(IF(id % 2 = 0, NULL, id) AS BIGINT) AS v")
+      .coalesce(1).write.mode("append").parquet(dir)
+    Snapshots.commit(root, "t", maxPos = 0)
+    spark.sql("DROP TABLE IF EXISTS dml_nulls")
+    spark.sql(s"CREATE TABLE dml_nulls USING graft OPTIONS (path '$root/t')")
+    val (_, read) = org.apache.spark.graftspec.JobCounter.recordsRead(spark.sparkContext)(
+      spark.sql("UPDATE dml_nulls SET v = -1 WHERE v IS NULL"))
+    assert(read < 3000, s"the UPDATE read $read rows: the null-free file was scanned")
+    assert(spark.sql("SELECT count(*) FROM dml_nulls WHERE v = -1").head().getLong(0) == 5)
+    assert(spark.sql("SELECT count(*) FROM dml_nulls WHERE v IS NULL").head().getLong(0) == 0)
+    assert(spark.sql("SELECT count(*) FROM dml_nulls").head().getLong(0) == 3010)
+  }
+
   test("UPDATE and MERGE assign nested struct fields (named_struct lowering)") {
-    val root = s"/tmp/graft/dmlspec-nest-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    new java.io.File(root).mkdirs()
+    val root = tempDir("dmlspec-nest").toString
     val tbl = "dml_nest"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"""CREATE TABLE $tbl (

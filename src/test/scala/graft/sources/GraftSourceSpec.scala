@@ -107,8 +107,7 @@ class GraftSourceSpec extends SparkTestBase {
 
   test("DSv2 append commits a new snapshot; old version still readable") {
     // private copy so the append can't disturb the shared read fixture
-    val wroot = new java.io.File("/tmp/graft/dsv2_write_" +
-      java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    val wroot = tempDir("dsv2_write").toString
     ProduceJob.produceBatch(spark, wroot, "w", topics = 1, numMessages = 100)
     val before = Snapshots.snapshot(wroot, "w", None).get
     val extra = spark.read.format("graft").load(s"$wroot/w")
@@ -137,8 +136,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("CREATE TABLE with explicit schema on an empty path, then INSERT INTO") {
-    val croot = new java.io.File("/tmp/graft/dsv2_create_" +
-      java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    val croot = tempDir("dsv2_create").toString
     spark.sql("DROP TABLE IF EXISTS dsv2_create_t")
     // no data, no snapshot log — the schema comes from the DDL
     spark.sql(s"CREATE TABLE dsv2_create_t (k BIGINT, v STRING) " +
@@ -162,8 +160,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("COUNT(*) answers from manifest metadata; filters and DVs fall back") {
-    val croot = new java.io.File("/tmp/graft/dsv2_count_" +
-      java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    val croot = tempDir("dsv2_count").toString
     ProduceJob.produceBatch(spark, croot, "n", topics = 1, numMessages = 1234)
     def counted() = spark.read.format("graft").load(s"$croot/n")
       .agg(count(lit(1)))
@@ -216,8 +213,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("bare LIMIT prunes the file list to a covering prefix") {
-    val lroot = new java.io.File("/tmp/graft/dsv2_limit_" +
-      java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    val lroot = tempDir("dsv2_limit").toString
     withMultiFileWrites {
       ProduceJob.produceBatch(spark, lroot, "l", topics = 1, numMessages = 8000)
     }
@@ -243,8 +239,7 @@ class GraftSourceSpec extends SparkTestBase {
   }
 
   test("backfillStats retrofits pre-R tables onto the metadata-count path") {
-    val broot = new java.io.File("/tmp/graft/dsv2_restat_" +
-      java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    val broot = tempDir("dsv2_restat").toString
     ProduceJob.produceBatch(spark, broot, "b", topics = 1, numMessages = 777)
     // simulate a table committed before row-count stats existed:
     // re-commit the same state with every "R" stat stripped
@@ -429,10 +424,16 @@ class GraftSourceSpec extends SparkTestBase {
     assert(t.count() == 160L) // no replay of v0/v1
     assert(t.agg(sum("ba")).collect()(0).getLong(0) == (0L until 160L).sum)
     assert(Snapshots.versions(dir, "q") == Seq(0, 1, 2))
-    // a pinned version/tag cannot be a stream start
-    intercept[Exception] {
+    // a pinned version/tag cannot be a stream start: the query refuses
+    // when it plans its source
+    val e = intercept[Exception] {
       spark.readStream.format("graft").option("version", "0").load(s"$dir/p")
+        .writeStream.format("memory").queryName("graft_pinned_src")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
     }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("startingVersion")), e)
   }
 
   test("readChangeFeed option: the CDC feed as a batch relation and as a stream") {

@@ -21,8 +21,7 @@ class ReadJobCostSpec extends SparkTestBase {
   /** A partitioned catalog table of 2,000 rows over `topics` topics,
     * one data file per topic. */
   private def people(topics: Int = 4): (String, String) = {
-    val ns = "jobs" + java.util.UUID.randomUUID().toString.take(6).replace("-", "")
-    spark.sql(s"CREATE NAMESPACE graft.$ns")
+    val ns = graftNamespace("jobs")
     val t = s"graft.$ns.people"
     spark.sql(s"CREATE TABLE $t (name STRING, age INT, ba BIGINT, topic STRING) PARTITIONED BY (topic)")
     spark.sql(s"INSERT INTO $t SELECT 'p', CAST(id % 100 AS INT), id, concat('t', id % $topics) " +

@@ -5,9 +5,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
-/** Counts the Spark jobs a block starts. It sits under
+/** Counts the Spark jobs a block starts and the rows its tasks read.
+  * It sits under
   * `org.apache.spark` to drain the listener bus (`private[spark]`)
   * before and after the block, so no earlier job is counted and no
   * late event is missed. */
@@ -35,6 +36,23 @@ object JobCounter {
       val r = f
       sc.listenerBus.waitUntilEmpty()
       (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The rows the block's tasks read from their input sources (task
+    * input metrics), summed over every task it runs. */
+  def recordsRead[T](sc: SparkContext)(f: => T): (T, Long) = {
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      sc.listenerBus.waitUntilEmpty()
+      (r, read.get)
     } finally sc.removeSparkListener(listener)
   }
 }
