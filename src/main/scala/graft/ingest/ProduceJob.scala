@@ -65,7 +65,9 @@ object ProduceJob {
 
   /** Rate-limited streaming produce for `testTimeMs` (A4+A5): the rate
     * source emits `msgRate` rows/s; each micro-batch appends to the
-    * topic table exactly-once via the checkpoint (A9). */
+    * topic table exactly-once via the checkpoint (A9). The run lasts
+    * at least `testTimeMs` and until one batch has committed rows, so
+    * the stop never leaves the sink empty. */
   def produceStream(spark: SparkSession, root: String, prefix: String,
                     topics: Int = 1, msgRate: Int = 100,
                     testTimeMs: Long = 10000, codec: String = "none"): Report = {
@@ -83,10 +85,15 @@ object ProduceJob {
       .partitionBy("topic")
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
-    q.awaitTermination(testTimeMs)
+    if (testTimeMs > 0) q.awaitTermination(testTimeMs)
+    // stopping before a batch commits interrupts the first one in
+    // flight and leaves the sink with no file
+    while (q.isActive && !q.recentProgress.exists(_.numInputRows > 0)) q.awaitTermination(100)
     q.stop()
     q.awaitTermination()
-    val produced = spark.read.parquet(dir)
+    // the stream's schema: the sink's committed files decide the rows,
+    // never an inference that needs one of them
+    val produced = spark.read.schema(rows.schema).parquet(dir)
     val maxPos = produced.agg(max("ba")).head() match {
       case r if r.isNullAt(0) => -1L
       case r => r.getLong(0)

@@ -113,46 +113,25 @@ object Snapshots {
       .toSeq).sorted
   }
 
-  /** The log's two cumulative sets as of version `upTo` (None = the
-    * whole log): every file any committed snapshot pins (computed only
-    * `withRefs`), and the versions that committed a schema event.
-    * O(checkpoint + tail), not O(versions × files): each set starts
-    * from the newest checkpoint carrying it (`refsEver`, `evs`; older
-    * checkpoints lack them) and folds the versions after it. A
-    * delta's full state is its parent's plus its adds, so the union of
-    * all states is the union of all adds plus any full-format roots —
-    * Delta derives its tombstone set the same way from checkpoint +
-    * tail actions. One pass decodes each tail entry once for both
-    * sets; vacuumed event versions drop out. */
-  private def logSets(root: String, prefix: String, upTo: Option[Int],
-                      withRefs: Boolean): (Set[String], Seq[Int]) = {
-    val vs = versions(root, prefix).filter(v => upTo.forall(v <= _))
-    var refsAt: Option[(Int, Seq[String])] = None
-    var evsAt: Option[(Int, Seq[Int])] = None
-    val ckpts = vs.reverseIterator.filter(v => Files.isRegularFile(ckptPath(root, prefix, v)))
-    while ((evsAt.isEmpty || withRefs && refsAt.isEmpty) && ckpts.hasNext) {
-      val v = ckpts.next()
-      val c = readCheckpoint(root, prefix, v)
-      if (refsAt.isEmpty) refsAt = c.refsEver.map(v -> _)
-      if (evsAt.isEmpty) evsAt = c.evs.map(v -> _)
-    }
-    val refsFrom = if (withRefs) refsAt.fold(-1)(_._1) else Int.MaxValue
-    val evsFrom = evsAt.fold(-1)(_._1)
-    var refs = if (withRefs) refsAt.fold(Set.empty[String])(_._2.toSet) else Set.empty[String]
-    val tailEvs = Seq.newBuilder[Int]
-    vs.filter(_ > (refsFrom min evsFrom)).foreach { v =>
-      val e = entryOf(root, prefix, v)
-      if (v > refsFrom) refs ++= e.files.getOrElse(e.add)
-      if (v > evsFrom && isSchemaEvent(e.opName)) tailEvs += v
-    }
-    val live = vs.toSet
-    (refs, (evsAt.fold(Seq.empty[Int])(_._2).filter(live) ++ tailEvs.result()).distinct.sorted)
-  }
-
-  /** Every file any committed snapshot pins, up to version `upTo`. */
+  /** Every file any committed snapshot pins, up to version `upTo`
+    * (None = the whole log). O(checkpoint + tail), not O(versions ×
+    * files): the fold starts from the newest checkpoint carrying the
+    * cumulative `refsEver` set (older checkpoints lack it) and adds the
+    * files of every version after it. A delta's full state is its
+    * parent's plus its adds, so the union of all states is the union
+    * of all adds plus any full-format roots — Delta derives its
+    * tombstone set the same way from checkpoint + tail actions. */
   private def referencedFiles(root: String, prefix: String,
-                              upTo: Option[Int] = None): Set[String] =
-    logSets(root, prefix, upTo, withRefs = true)._1
+                              upTo: Option[Int] = None): Set[String] = {
+    val vs = versions(root, prefix).filter(v => upTo.forall(v <= _))
+    val refsAt = vs.reverseIterator.filter(v => Files.isRegularFile(ckptPath(root, prefix, v)))
+      .flatMap(v => readCheckpoint(root, prefix, v).refsEver.map(v -> _)).nextOption()
+    val from = refsAt.fold(-1)(_._1)
+    vs.filter(_ > from).foldLeft(refsAt.fold(Set.empty[String])(_._2.toSet)) { (refs, v) =>
+      val e = entryOf(root, prefix, v)
+      refs ++ e.files.getOrElse(e.add)
+    }
+  }
 
   /** Marker prefix for compaction rewrites. Compaction must write its
     * output BEFORE committing the snapshot that pins it; if that commit
@@ -382,29 +361,28 @@ object Snapshots {
     }
     if (version > 0 && version % checkpointInterval == 0)
       writeCheckpoint(root, prefix,
-        Snapshot(version, maxPos, files, removed, op, txns, stats, column, dv))
+        Snapshot(version, maxPos, files, removed, op, txns, stats, column, dv,
+          withEvent(parent.fold(Seq.empty[Int])(_.evs), version, op)))
     version
   }
 
-  /** Full-state checkpoint of one committed version, plus the
-    * cumulative `refsEver` set that keeps [[referencedFiles]]
-    * O(checkpoint + tail). Idempotent — a racer or replay that finds
-    * the file just keeps it. A checkpoint already at this version
-    * (garbage, or an abandoned commit's) is never read for it: both
-    * cumulative sets fold from the versions below. */
+  /** Full-state checkpoint of one committed version, plus the two
+    * cumulative sets: `refsEver`, which keeps [[referencedFiles]]
+    * O(checkpoint + tail), and `evs`, the snapshot's schema-event
+    * versions, which keeps [[resolveSnapshot]] from walking the ops
+    * below it. Idempotent — a racer or replay that finds the file just
+    * keeps it. A checkpoint already at this version (garbage, or an
+    * abandoned commit's) is never read for it: `refsEver` folds from
+    * the versions below, `evs` comes with `snap`. */
   private def writeCheckpoint(root: String, prefix: String, snap: Snapshot,
                               refsOverride: Option[Seq[String]] = None,
                               overwrite: Boolean = false): Unit = {
-    val (refsBelow, evsBelow) =
-      logSets(root, prefix, Some(snap.version - 1), withRefs = refsOverride.isEmpty)
-    val refs = refsOverride.getOrElse((refsBelow ++ snap.files).toSeq.sorted)
-    // cumulative schema-event versions (this version included if it IS
-    // one) — what keeps schemaEvents O(tail) on long histories
-    val evs = evsBelow ++ (if (isSchemaEvent(snap.op)) Seq(snap.version) else Seq.empty)
+    val refs = refsOverride.getOrElse(
+      (referencedFiles(root, prefix, Some(snap.version - 1)) ++ snap.files).toSeq.sorted)
     val entry = CommitLog.Entry(snap.version, CommitLog.Fmt, Some(snap.op), snap.maxPos,
       removed = snap.removed, dv = snap.dv, column = snap.column,
       files = Some(snap.files), txns = snap.txns, stats = snap.stats,
-      refsEver = Some(refs), evs = Some(evs))
+      refsEver = Some(refs), evs = Some(snap.evs))
     def writeTo(p: Path): Unit = {
       val w = Files.newBufferedWriter(p, java.nio.charset.StandardCharsets.UTF_8,
         StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
@@ -945,13 +923,23 @@ object Snapshots {
     read(spark, root, prefix, Some(resolveTag(root, prefix, name).getOrElse(
       sys.error(s"no tag '$name' on $prefix"))))
 
+  /** One resolved version of the log: the handle every read decision
+    * of a table load or a scan takes, so they all see the same state.
+    * `files` is sorted; `op`, `column` and `removed` describe the commit
+    * that wrote this version; `txns`, `stats` and `dv` are cumulative.
+    * `evs` are the versions in this snapshot's history that committed
+    * a schema event (ascending, this one included if it is one) —
+    * [[schemaEvents]] turns them into the events without another walk
+    * of the log. A version vacuumed since stays listed here and is
+    * skipped there. */
   final case class Snapshot(version: Int, maxPos: Long,
                             files: Seq[String], removed: Seq[String],
                             op: String = "append",
                             txns: Seq[String] = Seq.empty,
                             stats: Seq[FileStat] = Seq.empty,
                             column: Option[CommitLog.ColumnChange] = None,
-                            dv: Seq[String] = Seq.empty)
+                            dv: Seq[String] = Seq.empty,
+                            evs: Seq[Int] = Seq.empty)
 
   /** Deletion-vector sidecar directories live OUTSIDE the data dir so
     * directory-listing commits never adopt them as data. */
@@ -1017,10 +1005,15 @@ object Snapshots {
       .map { case (v, e) => resolveSnapshot(root, prefix, v, Some(e)) }
 
   /** The state an entry spells out itself: a checkpoint's or full
-    * manifest's whole state, a delta's header fields. */
+    * manifest's whole state, a delta's header fields. `evs` is left
+    * for [[resolveSnapshot]] to fill. */
   private def toSnapshot(e: CommitLog.Entry, ver: Int): Snapshot =
     Snapshot(ver, e.maxPos, e.files.getOrElse(Seq.empty), e.removed, e.opName,
       e.txns, e.stats, e.column, e.dv)
+
+  /** `evs` after version `v`, which committed `op`. */
+  private def withEvent(evs: Seq[Int], v: Int, op: String): Seq[Int] =
+    if (isSchemaEvent(op)) evs :+ v else evs
 
   /** Content-addressed parse cache for CHECKPOINT manifests. A
     * checkpoint is the one log file big enough (O(table)) that
@@ -1069,8 +1062,12 @@ object Snapshots {
     * chain replayed with this version's add/del/txnsAdd/statsAdd
     * delta. A statsAdd entry REPLACES a carried parent entry for the
     * same (file, column, kind) — stats are footer-derived, so the
-    * freshest derivation wins. `head` is `ver`'s entry when the caller
-    * already decoded it. */
+    * freshest derivation wins. The same walk yields the schema-event
+    * versions: the base checkpoint's `evs` plus the schema ops of the
+    * tail. A base without `evs` (a legacy full manifest, or a
+    * checkpoint written before `evs` existed) takes the versions below
+    * it from a walk of their ops. `head` is `ver`'s entry when the
+    * caller already decoded it. */
   private def resolveSnapshot(root: String, prefix: String, ver: Int,
                               head: Option[CommitLog.Entry] = None): Snapshot = {
     // ITERATIVE descend + fold (r9 advisor target): on a healthy log
@@ -1084,13 +1081,16 @@ object Snapshots {
     var cur = ver
     var base: Option[Snapshot] = None
     var descending = true
+    def anchor(e: CommitLog.Entry): Snapshot =
+      toSnapshot(e, cur).copy(evs = e.evs.getOrElse(withEvent(versions(root, prefix)
+        .filter(v => v < cur && isSchemaEvent(opOf(root, prefix, v))), cur, e.opName)))
     while (descending) {
       if (Files.isRegularFile(ckptPath(root, prefix, cur))) {
-        base = Some(toSnapshot(readCheckpoint(root, prefix, cur), cur)); descending = false
+        base = Some(anchor(readCheckpoint(root, prefix, cur))); descending = false
       } else {
         val e = head.filter(_ => cur == ver).getOrElse(entryOf(root, prefix, cur))
         if (e.files.isDefined) {
-          base = Some(toSnapshot(e, cur)); descending = false
+          base = Some(anchor(e)); descending = false
         } else {
           val pv = e.parent
             .getOrElse(sys.error(s"delta manifest v$cur of $prefix has no parent"))
@@ -1150,7 +1150,8 @@ object Snapshots {
         .filter(st => (!delSet(st.file) || addSet(st.file)) &&
           !addKeys((st.file, st.column, st.typ))) ++ statsAdd
       val txns = acc.map(_.txns).getOrElse(Seq.empty) ++ e.txnsAdd
-      Some(toSnapshot(e, v).copy(files = files, txns = txns, stats = stats))
+      Some(toSnapshot(e, v).copy(files = files, txns = txns, stats = stats,
+        evs = withEvent(acc.map(_.evs).getOrElse(Seq.empty), v, e.opName)))
     }.getOrElse(sys.error(s"unresolvable snapshot v$ver of $prefix"))
   }
 
@@ -1241,20 +1242,15 @@ object Snapshots {
   private def isSchemaEvent(op: String): Boolean =
     op == "addcol" || op == "renamecol" || op == "dropcol"
 
-  /** Versions ≤ `upTo` that committed a schema event. The newest
-    * checkpoint carries the CUMULATIVE list (`evs`), so the probe cost
-    * is O(tail since checkpoint), not O(history) — a million-commit
-    * table probes ≤ interval versions. */
-  private def schemaEventVersions(root: String, prefix: String,
-                                  upTo: Option[Int]): Seq[Int] =
-    logSets(root, prefix, upTo, withRefs = false)._2
-
-  /** Schema-evolution events up to `upTo` (inclusive; None = all),
-    * oldest first. */
-  def schemaEvents(root: String, prefix: String,
-                   upTo: Option[Int] = None): Seq[SchemaEvent] =
-    schemaEventVersions(root, prefix, upTo)
-      .flatMap(v => snapshot(root, prefix, Some(v)))
+  /** The schema-evolution events of `snap`'s history, oldest first.
+    * Their versions come with the snapshot ([[Snapshot.evs]]), so no
+    * walk of the log finds them; each event's `preFiles` are the files
+    * of its own version, resolved here (`snap` itself when it is one).
+    * A table without events costs nothing; an event version vacuumed
+    * since is skipped. */
+  def schemaEvents(root: String, prefix: String, snap: Snapshot): Seq[SchemaEvent] =
+    snap.evs
+      .flatMap(v => if (v == snap.version) Some(snap) else snapshot(root, prefix, Some(v)))
       .flatMap { s =>
         (s.op, s.column) match {
           case ("addcol", Some(CommitLog.ColumnChange(n, Some(t), d, _))) =>
@@ -1349,7 +1345,7 @@ object Snapshots {
     val base = snap.files.headOption
       .map(f => physicalColumns(dataDir(root, prefix), f))
       .getOrElse(Seq.empty)
-    schemaEvents(root, prefix, Some(snap.version)).foldLeft(base) {
+    schemaEvents(root, prefix, snap).foldLeft(base) {
       case (cs, a: AddedColumn) => if (cs.contains(a.name)) cs else cs :+ a.name
       case (cs, r: RenamedColumn) => cs.map(c => if (c == r.from) r.to else c)
       case (cs, d: DroppedColumn) => cs.filterNot(_ == d.name)
@@ -1558,26 +1554,14 @@ object Snapshots {
     conjuncts(folded).flatMap(c => GraftStreamingShim.translateFilter(c).toSeq.flatMap(toRanges))
   }
 
-  /** The files of a snapshot that can hold `column` values in
-    * [lo, hi] — files with footer stats outside the range are skipped;
-    * files without stats are conservatively kept. */
-  def pruneFiles(root: String, prefix: String, column: String,
-                 lo: Long, hi: Long, version: Option[Int] = None): Seq[String] =
-    pruneFilesMulti(root, prefix, Seq(StatRange.longRange(column, lo, hi)), version)
-
-  /** Exact table row count from MANIFEST METADATA alone — no data file
-    * opened. Defined only when it is provably exact: every live file
-    * carries an "R" stat (commits since the stat existed) AND no
+  /** Exact row count of `snap` from MANIFEST METADATA alone — no data
+    * file opened. Defined only when it is provably exact: every live
+    * file carries an "R" stat (commits since the stat existed) AND no
     * deletion vectors are active (MoR-deleted rows are inside the
     * footer counts, so any DV makes the metadata count an
-    * over-estimate). Callers fall back to a scan on None. */
-  def metadataRowCount(root: String, prefix: String,
-                       version: Option[Int] = None): Option[Long] =
-    snapshot(root, prefix, version).flatMap(metadataRowCount)
-
-  /** [[metadataRowCount]] against an already-loaded snapshot — one
-    * manifest read serves a whole multi-aggregate pushdown, and every
-    * aggregate in the result row provably reflects the SAME version. */
+    * over-estimate). Callers fall back to a scan on None. The scan
+    * builder answers a whole multi-aggregate row from one snapshot, so
+    * every aggregate in it reflects the SAME version. */
   def metadataRowCount(snap: Snapshot): Option[Long] = {
     if (snap.dv.nonEmpty) None
     else {
@@ -1607,29 +1591,22 @@ object Snapshots {
       case d: DroppedColumn if d.name == column => d.preFiles
     }.foldLeft(Set.empty[String])(_ ++ _)
 
-  /** Exact (MIN, MAX) of an INT64 column from manifest stats — "L"
-    * stats store raw values, so file-level bounds ARE the column
-    * bounds. Defined only when provably exact: every live file
+  /** Exact (MIN, MAX) of an INT64 column of `snap` from manifest
+    * stats — "L" stats store raw values, so file-level bounds ARE the
+    * column bounds. Defined only when provably exact: every live file
     * carries an "L" stat for the column (an all-null file has none —
     * decline), no stat is stale under schema evolution
     * ([[statStaleFiles]] — a re-added column's old footer stats
     * describe the wrong logical column), and no deletion vectors are
     * active (a removed row could BE the extremum). Parquet footer
     * min/max ignore nulls, matching SQL MIN/MAX semantics. */
-  def metadataLongBounds(root: String, prefix: String, column: String,
-                         version: Option[Int] = None): Option[(Long, Long)] =
-    snapshot(root, prefix, version).flatMap(snap =>
-      metadataLongBounds(root, prefix, snap, column))
-
-  /** [[metadataLongBounds]] against an already-loaded snapshot (see
-    * [[metadataRowCount(snap*]] for why callers pin one). */
   def metadataLongBounds(root: String, prefix: String, snap: Snapshot,
                          column: String): Option[(Long, Long)] = {
     if (snap.dv.nonEmpty || snap.files.isEmpty) None
     else {
       val st = snap.stats.filter(s => s.typ == "L" && s.column == column)
         .map(s => s.file -> s).toMap
-      val stale = statStaleFiles(schemaEvents(root, prefix, Some(snap.version)), column)
+      val stale = statStaleFiles(schemaEvents(root, prefix, snap), column)
       if (snap.files.forall(f => st.contains(f) && !stale.contains(f)))
         Some((snap.files.map(st(_).min).min, snap.files.map(st(_).max).max))
       else None
@@ -1668,42 +1645,29 @@ object Snapshots {
     * vectors are active (a DV could empty a file below its recorded
     * count). The caller still applies the limit — this only narrows
     * IO. */
-  def limitFiles(root: String, prefix: String, n: Long,
-                 version: Option[Int] = None): Option[Seq[String]] = {
-    snapshot(root, prefix, version).flatMap { snap =>
-      if (snap.dv.nonEmpty || n <= 0) None
+  def limitFiles(snap: Snapshot, n: Long): Option[Seq[String]] =
+    if (snap.dv.nonEmpty || n <= 0) None
+    else {
+      val counts = snap.stats.filter(s => s.typ == "R" && s.column == "_rows")
+        .map(s => s.file -> s.min).toMap
+      if (!snap.files.forall(counts.contains)) None
       else {
-        val counts = snap.stats.filter(s => s.typ == "R" && s.column == "_rows")
-          .map(s => s.file -> s.min).toMap
-        if (!snap.files.forall(counts.contains)) None
-        else {
-          var acc = 0L
-          Some(snap.files.takeWhile { f =>
-            val need = acc < n; acc += counts(f); need
-          })
-        }
+        var acc = 0L
+        Some(snap.files.takeWhile { f =>
+          val need = acc < n; acc += counts(f); need
+        })
       }
     }
-  }
 
-  /** Files that can satisfy EVERY range in `ranges` at once — the
-    * multi-predicate skip a Z-order layout is built for: each range
-    * prunes on its own column's stats, and the intersection is the
-    * candidate set. Files without a stat for some column stay
-    * candidates for that range (conservative). */
-  def pruneFilesMulti(root: String, prefix: String, ranges: Seq[StatRange],
-                      version: Option[Int] = None): Seq[String] = {
-    val snap = snapshot(root, prefix, version).getOrElse(
-      sys.error(s"no snapshot for $prefix"))
-    if (ranges.isEmpty) snap.files
-    else prunedFiles(snap, schemaEvents(root, prefix, Some(snap.version)), ranges)
-  }
-
-  /** [[pruneFilesMulti]] on a resolved snapshot and its schema events
-    * (the DML primitives hold both already). The ranges on one
+  /** The files of `snap` that can satisfy EVERY range in `ranges` at
+    * once — the multi-predicate skip a Z-order layout is built for:
+    * each range prunes on its own column's stats, and the intersection
+    * is the candidate set. Files without a stat for some column stay
+    * candidates for that range (conservative); so do files whose stats
+    * predate one of `events` touching the column. The ranges on one
     * (column, stat kind) intersect first, so each stat is looked up
     * once however many bounds a predicate puts on its column. */
-  private def prunedFiles(snap: Snapshot, events: Seq[SchemaEvent],
+  private[graft] def prunedFiles(snap: Snapshot, events: Seq[SchemaEvent],
                           ranges: Seq[StatRange]): Seq[String] = {
     val bounds = ranges.groupBy(r => (r.column, r.typ)).toSeq.map { case ((c, t), rs) =>
       val st = snap.stats.filter(s => s.column == c && s.typ == t).map(s => s.file -> s).toMap
@@ -1731,7 +1695,7 @@ object Snapshots {
                 version: Option[Int] = None): DataFrame = {
     val snap = snapshot(root, prefix, version).getOrElse(
       sys.error(s"no snapshot for $prefix${version.map(" v" + _).getOrElse("")}"))
-    val events = schemaEvents(root, prefix, Some(snap.version))
+    val events = schemaEvents(root, prefix, snap)
     val table =
       if (snap.files.isEmpty) spark.emptyDataFrame
       else readFilesFilled(spark, root, prefix, snap.files, events, snap.dv)
@@ -1746,20 +1710,15 @@ object Snapshots {
     else readFilesFilled(spark, root, prefix, files, events, snap.dv).filter(predicate)
   }
 
-  /** A specific file subset of a snapshot, read through the full
-    * snapshot semantics (schema-evolution replay + deletion-vector
-    * anti-join) — the read primitive the DSv2 scan uses after manifest
-    * pruning has already narrowed the file list driver-side. */
-  private[graft] def readFileSubset(spark: SparkSession, root: String,
-                                    prefix: String, files: Seq[String],
-                                    version: Option[Int] = None): DataFrame = {
-    val snap = snapshot(root, prefix, version)
-    readFilesFilled(spark, root, prefix, files,
-      schemaEvents(root, prefix, snap.map(_.version)),
-      snap.map(_.dv).getOrElse(Seq.empty))
-  }
+  /** A subset `files` of `snap`, read through the full snapshot
+    * semantics (schema-evolution replay + deletion-vector anti-join,
+    * both of `snap`) — the read primitive the DSv2 scan uses after
+    * manifest pruning has already narrowed the file list driver-side. */
+  private[graft] def readFileSubset(spark: SparkSession, root: String, prefix: String,
+                                    snap: Snapshot, files: Seq[String]): DataFrame =
+    readFilesFilled(spark, root, prefix, files, schemaEvents(root, prefix, snap), snap.dv)
 
-  /** The table's resolved schema at `version`, from ONE representative
+  /** The table's resolved schema at `snap`, from ONE representative
     * file per (schema-epoch group × partition directory) —
     * deterministically the lexicographically first — with all events
     * folded. Partition-column TYPES infer from the set of directory
@@ -1769,12 +1728,10 @@ object Snapshots {
     * never constructs a path list over the whole table just to learn
     * its columns. */
   def tableSchema(spark: SparkSession, root: String, prefix: String,
-                  version: Option[Int] = None): org.apache.spark.sql.types.StructType = {
-    val snap = snapshot(root, prefix, version).getOrElse(
-      sys.error(s"no snapshot for $prefix${version.map(" v" + _).getOrElse("")}"))
+                  snap: Snapshot): org.apache.spark.sql.types.StructType = {
     if (snap.files.isEmpty) new org.apache.spark.sql.types.StructType()
     else {
-      val evs = schemaEvents(root, prefix, Some(snap.version))
+      val evs = schemaEvents(root, prefix, snap)
       val reps = snap.files.groupBy(f => (evs.map(e => e.preFiles.contains(f)),
           Option(Paths.get(f).getParent).map(_.toString).getOrElse("")))
         .values.map(_.min).toSeq.sorted
@@ -1793,7 +1750,7 @@ object Snapshots {
       sys.error(s"no snapshot for $prefix${version.map(" v" + _).getOrElse("")}"))
     if (snap.files.isEmpty) spark.emptyDataFrame
     else readFilesFilled(spark, root, prefix, snap.files,
-      schemaEvents(root, prefix, Some(snap.version)), snap.dv)
+      schemaEvents(root, prefix, snap), snap.dv)
   }
 
   /** The published commits of a window, each with the files it added
@@ -1861,25 +1818,28 @@ object Snapshots {
   def readChanges(spark: SparkSession, root: String, prefix: String,
                   fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
     val to = windowEnd(root, prefix, fromVersion, toVersion)
-    val added = additionsInWindow(root, prefix, fromVersion, to).flatMap(_._2).distinct.sorted
+    val added = additionsInWindow(root, prefix, fromVersion, to.version)
+      .flatMap(_._2).distinct.sorted
     if (added.isEmpty) {
       // empty frame with the table's schema
-      read(spark, root, prefix, Some(to)).limit(0)
-    } else readFilesFilled(spark, root, prefix, added, schemaEvents(root, prefix, Some(to)))
+      read(spark, root, prefix, Some(to.version)).limit(0)
+    } else readFilesFilled(spark, root, prefix, added, schemaEvents(root, prefix, to))
   }
 
-  /** The last version of a change window (`toVersion`, default the
+  /** The snapshot that ends a change window (`toVersion`, default the
     * latest published), checked against the log listing together with
     * the window's start. -1 = "before the first commit": v0's changes
     * count too (the stream-source bootstrap case). */
   private def windowEnd(root: String, prefix: String, fromVersion: Int,
-                        toVersion: Option[Int]): Int = {
+                        toVersion: Option[Int]): Snapshot = {
     val vs = versions(root, prefix)
     require(fromVersion == -1 || vs.contains(fromVersion),
       s"no snapshot v$fromVersion for $prefix")
     toVersion match {
-      case Some(v) => if (vs.contains(v)) v else sys.error(s"no snapshot v$v for $prefix")
-      case None => latest(root, prefix, vs).getOrElse(sys.error(s"no snapshot for $prefix")).version
+      case Some(v) =>
+        if (vs.contains(v)) resolveSnapshot(root, prefix, v)
+        else sys.error(s"no snapshot v$v for $prefix")
+      case None => latest(root, prefix, vs).getOrElse(sys.error(s"no snapshot for $prefix"))
     }
   }
 
@@ -1928,8 +1888,8 @@ object Snapshots {
     // full-table frame path-checks every live file — metadata cost
     // proportional to the table, paid just for a column list (and it
     // would wrongly require files OUTSIDE the window to exist)
-    val cols = tableSchema(spark, root, prefix, Some(to)).fieldNames.toSeq
-    val events = schemaEvents(root, prefix, Some(to))
+    val cols = tableSchema(spark, root, prefix, to).fieldNames.toSeq
+    val events = schemaEvents(root, prefix, to)
     def shape(df: DataFrame, v: Int): DataFrame = {
       // rows committed before a column existed (CDC records staged
       // pre-evolution, or an addcol inside the window) read as the
@@ -1956,7 +1916,7 @@ object Snapshots {
     }
     // a staged batch's rows surface as the PUBLISH commit's inserts
     // (the shared walk's staged-version rule)
-    val parts = publishedAdditions(root, prefix, fromVersion, to)
+    val parts = publishedAdditions(root, prefix, fromVersion, to.version)
       .flatMap { case (cur, addedFiles) =>
         val v = cur.version
         def fromFiles(tag: String): Option[DataFrame] =
@@ -1973,7 +1933,7 @@ object Snapshots {
         }
       }
     if (parts.isEmpty)
-      shape(read(spark, root, prefix, Some(to))
+      shape(read(spark, root, prefix, Some(to.version))
         .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")), 0).limit(0)
     else parts.reduce(_.unionByName(_))
   }
@@ -2043,7 +2003,7 @@ object Snapshots {
     // a compacted file's rows keep their pre-evolution defaults even
     // though the file itself postdates the column (Delta's rewrite
     // rule)
-    val evs = schemaEvents(root, prefix, Some(snap.version))
+    val evs = schemaEvents(root, prefix, snap)
     val byDir = snap.files.groupBy(f =>
       Option(Paths.get(f).getParent).map(_.toString).getOrElse(""))
     val keep = Seq.newBuilder[String]
@@ -2169,7 +2129,7 @@ object Snapshots {
       enforceConstraints(root, prefix, source)
       val base = dataDir(root, prefix)
       val srcKeys = source.select(keys.map(col): _*).distinct().localCheckpoint(true)
-      lazy val evs = schemaEvents(root, prefix, Some(snap.version))
+      lazy val evs = schemaEvents(root, prefix, snap)
       // stage 1 — manifest pruning: a file whose stats exclude the
       // source's key range can't contain a match and is never opened
       val candidates = snap.stats.find(s => s.column == keys.head && s.typ == "L") match {
@@ -2305,7 +2265,7 @@ object Snapshots {
         predicate, org.apache.spark.sql.functions.lit(false))
       // schema-aware: the delete predicate may reference an added
       // column (matching its default on pre-evolution rows)
-      val evs = schemaEvents(root, prefix, Some(snap.version))
+      val evs = schemaEvents(root, prefix, snap)
       // position-keyed read, not input_file_name(): with deletion
       // vectors active the plan holds two file sources and
       // input_file_name() refuses to bind
@@ -2416,7 +2376,7 @@ object Snapshots {
       sys.error(s"nothing to update for $prefix"))
     if (txn.exists(snap.txns.contains)) snap.version
     else {
-      val evs = schemaEvents(root, prefix, Some(snap.version))
+      val evs = schemaEvents(root, prefix, snap)
       val candidates = prunedFiles(snap, evs, ranges)
       if (candidates.isEmpty) return snap.version // stats exclude every file
       val withFile = readFilesFilled(spark, root, prefix, candidates, evs,
@@ -2557,7 +2517,7 @@ object Snapshots {
       sys.error(s"nothing to merge into for $prefix"))
     if (txn.exists(snap.txns.contains)) snap.version
     else {
-      val evs = schemaEvents(root, prefix, Some(snap.version))
+      val evs = schemaEvents(root, prefix, snap)
       val badSrc = source.columns.filterNot(_.startsWith(SrcColPrefix))
       require(badSrc.isEmpty,
         s"merge source columns must carry $SrcColPrefix: ${badSrc.mkString(", ")}")
@@ -2864,7 +2824,7 @@ object Snapshots {
       val base = dataDir(root, prefix)
       val added = writeStaged(root, prefix, data,
         if (data.columns.contains("topic")) Seq("topic") else Seq.empty)
-      val evs = schemaEvents(root, prefix, Some(snap.version))
+      val evs = schemaEvents(root, prefix, snap)
       val cdc = readFilesFilled(spark, root, prefix, snap.files, evs, snap.dv)
         .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
         .unionByName(
@@ -2975,7 +2935,7 @@ object Snapshots {
       val base = dataDir(root, prefix)
       val added = writeStaged(root, prefix, data,
         if (data.columns.contains("topic")) Seq("topic") else Seq.empty)
-      val evs = schemaEvents(root, prefix, Some(snap.version))
+      val evs = schemaEvents(root, prefix, snap)
       // the matched set is what a region replace is FOR — small next
       // to the table; one materialization feeds sidecar + conflict
       // check + CDC pre-images (the deleteMoR discipline)
@@ -3052,7 +3012,7 @@ object Snapshots {
     if (txn.exists(snap.txns.contains)) snap.version
     else {
       val base = dataDir(root, prefix)
-      val evs = schemaEvents(root, prefix, Some(snap.version))
+      val evs = schemaEvents(root, prefix, snap)
       val candidates = prunedFiles(snap, evs, ranges)
       if (candidates.isEmpty) return snap.version // stats exclude every file
       val frame = readFilesFilled(spark, root, prefix, candidates, evs,
@@ -3124,7 +3084,7 @@ object Snapshots {
         .localCheckpoint(true) // reused by keys + upserts below
       if (last.isEmpty) snap.version // empty increment — no new version
       else {
-        val evs = schemaEvents(root, prefix, Some(snap.version))
+        val evs = schemaEvents(root, prefix, snap)
         // the snapshot's resolved columns (deletion vectors drop rows,
         // never columns)
         val tableCols = readFilesFilled(spark, root, prefix, snap.files, evs).columns.toSeq

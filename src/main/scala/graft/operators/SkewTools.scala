@@ -33,7 +33,12 @@ object SkewTools {
     * already at least half as parallel as the session — at scale the
     * scan is parallel and the extra exchange would be pure cost; on a
     * small input the shuffled rows are exactly the frame, cheap next
-    * to the compute it unlocks. */
+    * to the compute it unlocks.
+    *
+    * Contract: `df` must be scan-shaped (no exchange in its plan). The
+    * partition probe plans `df`'s RDD, and under AQE that runs every
+    * upstream shuffle stage; the returned frame is a new query that
+    * runs them all again. On a scan the probe only plans file splits. */
   def spreadForCompute(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     val cur =

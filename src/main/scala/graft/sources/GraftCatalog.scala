@@ -154,10 +154,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val root = dir.toString
     // the snapshot log is authoritative once data exists (it carries
     // schema evolution); the DDL file covers the created-empty window
-    val schema =
-      if (Snapshots.snapshot(root, Prefix, version).isDefined)
-        Snapshots.tableSchema(SparkSession.active, root, Prefix, version)
-      else persistedSchema(dir)
+    val schema = Snapshots.snapshot(root, Prefix, version)
+      .fold(persistedSchema(dir))(Snapshots.tableSchema(SparkSession.active, root, Prefix, _))
     new GraftTable(root, Prefix, version, schema, declaredParts(dir))
   }
 

@@ -116,7 +116,9 @@ class GraftSource extends TableProvider with DataSourceRegister
     // O(epochs) schema derivation — resolution must not build a path
     // list over every data file (a million-file table would pay it on
     // every query's analysis)
-    val base = Snapshots.tableSchema(SparkSession.active, root, prefix, version)
+    val snap = Snapshots.snapshot(root, prefix, version).getOrElse(
+      sys.error(s"no snapshot for $prefix${version.map(" v" + _).getOrElse("")}"))
+    val base = Snapshots.tableSchema(SparkSession.active, root, prefix, snap)
     // the CHANGE FEED as a relation (Delta's readChangeFeed option):
     // the table schema widens by the two CDC columns. A pinned
     // version/tag is ambiguous against a commit-window read — the
@@ -156,10 +158,9 @@ class GraftSource extends TableProvider with DataSourceRegister
     // schema IS the definition. Nullability is advisory.
     val effective =
       if (inferred.contains(schema) || opts.getBoolean("readChangeFeed", false) ||
-          opts.getBoolean("mergeSchema", false) ||
-          Snapshots.snapshot(root, prefix, version).isEmpty) schema
-      else {
-        val disk = Snapshots.tableSchema(SparkSession.active, root, prefix, version)
+          opts.getBoolean("mergeSchema", false)) schema
+      else Snapshots.snapshot(root, prefix, version).fold(schema) { snap =>
+        val disk = Snapshots.tableSchema(SparkSession.active, root, prefix, snap)
         val actual = disk.fields.map(f => f.name -> f.dataType).toMap
         schema.fields.foreach { f =>
           actual.get(f.name) match {
@@ -455,10 +456,9 @@ private[sources] class GraftTable(val root: String, val prefix: String,
               // never rewrites types). Without the option a mismatched
               // frame was already refused at getTable.
               val aligned =
-                if (!info.options.getBoolean("mergeSchema", false) ||
-                    Snapshots.snapshot(root, prefix, None).isEmpty) data
-                else {
-                  val disk = Snapshots.tableSchema(data.sparkSession, root, prefix)
+                if (!info.options.getBoolean("mergeSchema", false)) data
+                else Snapshots.snapshot(root, prefix, None).fold(data) { snap =>
+                  val disk = Snapshots.tableSchema(data.sparkSession, root, prefix, snap)
                   val diskByName = disk.fields.map(f => f.name -> f.dataType).toMap
                   data.schema.fields.foreach { f =>
                     diskByName.get(f.name).foreach { t =>
@@ -593,6 +593,15 @@ private[sources] class GraftScanBuilder(root: String, prefix: String,
   private var aggPushed: Option[Seq[Long]] = None // one value per agg column
   private var limitFiles: Option[Seq[String]] = None // covering prefix, pinned at pushLimit
 
+  /** The one snapshot every decision of this scan reads — metadata
+    * aggregates, the LIMIT prefix, the pruned file list, the reported
+    * statistics and the rows — resolved at first use. A commit that
+    * lands mid-planning (or before the scan runs) is not seen by any
+    * of them, so they can never mix two versions. Each planning builds
+    * a new builder, so a re-run of a latest-version read resolves the
+    * log anew. */
+  private lazy val snap: Option[Snapshots.Snapshot] = Snapshots.snapshot(root, prefix, version)
+
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f => Snapshots.toRanges(f).nonEmpty)
     filters // ALL residual: stats narrow IO, never replace evaluation
@@ -611,8 +620,7 @@ private[sources] class GraftScanBuilder(root: String, prefix: String,
     * deletion vectors are active. Anything else falls back to the
     * ordinary scan. */
   // supportCompletePushDown and pushAggregation both evaluate the same
-  // aggregation — memoized so planning reads the manifest once and
-  // both calls see the SAME snapshot even if a commit lands between
+  // aggregation — memoized so the stats fold runs once
   private var metaMemo: Option[(Aggregation, Option[Seq[Long]])] = None
 
   private def metaAgg(agg: Aggregation): Option[Seq[Long]] =
@@ -635,18 +643,15 @@ private[sources] class GraftScanBuilder(root: String, prefix: String,
           Some(nr.fieldNames()(0))
         case _ => None
       }
-    // ONE snapshot load serves every aggregate: count/min/max in a
-    // multi-aggregate row must all reflect the SAME version even if a
-    // commit lands mid-planning (the lazy-prunedFiles discipline the
-    // ordinary scan path already follows), and (min, max) of one
-    // column parses the manifest once, not twice
-    Snapshots.snapshot(root, prefix, version).flatMap { snap =>
+    // the scan's one snapshot serves every aggregate: count/min/max in
+    // a multi-aggregate row all reflect the SAME version
+    snap.flatMap { s =>
       val vals = agg.aggregateExpressions.toSeq.map {
-        case _: CountStar => Snapshots.metadataRowCount(snap)
+        case _: CountStar => Snapshots.metadataRowCount(s)
         case m: AggMin => longCol(m.column).flatMap(c =>
-          Snapshots.metadataLongBounds(root, prefix, snap, c).map(_._1))
+          Snapshots.metadataLongBounds(root, prefix, s, c).map(_._1))
         case m: AggMax => longCol(m.column).flatMap(c =>
-          Snapshots.metadataLongBounds(root, prefix, snap, c).map(_._2))
+          Snapshots.metadataLongBounds(root, prefix, s, c).map(_._2))
         case _ => None
       }
       if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
@@ -660,11 +665,7 @@ private[sources] class GraftScanBuilder(root: String, prefix: String,
     * filters (rows may be filtered away) or when Snapshots.limitFiles
     * cannot prove coverage (missing stats / active DVs). */
   override def pushLimit(n: Int): Boolean = {
-    if (pushed.isEmpty) {
-      // keep the computed prefix — recomputing it in the scan would
-      // read the manifest twice AND could see a different snapshot
-      limitFiles = Snapshots.limitFiles(root, prefix, n.toLong, version)
-    }
+    if (pushed.isEmpty) limitFiles = snap.flatMap(Snapshots.limitFiles(_, n.toLong))
     limitFiles.isDefined
   }
 
@@ -698,7 +699,7 @@ private[sources] class GraftScanBuilder(root: String, prefix: String,
   override def build(): Scan = aggPushed match {
     case Some(vs) => new GraftCountScan(prefix, vs)
     case None =>
-      new GraftScan(root, prefix, version, required, pushed, limitFiles, options)
+      new GraftScan(root, prefix, version, snap, required, pushed, limitFiles, options)
   }
 }
 
@@ -739,6 +740,7 @@ private[sources] class GraftCountRelation(values: Seq[Long],
 }
 
 private[sources] class GraftScan(root: String, prefix: String, version: Option[Int],
+                                 snapshot: => Option[Snapshots.Snapshot],
                                  required: StructType, pushed: Array[Filter],
                                  limitFiles: Option[Seq[String]] = None,
                                  options: CaseInsensitiveStringMap =
@@ -782,25 +784,28 @@ private[sources] class GraftScan(root: String, prefix: String, version: Option[I
   }
 
   override def description(): String = {
-    val files = prunedFiles.length
-    val total = Snapshots.snapshot(root, prefix, version).map(_.files.length).getOrElse(0)
-    s"GraftScan $prefix files=$files/$total pushed=${pushed.mkString(",")}"
+    val total = snap.fold(0)(_.files.length)
+    s"GraftScan $prefix files=${prunedFiles.length}/$total pushed=${pushed.mkString(",")}"
   }
 
+  /** The builder's snapshot, resolved when a batch read first needs
+    * it (a streaming read never does). */
+  private lazy val snap = snapshot
+
   /** Manifest pruning happens DRIVER-SIDE from stats alone — no data
-    * file is opened to decide the file list. Resolved ONCE at first
-    * use and pinned: stats, description, and the V1 relation all see
-    * the same snapshot even if a commit lands mid-query, and the
-    * manifest is read once per scan, not once per caller. */
-  private lazy val prunedFiles: Seq[String] = {
+    * file is opened to decide the file list. Computed once, from the
+    * builder's snapshot: the statistics, the description and the V1
+    * relation's rows all come from that one version even if a commit
+    * lands before the scan runs. */
+  private lazy val prunedFiles: Seq[String] = snap.fold(Seq.empty[String]) { s =>
     val ranges = pushed.toSeq.flatMap(Snapshots.toRanges)
-    if (ranges.nonEmpty) Snapshots.pruneFilesMulti(root, prefix, ranges, version)
-    else limitFiles.getOrElse( // prefix pinned at pushLimit — no re-read
-      Snapshots.snapshot(root, prefix, version).map(_.files).getOrElse(Seq.empty))
+    if (ranges.nonEmpty)
+      Snapshots.prunedFiles(s, Snapshots.schemaEvents(root, prefix, s), ranges)
+    else limitFiles.getOrElse(s.files) // prefix pinned at pushLimit
   }
 
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftV1Relation(root, prefix, version, required, prunedFiles, context)
+    new GraftV1Relation(root, prefix, snap, required, prunedFiles, context)
       .asInstanceOf[T]
 }
 
@@ -809,7 +814,7 @@ private[sources] class GraftScan(root: String, prefix: String, version: Option[I
   * pattern — the rows are already InternalRow because they come out of
   * a DataFrame's executed plan. */
 private[sources] class GraftV1Relation(root: String, prefix: String,
-                                       version: Option[Int], required: StructType,
+                                       snap: Option[Snapshots.Snapshot], required: StructType,
                                        files: Seq[String], ctx: SQLContext)
   extends BaseRelation with TableScan {
 
@@ -819,18 +824,16 @@ private[sources] class GraftV1Relation(root: String, prefix: String,
 
   override def needConversion: Boolean = false
 
-  override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
+  override def buildScan(): RDD[Row] = snap.filter(_ => files.nonEmpty) match {
     // a created-but-never-committed table (or a fully-pruned scan) has
-    // no files — return an empty RDD without touching the snapshot
-    // machinery, which requires at least one commit to exist
-    if (files.isEmpty)
-      return spark.sparkContext.emptyRDD[Row]
-    val base = Snapshots.readFileSubset(spark, root, prefix, files, version)
-    val projected =
-      if (required.isEmpty) base.select()
-      else base.select(required.fieldNames.map(col).toIndexedSeq: _*)
-    projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    // no files — an empty RDD, no read planned
+    case None => ctx.sparkSession.sparkContext.emptyRDD[Row]
+    case Some(s) =>
+      val base = Snapshots.readFileSubset(ctx.sparkSession, root, prefix, s, files)
+      val projected =
+        if (required.isEmpty) base.select()
+        else base.select(required.fieldNames.map(col).toIndexedSeq: _*)
+      projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }
 

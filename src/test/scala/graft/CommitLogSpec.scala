@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.scalacheck.{Gen, Prop, Test}
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.{CommitLog, ConsumeJob, ProduceJob, Snapshots, Topics}
 import graft.ingest.CommitLog.{ColumnChange, Entry}

@@ -159,8 +159,8 @@ class CurationSpec extends SparkTestBase {
     assert(snap.version == 1) // base commit + one incremental append
     // a single-cell probe opens a strict subset of the files — across
     // BOTH commits' files, since each was written range-clustered
-    val pruned = Snapshots.pruneFilesMulti(root, "ix",
-      Seq(Snapshots.StatRange.longRange("cell", 3, 3)))
+    val pruned = prunedFiles(root, "ix",
+      Snapshots.StatRange.longRange("cell", 3, 3))
     assert(pruned.nonEmpty && pruned.size < snap.files.size,
       s"pruned ${pruned.size} of ${snap.files.size}")
     // incremental rows really are served by pruned reads
@@ -178,8 +178,8 @@ class CurationSpec extends SparkTestBase {
     val snap = Snapshots.snapshot(root, "inv", None).get
     assert(snap.version == 1) // base commit + one incremental append
     // a single-bucket term lookup opens a strict subset of the files
-    val pruned = Snapshots.pruneFilesMulti(root, "inv",
-      Seq(Snapshots.StatRange.longRange("bucket", 3, 3)))
+    val pruned = prunedFiles(root, "inv",
+      Snapshots.StatRange.longRange("bucket", 3, 3))
     assert(pruned.nonEmpty && pruned.size < snap.files.size,
       s"pruned ${pruned.size} of ${snap.files.size}")
     // incremental postings really are served (new docs present)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.ingest.{Snapshots, Topics}
+import graft.ingest.Snapshots
 
 /** One-off scale probe for the delta-encoded commit log (run manually:
   * `sbt "testOnly graft.DeltaLogScaleProbe"`; excluded from the

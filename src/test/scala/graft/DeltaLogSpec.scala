@@ -606,7 +606,7 @@ class DeltaLogSpec extends SparkTestBase {
     assert(snap.stats.exists(st => st.column == "p|q" && st.typ == "L"),
       s"no p|q stat: ${snap.stats.map(_.column).distinct}")
     // a filter on it opens only the file whose range it can match
-    assert(Snapshots.pruneFiles(root, "hz", "p|q", 0, 10).size == 1)
+    assert(prunedFiles(root, "hz", Snapshots.StatRange.longRange("p|q", 0, 10)).size == 1)
     assert(Snapshots.readWhere(spark, root, "hz", col("p|q").between(0L, 10L)).count() == 6)
     val df = Snapshots.read(spark, root, "hz")
     assert(df.count() == 100)

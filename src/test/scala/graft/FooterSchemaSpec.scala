@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.fs.{Path => HadoopPath}
@@ -78,7 +77,7 @@ class FooterSchemaSpec extends SparkTestBase {
     sameRead(Snapshots.readDv(spark, dvs.map(Paths.get(_))), spark.read.parquet(dvs: _*))
     // the resolved table: schema equals what a read yields, rows as written
     val table = Snapshots.read(spark, root, "t")
-    assert(Snapshots.tableSchema(spark, root, "t") == table.schema)
+    assert(Snapshots.tableSchema(spark, root, "t", Snapshots.snapshot(root, "t").get) == table.schema)
     assert(table.columns.toSet == Set("id", "label", "d", "w", "topic"))
     assert(table.count() == 120L)
     assert(spark.sql(s"SELECT count(*) FROM $t WHERE w = 'x'").head().getLong(0) == 90L)

@@ -105,4 +105,12 @@ class IngestSpec extends SparkTestBase {
     assert(c.totalReceived == rep.totalSent)
     assert(c.topics.map(_.distinctPos).sum == rep.totalSent) // exactly-once
   }
+
+  test("streaming produce with no run time still commits a batch of rows") {
+    val root = freshRoot()
+    val rep = ProduceJob.produceStream(spark, root, "p0", msgRate = 100, testTimeMs = 0)
+    assert(rep.totalSent >= 1)
+    assert(rep.maxPos == rep.totalSent - 1)
+    assert(Snapshots.read(spark, root, "p0").count() == rep.totalSent)
+  }
 }

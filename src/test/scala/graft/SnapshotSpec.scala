@@ -179,12 +179,13 @@ class SnapshotSpec extends SparkTestBase {
     val root = tempDir("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "ss", topics = 1, numMessages = 100) // v0: ba 0..99
     // pre-evolution: footer stats are live, bounds are exact
-    assert(Snapshots.metadataLongBounds(root, "ss", "ba").contains((0L, 99L)))
+    def bounds = Snapshots.snapshot(root, "ss").flatMap(Snapshots.metadataLongBounds(root, "ss", _, "ba"))
+    assert(bounds.contains((0L, 99L)))
     Snapshots.dropColumn(root, "ss", "ba") // v1
     Snapshots.addColumn(root, "ss", "ba", "BIGINT", Some("4242")) // v2 — a NEW logical ba
     // old footers still carry a "ba" stat saying [0, 99]; trusting it
     // would answer min/max for a column every row of which reads 4242
-    assert(Snapshots.metadataLongBounds(root, "ss", "ba").isEmpty)
+    assert(bounds.isEmpty)
     // pruning on the re-added name must KEEP pre-event files — their
     // stale stat ranges would otherwise skip files whose rows all match
     assert(Snapshots.readWhere(spark, root, "ss", col("ba") === 4242L).count() == 100)
@@ -193,7 +194,7 @@ class SnapshotSpec extends SparkTestBase {
       .agg(min("ba"), max("ba")).collect()(0)
     assert(agg.getLong(0) == 4242L && agg.getLong(1) == 4242L)
     // untouched columns keep their metadata fast path at the same version
-    assert(Snapshots.metadataRowCount(root, "ss").contains(100L))
+    assert(Snapshots.snapshot(root, "ss").flatMap(Snapshots.metadataRowCount).contains(100L))
   }
 
   test("delete on a pre-evolution file materializes defaults into survivors") {
@@ -534,7 +535,7 @@ class SnapshotSpec extends SparkTestBase {
     withMultiFileWrites { ProduceJob.produceBatch(spark, root, "s14", topics = 1, numMessages = 4000) }
     val snap = Snapshots.snapshot(root, "s14").get
     assert(snap.stats.exists(_.column == "ba")) // footer stats committed
-    val pruned = Snapshots.pruneFiles(root, "s14", "ba", 100, 199)
+    val pruned = prunedFiles(root, "s14", Snapshots.StatRange.longRange("ba", 100, 199))
     assert(pruned.size < snap.files.size) // skipping actually skips
     val df = Snapshots.readWhere(spark, root, "s14", col("ba").between(100L, 199L))
     assert(df.count() == 100)
@@ -741,11 +742,11 @@ class SnapshotSpec extends SparkTestBase {
       .parquet(graft.ingest.Topics.tableDir(root, "s16"))
     Snapshots.commit(root, "s16", 3999)
     val all = Snapshots.snapshot(root, "s16").get.files
-    assert(Snapshots.pruneFiles(root, "s16", "ba", 0, 99).size == all.size)
+    assert(prunedFiles(root, "s16", Snapshots.StatRange.longRange("ba", 0, 99)).size == all.size)
     val v = Snapshots.cluster(spark, root, "s16", "ba", targetFiles = 8)
     assert(Snapshots.snapshot(root, "s16").get.version == v)
     // post-cluster: a narrow range read opens a fraction of the files
-    val pruned = Snapshots.pruneFiles(root, "s16", "ba", 0, 99)
+    val pruned = prunedFiles(root, "s16", Snapshots.StatRange.longRange("ba", 0, 99))
     assert(pruned.size < Snapshots.snapshot(root, "s16").get.files.size / 2)
     // rows unchanged, pruned read exact, time travel intact
     val t = Snapshots.read(spark, root, "s16")
@@ -875,7 +876,7 @@ class SnapshotSpec extends SparkTestBase {
     // the rewrite reads after the DELETE: its input applies the vector
     val read1 = Snapshots.snapshot(root, "s23").get
     val tmp = tempDir("graft_snap_rw")
-    Snapshots.readFileSubset(spark, root, "s23", Seq(f), Some(read1.version)).drop("topic")
+    Snapshots.readFileSubset(spark, root, "s23", read1, Seq(f)).drop("topic")
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).iterator().asScala.find(_.toString.endsWith(".parquet")).get
     val copy = java.nio.file.Paths.get(f).resolveSibling("compacted-filtered.parquet").toString
@@ -998,12 +999,12 @@ class SnapshotSpec extends SparkTestBase {
     // double pruning: layout is range-clustered on ba, and weight is a
     // monotone function of ba, so a narrow weight range skips files
     val dRange = Snapshots.StatRange.doubleRange("weight", 10.0, 19.975)
-    assert(Snapshots.pruneFilesMulti(root, "s23", Seq(dRange)).size < snap.files.size)
+    assert(prunedFiles(root, "s23", dRange).size < snap.files.size)
     val dRead = Snapshots.readWhere(spark, root, "s23", col("weight").between(10.0, 19.975))
     assert(dRead.count() == 400) // ba 400..799
     // string pruning: doc ids are zero-padded, so lexical order = numeric
     val sRange = Snapshots.StatRange.stringRange("doc_id", "doc001000", "doc001399")
-    assert(Snapshots.pruneFilesMulti(root, "s23", Seq(sRange)).size < snap.files.size)
+    assert(prunedFiles(root, "s23", sRange).size < snap.files.size)
     val sRead = Snapshots.readWhere(spark, root, "s23",
       col("doc_id").between("doc001000", "doc001399"))
     assert(sRead.count() == 400)
@@ -1032,10 +1033,10 @@ class SnapshotSpec extends SparkTestBase {
     // nullness domain recorded per file: {1}, {0}, {0,1}
     assert(snap.stats.filter(s => s.column == "v" && s.typ == "N").size == 3)
     // IS NOT NULL skips the all-null file; IS NULL skips the no-null file
-    assert(Snapshots.pruneFilesMulti(root, "nn",
-      Seq(Snapshots.StatRange.isNotNull("v"))).size == 2)
-    assert(Snapshots.pruneFilesMulti(root, "nn",
-      Seq(Snapshots.StatRange.isNull("v"))).size == 2)
+    assert(prunedFiles(root, "nn",
+      Snapshots.StatRange.isNotNull("v")).size == 2)
+    assert(prunedFiles(root, "nn",
+      Snapshots.StatRange.isNull("v")).size == 2)
     // readWhere extracts the nullness conjuncts and stays correct
     assert(Snapshots.readWhere(spark, root, "nn", col("v").isNotNull).count() == 150)
     assert(Snapshots.readWhere(spark, root, "nn", col("v").isNull).count() == 150)
@@ -1147,16 +1148,16 @@ class SnapshotSpec extends SparkTestBase {
     val files0 = Snapshots.snapshot(root, "s24").get.files
     val xr = Snapshots.StatRange.longRange("x", 0, 15)
     val yr = Snapshots.StatRange.longRange("y", 0, 15)
-    assert(Snapshots.pruneFilesMulti(root, "s24", Seq(xr, yr)).size == files0.size)
+    assert(prunedFiles(root, "s24", xr, yr).size == files0.size)
     val v = Snapshots.clusterZOrder(spark, root, "s24", Seq("x", "y"), targetFiles = 16)
     assert(Snapshots.snapshot(root, "s24").get.version == v)
     val filesZ = Snapshots.snapshot(root, "s24").get.files
     // each single-column range prunes…
-    assert(Snapshots.pruneFilesMulti(root, "s24", Seq(xr)).size < filesZ.size)
-    assert(Snapshots.pruneFilesMulti(root, "s24", Seq(yr)).size < filesZ.size)
+    assert(prunedFiles(root, "s24", xr).size < filesZ.size)
+    assert(prunedFiles(root, "s24", yr).size < filesZ.size)
     // …and the conjunction prunes harder than either alone
-    val both = Snapshots.pruneFilesMulti(root, "s24", Seq(xr, yr))
-    assert(both.size <= Snapshots.pruneFilesMulti(root, "s24", Seq(xr)).size)
+    val both = prunedFiles(root, "s24", xr, yr)
+    assert(both.size <= prunedFiles(root, "s24", xr).size)
     assert(both.size <= filesZ.size / 2)
     // rows unchanged; the pruned conjunctive read is exact
     val t = Snapshots.read(spark, root, "s24")
@@ -1402,10 +1403,10 @@ class SnapshotSpec extends SparkTestBase {
     // an x-range predicate skips most x-clustered files but must keep
     // every y-clustered file (their x spans are wide): strictly fewer
     // than all, at least the 4 B-generation files + 1 A file
-    val xFiles = Snapshots.pruneFiles(root, "pe", "x", 0, 3)
+    val xFiles = prunedFiles(root, "pe", Snapshots.StatRange.longRange("x", 0, 3))
     assert(xFiles.size < total && xFiles.size >= 5,
       s"x-prune kept ${xFiles.size} of $total")
-    val yFiles = Snapshots.pruneFiles(root, "pe", "y", 0, 3)
+    val yFiles = prunedFiles(root, "pe", Snapshots.StatRange.longRange("y", 0, 3))
     assert(yFiles.size < total && yFiles.size >= 5,
       s"y-prune kept ${yFiles.size} of $total")
     // pruning narrows IO, never semantics — equal to the full scan

@@ -54,6 +54,14 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       }
     } finally super.afterAll()
 
+  /** The files of `prefix`'s latest snapshot that `ranges` cannot rule
+    * out, with the snapshot's schema events applied. */
+  def prunedFiles(root: String, prefix: String,
+                  ranges: ingest.Snapshots.StatRange*): Seq[String] = {
+    val snap = ingest.Snapshots.snapshot(root, prefix).get
+    ingest.Snapshots.prunedFiles(snap, ingest.Snapshots.schemaEvents(root, prefix, snap), ranges)
+  }
+
   def run(name: String): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf)
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{EventMoments, MomentsBuf}
+import graft.functions.MomentsBuf
 
 /** Q51–Q53 self-consistency: the UDF / Aggregator / Generator paths
   * must agree with their declarative formulations. */

@@ -3,14 +3,25 @@ package graft.sources
 import graft.SparkTestBase
 import graft.ingest.{ProduceJob, Snapshots}
 
-/** Manifest-read cost of the DSv2 planner path (round-9 upgrade of the
-  * round-8 "one manifest read per query" pin to the delta-log world):
-  * a batch query against a graft table must resolve its snapshot from
-  * ONE checkpoint plus a bounded delta tail — the log-file open count
-  * is O(checkpointInterval), never O(history). A regression back to
-  * full-chain replay (or a planner that re-resolves per stage) fails
-  * this loudly. */
+/** Log-file opens of the DSv2 planner path. A batch read resolves its
+  * snapshot twice: once when the table loads (its schema) and once when
+  * the scan builds (metadata aggregates, LIMIT prefix, pruned file
+  * list, statistics and rows all read that one snapshot). Each
+  * resolution opens one checkpoint plus a delta tail bounded by
+  * `checkpointInterval`, and the schema-event versions come with it. So
+  * a read costs at most 2 × (interval + 2) opens, whatever the history
+  * length. A planner that re-resolves the snapshot per decision, or a
+  * delta chain that regressed to O(history) replay, fails here. */
 class DsvLogCostSpec extends SparkTestBase {
+
+  private def budget: Long = 2L * (Snapshots.checkpointInterval + 2)
+
+  /** `f`'s result and the log files it opened. */
+  private def opens[T](f: => T): (T, Long) = {
+    val before = Snapshots.logOpens.get()
+    val r = f
+    (r, Snapshots.logOpens.get() - before)
+  }
 
   test("a DSv2 query against a long-history table opens O(interval) log files, not O(history)") {
     val root = tempDir("graft_dsvlog").toString
@@ -18,18 +29,26 @@ class DsvLogCostSpec extends SparkTestBase {
     (0 until 25).foreach { i =>
       ProduceJob.produceBatch(spark, root, "c", topics = 1, numMessages = 10 + i)
     }
-    // cold relation: schema resolve + scan build + execute
-    val before = Snapshots.logOpens.get()
-    val n = spark.read.format("graft").load(s"$root/c").count()
-    val opens = Snapshots.logOpens.get() - before
+    // cold relation: schema resolve + scan build + execute — a count
+    // the manifest answers, and a filtered read the scan prunes and runs
+    val (n, k) = opens(spark.read.format("graft").load(s"$root/c").count())
     assert(n == (10 until 35).sum)
-    // the planner path may resolve the snapshot a handful of times
-    // (schema, stats, scan) — each resolution is ≤ interval+1 reads
-    // plus op probes; 25-version history would cost ≥ 25 reads PER
-    // resolution if the delta chain regressed to O(history)
-    val budget = 4L * (Snapshots.checkpointInterval + 3)
-    assert(opens <= budget,
-      s"DSv2 query read $opens log files (budget $budget) — " +
-        "manifest replay is no longer checkpoint-bounded")
+    assert(k <= budget, s"DSv2 count read $k log files (budget $budget)")
+    val (rows, kf) = opens(spark.read.format("graft").load(s"$root/c").where("ba >= 0").collect())
+    assert(rows.length == (10 until 35).sum)
+    assert(kf <= budget, s"DSv2 filtered read read $kf log files (budget $budget)")
+  }
+
+  test("a catalog point read opens O(interval) log files, not one walk per decision") {
+    val t = s"graft.${graftNamespace("logcost")}.people"
+    spark.sql(s"CREATE TABLE $t (name STRING, age INT, ba BIGINT, topic STRING) PARTITIONED BY (topic)")
+    // 8 versions, no checkpoint: each resolution opens all 8 entries
+    (0 until 8).foreach { i =>
+      spark.sql(s"INSERT INTO $t SELECT 'p', CAST(id % 100 AS INT), id, concat('t', id % 4) " +
+        s"FROM range(${i * 250}, ${(i + 1) * 250})")
+    }
+    val (rows, k) = opens(spark.sql(s"SELECT age FROM $t WHERE ba = 1234").collect())
+    assert(rows.map(_.getInt(0)).toSeq == Seq(34))
+    assert(k <= budget, s"catalog point read read $k log files (budget $budget)")
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
 
 import graft.SparkTestBase
 import graft.ingest.Snapshots

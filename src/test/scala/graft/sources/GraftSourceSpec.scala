@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+import org.apache.spark.sql.sources.{BaseRelation, GreaterThanOrEqual, LessThanOrEqual, TableScan}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkTestBase
@@ -238,6 +238,22 @@ class GraftSourceSpec extends SparkTestBase {
       .limit(4).collect().length == 4) // only 5 rows survive the delete
   }
 
+  test("a built scan reads the snapshot it pinned, deletion vectors included") {
+    val proot = tempDir("dsv2_pin").toString
+    ProduceJob.produceBatch(spark, proot, "p", topics = 1, numMessages = 100) // v0: file A
+    ProduceJob.produceBatch(spark, proot, "p", topics = 1, numMessages = 100) // v1: file B
+    Snapshots.deleteMoR(spark, proot, "p", col("ba") < 10L) // v2: 180 rows
+    val schema = spark.read.format("graft").load(s"$proot/p").schema
+    val scan = new GraftTable(proot, "p", None, schema)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build().asInstanceOf[GraftScan]
+    assert(scan.description().contains("files=2/2"), scan.description())
+    Snapshots.restore(proot, "p", 0) // v3: file A alone, no deletion vector
+    val rows = scan.toV1TableScan[BaseRelation with TableScan](spark.sqlContext).buildScan().count()
+    assert(rows == 180L, s"the scan pinned v2 (180 rows) but read $rows")
+    // a new read plans against the new head
+    assert(spark.read.format("graft").load(s"$proot/p").count() == 100L)
+  }
+
   test("backfillStats retrofits pre-R tables onto the metadata-count path") {
     val broot = tempDir("dsv2_restat").toString
     ProduceJob.produceBatch(spark, broot, "b", topics = 1, numMessages = 777)
@@ -246,7 +262,7 @@ class GraftSourceSpec extends SparkTestBase {
     val s0 = Snapshots.snapshot(broot, "b", None).get
     Snapshots.writeSnapshot(broot, "b", s0.version + 1, s0.maxPos, s0.files,
       Seq.empty, "append", s0.txns, s0.stats.filterNot(_.typ == "R"))
-    assert(Snapshots.metadataRowCount(broot, "b").isEmpty)
+    assert(Snapshots.snapshot(broot, "b").flatMap(Snapshots.metadataRowCount).isEmpty)
     val noPush = spark.read.format("graft").load(s"$broot/b").agg(count(lit(1)))
     assert(!noPush.queryExecution.executedPlan.toString.contains("GraftCountRelation"))
     assert(noPush.collect()(0).getLong(0) == 777L)
@@ -254,7 +270,7 @@ class GraftSourceSpec extends SparkTestBase {
     val v = Snapshots.backfillStats(broot, "b")
     assert(v == s0.version + 2)
     assert(Snapshots.backfillStats(broot, "b") == v) // idempotent no-op
-    assert(Snapshots.metadataRowCount(broot, "b").contains(777L))
+    assert(Snapshots.snapshot(broot, "b").flatMap(Snapshots.metadataRowCount).contains(777L))
     val pushed = spark.read.format("graft").load(s"$broot/b").agg(count(lit(1)))
     assert(pushed.queryExecution.executedPlan.toString.contains("GraftCountRelation"))
     assert(pushed.collect()(0).getLong(0) == 777L)
@@ -290,7 +306,7 @@ class GraftSourceSpec extends SparkTestBase {
     val snap = Snapshots.snapshot(dir, "ow").get
     assert(snap.op == "overwrite" && snap.removed.nonEmpty && snap.dv.isEmpty)
     // fresh stats make the metadata COUNT(*) path live immediately
-    assert(Snapshots.metadataRowCount(dir, "ow").contains(100L))
+    assert(Snapshots.snapshot(dir, "ow").flatMap(Snapshots.metadataRowCount).contains(100L))
     // row-grain change feed: replaced rows as deletes, new rows as inserts
     val feed = Snapshots.readChangeFeed(spark, dir, "ow", fromVersion = 0)
     assert(feed.filter(col("_change_type") === "delete").count() == 1000L)

@@ -46,7 +46,7 @@ class ReadJobCostSpec extends SparkTestBase {
   test("Snapshots.tableSchema runs no Spark job") {
     val root = tempDir("graft_jobs").toString
     ProduceJob.produceBatch(spark, root, "t", topics = 4, numMessages = 2000)
-    val (schema, n) = jobs(Snapshots.tableSchema(spark, root, "t"))
+    val (schema, n) = jobs(Snapshots.tableSchema(spark, root, "t", Snapshots.snapshot(root, "t").get))
     assert(schema.fieldNames.toSeq ==
       Seq("name", "age", "address", "gender", "score", "ba", "key", "topic"))
     assert(n == 0, s"tableSchema ran $n jobs")
