@@ -740,7 +740,7 @@ private[sources] class GraftCountRelation(values: Seq[Long],
 }
 
 private[sources] class GraftScan(root: String, prefix: String, version: Option[Int],
-                                 snapshot: => Option[Snapshots.Snapshot],
+                                 snap: => Option[Snapshots.Snapshot],
                                  required: StructType, pushed: Array[Filter],
                                  limitFiles: Option[Seq[String]] = None,
                                  options: CaseInsensitiveStringMap =
@@ -787,10 +787,6 @@ private[sources] class GraftScan(root: String, prefix: String, version: Option[I
     val total = snap.fold(0)(_.files.length)
     s"GraftScan $prefix files=${prunedFiles.length}/$total pushed=${pushed.mkString(",")}"
   }
-
-  /** The builder's snapshot, resolved when a batch read first needs
-    * it (a streaming read never does). */
-  private lazy val snap = snapshot
 
   /** Manifest pruning happens DRIVER-SIDE from stats alone — no data
     * file is opened to decide the file list. Computed once, from the
