@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ingest.{CommitLog, ProduceJob, Snapshots, Topics}
 
@@ -429,6 +430,112 @@ class DeltaLogSpec extends SparkTestBase {
     assert(snap.version == 1 && snap.files.size > legacyFiles.size)
     assert(legacyFiles.toSet.subsetOf(snap.files.toSet))
     assert(Snapshots.read(spark, root, "lg").count() == 25)
+  }
+
+  test("schema-event versions ride the checkpoints: add, rename, drop and re-add resolve across three checkpoints and a vacuum") {
+    val root = tempDir("graft_dlog").toString
+    val iv = Snapshots.checkpointInterval
+    Snapshots.checkpointInterval = 2
+    try {
+      val dir = Topics.tableDir(root, "se")
+      def append(from: Int, to: Int)(shape: DataFrame => DataFrame): Int = {
+        shape(ProduceJob.personProjection(spark.range(from, to).toDF("cnt"), "cnt", "se", 1))
+          .write.mode("append").partitionBy("topic").parquet(dir)
+        Snapshots.commit(root, "se", to - 1)
+      }
+      ProduceJob.produceBatch(spark, root, "se", topics = 1, numMessages = 100) // v0
+      assert(Snapshots.addColumn(root, "se", "tier", "STRING", Some("'std'")) == 1)
+      assert(Snapshots.renameColumn(root, "se", "name", "full_name") == 2) // + checkpoint
+      assert(append(100, 150)(_.withColumnRenamed("name", "full_name")
+        .withColumn("tier", lit("gold"))) == 3)
+      assert(Snapshots.dropColumn(root, "se", "address") == 4) // + checkpoint
+      assert(append(150, 200)(_.withColumnRenamed("name", "full_name")
+        .withColumn("tier", lit("gold")).drop("address")) == 5)
+      assert(Snapshots.addColumn(root, "se", "address", "BIGINT", Some("7")) == 6) // + checkpoint
+      val expected = Map(0 -> Seq(), 1 -> Seq(1), 2 -> Seq(1, 2), 3 -> Seq(1, 2),
+        4 -> Seq(1, 2, 4), 5 -> Seq(1, 2, 4), 6 -> Seq(1, 2, 4, 6))
+      expected.foreach { case (v, evs) =>
+        assert(Snapshots.snapshot(root, "se", Some(v)).get.evs == evs, s"v$v")
+      }
+      // each checkpoint carries its snapshot's event versions
+      Seq(2 -> Seq(1, 2), 4 -> Seq(1, 2, 4), 6 -> Seq(1, 2, 4, 6)).foreach { case (v, evs) =>
+        val ck = Paths.get(f"$root/se._log/v$v%05d.ckpt.json")
+        assert(CommitLog.decode(Files.readAllBytes(ck)).evs.contains(evs), s"checkpoint v$v")
+      }
+      def checkLatest(): Unit = {
+        val snap = Snapshots.snapshot(root, "se", None).get
+        val schema = Snapshots.tableSchema(spark, root, "se", snap)
+        assert(schema.fieldNames.toSet.intersect(Set("name", "full_name", "tier", "address")) ==
+          Set("full_name", "tier", "address"), schema.fieldNames.mkString(","))
+        assert(schema("address").dataType == org.apache.spark.sql.types.LongType)
+        val df = Snapshots.read(spark, root, "se")
+        assert(df.count() == 200)
+        assert(df.filter(col("full_name") === "hangc").count() == 200)
+        assert(df.filter(col("tier") === "std").count() == 100)
+        assert(df.filter(col("tier") === "gold").count() == 100)
+        assert(df.filter(col("address") === 7L).count() == 200)
+      }
+      checkLatest()
+      // time travel between the events resolves through the checkpoints
+      val v3 = Snapshots.read(spark, root, "se", Some(3))
+      assert(v3.filter(col("address") === "GuangZhou" && col("full_name") === "hangc")
+        .count() == 150)
+      assert(!Snapshots.read(spark, root, "se", Some(5)).columns.contains("address"))
+      // compaction materializes the evolved schema; a vacuum below every
+      // event then keeps the event versions in `evs` while their
+      // entries are gone, and the read needs none of them
+      assert(Snapshots.compact(spark, root, "se") == 7)
+      Snapshots.vacuum(root, "se", keepFrom = 7, orphanGraceMs = 0)
+      assert(Snapshots.versions(root, "se") == Seq(7))
+      val head = Snapshots.snapshot(root, "se", None).get
+      assert(head.evs == Seq(1, 2, 4, 6))
+      assert(Snapshots.schemaEvents(root, "se", head).isEmpty)
+      checkLatest()
+      // a commit after the vacuum folds on top of the barrier checkpoint
+      assert(Snapshots.addColumn(root, "se", "note", "STRING") == 8) // + checkpoint
+      assert(Snapshots.snapshot(root, "se", None).get.evs == Seq(1, 2, 4, 6, 8))
+      assert(Snapshots.read(spark, root, "se").filter(col("note").isNull).count() == 200)
+    } finally Snapshots.checkpointInterval = iv
+  }
+
+  test("a base without evs (legacy full manifest, pre-evs checkpoint) still resolves its schema events") {
+    val root = tempDir("graft_dlog").toString
+    val iv = Snapshots.checkpointInterval
+    Snapshots.checkpointInterval = 2
+    try {
+      ProduceJob.personProjection(spark.range(20).toDF("cnt"), "cnt", "le", 1)
+        .write.mode("append").partitionBy("topic").parquet(Topics.tableDir(root, "le"))
+      val legacyFiles = {
+        val b = Paths.get(Topics.tableDir(root, "le"))
+        val s = Files.walk(b)
+        try s.iterator().asScala.filter(p =>
+          Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+          .map(p => b.relativize(p).toString).toSeq.sorted
+        finally s.close()
+      }
+      val legacy = legacyFiles.map(f => "\"" + f + "\"").mkString("[", ", ", "]")
+      Files.createDirectories(Paths.get(s"$root/le._log"))
+      Files.writeString(Paths.get(s"$root/le._log/v00000.json"),
+        s"""{"version": 0, "op": "append", "maxPos": 19, "files": $legacy, "removed": [], "txns": [], "stats": []}""")
+      assert(Snapshots.addColumn(root, "le", "tier", "STRING", Some("'std'")) == 1)
+      def tierStd(): Long =
+        Snapshots.read(spark, root, "le").filter(col("tier") === "std").count()
+      assert(Snapshots.snapshot(root, "le", None).get.evs == Seq(1))
+      assert(tierStd() == 20)
+      ProduceJob.produceBatch(spark, root, "le", topics = 1, numMessages = 5) // v2 + checkpoint
+      // strip `evs` from the checkpoint, as a checkpoint written before
+      // the field existed: the versions below it come from their ops
+      val ck = Paths.get(s"$root/le._log/v00002.ckpt.json")
+      val stripped = CommitLog.decode(Files.readAllBytes(ck)).copy(evs = None)
+      Files.write(ck, CommitLog.encode(stripped))
+      assert(!Files.readString(ck).contains("\"evs\""))
+      ProduceJob.produceBatch(spark, root, "le", topics = 1, numMessages = 5) // v3
+      val snap = Snapshots.snapshot(root, "le", None).get
+      assert(snap.version == 3 && snap.evs == Seq(1))
+      assert(Snapshots.tableSchema(spark, root, "le", snap).fieldNames.contains("tier"))
+      assert(Snapshots.read(spark, root, "le").count() == 30)
+      assert(tierStd() == 20)
+    } finally Snapshots.checkpointInterval = iv
   }
 
   test("hand-corrupted log: the O(delta) fold equals the old O(table) fileSet ground truth") {
